@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph
+from linkgraph.iterate import count_changed, fixpoint
 
 
 def connected_components(
@@ -31,7 +32,6 @@ def connected_components(
     checkpoint_mgr=None,
     snapshot_every: int = 10,
     resume: bool = False,
-    verbose: bool = False,
     shortcut: bool = True,
 ) -> DataFrame:
     """Returns (vid, comp) with comp = min vid reachable (undirected
@@ -40,20 +40,7 @@ def connected_components(
 
     Exact at convergence; warns if max_iter exhausts first."""
     n = graph.num_vertices()
-    it0 = 0
-    comp = None
-    if resume and checkpoint_mgr is not None:
-        snap = checkpoint_mgr.latest()
-        if snap is not None:
-            comp = checkpoint_mgr.read_state(snap)
-            it0 = int(snap["metrics"]["iteration"])
-    if comp is None:
-        comp = graph.vertices().select("vid", F.col("vid").alias("comp"))
-    comp = comp.localCheckpoint(eager=True)
-
-    changed = None
-    prev = None
-    from linkgraph.graph import broadcast_threshold, iteration_plan
+    from linkgraph.graph import broadcast_threshold
 
     # the neighbor-min aggregate and the shortcut mapping are both ≤|V|
     # rows of two longs: byte-gate broadcasts (J1 rule) so the
@@ -62,83 +49,66 @@ def connected_components(
     _thresh = broadcast_threshold(graph.spark)
     _bc_ok = 0 < _thresh and n * (16 + 12 * 2) < _thresh
 
-    with iteration_plan(graph.spark):
-        for it in range(it0, max_iter):
-            labels = comp.select(F.col("vid").alias("src"), F.col("comp").alias("c"))
-            nbr_min = graph.expand(labels, est_rows=n).groupBy("dst").agg(
-                F.min("c").alias("nc")
+    def step(comp: DataFrame, _metrics: dict) -> DataFrame:
+        labels = comp.select(F.col("vid").alias("src"), F.col("comp").alias("c"))
+        nbr_min = graph.expand(labels, est_rows=n).groupBy("dst").agg(
+            F.min("c").alias("nc")
+        )
+        if _bc_ok:
+            nbr_min = F.broadcast(nbr_min)
+        new_comp = (
+            comp.alias("st")
+            .join(nbr_min.alias("nb"), F.col("st.vid") == F.col("nb.dst"), "left")
+            .select(
+                F.col("st.vid").alias("vid"),
+                F.least(
+                    F.col("st.comp"), F.coalesce(F.col("nb.nc"), F.col("st.comp"))
+                ).alias("comp"),
+                F.col("st.comp").alias("pc"),
             )
+        )
+        if shortcut:
+            # pointer doubling: comp(v) <- min(comp(v), comp(comp(v))).
+            # comp values are vids, so the label table doubles as the
+            # parent mapping; one extra equi-join per round buys O(log d)
+            # total rounds instead of O(d).
+            mapping = comp.select(F.col("vid").alias("comp"), F.col("comp").alias("cc"))
             if _bc_ok:
-                nbr_min = F.broadcast(nbr_min)
+                mapping = F.broadcast(mapping)
             new_comp = (
-                comp.alias("st")
-                .join(nbr_min.alias("nb"), F.col("st.vid") == F.col("nb.dst"), "left")
+                new_comp.alias("nc2")
+                .join(mapping.alias("mp"), "comp", "left")
                 .select(
-                    F.col("st.vid").alias("vid"),
+                    F.col("nc2.vid").alias("vid"),
                     F.least(
-                        F.col("st.comp"), F.coalesce(F.col("nb.nc"), F.col("st.comp"))
+                        F.col("comp"), F.coalesce(F.col("mp.cc"), F.col("comp"))
                     ).alias("comp"),
-                    F.col("st.comp").alias("pc"),
+                    F.col("nc2.pc").alias("pc"),
                 )
             )
-            if shortcut:
-                # pointer doubling: comp(v) <- min(comp(v), comp(comp(v))).
-                # comp values are vids, so the label table doubles as the
-                # parent mapping; one extra equi-join per round buys O(log d)
-                # total rounds instead of O(d).
-                mapping = comp.select(
-                    F.col("vid").alias("comp"), F.col("comp").alias("cc")
-                )
-                if _bc_ok:
-                    mapping = F.broadcast(mapping)
-                new_comp = (
-                    new_comp.alias("nc2")
-                    .join(mapping.alias("mp"), "comp", "left")
-                    .select(
-                        F.col("nc2.vid").alias("vid"),
-                        F.least(
-                            F.col("comp"), F.coalesce(F.col("mp.cc"), F.col("comp"))
-                        ).alias("comp"),
-                        F.col("nc2.pc").alias("pc"),
-                    )
-                )
-            # LAZY checkpoint materialized by the changed-count aggregate:
-            # one fused job per round (see pagerank.py — the lazy pathology
-            # was AQE-specific and this loop runs AQE-off)
-            new_comp = new_comp.localCheckpoint(eager=False)
-            changed = int(
-                new_comp.agg(
-                    F.sum(F.when(F.col("comp") != F.col("pc"), 1).otherwise(0)).alias("n")
-                ).first()["n"]
-                or 0
-            )
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev, comp = comp, new_comp
-            if verbose:
-                print(f"[cc] iter {it}: changed={changed}", flush=True)
-            if checkpoint_mgr is not None and (it + 1) % snapshot_every == 0:
-                comp = checkpoint_mgr.write_state(
-                    comp.select("vid", "comp"), it + 1,
-                    {"iteration": it + 1, "changed": int(changed)},
-                ).localCheckpoint(eager=True)
-            if changed == 0:
-                break
-    if changed:
+        return new_comp
+
+    comp, metrics, converged = fixpoint(
+        graph.vertices().select("vid", F.col("vid").alias("comp")),
+        step,
+        lambda st: {"changed": count_changed(st, "comp", "pc")},
+        lambda m, _: m["changed"] == 0,
+        max_iter,
+        checkpoint_mgr=checkpoint_mgr,
+        snapshot_every=snapshot_every,
+        resume=resume,
+    )
+    if not converged:
         warnings.warn(
             f"connected_components: max_iter={max_iter} exhausted with "
-            f"{changed} labels still changing — result is NOT converged",
+            f"{metrics.get('changed')} labels still changing — result is NOT "
+            "converged",
             stacklevel=2,
         )
     return comp.select("vid", "comp")
 
 
-def connected_components_two_phase(
-    graph: LinkGraph, max_rounds: int = 64, verbose: bool = False
-) -> DataFrame:
+def connected_components_two_phase(graph: LinkGraph, max_rounds: int = 64) -> DataFrame:
     """Connected components by alternating large-star / small-star edge
     rewrites [Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14] — a second, shuffle-pattern-distinct CC kernel,
@@ -171,24 +141,23 @@ def connected_components_two_phase(
     spark = graph.spark
     # parent-pointer edge set, child > parent, seeded from the symmetric
     # closure (LinkGraph keeps both directions; orient once, dedup)
-    e = (
+    seed = (
         graph.edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .select(
             F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
-    def _probe(df: DataFrame) -> tuple[int, int]:
+    def _probe(df: DataFrame) -> dict:
         row = df.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(
                 F.xxhash64(F.col("u"), F.col("v")).cast("decimal(38,0)")
             ).alias("h"),
         ).first()
-        return int(row["n"] or 0), int(row["h"] or 0)
+        return {"sig": (int(row["n"] or 0), int(row["h"] or 0))}
 
     # per-round min tables are ≤|V| rows of two longs — byte-gate their
     # broadcasts (J1 rule) so the edge set never re-shuffles for the
@@ -201,68 +170,48 @@ def connected_components_two_phase(
     def _bc(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if _bc_ok else df
 
-    prev_sig = _probe(e)
-    converged = False
-    prev_e = None
-    from linkgraph.graph import iteration_plan
+    def step(e: DataFrame, _metrics: dict) -> DataFrame:
+        # ---- large-star over the symmetric view: neighbors larger
+        # than the center re-point to the center's min
+        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        mins = (
+            sym.groupBy("u")
+            .agg(F.min("v").alias("mn"))
+            .select("u", F.least("mn", "u").alias("m"))
+        )
+        # e is strictly child>parent (u > v) by construction, so the
+        # v>u half of sym is exactly reverse(e) — project it directly
+        # instead of re-scanning and filtering the 2|e|-row union.
+        # No intermediate distinct: large-star emits ≤|e| rows (one per
+        # input edge), duplicates are invariant under small-star's min
+        # aggregate, and the end-of-round distinct collapses them — so
+        # deduping here bought nothing but a full extra shuffle per
+        # round (A/B: 7.5s → 6.5s on the sf0.1 bench entry).
+        e = (
+            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+            .join(_bc(mins), "u")
+            .where(F.col("v") != F.col("m"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        )
+        # ---- small-star: all ≤-neighbors plus the center re-point to
+        # the center's min neighbor (edges are already child>parent)
+        smins = e.groupBy("u").agg(F.min("v").alias("m"))
+        return (
+            e.join(_bc(smins), "u")
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))  # sibling -> min
+            .where(F.col("u") != F.col("v"))
+            .unionByName(smins.select(F.col("u"), F.col("m").alias("v")))  # center -> min
+            .distinct()
+        )
 
-    with iteration_plan(spark):
-        for rnd in range(max_rounds):
-            # ---- large-star over the symmetric view: neighbors larger
-            # than the center re-point to the center's min
-            sym = e.unionByName(
-                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            mins = (
-                sym.groupBy("u")
-                .agg(F.min("v").alias("mn"))
-                .select("u", F.least("mn", "u").alias("m"))
-            )
-            # e is strictly child>parent (u > v) by construction, so the
-            # v>u half of sym is exactly reverse(e) — project it directly
-            # instead of re-scanning and filtering the 2|e|-row union.
-            # No intermediate distinct: large-star emits ≤|e| rows (one per
-            # input edge), duplicates are invariant under small-star's min
-            # aggregate, and the end-of-round distinct collapses them — so
-            # deduping here bought nothing but a full extra shuffle per
-            # round (A/B: 7.5s → 6.5s on the sf0.1 bench entry).
-            e = (
-                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-                .join(_bc(mins), "u")
-                .where(F.col("v") != F.col("m"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            )
-            # ---- small-star: all ≤-neighbors plus the center re-point to
-            # the center's min neighbor (edges are already child>parent)
-            smins = e.groupBy("u").agg(F.min("v").alias("m"))
-            e = (
-                e.join(_bc(smins), "u")
-                .select(
-                    F.col("v").alias("u"), F.col("m").alias("v")
-                )  # sibling -> min
-                .where(F.col("u") != F.col("v"))
-                .unionByName(
-                    smins.select(F.col("u"), F.col("m").alias("v"))
-                )  # center -> min
-                .distinct()
-                # LAZY checkpoint materialized by the probe aggregate —
-                # one fused job per round instead of checkpoint + probe
-                # (safe: the loop runs AQE-off, the cc/pagerank pattern)
-                .localCheckpoint(eager=False)
-            )
-            sig = _probe(e)
-            if prev_e is not None:
-                try:
-                    prev_e.unpersist()
-                except Exception:
-                    pass
-            prev_e = e
-            if verbose:
-                print(f"[cc2p] round {rnd}: edges={sig[0]}", flush=True)
-            if sig == prev_sig:
-                converged = True
-                break
-            prev_sig = sig
+    e, _, converged = fixpoint(
+        seed,
+        step,
+        _probe,
+        lambda m, prev: m["sig"] == prev["sig"],
+        max_rounds,
+        seed_metrics=_probe,
+    )
     if not converged:
         warnings.warn(
             f"connected_components_two_phase: max_rounds={max_rounds} "

@@ -12,10 +12,10 @@ Unlike PageRank there is no degree normalization and no teleport mass,
 so the kernel is even simpler: per iteration ONE frontier-expand
 (edges never shuffle; state side hashes to the edge partitioning) +
 ONE sum-by-dst aggregate (map-side combined) + the update join, all
-fused into a single Spark job by the lazy-localCheckpoint-plus-stats
-pattern (pagerank.py's shape; state is referenced twice per round, so
-the originStats growth that forces parquet severance in louvain/ktruss
-stays sub-exponential here, same as PR/CC/LPA).
+fused into a single Spark job by `linkgraph.iterate.fixpoint` with the
+delta aggregate as its probe (pagerank.py's shape; state is referenced
+twice per round, so the originStats growth that forces parquet severance
+in louvain/ktruss stays sub-exponential here, same as PR/CC/LPA).
 
 Fixed-budget mode (tol=0, max_iter=K) is the oracle contract: the
 DuckDB mirror replays the same K rounds as a recursive CTE and both
@@ -30,7 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.iterate import fixpoint
 
 
 def katz(
@@ -44,49 +45,35 @@ def katz(
 
     Returns (vid, katz).  alpha=None -> 1/(max_deg + 1) (guaranteed
     convergent).  tol=0 runs exactly max_iter rounds (oracle mode)."""
-    spark = graph.spark
     degt = graph.degrees()
     n = graph.num_vertices()
     if alpha is None:
         max_deg = int(degt.agg(F.max("deg")).first()[0] or 0)
         alpha = 1.0 / (max_deg + 1)
 
-    state = (
-        graph.vertices()
-        .select("vid", F.lit(float(beta)).alias("x"))
-        .localCheckpoint(eager=True)
+    def step(state: DataFrame, _metrics: dict) -> DataFrame:
+        msgs = state.select(F.col("vid").alias("src"), F.col("x").alias("m"))
+        acc = graph.expand(msgs, est_rows=n).groupBy("dst").agg(F.sum("m").alias("acc"))
+        return (
+            state.alias("st")
+            .join(acc.alias("cb"), F.col("st.vid") == F.col("cb.dst"), "left")
+            .select(
+                F.col("st.vid").alias("vid"),
+                (
+                    F.lit(float(beta))
+                    + F.lit(float(alpha)) * F.coalesce(F.col("cb.acc"), F.lit(0.0))
+                ).alias("x"),
+                F.col("st.x").alias("x_old"),
+            )
+        )
+
+    state, _, _ = fixpoint(
+        graph.vertices().select("vid", F.lit(float(beta)).alias("x")),
+        step,
+        lambda st: {
+            "delta": float(st.agg(F.max(F.abs(F.col("x") - F.col("x_old")))).first()[0])
+        },
+        lambda m, _: tol > 0 and m["delta"] < tol,
+        max_iter,
     )
-    prev = None
-    with iteration_plan(spark):
-        for _it in range(max_iter):
-            msgs = state.select(F.col("vid").alias("src"), F.col("x").alias("m"))
-            acc = graph.expand(msgs, est_rows=n).groupBy("dst").agg(
-                F.sum("m").alias("acc")
-            )
-            new_state = (
-                state.alias("st")
-                .join(acc.alias("cb"), F.col("st.vid") == F.col("cb.dst"), "left")
-                .select(
-                    F.col("st.vid").alias("vid"),
-                    (
-                        F.lit(float(beta))
-                        + F.lit(float(alpha)) * F.coalesce(F.col("cb.acc"), F.lit(0.0))
-                    ).alias("x"),
-                    F.col("st.x").alias("x_old"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            # the stats aggregate materializes the lazy checkpoint — one
-            # fused job per iteration
-            delta = float(
-                new_state.agg(F.max(F.abs(F.col("x") - F.col("x_old")))).first()[0]
-            )
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev, state = state, new_state
-            if tol > 0 and delta < tol:
-                break
     return state.select("vid", F.col("x").alias("katz"))

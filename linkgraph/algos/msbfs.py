@@ -15,10 +15,9 @@ Spark-native re-expression of [MSBFS15] Alg. 2/3 (SURVEY.md §2.9 K1/K2):
   when small (first/last levels), shuffled-hash otherwise; the edge table
   never re-shuffles (partitioned by src at build).
 
-Two aggregation modes, cross-checked in tests (the reference's own
-cross-variant validation strategy):
-  relational — groupBy(dst).agg(bit_or(limb)...)           [default]
-  kernel     — applyInPandas numpy bitwise_or.reduceat per dst bucket
+The OR-aggregate is relational (groupBy(dst).agg(bit_or(limb)...)).  A
+numpy applyInPandas variant (bitwise_or.reduceat per dst bucket) lost
+every A/B against it, 0.63-0.97x, and was removed (BENCH/BASELINE.md).
 """
 
 from __future__ import annotations
@@ -228,33 +227,9 @@ def _closed_limb_table(state: DataFrame, closed_pred: str, max_vid: int) -> Data
     )
 
 
-def _kernel_or_agg(msgs: DataFrame, nlimbs: int, buckets: int) -> DataFrame:
-    """K1(b): numpy bitwise_or.reduceat per dst, bucketed applyInPandas."""
-    vcols = [f"v{i}" for i in range(nlimbs)]
-    out_schema = "dst long, " + ", ".join(f"a{i} long" for i in range(nlimbs))
-
-    def reduce_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        dst = pdf["dst"].to_numpy(dtype=np.int64)
-        limbs = pdf[vcols].to_numpy(dtype=np.int64).view(np.uint64)
-        order = np.argsort(dst, kind="stable")
-        dst_s, limbs_s = dst[order], limbs[order]
-        starts = np.flatnonzero(np.r_[True, dst_s[1:] != dst_s[:-1]])
-        ors = np.bitwise_or.reduceat(limbs_s, starts, axis=0).view(np.int64)
-        out = {"dst": dst_s[starts]}
-        for i in range(nlimbs):
-            out[f"a{i}"] = ors[:, i]
-        return pd.DataFrame(out)
-
-    bucketed = msgs.withColumn("bucket", F.pmod(F.hash("dst"), F.lit(buckets)))
-    return bucketed.groupBy("bucket").applyInPandas(
-        lambda _, pdf: reduce_fn(pdf.drop(columns=["bucket"])), out_schema
-    )
-
-
 def msbfs(
     graph: LinkGraph,
     sources: list[int],
-    mode: str = "relational",
     emit_distances: bool = False,
     distances_path: str | None = None,
     checkpoint_every: int = 1,
@@ -263,11 +238,9 @@ def msbfs(
     track_teps: bool = False,
     checkpoint_mgr=None,
     resume: bool = False,
-    verbose: bool = False,
     bottom_up: bool = True,
     bottom_up_threshold: float = 0.5,
     bottom_up_bitmap: bool = True,
-    eager_checkpoint: bool = False,
 ) -> MsBfsResult:
     """Run one ≤512-source batch to completion; returns lane accounting
     (r, s for closeness) and optionally full (src, vid, dist) distances.
@@ -275,15 +248,13 @@ def msbfs(
     At scale, distances are not materialized n×512 (the reference streams
     them through a visitor); closeness needs only the r/s accumulators.
 
-    eager_checkpoint=False (default) fuses the per-level work into ONE
-    Spark job: the new state is lazily localCheckpointed (plan truncated
-    immediately) and the next level's accounting scan is the action that
-    materializes it — expand + OR-aggregate + update + lane accounting in a
-    single job instead of the round-2 two-jobs-per-level shape (eager
-    checkpoint job, then accounting job).  AQE is off inside the loop
-    (iteration_plan), which is the regime where lazy truncation is
-    deterministic; eager_checkpoint=True restores the old shape and the
-    cross-variant test asserts both are bit-exact.
+    Each level is ONE Spark job: the new state is lazily localCheckpointed
+    (plan truncated immediately) and the next level's accounting scan is
+    the action that materializes it — expand + OR-aggregate + update + lane
+    accounting in a single job instead of the round-2 two-jobs-per-level
+    shape (eager checkpoint job, then accounting job).  AQE is off inside
+    the loop (iteration_plan), which is the regime where lazy truncation is
+    deterministic.
     """
     spark = graph.spark
     nsrc = len(sources)
@@ -362,7 +333,6 @@ def msbfs(
 
     with iteration_plan(spark):
         while True:
-            t_lvl = time.time()
             if skip_account:
                 # resumed: this level's bits were accounted before the snapshot
                 skip_account = False
@@ -565,13 +535,9 @@ def msbfs(
                 )
             elif closed_filter is not None:
                 msgs = msgs.join(closed_filter, "dst", "left_anti")
-            if mode == "kernel":
-                buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-                agg = _kernel_or_agg(msgs, nlimbs, buckets)
-            else:
-                agg = msgs.groupBy("dst").agg(
-                    *[F.bit_or(f"v{i}").alias(f"a{i}") for i in range(nlimbs)]
-                )
+            agg = msgs.groupBy("dst").agg(
+                *[F.bit_or(f"v{i}").alias(f"a{i}") for i in range(nlimbs)]
+            )
 
             # -- mask & update (codegen'd int64 math; no UDF)
             # `vid`/`dst` are unique names across the two sides — resolve by name
@@ -586,24 +552,16 @@ def msbfs(
                 sel.append(
                     F.expr(f"coalesce(a{i}, 0L) & ~coalesce(s{i}, 0L)").alias(f"v{i}")
                 )
-            # localCheckpoint cuts lineage either way (the returned plan is a
-            # Scan ExistingRDD immediately).  Default LAZY: the next level's
-            # accounting scan is the materializing action, fusing expand +
-            # OR-agg + update + accounting into ONE job per level — with AQE
-            # off inside iteration_plan (the regime where the round-2 lazy-
-            # truncation flakiness lived), truncation is deterministic and
-            # the per-level driver-barrier count halves.  eager=True restores
-            # the round-2 two-job shape (bit-exact; cross-variant tested).
-            new_state = joined.select(*sel).localCheckpoint(eager=eager_checkpoint)
+            # LAZY localCheckpoint (the returned plan is a Scan ExistingRDD
+            # immediately): the next level's accounting scan is the
+            # materializing action, fusing expand + OR-agg + update +
+            # accounting into ONE job per level — with AQE off inside
+            # iteration_plan (the regime where the round-2 lazy-truncation
+            # flakiness lived), truncation is deterministic.
+            new_state = joined.select(*sel).localCheckpoint(eager=False)
             # old state blocks stay until the new state materializes (next loop)
             prev_state, state = state, new_state
             level += 1
-            if verbose:
-                print(
-                    f"[msbfs] level {level - 1}: new={new_total} frontier_rows={frontier_rows} "
-                    f"{time.time() - t_lvl:.2f}s",
-                    flush=True,
-                )
 
     wall = time.time() - t0
     distances_df = None
@@ -735,7 +693,6 @@ def batched_closeness(
     graph: LinkGraph,
     sources: list[int] | None = None,
     batch_width: int = 512,
-    mode: str = "relational",
     track_teps: bool = False,
     max_levels: int | None = None,
 ) -> tuple[DataFrame, list[MsBfsResult]]:
@@ -748,9 +705,7 @@ def batched_closeness(
     n = graph.num_vertices()
     for i in range(0, len(sources), batch_width):
         batch = sources[i : i + batch_width]
-        res = msbfs(
-            graph, batch, mode=mode, track_teps=track_teps, max_levels=max_levels
-        )
+        res = msbfs(graph, batch, track_teps=track_teps, max_levels=max_levels)
         results.append(res)
         frames.append(closeness(graph, res, n=n))
     out = frames[0]

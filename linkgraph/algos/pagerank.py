@@ -18,11 +18,10 @@ Scale-shaped iteration (one heavy Spark job per iteration):
 * n counts ALL vertices including sink-only ones (graph.num_vertices()
   uses vertices() on directed tables), so ranks sum to 1 with sinks.
 
-Convergence: max |Δrank| < tol (BASELINE tol 1e-6).  Lineage cut every
-iteration via lazy localCheckpoint whose materializing action IS the stats
-aggregate — one fused Spark job per iteration (safe because the loop runs
-AQE-off; the round-1 lazy-truncation flakiness was AQE-specific); durable
-snapshots via CheckpointManager.
+Convergence: max |Δrank| < tol (BASELINE tol 1e-6).  The loop is
+`linkgraph.iterate.fixpoint`: the stats aggregate is the action that
+materializes each iteration's lazy checkpoint (one fused Spark job per
+iteration), and snapshots go through CheckpointManager.
 """
 
 from __future__ import annotations
@@ -31,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph
+from linkgraph.iterate import fixpoint
 
 
 def pagerank(
@@ -41,7 +41,6 @@ def pagerank(
     checkpoint_mgr=None,
     snapshot_every: int = 10,
     resume: bool = False,
-    verbose: bool = False,
     sources: list[int] | None = None,
     weight_col: str | None = None,
     init: DataFrame | None = None,
@@ -85,16 +84,6 @@ def pagerank(
         # the personalized branch seeds pr from the reset vector itself
         raise ValueError("init warm start is not supported with sources=")
 
-    it0 = 0
-    state = None
-    dangling_mass = None
-    if resume and checkpoint_mgr is not None:
-        snap = checkpoint_mgr.latest()
-        if snap is not None:
-            state = checkpoint_mgr.read_state(snap)
-            it0 = int(snap["metrics"]["iteration"])
-            dangling_mass = float(snap["metrics"].get("dangling_mass", 0.0))
-
     if weight_col is None:
         degt = graph.degrees()
         deg_type = "long"
@@ -107,148 +96,115 @@ def pagerank(
         )
         deg_type = "double"
 
-    if state is None:
-        # (vid, deg, pr); deg null -> 0 marks the static dangling set
-        if graph.symmetric:
-            # every vertex has out-edges: the degree table IS the state seed
-            state = degt.select(
-                "vid", F.col("deg").cast(deg_type).alias("deg"), F.lit(1.0 / n).alias("pr")
+    # (vid, deg, pr); deg null -> 0 marks the static dangling set
+    if graph.symmetric:
+        # every vertex has out-edges: the degree table IS the state seed
+        seed = degt.select(
+            "vid", F.col("deg").cast(deg_type).alias("deg"), F.lit(1.0 / n).alias("pr")
+        )
+    else:
+        seed = (
+            graph.vertices()
+            .join(degt, "vid", "left")
+            .select(
+                "vid",
+                F.coalesce(F.col("deg"), F.lit(0)).cast(deg_type).alias("deg"),
+                F.lit(1.0 / n).alias("pr"),
             )
-        else:
-            state = (
-                graph.vertices()
-                .join(degt, "vid", "left")
-                .select(
-                    "vid",
-                    F.coalesce(F.col("deg"), F.lit(0)).cast(deg_type).alias("deg"),
-                    F.lit(1.0 / n).alias("pr"),
-                )
+        )
+    if init is not None:
+        # warm start: previous snapshot's scores replace the uniform
+        # seed; vertices the snapshot never saw keep the 1/n default
+        seed = (
+            seed.alias("st")
+            .join(
+                init.select(F.col("vid").alias("ivid"), F.col("pr").alias("ipr")),
+                F.col("st.vid") == F.col("ivid"),
+                "left",
             )
-        if init is not None:
-            # warm start: previous snapshot's scores replace the uniform
-            # seed; vertices the snapshot never saw keep the 1/n default
-            state = (
-                state.alias("st")
-                .join(
-                    init.select(
-                        F.col("vid").alias("ivid"), F.col("pr").alias("ipr")
-                    ),
-                    F.col("st.vid") == F.col("ivid"),
-                    "left",
-                )
-                .select(
-                    F.col("st.vid").alias("vid"),
-                    F.col("st.deg").alias("deg"),
-                    F.coalesce(F.col("ipr"), F.col("st.pr")).alias("pr"),
-                )
+            .select(
+                F.col("st.vid").alias("vid"),
+                F.col("st.deg").alias("deg"),
+                F.coalesce(F.col("ipr"), F.col("st.pr")).alias("pr"),
             )
-        if personalized:
-            rv = F.when(
-                F.col("vid").isin([int(v) for v in sources]),
-                F.lit(1.0 / len(sources)),
-            ).otherwise(F.lit(0.0))
-            state = state.select("vid", "deg", rv.alias("rv"), rv.alias("pr"))
-    elif personalized and "rv" not in state.columns:
-        # resumed from a snapshot written by a pre-rv layout
+        )
+    if personalized:
         rv = F.when(
             F.col("vid").isin([int(v) for v in sources]),
             F.lit(1.0 / len(sources)),
         ).otherwise(F.lit(0.0))
-        state = state.select("vid", "deg", rv.alias("rv"), "pr")
-    state = state.localCheckpoint(eager=True)
-    if dangling_mass is None:
+        seed = seed.select("vid", "deg", rv.alias("rv"), rv.alias("pr"))
+
+    def seed_metrics(state: DataFrame) -> dict:
         if graph.symmetric:
-            dangling_mass = 0.0  # every vertex has out-edges by construction
+            return {"dangling_mass": 0.0}  # every vertex has out-edges
+        m = state.where(F.col("deg") == 0).agg(F.sum("pr").alias("m")).first()["m"]
+        return {"dangling_mass": m or 0.0}
+
+    def step(state: DataFrame, metrics: dict) -> DataFrame:
+        dangling_mass = metrics.get("dangling_mass", 0.0)
+        # message alias "m" never clashes with an edge weight column
+        msgs = state.where(F.col("deg") > 0).select(
+            F.col("vid").alias("src"), (F.col("pr") / F.col("deg")).alias("m")
+        )
+        contrib = (
+            F.sum("m") if weight_col is None else F.sum(F.col(weight_col) * F.col("m"))
+        )
+        contribs = graph.expand(msgs, est_rows=n).groupBy("dst").agg(
+            contrib.alias("acc")
+        )
+        # NOTE (r6): a byte-gated broadcast of contribs for the state
+        # join was A/B'd and measured ~10% SLOWER warm (4.6 s vs 4.1 s
+        # for pagerank10 at sf0.1/local[32]) — the join only moves two
+        # ≤|V|-row narrow tables, and the per-iteration broadcast
+        # build costs more than the two small exchanges it replaces.
+        # Kept as the shuffle join deliberately.
+        if personalized:
+            # a snapshot written before rv rode in the state lacks it
+            st_rv = F.col("st.rv") if "rv" in state.columns else rv
+            # teleport AND dangling mass both return to the seed set
+            base_col = (
+                F.lit(1.0 - damping) + F.lit(damping * dangling_mass)
+            ) * st_rv
+            keep = [st_rv.alias("rv")]
         else:
-            dangling_mass = (
-                state.where(F.col("deg") == 0).agg(F.sum("pr").alias("m")).first()["m"]
-                or 0.0
+            base_col = F.lit((1.0 - damping) / n + damping * dangling_mass / n)
+            keep = []
+        return (
+            state.alias("st")
+            .join(contribs.alias("cb"), F.col("st.vid") == F.col("cb.dst"), "left")
+            .select(
+                F.col("st.vid").alias("vid"),
+                F.col("st.deg").alias("deg"),
+                *keep,
+                (
+                    base_col
+                    + F.lit(damping) * F.coalesce(F.col("cb.acc"), F.lit(0.0))
+                ).alias("pr"),
+                F.col("st.pr").alias("pr_old"),
             )
+        )
 
-    prev = None
-    delta = None
-    from linkgraph.graph import iteration_plan
+    def probe(state: DataFrame) -> dict:
+        # delta + next iteration's dangling mass (sum of new pr over the
+        # static deg==0 set) in one aggregate
+        stats = state.agg(
+            F.max(F.abs(F.col("pr") - F.col("pr_old"))).alias("delta"),
+            F.sum(F.when(F.col("deg") == 0, F.col("pr"))).alias("dm"),
+        ).first()
+        return {"delta": float(stats["delta"]), "dangling_mass": float(stats["dm"] or 0.0)}
 
-    with iteration_plan(spark):
-        for it in range(it0, max_iter):
-            # message alias "m" never clashes with an edge weight column
-            msgs = state.where(F.col("deg") > 0).select(
-                F.col("vid").alias("src"), (F.col("pr") / F.col("deg")).alias("m")
-            )
-            contrib = (
-                F.sum("m")
-                if weight_col is None
-                else F.sum(F.col(weight_col) * F.col("m"))
-            )
-            contribs = graph.expand(msgs, est_rows=n).groupBy("dst").agg(
-                contrib.alias("acc")
-            )
-            # NOTE (r6): a byte-gated broadcast of contribs for the state
-            # join was A/B'd and measured ~10% SLOWER warm (4.6 s vs 4.1 s
-            # for pagerank10 at sf0.1/local[32]) — the join only moves two
-            # ≤|V|-row narrow tables, and the per-iteration broadcast
-            # build costs more than the two small exchanges it replaces.
-            # Kept as the shuffle join deliberately.
-            if personalized:
-                # teleport AND dangling mass both return to the seed set
-                base_col = (
-                    F.lit(1.0 - damping) + F.lit(damping * dangling_mass)
-                ) * F.col("st.rv")
-                keep = [F.col("st.rv").alias("rv")]
-            else:
-                base_col = F.lit((1.0 - damping) / n + damping * dangling_mass / n)
-                keep = []
-            new_state = (
-                state.alias("st")
-                .join(contribs.alias("cb"), F.col("st.vid") == F.col("cb.dst"), "left")
-                .select(
-                    F.col("st.vid").alias("vid"),
-                    F.col("st.deg").alias("deg"),
-                    *keep,
-                    (
-                        base_col
-                        + F.lit(damping) * F.coalesce(F.col("cb.acc"), F.lit(0.0))
-                    ).alias("pr"),
-                    F.col("st.pr").alias("pr_old"),
-                )
-                # LAZY checkpoint, materialized by the stats aggregate just
-                # below: expand + update + stats fuse into ONE Spark job per
-                # iteration (the MS-BFS round-3 shape).  The plan is
-                # truncated at the call either way; the round-1 lazy
-                # pathology (plan-build 2s -> 219s by iteration 9) was
-                # AQE-specific, and this loop runs under iteration_plan with
-                # AQE off, where truncation is deterministic (lineage
-                # boundedness asserted in tests).
-                .localCheckpoint(eager=False)
-            )
-            # stats job over the cached state: delta + next iteration's
-            # dangling mass (sum of new pr over the static deg==0 set)
-            stats = new_state.agg(
-                F.max(F.abs(F.col("pr") - F.col("pr_old"))).alias("delta"),
-                F.sum(F.when(F.col("deg") == 0, F.col("pr"))).alias("dm"),
-            ).first()
-            delta = float(stats["delta"])
-            dangling_mass = float(stats["dm"] or 0.0)
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev, state = state, new_state
-            if verbose:
-                print(f"[pagerank] iter {it}: delta={delta}", flush=True)
-            if checkpoint_mgr is not None and (it + 1) % snapshot_every == 0:
-                state = checkpoint_mgr.write_state(
-                    state.select("vid", "deg", *(["rv"] if personalized else []), "pr"),
-                    it + 1,
-                    {
-                        "iteration": it + 1,
-                        "delta": delta,
-                        "dangling_mass": dangling_mass,
-                    },
-                ).localCheckpoint(eager=True)
-            if tol > 0 and delta < tol:
-                break
+    state, _, _ = fixpoint(
+        seed,
+        step,
+        probe,
+        lambda m, _: tol > 0 and m["delta"] < tol,
+        max_iter,
+        seed_metrics=seed_metrics,
+        checkpoint_mgr=checkpoint_mgr,
+        snapshot_every=snapshot_every,
+        resume=resume,
+    )
     return state.select("vid", "pr")
 
 

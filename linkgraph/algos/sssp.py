@@ -14,8 +14,8 @@ Plan shape per round (the one-job-per-iteration discipline):
 * candidate dists = groupBy(dst).min(dist + w) — partial+final min agg,
   the ANP analog for min-plus algebra;
 * merge with state via one full-outer join; improved rows are both the
-  convergence signal and the next frontier; lazy localCheckpoint
-  materialized by the frontier-count action.
+  convergence signal and the next frontier; the frontier count is the
+  `linkgraph.iterate.fixpoint` probe that materializes the round.
 
 Exactness: weights and dists are integers — no float drift, so a fixed
 round budget is mirrorable bit-for-bit by an unrolled SQL oracle
@@ -30,7 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.iterate import fixpoint
 
 
 def sssp(
@@ -51,52 +52,41 @@ def sssp(
     if "w" not in graph.edges.columns:
         raise ValueError("graph edge table must carry an integer weight column 'w'")
     spark = graph.spark
-    n = graph.num_vertices()
 
-    state = spark.createDataFrame(
-        [(int(v), 0) for v in sorted(set(sources))], "vid long, dist long"
-    ).localCheckpoint(eager=True)
-    frontier = state
-    prev = None
+    def step(state: DataFrame, metrics: dict) -> DataFrame:
+        # the rows improved last round are the frontier
+        msgs = state.where(F.col("improved")).select(F.col("vid").alias("src"), "dist")
+        cand = (
+            graph.expand(msgs, est_rows=max(metrics["frontier_rows"], 1))
+            .groupBy("dst")
+            .agg(F.min(F.col("dist") + F.col("w")).alias("nd"))
+        )
+        return (
+            state.alias("s")
+            .join(cand.alias("c"), F.col("s.vid") == F.col("c.dst"), "full_outer")
+            .select(
+                F.coalesce(F.col("s.vid"), F.col("c.dst")).alias("vid"),
+                F.least(
+                    F.coalesce(F.col("s.dist"), F.col("c.nd")),
+                    F.coalesce(F.col("c.nd"), F.col("s.dist")),
+                ).alias("dist"),
+                (F.col("s.dist").isNull() | (F.col("c.nd") < F.col("s.dist"))).alias(
+                    "improved"
+                ),
+            )
+        )
 
-    budget = rounds if rounds is not None else max_rounds
-    frontier_rows = len(sources)  # carried forward from the improved-count action
-    with iteration_plan(spark):
-        for _ in range(budget):
-            msgs = frontier.select(F.col("vid").alias("src"), "dist")
-            cand = (
-                graph.expand(msgs, est_rows=frontier_rows)
-                .groupBy("dst")
-                .agg(F.min(F.col("dist") + F.col("w")).alias("nd"))
-            )
-            merged = (
-                state.alias("s")
-                .join(cand.alias("c"), F.col("s.vid") == F.col("c.dst"), "full_outer")
-                .select(
-                    F.coalesce(F.col("s.vid"), F.col("c.dst")).alias("vid"),
-                    F.least(
-                        F.coalesce(F.col("s.dist"), F.col("c.nd")),
-                        F.coalesce(F.col("c.nd"), F.col("s.dist")),
-                    ).alias("dist"),
-                    (
-                        F.col("s.dist").isNull()
-                        | (F.col("c.nd") < F.col("s.dist"))
-                    ).alias("improved"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            n_improved = merged.where(F.col("improved")).count()  # materializes
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev = merged
-            frontier = merged.where(F.col("improved")).select("vid", "dist")
-            frontier_rows = max(int(n_improved), 1)
-            state = merged.select("vid", "dist")
-            if rounds is None and n_improved == 0:
-                break
+    state, _, _ = fixpoint(
+        spark.createDataFrame(
+            [(int(v), 0, True) for v in sorted(set(sources))],
+            "vid long, dist long, improved boolean",
+        ),
+        step,
+        lambda st: {"frontier_rows": st.where(F.col("improved")).count()},
+        lambda m, _: rounds is None and m["frontier_rows"] == 0,
+        rounds if rounds is not None else max_rounds,
+        seed_metrics=lambda _: {"frontier_rows": len(sources)},
+    )
     return state.select(
         F.col("vid").cast("long").alias("vid"), F.col("dist").cast("long").alias("dist")
     )

@@ -4,6 +4,7 @@ import collections
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from linkgraph.algos.components import connected_components
 from linkgraph.algos.labelprop import label_propagation
@@ -169,22 +170,84 @@ def test_pagerank_directed_with_sinks_sums_to_one(spark):
     g.unpersist()
 
 
-def test_fused_iteration_lineage_bounded(er):
+def test_fused_iteration_lineage_bounded(spark, er, tmp_path):
     """Lazy localCheckpoint in the kernel loops must still truncate lineage
     every iteration (the round-1 pathology was unbounded plan growth under
-    AQE): after 8 fused iterations the returned plan is a checkpoint scan,
-    not an 8-deep join tree."""
-    from linkgraph.algos.labelprop import label_propagation
-    from linkgraph.algos.pagerank import pagerank
+    AQE): after 5-8 fused iterations the returned plan is a checkpoint
+    scan, not a join tree as deep as the iteration count.  The loop also
+    releases every state it checkpointed except the one it returns."""
+    from linkgraph.algos.components import connected_components_two_phase
+    from linkgraph.algos.katz import katz
+    from linkgraph.algos.labelprop import label_spreading
+    from linkgraph.algos.sssp import sssp
+    from linkgraph.checkpoint import CheckpointManager
+
+    def plan_of(df):
+        return df._jdf.queryExecution().analyzed().toString()
 
     pr = pagerank(er, tol=0.0, max_iter=8)
-    plan = pr._jdf.queryExecution().analyzed().toString()
+    plan = plan_of(pr)
     assert "ExistingRDD" in plan or "LogicalRDD" in plan
     assert plan.count("Join") == 0 and len(plan) < 4000
 
-    lp = label_propagation(er, max_iter=5)
-    plan = lp._jdf.queryExecution().analyzed().toString()
-    assert plan.count("Join") == 0 and len(plan) < 4000
+    erw = LinkGraph(er.edges.withColumn("w", F.lit(1).cast("long")), symmetric=True)
+    seeds = spark.createDataFrame([(0, 0), (1, 1)], "vid long, label long")
+    for df in (
+        label_propagation(er, max_iter=5),
+        connected_components(er, max_iter=8),
+        katz(er, tol=0.0, max_iter=8),
+        sssp(erw, [0], rounds=8),
+        label_spreading(er, seeds, rounds=8),
+    ):
+        plan = plan_of(df)
+        assert plan.count("Join") == 0 and len(plan) < 4000, plan[:400]
+    # two-phase CC joins its final star forest back to the vertex table once
+    plan = plan_of(connected_components_two_phase(er, max_rounds=8))
+    assert plan.count("Join") <= 1 and len(plan) < 4000, plan[:400]
+
+    # state release: a warm snapshotting run leaves exactly one new cached
+    # RDD behind — the returned state.  Replaced and snapshot-reloaded
+    # states are all unpersisted.
+    mgr = CheckpointManager(spark, str(tmp_path / "release"))
+    pagerank(er, tol=0.0, max_iter=3, checkpoint_mgr=mgr, snapshot_every=1)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keySet())
+    kept = pagerank(er, tol=0.0, max_iter=3, checkpoint_mgr=mgr, snapshot_every=1)
+    assert len(set(persistent().keySet()) - before) == 1
+    assert kept.count() == er.num_vertices()
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_one_job_per_iteration(spark, er):
+    """Each fixpoint iteration is ONE fused Spark job (expand + update +
+    probe): two more iterations cost exactly two more jobs.  The byte gate
+    is switched off so expand shuffles instead of broadcasting the
+    messages — a broadcast build is a collect job of its own."""
+    from linkgraph.algos.katz import katz
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        for name, kernel in (
+            ("pagerank", lambda k: pagerank(er, tol=0.0, max_iter=k)),
+            ("katz", lambda k: katz(er, tol=0.0, max_iter=k)),
+        ):
+            kernel(1)  # warm: cached degree table and vertex count
+            short = _jobs_in_group(spark, f"{name}-3", lambda: kernel(3))
+            long_ = _jobs_in_group(spark, f"{name}-5", lambda: kernel(5))
+            assert long_ - short == 2, (name, short, long_)
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_personalized_pagerank_vs_numpy(spark):

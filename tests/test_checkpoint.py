@@ -104,3 +104,27 @@ def test_pagerank_resume(spark, grid, tmp_path):
     a = {r["vid"]: r["pr"] for r in full.collect()}
     b = {r["vid"]: r["pr"] for r in resumed.collect()}
     assert all(abs(a[v] - b[v]) < 1e-9 for v in a)
+
+
+def test_cc_resume_equals_uninterrupted(spark, tmp_path):
+    """CC kill-and-resume: a run cut at max_iter=2 warns that it is not
+    converged and leaves its iteration-2 snapshot; resuming from it gives
+    exactly the uninterrupted (vid, comp) result.  A 64-vertex path needs
+    more than 4 pointer-doubling rounds."""
+    from linkgraph.algos.components import connected_components
+
+    path = LinkGraph.from_undirected(
+        edges_df(spark, [(i, i + 1) for i in range(63)]), num_partitions=8
+    )
+    full = sorted(tuple(r) for r in connected_components(path).collect())
+    assert {comp for _, comp in full} == {0}
+
+    mgr = CheckpointManager(spark, str(tmp_path / "chkcc"))
+    with pytest.warns(UserWarning, match="NOT converged"):
+        connected_components(path, max_iter=2, checkpoint_mgr=mgr, snapshot_every=2)
+    snap = mgr.latest()
+    assert snap is not None and snap["metrics"]["iteration"] == 2
+    assert snap["metrics"]["changed"] > 0
+
+    resumed = connected_components(path, checkpoint_mgr=mgr, resume=True)
+    assert sorted(tuple(r) for r in resumed.select("vid", "comp").collect()) == full
