@@ -10,13 +10,16 @@ Spark-native re-expression of [MSBFS15] Alg. 2/3 (SURVEY.md §2.9 K1/K2):
 * masking/update (seen' = seen|agg, visit' = agg & ~seen) is pure int64
   column arithmetic — WholeStageCodegen, no Python in the hot path.
 * per-level lane accounting (closeness r/s, frontier emptiness) is one
-  vectorized Arrow kernel (`mapInArrow`) emitting ≤513 rows per batch.
+  Spark aggregate of per-bit sums over the inlined nonzero visit limbs,
+  grouped by limb index (≤9 rows collected).  No level starts a Python
+  task: each costs ~250 ms of worker CPU before any work, more than an
+  Arrow/numpy kernel saves here (BENCH/BASELINE.md).
 * direction/strategy switch (K3 analog): the frontier side is broadcast
   when small (first/last levels), shuffled-hash otherwise; the edge table
   never re-shuffles (partitioned by src at build).
 
 The OR-aggregate is relational (groupBy(dst).agg(bit_or(limb)...)).  A
-numpy applyInPandas variant (bitwise_or.reduceat per dst bucket) lost
+numpy grouped-pandas variant (bitwise_or.reduceat per dst bucket) lost
 every A/B against it, 0.63-0.97x, and was removed (BENCH/BASELINE.md).
 """
 
@@ -28,18 +31,16 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from linkgraph.graph import LinkGraph, broadcast_threshold, parse_bytes
-from linkgraph.operators.bitset import limb_names, limbs_to_bits, pack_sources
+from linkgraph.iterate import release
+from linkgraph.operators.bitset import limb_names, pack_sources
 from linkgraph.schemas import NLIMBS, bfs_state_schema
 
-_S = limb_names("s")
 _V = limb_names("v")
-_A = limb_names("a")
 
 
 @dataclass
@@ -73,132 +74,87 @@ class MsBfsResult:
         return self._distances_pdf
 
 
-def _lane_count_kernel(
-    nlimbs: int, nsrc: int, with_deg: bool = False, full_masks=None
-):
-    """mapInArrow kernel over (vid[, deg], v0..[, s0..]) -> per-lane new-bit
-    counts.  Emits (lane, cnt) for lanes 0..nsrc-1 plus sentinel rows:
-    lane=-1: number of rows with any new bit (frontier row count);
-    lane=-2 (when with_deg): Σ deg(v)·popcount(v) over frontier rows — the
-    exact (edge, lane) expansion count of the NEXT level (TEPS accounting);
-    lane=-3 (when full_masks): number of CLOSED rows (seen full across all
-    lanes) — drives the K3 pull-filter gate, measured for free in the same
-    state scan instead of an extra job;
-    lane=-4: total state rows — lets the bottom-up gate know when the state
-    covers all |V| vertices (open set = not-closed state rows exactly).
-    """
+def _closed_pred(nsrc: int) -> str:
+    """K3 pull-filter predicate, a row seen in all nsrc lanes: every limb
+    equals its full mask, as signed int64 literals (limb i covers lanes
+    [64i, 64i+64))."""
+    return " and ".join(
+        f"s{i} = {-1 if nsrc >= 64 * i + 64 else (1 << (nsrc - 64 * i)) - 1}L"
+        for i in range((nsrc + 63) // 64)
+    )
 
-    def fn(batches):
-        total = np.zeros(nsrc, dtype=np.int64)
-        rows_any = 0
-        traversals = 0
-        closed_rows = 0
-        state_rows = 0
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            state_rows += batch.num_rows
-            limbs = np.column_stack(
-                [
-                    batch.column(f"v{i}").to_numpy(zero_copy_only=False)
-                    for i in range(nlimbs)
-                ]
-            ).view(np.uint64)
-            any_mask = (limbs != 0).any(axis=1)
-            rows_any += int(any_mask.sum())
-            if full_masks is not None:
-                seen = np.column_stack(
-                    [
-                        batch.column(f"s{i}").to_numpy(zero_copy_only=False)
-                        for i in range(nlimbs)
-                    ]
-                ).view(np.uint64)
-                fm = np.asarray(full_masks, dtype=np.int64).view(np.uint64)
-                closed_rows += int((seen == fm).all(axis=1).sum())
-            if any_mask.any():
-                bits = limbs_to_bits(limbs[any_mask])
-                total += bits.sum(axis=0)[:nsrc].astype(np.int64)
-                if with_deg:
-                    deg = (
-                        batch.column("deg")
-                        .to_numpy(zero_copy_only=False)[any_mask]
-                        .astype(np.int64)
-                    )
-                    traversals += int(
-                        (deg * bits.sum(axis=1).astype(np.int64)).sum()
-                    )
-        lanes = [np.arange(nsrc, dtype=np.int32), [-1], [-4]]
-        cnts = [total, [rows_any], [state_rows]]
-        if with_deg:
-            lanes.append([-2])
-            cnts.append([traversals])
-        if full_masks is not None:
-            lanes.append([-3])
-            cnts.append([closed_rows])
-        yield pa.RecordBatch.from_pydict(
-            {
-                "lane": pa.array(np.concatenate(lanes).astype(np.int32), pa.int32()),
-                "cnt": pa.array(np.concatenate(cnts).astype(np.int64), pa.int64()),
-            }
+
+def _lane_accounting(
+    df: DataFrame, nsrc: int, closed_pred: str | None = None, with_deg: bool = False
+) -> tuple[np.ndarray, int, int, int, int]:
+    """Per-lane counts of the set visit bits of (vid, v0..[, s0..][, deg]),
+    plus the row sentinels, as ONE aggregate that collects at most 9 rows.
+
+    Each row inlines into (i, limb[, t]) rows: one per NONZERO visit limb
+    (i = 0..), and a sentinel (i = -1) whose limb packs the row's flags —
+    bit 0: any visit bit set (a frontier row); bit 1: seen full across all
+    lanes (a CLOSED row, when `closed_pred` is given; it drives the K3 pull
+    filter, measured for free in the same state scan) — and whose t is
+    deg(v)·popcount(v), the exact (edge, lane) expansion count of the NEXT
+    level (TEPS accounting, when `with_deg`).  Grouped by i, the sum of bit
+    b is lane 64i+b's count; for the sentinel, bits 0/1 count the frontier
+    and closed rows and count(*) the state rows, which tells the bottom-up
+    gate when the state covers all |V| vertices.
+
+    Returns (lane counts, frontier rows, closed rows, state rows, Σ t)."""
+    used = (nsrc + 63) // 64
+    flags = "if(" + " or ".join(f"v{i} != 0" for i in range(used)) + ", 1L, 0L)"
+    if closed_pred is not None:
+        flags += f" | if({closed_pred}, 2L, 0L)"
+    t_head, t_limb = "", ""
+    if with_deg:
+        popcount = " + ".join(f"bit_count(v{i})" for i in range(used))
+        t_head, t_limb = f", 't', deg * ({popcount})", ", 't', 0L"
+    structs = [f"named_struct('i', -1, 'limb', {flags}{t_head})"] + [
+        f"named_struct('i', {i}, 'limb', v{i}{t_limb})" for i in range(used)
+    ]
+    # the 64 sums as ONE array expression: 64 separate Columns cost ~0.1 s
+    # of py4j calls per level to build
+    sums = ", ".join(f"sum(shiftrightunsigned(limb, {b}) & 1)" for b in range(64))
+    rows = (
+        df.selectExpr(f"inline(array({', '.join(structs)}))")
+        .where("i = -1 or limb != 0")
+        .groupBy("i")
+        .agg(
+            F.expr(f"array({sums})").alias("c"),
+            F.count(F.lit(1)).alias("rows"),
+            *([F.sum("t").alias("t")] if with_deg else []),
         )
-
-    return fn
-
-
-def _explode_kernel(nlimbs: int, nsrc: int):
-    """mapInArrow: (vid, v0..) -> (vid, lane) for every set visit bit."""
-
-    def fn(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            vid = batch.column("vid").to_numpy(zero_copy_only=False)
-            limbs = np.column_stack(
-                [
-                    batch.column(f"v{i}").to_numpy(zero_copy_only=False)
-                    for i in range(nlimbs)
-                ]
-            ).view(np.uint64)
-            bits = limbs_to_bits(limbs)[:, :nsrc]
-            r, lane = np.nonzero(bits)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "vid": pa.array(vid[r], pa.int64()),
-                    "lane": pa.array(lane.astype(np.int32), pa.int32()),
-                }
-            )
-
-    return fn
+        .collect()
+    )
+    lanes = np.zeros(64 * used, dtype=np.int64)
+    frontier = closed = state_rows = traversals = 0
+    for row in rows:
+        if row["i"] < 0:
+            frontier, closed, state_rows = row["c"][0], row["c"][1], row["rows"]
+            traversals = row["t"] if with_deg else 0
+        else:
+            lanes[64 * row["i"] : 64 * row["i"] + 64] = row["c"]
+    return lanes[:nsrc], frontier, closed, state_rows, traversals
 
 
-def _bitmap_build_kernel(n_limbs_v: int):
-    """mapInArrow over (vid) -> sparse (idx, limb) partial bitmaps.
-
-    Each task ORs its vids into a task-local |V|-bit array (12 MB per 10^8
-    vertices) and emits only the nonzero limbs; a bit_or aggregate on idx
-    merges the partials — at most (max_vid/64) narrow rows ever move."""
-
-    def fn(batches):
-        limbs = np.zeros(n_limbs_v, dtype=np.uint64)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            v = batch.column("vid").to_numpy(zero_copy_only=False).astype(np.int64)
-            np.bitwise_or.at(
-                limbs, v >> 6, np.uint64(1) << (v & 63).astype(np.uint64)
-            )
-        idx = np.flatnonzero(limbs)
-        yield pa.RecordBatch.from_pydict(
-            {
-                "idx": pa.array(idx.astype(np.int64), pa.int64()),
-                "limb": pa.array(limbs[idx].view(np.int64), pa.int64()),
-            }
-        )
-
-    return fn
+def _visit_lanes(state: DataFrame, nsrc: int) -> DataFrame:
+    """(vid, lane) for every set visit bit: the nonzero limbs inlined as
+    (vid, i, limb), one row per bit position b, the set ones kept as lane
+    64i+b."""
+    structs = ", ".join(
+        f"named_struct('i', {i}, 'limb', v{i})" for i in range((nsrc + 63) // 64)
+    )
+    return (
+        state.selectExpr("vid", f"inline(array({structs}))")
+        .where("limb != 0")
+        .selectExpr("vid", "i", "limb", "explode(sequence(0, 63)) as b")
+        .where("(shiftrightunsigned(limb, b) & 1) = 1")
+        .selectExpr("vid", "cast(64 * i + b as int) as lane")
+    )
 
 
-def _closed_limb_table(state: DataFrame, closed_pred: str, max_vid: int) -> DataFrame:
+def _closed_limb_table(state: DataFrame, closed_pred: str) -> DataFrame:
     """K3 mid-range side-channel: the CLOSED vertex set as a bitmap packed
     into a (idx, limb) table — limb i holds the closed-bits of vertices
     [64i, 64i+64).
@@ -208,22 +164,21 @@ def _closed_limb_table(state: DataFrame, closed_pred: str, max_vid: int) -> Data
     bytes per closed vertex), so the mid-range regime — open AND closed
     sets both beyond the row-broadcast threshold — still broadcasts easily
     (10^9 vertices = 15.6M rows / 125 MB of limbs, within
-    spark.linkgraph.msbfs.bitmapMaxBytes).  Built distributedly: per-task
-    partial bitmaps (mapInArrow, numpy bitwise_or.at) -> bit_or merge on
-    limb index; only NONZERO limbs ever exist, so sparsity is free.  The
+    spark.linkgraph.msbfs.bitmapMaxBytes).  Built distributedly as one
+    bit_or aggregate of 1 << (vid & 63) on vid >> 6: the partial aggregate
+    merges each task's vertices before the shuffle, so at most (max_vid/64)
+    narrow rows per task move, and only NONZERO limbs ever exist.  The
     consumer joins it broadcast and tests the bit with pure codegen'd int64
-    arithmetic — no Python, no shuffle (a first-cut mapInArrow message
+    arithmetic — no Python, no shuffle (a first-cut Arrow/numpy message
     filter was measured 14% SLOWER than the anti-join fallback at bench
     scale purely from Arrow-serializing every 9-column message row;
     BENCH/bitmap_bench.py)."""
-    n_limbs_v = (max_vid >> 6) + 1
     return (
         state.where(closed_pred)
-        .select("vid")
-        .mapInArrow(_bitmap_build_kernel(n_limbs_v), "idx long, limb long")
-        .groupBy("idx")
-        .agg(F.bit_or("limb").alias("_bm_limb"))
-        .withColumnRenamed("idx", "_bm_idx")
+        .groupBy(F.expr("shiftright(vid, 6)").alias("_bm_idx"))
+        .agg(
+            F.bit_or(F.expr("shiftleft(1L, cast(vid & 63 as int))")).alias("_bm_limb")
+        )
     )
 
 
@@ -310,19 +265,8 @@ def msbfs(
         state = spark.createDataFrame(pack_sources(sources, nlimbs), schema=schema)
         state = state.persist(StorageLevel.MEMORY_AND_DISK)
 
-    # K3 pull-filter constants: per-limb "all nsrc lanes seen" masks as
-    # signed int64 literals (limb i covers lanes [64i, 64i+64))
     n_vertices = graph.num_vertices() if bottom_up else 0
-    full_masks = []
-    for i in range(nlimbs):
-        bits = min(64, max(0, nsrc - 64 * i))
-        full_masks.append(-1 if bits == 64 else (1 << bits) - 1)
-
-    count_kernel = _lane_count_kernel(
-        nlimbs, nsrc, with_deg=track_teps, full_masks=full_masks if bottom_up else None
-    )
-    count_schema = "lane int, cnt long"
-    explode_kernel = _explode_kernel(nlimbs, nsrc)
+    closed_pred = _closed_pred(nsrc)
     frontier_rows = None  # unknown until first accounting pass
     closed_rows = 0  # K3 gate: fully-seen vertex count, measured per level
     state_rows = 0  # K3 gate: state row count (== |V| once fully covered)
@@ -345,7 +289,7 @@ def msbfs(
                 # ACTION that materializes the (lazily localCheckpointed) state
                 # of the previous level's update — one fused Spark job per
                 # level covers expand + OR-agg + mask/update + accounting.
-                scols = list(_S) if bottom_up else []
+                acct_src = state
                 if track_teps:
                     deg = graph.degrees()
                     thresh = broadcast_threshold(spark)
@@ -357,26 +301,18 @@ def msbfs(
                     acct_src = state.join(deg, "vid", "left").withColumn(
                         "deg", F.coalesce(F.col("deg"), F.lit(0))
                     )
-                    counts_in = acct_src.select("vid", "deg", *_V, *scols)
-                else:
-                    counts_in = state.select("vid", *_V, *scols)
-                counts = (
-                    counts_in.mapInArrow(count_kernel, count_schema)
-                    .groupBy("lane")
-                    .agg(F.sum("cnt").alias("cnt"))
-                    .collect()
+                lane_arr, frontier_rows, closed_rows, state_rows, level_edges = (
+                    _lane_accounting(
+                        acct_src,
+                        nsrc,
+                        closed_pred if bottom_up else None,
+                        with_deg=track_teps,
+                    )
                 )
-                by_lane = {row["lane"]: row["cnt"] for row in counts}
-                frontier_rows = int(by_lane.pop(-1, 0))
-                traversed += int(by_lane.pop(-2, 0))
-                closed_rows = int(by_lane.pop(-3, 0))
-                state_rows = int(by_lane.pop(-4, 0))
-                new_total = int(sum(by_lane.values()))
+                traversed += level_edges
+                new_total = int(lane_arr.sum())
                 per_level_new.append(new_total)
                 if new_total:
-                    lane_arr = np.zeros(nsrc, dtype=np.int64)
-                    for lane, cnt in by_lane.items():
-                        lane_arr[lane] = cnt
                     r += lane_arr
                     s += lane_arr * level
                     if level:
@@ -386,17 +322,13 @@ def msbfs(
                     # distributed per-level delta append — never through the
                     # driver (n×512 distances at scale is terabytes)
                     (
-                        state.select("vid", *_V)
-                        .mapInArrow(explode_kernel, "vid long, lane int")
+                        _visit_lanes(state, nsrc)
                         .withColumn("dist", F.lit(level).cast("int"))
                         .write.mode("overwrite")
                         .parquet(os.path.join(distances_path, f"level={level}"))
                     )
             if prev_state is not None:
-                try:
-                    prev_state.unpersist()
-                except Exception:
-                    pass  # localCheckpoint blocks are released by the ContextCleaner
+                release(prev_state)
                 prev_state = None
 
             if new_total == 0 or (max_levels is not None and level >= max_levels):
@@ -417,18 +349,18 @@ def msbfs(
                     # manifest records the distance-delta location, not the data
                     metrics["distances_path"] = distances_path
                 reloaded = checkpoint_mgr.write_state(state, level, metrics)
-                state.unpersist()
+                release(state)
                 state = reloaded.persist(StorageLevel.MEMORY_AND_DISK)
 
             # -- K3 direction switch ([MSBFS15] §4.3, Beamer bottom-up): on
             # late dense levels most destinations are already fully seen
             # across all lanes, so their messages would be aggregated and
             # then masked to zero.  Strategy, gated on the MEASURED
-            # closed-vertex fraction (lane=-3 sentinel — free, same state
+            # closed-vertex fraction (closed-row sentinel — free, same state
             # scan), decided BEFORE the expand so the expansion itself can
             # shrink:
             #   1. open-side semi-join — when the state covers all |V|
-            #      vertices (late levels; lane=-4 sentinel) and the OPEN set
+            #      vertices (late levels; state-row sentinel) and the OPEN set
             #      is broadcastable, semi-join the EDGE side on open
             #      destinations: closed-dst edges are never enumerated at
             #      all, and the map-side filter preserves the edge cache's
@@ -460,10 +392,6 @@ def msbfs(
             strategy = "push"
             if bottom_up and n_vertices and closed_rows:
                 if closed_rows / float(n_vertices) >= bottom_up_threshold:
-                    closed_pred = " and ".join(
-                        f"s{i} = {m}L"
-                        for i, m in enumerate(full_masks[: (nsrc + 63) // 64])
-                    )
                     thresh = broadcast_threshold(spark)
                     open_rows = max(state_rows - closed_rows, 0)
                     if (
@@ -497,9 +425,7 @@ def msbfs(
                             bottom_up_bitmap
                             and ((max_vid >> 6) + 1) * 8 <= bitmap_budget
                         ):
-                            msg_bitmap = _closed_limb_table(
-                                state, closed_pred, max_vid
-                            )
+                            msg_bitmap = _closed_limb_table(state, closed_pred)
                             strategy = "bitmap"
                         else:
                             closed_filter = state.where(closed_pred).select(
@@ -574,7 +500,7 @@ def msbfs(
             raw.join(F.broadcast(lane_map), "lane")
             .select("src", "vid", F.col("dist").cast("int").alias("dist"))
         )
-    state.unpersist()
+    release(state)
     return MsBfsResult(
         sources=list(sources),
         levels=level,

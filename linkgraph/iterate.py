@@ -84,7 +84,7 @@ def fixpoint(
         for it in range(it0, max_iter):
             new_state = step(state, metrics).localCheckpoint(eager=False)
             new_metrics = probe(new_state)
-            _release(state)
+            release(state)
             state = new_state
             if checkpoint_mgr is not None and (it + 1) % snapshot_every == 0:
                 reloaded = checkpoint_mgr.write_state(
@@ -92,7 +92,7 @@ def fixpoint(
                     it + 1,
                     {"iteration": it + 1, **new_metrics},
                 ).localCheckpoint(eager=True)
-                _release(state)
+                release(state)
                 state = reloaded
             converged = done(new_metrics, metrics)
             metrics = new_metrics
@@ -112,12 +112,17 @@ def count_changed(state: DataFrame, col: str, prev_col: str) -> int:
     )
 
 
-def _release(state: DataFrame) -> None:
-    """Drop the cached blocks of the RDD under a local checkpoint, the call
-    Spark's ContextCleaner makes for a garbage-collected RDD
-    (``RDD.unpersist`` would also log a truncated-lineage warning per
-    iteration).  Best effort: if py4j cannot reach it, the ContextCleaner
-    frees the blocks once the DataFrame is garbage-collected."""
+def release(state: DataFrame) -> None:
+    """Free the cached blocks of a loop state: ``unpersist()`` for a
+    ``persist()``ed DataFrame; for a local checkpoint, the RDD under its
+    ``LogicalRDD``, dropped with the call Spark's ContextCleaner makes for a
+    garbage-collected RDD (``DataFrame.unpersist()`` is a no-op there, and
+    ``RDD.unpersist`` would log a truncated-lineage warning per iteration).
+    Best effort for a local checkpoint: if py4j cannot reach the RDD, the
+    ContextCleaner frees the blocks once the DataFrame is garbage-collected."""
+    if state.is_cached:
+        state.unpersist()
+        return
     try:
         rdd_id = state._jdf.queryExecution().analyzed().rdd().id()
         state.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, False)

@@ -592,3 +592,29 @@ def test_embedding_link_auc_separates_two_cliques(spark):
     assert r.n_pos == 30 and r.n_neg > 0
     assert 0.0 <= r.auc <= 1.0
     assert r.auc > 0.75
+
+
+def test_no_python_kernels_in_algos():
+    """The graph kernels stay in the JVM.  Every Python task a Spark job
+    starts (mapInArrow, pandas UDFs, ...) costs about 250 ms of worker CPU
+    before it does any work (pyspark's per-task setup_spark_files ->
+    importlib.invalidate_caches re-reads the jar and zip directories on the
+    worker's sys.path), which made MS-BFS's per-level lane counting cost
+    more than its traversal (BENCH/BASELINE.md)."""
+    import pathlib
+    import re
+
+    banned = re.compile(
+        r"mapInArrow|mapInPandas|applyInPandas|applyInArrow|pandas_udf|F\.udf"
+    )
+    algos = pathlib.Path(__file__).resolve().parent.parent / "linkgraph" / "algos"
+    hits = [
+        f"{path.name}:{no}: {line.strip()}"
+        for path in sorted(algos.glob("*.py"))
+        for no, line in enumerate(path.read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert not hits, (
+        "Python kernels in linkgraph/algos/ (~250 ms of worker CPU per task):\n"
+        + "\n".join(hits)
+    )

@@ -184,7 +184,7 @@ def test_closed_limb_table_bit_math(spark):
     state = spark.createDataFrame(rows, "vid long, s0 long")
     limbs = {
         r["_bm_idx"]: r["_bm_limb"]
-        for r in _closed_limb_table(state, "s0 = 31", max_vid=199).collect()
+        for r in _closed_limb_table(state, "s0 = 31").collect()
     }
     assert limbs == {
         0: (1 << 1) | (1 << 63) if False else (1 << 1) | -(1 << 63),  # bit 63 = sign bit
@@ -195,7 +195,7 @@ def test_closed_limb_table_bit_math(spark):
     msgs = spark.createDataFrame(
         [(v,) for v in [0, 1, 5, 63, 64, 100, 130, 199]], "dst long"
     )
-    bm = _closed_limb_table(state, "s0 = 31", max_vid=199)
+    bm = _closed_limb_table(state, "s0 = 31")
     kept = sorted(
         r["dst"]
         for r in msgs.join(
@@ -279,3 +279,70 @@ def test_eccentricity_grid(grid):
     assert got[0] == (14, 64)
     # vid 27 = (3, 3): max |r-3|+|c-3| over the grid = 4+4 = 8
     assert got[27] == (8, 64)
+
+
+@pytest.mark.parametrize("nsrc", [1, 70, 512])
+def test_lane_accounting_matches_numpy(spark, nsrc):
+    """The accounting aggregate and the distance explode against the numpy
+    bit matrix: random limbs (sign bit set on some), all-zero visit rows,
+    fully closed rows and a deg column."""
+    import pandas as pd
+
+    from linkgraph.algos.msbfs import (
+        _closed_pred,
+        _lane_accounting,
+        _visit_lanes,
+    )
+    from linkgraph.operators.bitset import limbs_to_bits
+
+    rng = np.random.default_rng(nsrc)
+    n = 200
+    lane_mask = np.array(
+        [(1 << min(64, max(0, nsrc - 64 * i))) - 1 for i in range(8)], dtype=np.uint64
+    )
+    v = rng.integers(0, 2**64 - 1, size=(n, 8), dtype=np.uint64, endpoint=True)
+    v[::3] &= rng.integers(0, 2**64 - 1, size=(len(v[::3]), 8), dtype=np.uint64)
+    v[:5] |= np.uint64(1 << 63)
+    v[5:25] = 0
+    v &= lane_mask
+    seen = rng.integers(0, 2**64 - 1, size=(n, 8), dtype=np.uint64, endpoint=True)
+    seen[20:40] = np.uint64(2**64 - 1)
+    seen = (seen | v) & lane_mask
+    deg = rng.integers(0, 50, size=n)
+    pdf = pd.DataFrame({"vid": np.arange(n, dtype=np.int64), "deg": deg})
+    for i in range(8):
+        pdf[f"v{i}"] = v[:, i].view(np.int64)
+        pdf[f"s{i}"] = seen[:, i].view(np.int64)
+    df = spark.createDataFrame(pdf)
+
+    vbits = limbs_to_bits(v)[:, :nsrc]
+    frontier_ref = int(vbits.any(axis=1).sum())
+    closed_ref = int(limbs_to_bits(seen)[:, :nsrc].all(axis=1).sum())
+    assert 20 <= closed_ref < n
+    lanes, frontier, closed, rows, traversals = _lane_accounting(
+        df, nsrc, _closed_pred(nsrc), with_deg=True
+    )
+    assert np.array_equal(lanes, vbits.sum(axis=0))
+    assert frontier == frontier_ref <= n - 20
+    assert closed == closed_ref
+    assert rows == n
+    assert traversals == int((deg * vbits.sum(axis=1)).sum())
+
+    lanes, frontier, closed, rows, traversals = _lane_accounting(df, nsrc)
+    assert np.array_equal(lanes, vbits.sum(axis=0))
+    assert (frontier, closed, rows, traversals) == (frontier_ref, 0, n, 0)
+
+    r, lane = np.nonzero(vbits)
+    got = {(x["vid"], x["lane"]) for x in _visit_lanes(df, nsrc).collect()}
+    assert got == set(zip(r.tolist(), lane.tolist()))
+
+
+def test_msbfs_releases_level_state(spark, grid):
+    """A warm run leaves no cached RDD behind: every level's local
+    checkpoint and the persisted seed are released."""
+    msbfs(grid, [0, 9, 36])
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keySet())
+    res = msbfs(grid, [0, 9, 36])
+    assert res.levels == 15
+    assert set(persistent().keySet()) - before == set()
