@@ -296,6 +296,8 @@ def main():
         os.makedirs(eventlog, exist_ok=True)
         extra["spark.eventLog.enabled"] = "true"
         extra["spark.eventLog.dir"] = eventlog
+        # Spark 4.1 writes zstd by default; tools/stageprof.py reads plain JSON
+        extra["spark.eventLog.compress"] = "false"
     spark = get_spark(
         master=f"local[{cpus}]", app_name="linkgraph-bx", extra_conf=extra
     )

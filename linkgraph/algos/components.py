@@ -91,7 +91,7 @@ def connected_components(
     comp, metrics, converged = fixpoint(
         graph.vertices().select("vid", F.col("vid").alias("comp")),
         step,
-        lambda st: {"changed": count_changed(st, "comp", "pc")},
+        lambda st, _: {"changed": count_changed(st, "comp", "pc")},
         lambda m, _: m["changed"] == 0,
         max_iter,
         checkpoint_mgr=checkpoint_mgr,
@@ -150,7 +150,7 @@ def connected_components_two_phase(graph: LinkGraph, max_rounds: int = 64) -> Da
         .distinct()
     )
 
-    def _probe(df: DataFrame) -> dict:
+    def _probe(df: DataFrame, _prev: dict | None = None) -> dict:
         row = df.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(

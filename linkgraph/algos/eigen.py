@@ -51,7 +51,7 @@ def eigenvector_centrality(graph: LinkGraph, rounds: int = 8) -> DataFrame:
     state, _, _ = fixpoint(
         graph.vertices().select("vid", F.lit(1.0).alias("x")),
         step,
-        lambda st: {"rows": st.count()},
+        lambda st, _: {"rows": st.count()},
         lambda m, _: False,
         rounds,
     )

@@ -17,8 +17,9 @@ scores are directly comparable across seed sets.
 
 Plan shape: one expand job per round over the symmetric edge table (the
 PageRank discipline) — messages carry h_{t-1}, the bitwise identical
-degree division rides the post-aggregate projection, and each round is
-eager-localCheckpointed so the plan never grows.
+degree division rides the post-aggregate projection, and the rounds run on
+`linkgraph.iterate.fixpoint` (one fused job per round, lineage cut every
+round, each superseded round's state released).
 """
 
 from __future__ import annotations
@@ -26,7 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.iterate import fixpoint
 
 
 def hitting_time(
@@ -40,45 +42,34 @@ def hitting_time(
         raise ValueError("rounds must be >= 1")
     if not seeds:
         raise ValueError("hitting_time needs at least one seed")
-    spark = graph.spark
-    verts = (
-        graph.degrees()
-        .withColumn("is_seed", F.col("vid").isin([int(s) for s in seeds]))
-        .localCheckpoint(eager=True)
+    verts = graph.degrees().withColumn(
+        "is_seed", F.col("vid").isin([int(s) for s in seeds])
     )
-    h = verts.select("vid", F.lit(0.0).alias("x"))
-    n = verts.count()
+    n = graph.num_vertices()
 
-    retained: list[DataFrame] = []
-    with iteration_plan(spark):
-        for _ in range(rounds):
-            msgs = h.select(F.col("vid").alias("src"), "x")
-            acc = (
-                graph.expand(msgs, est_rows=n)
-                .groupBy("dst")
-                .agg(F.sum("x").alias("acc"))
-            )
-            h = (
-                verts.alias("v")
-                .join(acc.alias("a"), F.col("v.vid") == F.col("a.dst"), "left")
-                .select(
-                    F.col("v.vid").alias("vid"),
-                    F.when(F.col("v.is_seed"), F.lit(0.0))
-                    .otherwise(
-                        F.lit(1.0)
-                        + F.coalesce(F.col("a.acc"), F.lit(0.0)) / F.col("v.deg")
-                    )
-                    .alias("x"),
+    def step(h: DataFrame, _metrics: dict) -> DataFrame:
+        msgs = h.select(F.col("vid").alias("src"), "x")
+        acc = graph.expand(msgs, est_rows=n).groupBy("dst").agg(F.sum("x").alias("acc"))
+        return (
+            verts.alias("v")
+            .join(acc.alias("a"), F.col("v.vid") == F.col("a.dst"), "left")
+            .select(
+                F.col("v.vid").alias("vid"),
+                F.when(F.col("v.is_seed"), F.lit(0.0))
+                .otherwise(
+                    F.lit(1.0) + F.coalesce(F.col("a.acc"), F.lit(0.0)) / F.col("v.deg")
                 )
-                .localCheckpoint(eager=True)
+                .alias("x"),
             )
-            for old in retained:
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass
-            retained = [h]
+        )
 
+    h, _, _ = fixpoint(
+        verts.select("vid", F.lit(0.0).alias("x")),
+        step,
+        lambda st, _: {"rows": st.count()},
+        lambda m, _: False,
+        rounds,
+    )
     out_col = F.col("x")
     if round_to is not None:
         out_col = F.round(out_col, round_to) + F.lit(0.0)

@@ -70,7 +70,7 @@ def katz(
     state, _, _ = fixpoint(
         graph.vertices().select("vid", F.lit(float(beta)).alias("x")),
         step,
-        lambda st: {
+        lambda st, _: {
             "delta": float(st.agg(F.max(F.abs(F.col("x") - F.col("x_old")))).first()[0])
         },
         lambda m, _: tol > 0 and m["delta"] < tol,

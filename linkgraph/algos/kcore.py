@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.iterate import count_changed, fixpoint
 
 
 def k_core(graph: LinkGraph, k: int, rounds: int | None = None) -> DataFrame:
@@ -134,43 +135,32 @@ def coreness(
     """
     from pyspark.sql import Window
 
-    spark = graph.spark
-    c = graph.degrees().select("vid", F.col("deg").cast("long").alias("c"))
-    c = c.localCheckpoint(eager=True)
-    n_rounds = rounds if rounds is not None else max_rounds
-    converged = False
-    with iteration_plan(spark):
-        for _ in range(n_rounds):
-            cd = c.select(F.col("vid").alias("dst"), F.col("c").alias("cd"))
-            ev = graph.edges.select("src", "dst").join(cd, "dst")
-            w = Window.partitionBy("src").orderBy(
-                F.col("cd").desc(), F.col("dst").asc()
-            )
-            new = (
-                ev.select("src", "cd", F.row_number().over(w).alias("rn"))
-                .groupBy("src")
-                .agg(F.max(F.least(F.col("rn").cast("long"), F.col("cd"))).alias("c"))
-                .select(F.col("src").alias("vid"), "c")
-                .localCheckpoint(eager=False)
-            )
-            if rounds is None:
-                changed = (
-                    new.alias("n")
-                    .join(c.alias("o"), "vid")
-                    .where(F.col("n.c") != F.col("o.c"))
-                    .count()
-                )
-            else:
-                new.count()
-                changed = -1
-            try:
-                c.unpersist()
-            except Exception:
-                pass
-            c = new
-            if changed == 0:
-                converged = True
-                break
+    def step(c: DataFrame, _metrics: dict) -> DataFrame:
+        cd = c.select(F.col("vid").alias("dst"), F.col("c").alias("cd"))
+        ev = graph.edges.select("src", "dst").join(cd, "dst")
+        w = Window.partitionBy("src").orderBy(F.col("cd").desc(), F.col("dst").asc())
+        new = (
+            ev.select("src", "cd", F.row_number().over(w).alias("rn"))
+            .groupBy("src")
+            .agg(F.max(F.least(F.col("rn").cast("long"), F.col("cd"))).alias("c"))
+            .select(F.col("src").alias("vid"), "c")
+        )
+        if rounds is None:
+            # the previous value rides along for the changed-count probe
+            new = new.join(c.select("vid", F.col("c").alias("pc")), "vid", "left")
+        return new
+
+    c, _, converged = fixpoint(
+        graph.degrees().select("vid", F.col("deg").cast("long").alias("c")),
+        step,
+        lambda st, _: (
+            {"changed": count_changed(st, "c", "pc")}
+            if rounds is None
+            else {"rows": st.count()}
+        ),
+        lambda m, _: m.get("changed") == 0,
+        rounds if rounds is not None else max_rounds,
+    )
     if rounds is None and not converged:
         import warnings
 

@@ -76,7 +76,7 @@ def label_propagation(
     labels, _, _ = fixpoint(
         graph.vertices().select("vid", F.col("vid").alias("label")),
         step,
-        lambda st: {"changed": count_changed(st, "label", "pl")},
+        lambda st, _: {"changed": count_changed(st, "label", "pl")},
         lambda m, _: m["changed"] == 0,
         max_iter,
         checkpoint_mgr=checkpoint_mgr,
@@ -141,7 +141,7 @@ def label_spreading(
     f, _, _ = fixpoint(
         y.select("vid", "label", F.col("s").alias("score")),
         step,
-        lambda st: {"rows": st.count()},
+        lambda st, _: {"rows": st.count()},
         lambda m, _: False,
         rounds,
     )

@@ -14,6 +14,9 @@ Spark-native re-expression of [MSBFS15] Alg. 2/3 (SURVEY.md §2.9 K1/K2):
   grouped by limb index (≤9 rows collected).  No level starts a Python
   task: each costs ~250 ms of worker CPU before any work, more than an
   Arrow/numpy kernel saves here (BENCH/BASELINE.md).
+* the level loop is `linkgraph.iterate.fixpoint`, with that accounting as
+  its probe: expand + OR-aggregate + update + accounting run as one Spark
+  job per level, and the driver owns state release, snapshot and resume.
 * direction/strategy switch (K3 analog): the frontier side is broadcast
   when small (first/last levels), shuffled-hash otherwise; the edge table
   never re-shuffles (partitioned by src at build).
@@ -33,10 +36,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from linkgraph.graph import LinkGraph, broadcast_threshold, parse_bytes
-from linkgraph.iterate import release
+from linkgraph.iterate import fixpoint, release
 from linkgraph.operators.bitset import limb_names, pack_sources
 from linkgraph.schemas import NLIMBS, bfs_state_schema
 
@@ -162,17 +164,15 @@ def _closed_limb_table(state: DataFrame, closed_pred: str) -> DataFrame:
     The broadcast-set strategies cap out at autoBroadcastJoinThreshold rows
     of (dst) keys; the limb table is 64 vertices per row (1 bit vs ~24
     bytes per closed vertex), so the mid-range regime — open AND closed
-    sets both beyond the row-broadcast threshold — still broadcasts easily
-    (10^9 vertices = 15.6M rows / 125 MB of limbs, within
-    spark.linkgraph.msbfs.bitmapMaxBytes).  Built distributedly as one
+    sets both beyond the row-broadcast threshold — still broadcasts.  The
+    table has (max_vid >> 6) + 1 limbs of 8 bytes at most, gated on
+    spark.linkgraph.msbfs.bitmapMaxBytes: the default 128 MiB is 2^24 limbs,
+    which covers vids below 2^30 ≈ 1.07×10^9.  Built distributedly as one
     bit_or aggregate of 1 << (vid & 63) on vid >> 6: the partial aggregate
     merges each task's vertices before the shuffle, so at most (max_vid/64)
     narrow rows per task move, and only NONZERO limbs ever exist.  The
     consumer joins it broadcast and tests the bit with pure codegen'd int64
-    arithmetic — no Python, no shuffle (a first-cut Arrow/numpy message
-    filter was measured 14% SLOWER than the anti-join fallback at bench
-    scale purely from Arrow-serializing every 9-column message row;
-    BENCH/bitmap_bench.py)."""
+    arithmetic — no Python, no shuffle."""
     return (
         state.where(closed_pred)
         .groupBy(F.expr("shiftright(vid, 6)").alias("_bm_idx"))
@@ -187,7 +187,6 @@ def msbfs(
     sources: list[int],
     emit_distances: bool = False,
     distances_path: str | None = None,
-    checkpoint_every: int = 1,
     snapshot_every: int = 8,
     max_levels: int | None = None,
     track_teps: bool = False,
@@ -195,7 +194,6 @@ def msbfs(
     resume: bool = False,
     bottom_up: bool = True,
     bottom_up_threshold: float = 0.5,
-    bottom_up_bitmap: bool = True,
 ) -> MsBfsResult:
     """Run one ≤512-source batch to completion; returns lane accounting
     (r, s for closeness) and optionally full (src, vid, dist) distances.
@@ -203,30 +201,19 @@ def msbfs(
     At scale, distances are not materialized n×512 (the reference streams
     them through a visitor); closeness needs only the r/s accumulators.
 
-    Each level is ONE Spark job: the new state is lazily localCheckpointed
-    (plan truncated immediately) and the next level's accounting scan is
-    the action that materializes it — expand + OR-aggregate + update + lane
-    accounting in a single job instead of the round-2 two-jobs-per-level
-    shape (eager checkpoint job, then accounting job).  AQE is off inside
-    the loop (iteration_plan), which is the regime where lazy truncation is
-    deterministic.
+    The level loop is `linkgraph.iterate.fixpoint`: `step` makes the K3
+    choice and builds expand + OR-aggregate + mask, and `probe` is the lane
+    accounting of the new level, folded into running totals (r, s, h, ecc,
+    per-level counts, K3 choices and the gate's row counts).  Those totals
+    are the metrics a snapshot carries, so a resumed run reports the same
+    run as an uninterrupted one.
     """
     spark = graph.spark
     nsrc = len(sources)
     if nsrc == 0:
         raise ValueError("no sources")
-    nlimbs = NLIMBS
-    schema = bfs_state_schema(nlimbs)
 
     t0 = time.time()
-    level = 0
-    r = np.zeros(nsrc, dtype=np.int64)
-    s = np.zeros(nsrc, dtype=np.int64)
-    h = np.zeros(nsrc, dtype=np.float64)
-    ecc = np.zeros(nsrc, dtype=np.int64)
-    traversed = 0
-    per_level_new: list[int] = []
-    state = None
     if emit_distances and distances_path is None:
         import tempfile
         import uuid
@@ -243,276 +230,203 @@ def msbfs(
             tempfile.gettempdir(), f"msbfs_dist_{uuid.uuid4().hex}"
         )
 
-    skip_account = False  # snapshot level was already accounted pre-snapshot
-    if resume and checkpoint_mgr is not None:
-        snap = checkpoint_mgr.latest()
-        if snap is not None:
-            state = checkpoint_mgr.read_state(snap).persist(StorageLevel.MEMORY_AND_DISK)
-            m = snap["metrics"]
-            level = int(m["level"])
-            skip_account = True
-            r = np.asarray(m["r"], dtype=np.int64)
-            s = np.asarray(m["s"], dtype=np.int64)
-            h = np.asarray(m.get("h", np.zeros(nsrc)), dtype=np.float64)
-            ecc = np.asarray(m.get("ecc", np.zeros(nsrc)), dtype=np.int64)
-            traversed = int(m.get("traversed", 0))
-            per_level_new = list(m.get("per_level_new", []))
-            if emit_distances and m.get("distances_path"):
-                # distances live as distributed parquet; resume reuses the dir
-                distances_path = m["distances_path"]
-
-    if state is None:
-        state = spark.createDataFrame(pack_sources(sources, nlimbs), schema=schema)
-        state = state.persist(StorageLevel.MEMORY_AND_DISK)
-
-    n_vertices = graph.num_vertices() if bottom_up else 0
+    n_vertices = graph.num_vertices()
     closed_pred = _closed_pred(nsrc)
-    frontier_rows = None  # unknown until first accounting pass
-    closed_rows = 0  # K3 gate: fully-seen vertex count, measured per level
-    state_rows = 0  # K3 gate: state row count (== |V| once fully covered)
-    prev_state = None  # kept cached until the new state is materialized
-    strategies: list[str] = []  # per-level K3 choice (result diagnostics)
+    deg = None
+    if track_teps:
+        # bench-only instrumentation; byte-gated so instrumented runs at
+        # 10^9 vertices degrade to a shuffled join instead of an
+        # unconditional |V|-row broadcast
+        deg = graph.degrees()
+        thresh = broadcast_threshold(spark)
+        if 0 < thresh and n_vertices * 16 < thresh:
+            deg = F.broadcast(deg)
+    strategy = "push"  # the K3 choice of the level `step` last planned
 
-    from linkgraph.graph import iteration_plan
-
-    with iteration_plan(spark):
-        while True:
-            if skip_account:
-                # resumed: this level's bits were accounted before the snapshot
-                skip_account = False
-                new_total = per_level_new[level] if level < len(per_level_new) else 1
-                frontier_rows = None
-                closed_rows = 0  # unknown after resume; filter re-arms next level
-                state_rows = 0
-            else:
-                # -- lane accounting on current visit bits.  This scan is the
-                # ACTION that materializes the (lazily localCheckpointed) state
-                # of the previous level's update — one fused Spark job per
-                # level covers expand + OR-agg + mask/update + accounting.
-                acct_src = state
-                if track_teps:
-                    deg = graph.degrees()
-                    thresh = broadcast_threshold(spark)
-                    if 0 < thresh and graph.num_vertices() * 16 < thresh:
-                        deg = F.broadcast(deg)
-                    # bench-only instrumentation; byte-gated so instrumented
-                    # runs at 10^9 vertices degrade to a shuffled join
-                    # instead of an unconditional |V|-row broadcast
-                    acct_src = state.join(deg, "vid", "left").withColumn(
-                        "deg", F.coalesce(F.col("deg"), F.lit(0))
-                    )
-                lane_arr, frontier_rows, closed_rows, state_rows, level_edges = (
-                    _lane_accounting(
-                        acct_src,
-                        nsrc,
-                        closed_pred if bottom_up else None,
-                        with_deg=track_teps,
-                    )
-                )
-                traversed += level_edges
-                new_total = int(lane_arr.sum())
-                per_level_new.append(new_total)
-                if new_total:
-                    r += lane_arr
-                    s += lane_arr * level
-                    if level:
-                        h += lane_arr / level
-                        ecc = np.where(lane_arr > 0, level, ecc)
-                if emit_distances and new_total:
-                    # distributed per-level delta append — never through the
-                    # driver (n×512 distances at scale is terabytes)
-                    (
-                        _visit_lanes(state, nsrc)
-                        .withColumn("dist", F.lit(level).cast("int"))
-                        .write.mode("overwrite")
-                        .parquet(os.path.join(distances_path, f"level={level}"))
-                    )
-            if prev_state is not None:
-                release(prev_state)
-                prev_state = None
-
-            if new_total == 0 or (max_levels is not None and level >= max_levels):
-                break
-
-            if checkpoint_mgr is not None and level and level % snapshot_every == 0:
-                # durable snapshot: resumable mid-traversal with lineage+metrics
-                metrics = {
-                    "level": level,
-                    "r": r.tolist(),
-                    "s": s.tolist(),
-                    "h": h.tolist(),
-                    "ecc": ecc.tolist(),
-                    "traversed": traversed,
-                    "per_level_new": per_level_new,
-                }
-                if emit_distances:
-                    # manifest records the distance-delta location, not the data
-                    metrics["distances_path"] = distances_path
-                reloaded = checkpoint_mgr.write_state(state, level, metrics)
-                release(state)
-                state = reloaded.persist(StorageLevel.MEMORY_AND_DISK)
-
-            # -- K3 direction switch ([MSBFS15] §4.3, Beamer bottom-up): on
-            # late dense levels most destinations are already fully seen
-            # across all lanes, so their messages would be aggregated and
-            # then masked to zero.  Strategy, gated on the MEASURED
-            # closed-vertex fraction (closed-row sentinel — free, same state
-            # scan), decided BEFORE the expand so the expansion itself can
-            # shrink:
-            #   1. open-side semi-join — when the state covers all |V|
-            #      vertices (late levels; state-row sentinel) and the OPEN set
-            #      is broadcastable, semi-join the EDGE side on open
-            #      destinations: closed-dst edges are never enumerated at
-            #      all, and the map-side filter preserves the edge cache's
-            #      src-partitioning.  The strongest shrink — expansion cost
-            #      is O(edges into open vertices), not O(frontier edges).
-            #   2. closed-side anti-join on the edge side — same map-side
-            #      shrink when instead the CLOSED set is broadcastable
-            #      (anti keeps never-seen vertices' edges, so state coverage
-            #      doesn't matter).
-            #   3. closed-set BITMAP side-channel — the mid-range regime
-            #      where neither the open nor the closed set clears the
-            #      row-broadcast threshold: the closed set packs into a
-            #      64-vertices-per-row (idx, limb) bitmap table (1 bit vs
-            #      ~24 bytes per closed vertex — 10^9 vertices = 125 MB of
-            #      limbs, within spark.linkgraph.msbfs.bitmapMaxBytes,
-            #      default 128m) that broadcast-joins onto the messages on
-            #      dst>>6; a codegen'd bit-test drops closed-dst messages
-            #      map-side BEFORE the dst shuffle — the aggregation
-            #      exchange shrinks by the closed fraction with no
-            #      closed-set shuffle at all and zero Python in the path.
-            #   4. fallback message anti-join after the expand — only when
-            #      the bitmap is disabled or max_vid exceeds the bitmap
-            #      budget (keys on dst, the downstream aggregation key, so
-            #      the shuffle exchange is reused); saves shuffle +
-            #      aggregation work but pays a closed-set shuffle per level.
-            edges_open = None
-            closed_filter = None
-            msg_bitmap = None
-            strategy = "push"
-            if bottom_up and n_vertices and closed_rows:
-                if closed_rows / float(n_vertices) >= bottom_up_threshold:
-                    thresh = broadcast_threshold(spark)
-                    open_rows = max(state_rows - closed_rows, 0)
-                    if (
-                        state_rows == n_vertices
-                        and 0 < thresh
-                        and open_rows * 24 < thresh
-                    ):
-                        open_dst = state.where(f"not ({closed_pred})").select(
-                            F.col("vid").alias("dst")
-                        )
-                        edges_open = graph.edges.join(
-                            F.broadcast(open_dst), "dst", "left_semi"
-                        )
-                        strategy = "open_semi"
-                    elif 0 < thresh and closed_rows * 24 < thresh:
-                        closed_dst = state.where(closed_pred).select(
-                            F.col("vid").alias("dst")
-                        )
-                        edges_open = graph.edges.join(
-                            F.broadcast(closed_dst), "dst", "left_anti"
-                        )
-                        strategy = "closed_anti"
-                    else:
-                        bitmap_budget = parse_bytes(
-                            spark.conf.get(
-                                "spark.linkgraph.msbfs.bitmapMaxBytes", "128m"
-                            )
-                        )
-                        max_vid = graph.max_vid()
-                        if (
-                            bottom_up_bitmap
-                            and ((max_vid >> 6) + 1) * 8 <= bitmap_budget
-                        ):
-                            msg_bitmap = _closed_limb_table(state, closed_pred)
-                            strategy = "bitmap"
-                        else:
-                            closed_filter = state.where(closed_pred).select(
-                                F.col("vid").alias("dst")
-                            )
-                            strategy = "msg_anti"
-            strategies.append(strategy)
-
-            # -- expand: frontier ⋈ edges, OR-aggregate by dst (ANP).
-            # Strategy dispatch (broadcast / salted / shuffle) via graph.expand.
-            frontier = state.where(
-                " or ".join(f"v{i} != 0" for i in range(nlimbs))
-            ).select(F.col("vid").alias("src"), *_V)
-            msgs = graph.expand(
-                frontier, est_rows=frontier_rows, edges=edges_open
-            ).select("dst", *_V)
-            if msg_bitmap is not None:
-                # broadcast limb table + codegen'd bit test: keep a message
-                # iff its dst's closed-bit is CLEAR (absent limb == all open)
-                msgs = (
-                    msgs.join(
-                        F.broadcast(msg_bitmap),
-                        F.expr("shiftright(dst, 6)") == F.col("_bm_idx"),
-                        "left",
-                    )
-                    .where(
-                        F.expr(
-                            "_bm_limb is null or "
-                            "((_bm_limb >> cast((dst & 63) as int)) & 1) = 0"
-                        )
-                    )
-                    .drop("_bm_idx", "_bm_limb")
-                )
-            elif closed_filter is not None:
-                msgs = msgs.join(closed_filter, "dst", "left_anti")
-            agg = msgs.groupBy("dst").agg(
-                *[F.bit_or(f"v{i}").alias(f"a{i}") for i in range(nlimbs)]
+    def probe(state: DataFrame, m: dict) -> dict:
+        """Lane accounting of level m["level"] + 1 folded into m's totals;
+        with emit_distances, the level's (vid, lane, dist) parquet delta —
+        distributed, never through the driver."""
+        level = m["level"] + 1
+        acct = state
+        if deg is not None:
+            acct = state.join(deg, "vid", "left").withColumn(
+                "deg", F.coalesce(F.col("deg"), F.lit(0))
             )
+        lanes, frontier_rows, closed_rows, state_rows, level_edges = _lane_accounting(
+            acct, nsrc, closed_pred if bottom_up else None, with_deg=track_teps
+        )
+        h, ecc = np.asarray(m["h"], dtype=np.float64), np.asarray(m["ecc"])
+        if level:
+            h = h + lanes / level
+            ecc = np.where(lanes > 0, level, ecc)
+        new_total = int(lanes.sum())
+        if emit_distances and new_total:
+            (
+                _visit_lanes(state, nsrc)
+                .withColumn("dist", F.lit(level).cast("int"))
+                .write.mode("overwrite")
+                .parquet(os.path.join(m["distances_path"], f"level={level}"))
+            )
+        return {
+            "level": level,
+            "r": (np.asarray(m["r"]) + lanes).tolist(),
+            "s": (np.asarray(m["s"]) + lanes * level).tolist(),
+            "h": h.tolist(),
+            "ecc": ecc.tolist(),
+            "traversed": m["traversed"] + level_edges,
+            "per_level_new": m["per_level_new"] + [new_total],
+            "strategies": m["strategies"] + ([strategy] if level else []),
+            "frontier_rows": frontier_rows,
+            "closed_rows": closed_rows,
+            "state_rows": state_rows,
+            "distances_path": m["distances_path"],
+        }
 
-            # -- mask & update (codegen'd int64 math; no UDF)
-            # `vid`/`dst` are unique names across the two sides — resolve by name
-            # (agg descends from state, so df["col"] refs would be self-join-ambiguous)
-            joined = state.join(agg, F.col("vid") == F.col("dst"), "full_outer")
-            sel = [F.coalesce(F.col("vid"), F.col("dst")).alias("vid")]
-            for i in range(nlimbs):
-                sel.append(
-                    F.expr(f"coalesce(s{i}, 0L) | coalesce(a{i}, 0L)").alias(f"s{i}")
+    def step(state: DataFrame, m: dict) -> DataFrame:
+        # -- K3 direction switch ([MSBFS15] §4.3, Beamer bottom-up): on late
+        # dense levels most destinations are already fully seen across all
+        # lanes, so their messages would be aggregated and then masked to
+        # zero.  Gated on the closed-row fraction the previous probe
+        # measured, and decided BEFORE the expand so the expansion shrinks:
+        #   1. open_semi — the state covers all |V| vertices and the OPEN
+        #      set is broadcastable: semi-join the EDGE side on open
+        #      destinations, so closed-dst edges are never enumerated and
+        #      the map-side filter keeps the edge cache's src-partitioning.
+        #   2. closed_anti — the same map-side shrink when instead the
+        #      CLOSED set is broadcastable (anti keeps never-seen vertices'
+        #      edges, so state coverage doesn't matter).
+        #   3. bitmap — neither set clears the row-broadcast threshold: the
+        #      closed set packs into a (idx, limb) bitmap table
+        #      (_closed_limb_table) broadcast-joined onto the messages on
+        #      dst>>6, whose bit test drops closed-dst messages before the
+        #      dst shuffle.  Past spark.linkgraph.msbfs.bitmapMaxBytes the
+        #      level runs as push.
+        nonlocal strategy
+        strategy, edges_open, msg_bitmap = "push", None, None
+        closed_rows, state_rows = m["closed_rows"], m["state_rows"]
+        if (
+            bottom_up
+            and n_vertices
+            and closed_rows
+            and closed_rows / float(n_vertices) >= bottom_up_threshold
+        ):
+            thresh = broadcast_threshold(spark)
+            open_rows = max(state_rows - closed_rows, 0)
+            if state_rows == n_vertices and 0 < thresh and open_rows * 24 < thresh:
+                open_dst = state.where(f"not ({closed_pred})").select(
+                    F.col("vid").alias("dst")
                 )
-            for i in range(nlimbs):
-                sel.append(
-                    F.expr(f"coalesce(a{i}, 0L) & ~coalesce(s{i}, 0L)").alias(f"v{i}")
+                edges_open = graph.edges.join(F.broadcast(open_dst), "dst", "left_semi")
+                strategy = "open_semi"
+            elif 0 < thresh and closed_rows * 24 < thresh:
+                closed_dst = state.where(closed_pred).select(F.col("vid").alias("dst"))
+                edges_open = graph.edges.join(
+                    F.broadcast(closed_dst), "dst", "left_anti"
                 )
-            # LAZY localCheckpoint (the returned plan is a Scan ExistingRDD
-            # immediately): the next level's accounting scan is the
-            # materializing action, fusing expand + OR-agg + update +
-            # accounting into ONE job per level — with AQE off inside
-            # iteration_plan (the regime where the round-2 lazy-truncation
-            # flakiness lived), truncation is deterministic.
-            new_state = joined.select(*sel).localCheckpoint(eager=False)
-            # old state blocks stay until the new state materializes (next loop)
-            prev_state, state = state, new_state
-            level += 1
+                strategy = "closed_anti"
+            elif ((graph.max_vid() >> 6) + 1) * 8 <= parse_bytes(
+                spark.conf.get("spark.linkgraph.msbfs.bitmapMaxBytes", "128m")
+            ):
+                msg_bitmap = _closed_limb_table(state, closed_pred)
+                strategy = "bitmap"
 
+        # -- expand: frontier ⋈ edges, OR-aggregate by dst (ANP).
+        # Strategy dispatch (broadcast / salted / shuffle) via graph.expand.
+        frontier = state.where(
+            " or ".join(f"v{i} != 0" for i in range(NLIMBS))
+        ).select(F.col("vid").alias("src"), *_V)
+        msgs = graph.expand(
+            frontier, est_rows=m["frontier_rows"], edges=edges_open
+        ).select("dst", *_V)
+        if msg_bitmap is not None:
+            # keep a message iff its dst's closed-bit is CLEAR (absent limb
+            # == all open)
+            msgs = (
+                msgs.join(
+                    F.broadcast(msg_bitmap),
+                    F.expr("shiftright(dst, 6)") == F.col("_bm_idx"),
+                    "left",
+                )
+                .where(
+                    F.expr(
+                        "_bm_limb is null or "
+                        "((_bm_limb >> cast((dst & 63) as int)) & 1) = 0"
+                    )
+                )
+                .drop("_bm_idx", "_bm_limb")
+            )
+        agg = msgs.groupBy("dst").agg(
+            *[F.bit_or(f"v{i}").alias(f"a{i}") for i in range(NLIMBS)]
+        )
+
+        # -- mask & update (codegen'd int64 math; no UDF)
+        # `vid`/`dst` are unique names across the two sides — resolve by name
+        # (agg descends from state, so df["col"] refs would be self-join-ambiguous)
+        joined = state.join(agg, F.col("vid") == F.col("dst"), "full_outer")
+        return joined.select(
+            F.coalesce(F.col("vid"), F.col("dst")).alias("vid"),
+            *[
+                F.expr(f"coalesce(s{i}, 0L) | coalesce(a{i}, 0L)").alias(f"s{i}")
+                for i in range(NLIMBS)
+            ],
+            *[
+                F.expr(f"coalesce(a{i}, 0L) & ~coalesce(s{i}, 0L)").alias(f"v{i}")
+                for i in range(NLIMBS)
+            ],
+        )
+
+    start = {
+        "level": -1,
+        "r": [0] * nsrc,
+        "s": [0] * nsrc,
+        "h": [0.0] * nsrc,
+        "ecc": [0] * nsrc,
+        "traversed": 0,
+        "per_level_new": [],
+        "strategies": [],
+        "distances_path": distances_path,
+    }
+    # a BFS reaches a level with no new vertex after at most |V| levels
+    state, metrics, _ = fixpoint(
+        spark.createDataFrame(
+            pack_sources(sources, NLIMBS), schema=bfs_state_schema(NLIMBS)
+        ),
+        step,
+        probe,
+        lambda m, _: m["per_level_new"][-1] == 0,
+        max_levels if max_levels is not None else max(n_vertices, 1),
+        seed_metrics=lambda st: probe(st, start),
+        checkpoint_mgr=checkpoint_mgr,
+        snapshot_every=snapshot_every,
+        resume=resume,
+    )
+    release(state)
     wall = time.time() - t0
     distances_df = None
     if emit_distances:
         lane_map = spark.createDataFrame(
             [(i, int(v)) for i, v in enumerate(sources)], "lane int, src long"
         )
-        raw = spark.read.option("recursiveFileLookup", "true").parquet(distances_path)
+        raw = spark.read.option("recursiveFileLookup", "true").parquet(
+            metrics["distances_path"]
+        )
         distances_df = (
             raw.join(F.broadcast(lane_map), "lane")
             .select("src", "vid", F.col("dist").cast("int").alias("dist"))
         )
-    release(state)
     return MsBfsResult(
         sources=list(sources),
-        levels=level,
-        r=r,
-        s=s,
-        h=h,
-        ecc=ecc,
+        levels=metrics["level"],
+        r=np.asarray(metrics["r"], dtype=np.int64),
+        s=np.asarray(metrics["s"], dtype=np.int64),
+        h=np.asarray(metrics["h"], dtype=np.float64),
+        ecc=np.asarray(metrics["ecc"], dtype=np.int64),
         wall_sec=wall,
-        traversed_bit_edges=traversed,
+        traversed_bit_edges=metrics["traversed"],
         distances_df=distances_df,
-        per_level_new=per_level_new,
-        strategies=strategies,
+        per_level_new=metrics["per_level_new"],
+        strategies=metrics["strategies"],
     )
 
 

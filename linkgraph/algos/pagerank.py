@@ -185,7 +185,7 @@ def pagerank(
             )
         )
 
-    def probe(state: DataFrame) -> dict:
+    def probe(state: DataFrame, _prev: dict) -> dict:
         # delta + next iteration's dangling mass (sum of new pr over the
         # static deg==0 set) in one aggregate
         stats = state.agg(

@@ -38,7 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.iterate import fixpoint
 
 
 def _h01(key):
@@ -55,54 +56,42 @@ def fiedler_partition(
     value is >= 0 (rounding first keeps the boundary engine-stable)."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    spark = graph.spark
     deg = graph.degrees()  # (vid, deg), cached
     dmax = float(deg.agg(F.max("deg")).collect()[0][0])
     n = graph.num_vertices()
     h = _h01(F.concat(F.col("vid").cast("string"), F.lit("#fiedler")))
     hv = deg.select("vid", "deg", h.alias("hv"))
     mean = hv.agg(F.avg("hv").alias("mu"))
-    state = (
-        hv.crossJoin(F.broadcast(mean))
-        .select("vid", "deg", (F.col("hv") - F.col("mu")).alias("x"))
-        .localCheckpoint(eager=True)
+
+    def step(state: DataFrame, _metrics: dict) -> DataFrame:
+        msgs = state.select(F.col("vid").alias("src"), F.col("x").alias("m"))
+        acc = graph.expand(msgs, est_rows=n).groupBy("dst").agg(F.sum("m").alias("acc"))
+        raw = (
+            state.alias("st")
+            .join(acc.alias("cb"), F.col("st.vid") == F.col("cb.dst"), "left")
+            .select(
+                F.col("st.vid").alias("vid"),
+                F.col("st.deg").alias("deg"),
+                (
+                    (F.lit(dmax) - F.col("st.deg")) * F.col("st.x")
+                    + F.coalesce(F.col("cb.acc"), F.lit(0.0))
+                ).alias("xr"),
+            )
+        )
+        mu = raw.agg(F.avg("xr").alias("mu"))
+        return raw.crossJoin(F.broadcast(mu)).select(
+            "vid", "deg", (F.col("xr") - F.col("mu")).alias("x")
+        )
+
+    state, _, _ = fixpoint(
+        hv.crossJoin(F.broadcast(mean)).select(
+            "vid", "deg", (F.col("hv") - F.col("mu")).alias("x")
+        ),
+        step,
+        lambda st, _: {"rows": st.count()},
+        lambda m, _: False,
+        rounds,
     )
-    prev = None
-    with iteration_plan(spark):
-        for _ in range(rounds):
-            msgs = state.select(F.col("vid").alias("src"), F.col("x").alias("m"))
-            acc = (
-                graph.expand(msgs, est_rows=n)
-                .groupBy("dst")
-                .agg(F.sum("m").alias("acc"))
-            )
-            raw = (
-                state.alias("st")
-                .join(acc.alias("cb"), F.col("st.vid") == F.col("cb.dst"), "left")
-                .select(
-                    F.col("st.vid").alias("vid"),
-                    F.col("st.deg").alias("deg"),
-                    (
-                        (F.lit(dmax) - F.col("st.deg")) * F.col("st.x")
-                        + F.coalesce(F.col("cb.acc"), F.lit(0.0))
-                    ).alias("xr"),
-                )
-            )
-            mu = raw.agg(F.avg("xr").alias("mu"))
-            new_state = (
-                raw.crossJoin(F.broadcast(mu))
-                .select(
-                    "vid", "deg", (F.col("xr") - F.col("mu")).alias("x")
-                )
-                .localCheckpoint(eager=False)
-            )
-            new_state.count()  # one fused job per round
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev, state = state, new_state
     mx = state.agg(F.max(F.abs(F.col("x"))).alias("mx"))
     scaled = F.round(
         F.col("x") / F.when(F.col("mx") > 0, F.col("mx")), round_to

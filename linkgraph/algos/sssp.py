@@ -82,7 +82,7 @@ def sssp(
             "vid long, dist long, improved boolean",
         ),
         step,
-        lambda st: {"frontier_rows": st.where(F.col("improved")).count()},
+        lambda st, _: {"frontier_rows": st.where(F.col("improved")).count()},
         lambda m, _: rounds is None and m["frontier_rows"] == 0,
         rounds if rounds is not None else max_rounds,
         seed_metrics=lambda _: {"frontier_rows": len(sources)},

@@ -39,7 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.iterate import fixpoint, release
 
 WL_P = (1 << 61) - 1  # Mersenne prime: modulus of the multiset sum
 
@@ -49,55 +50,57 @@ def _hnum(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("decimal(38,0)")
 
 
+def _wl_seed(graph: LinkGraph) -> DataFrame:
+    """Round-0 colors: the degree as a string."""
+    return graph.degrees().select("vid", F.col("deg").cast("string").alias("color"))
+
+
+def _wl_step(graph: LinkGraph):
+    """One refinement round as a `fixpoint` step: color'(v) = md5(color(v)
+    || '|' || Σ_{u∈N(v)} H(color(u)) mod P)."""
+    n = graph.num_vertices()
+
+    def step(color: DataFrame, _metrics: dict) -> DataFrame:
+        msgs = color.select(F.col("vid").alias("src"), _hnum(F.col("color")).alias("h"))
+        agg = (
+            graph.expand(msgs, est_rows=n)
+            .groupBy("dst")
+            .agg((F.sum("h") % F.lit(WL_P)).alias("s"))
+        )
+        return (
+            color.alias("st")
+            .join(agg.alias("nb"), F.col("st.vid") == F.col("nb.dst"), "left")
+            .select(
+                F.col("st.vid").alias("vid"),
+                F.md5(
+                    F.concat_ws(
+                        "|",
+                        F.col("st.color"),
+                        F.coalesce(
+                            F.col("nb.s").cast("decimal(38,0)"),
+                            F.lit(0).cast("decimal(38,0)"),
+                        ).cast("string"),
+                    )
+                ).alias("color"),
+            )
+        )
+
+    return step
+
+
 def wl_refine(graph: LinkGraph, rounds: int = 3) -> DataFrame:
     """Returns (vid, color) after `rounds` of hash-based 1-WL
     refinement; color is a 32-hex md5 string (round-0 colors = degree
     strings)."""
     if rounds < 0:
         raise ValueError("rounds must be >= 0")
-    spark = graph.spark
-    n = graph.num_vertices()
-    color = (
-        graph.degrees()
-        .select("vid", F.col("deg").cast("string").alias("color"))
-        .localCheckpoint(eager=True)
+    color, _, _ = fixpoint(
+        _wl_seed(graph),
+        _wl_step(graph),
+        lambda st, _: {"rows": st.count()},
+        lambda m, _: False,
+        rounds,
     )
-    prev = None
-    with iteration_plan(spark):
-        for _ in range(rounds):
-            msgs = color.select(
-                F.col("vid").alias("src"), _hnum(F.col("color")).alias("h")
-            )
-            agg = (
-                graph.expand(msgs, est_rows=n)
-                .groupBy("dst")
-                .agg((F.sum("h") % F.lit(WL_P)).alias("s"))
-            )
-            new = (
-                color.alias("st")
-                .join(agg.alias("nb"), F.col("st.vid") == F.col("nb.dst"), "left")
-                .select(
-                    F.col("st.vid").alias("vid"),
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            F.col("st.color"),
-                            F.coalesce(
-                                F.col("nb.s").cast("decimal(38,0)"),
-                                F.lit(0).cast("decimal(38,0)"),
-                            ).cast("string"),
-                        )
-                    ).alias("color"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            new.count()
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev, color = color, new
     return color.select(F.col("vid").cast("long").alias("vid"), "color")
 
 
@@ -122,22 +125,22 @@ def wl_anonymity(graph: LinkGraph, rounds: int = 3, round_to: int = 6) -> DataFr
     Returns one row per round 0..rounds:
     (round, n_classes, n_unique, frac_unique, max_class).
 
-    Runs ONE refinement chain (the wl_refine iteration, checkpointed
-    state) and takes a \\|classes\\|-row stats aggregate per round from
-    the same table the next round consumes — no from-scratch recompute
-    per round; the per-round stats land as bounded 1-row collects (the
-    graph_stats scalar convention) so unpersist of superseded state
-    stays safe.
+    Runs ONE refinement chain (wl_refine's `fixpoint` loop) whose probe
+    is the round's \\|classes\\|-row stats aggregate — one Spark job per
+    round, no from-scratch recompute; the stats land as bounded 1-row
+    collects (the graph_stats scalar convention), so no round's state
+    outlives the call.
     """
     spark = graph.spark
-    n = graph.num_vertices()
+    rows = []
 
-    def stats(c: DataFrame, r: int):
+    def stats(c: DataFrame, _metrics: dict | None = None) -> dict:
+        """The round's class-size statistics — the one job of the round."""
         sizes = c.groupBy("color").agg(F.count(F.lit(1)).alias("n"))
         uniq = F.sum(F.when(F.col("n") == 1, 1).otherwise(0))
-        return (
+        rows.append(
             sizes.agg(
-                F.lit(r).cast("int").alias("round"),
+                F.lit(len(rows)).cast("int").alias("round"),
                 F.count(F.lit(1)).cast("long").alias("n_classes"),
                 uniq.cast("long").alias("n_unique"),
                 F.round(uniq / F.sum("n").cast("double"), round_to).alias(
@@ -147,50 +150,17 @@ def wl_anonymity(graph: LinkGraph, rounds: int = 3, round_to: int = 6) -> DataFr
             )
             .collect()[0]
         )
+        return {}
 
-    color = (
-        graph.degrees()
-        .select("vid", F.col("deg").cast("string").alias("color"))
-        .localCheckpoint(eager=True)
+    color, _, _ = fixpoint(
+        _wl_seed(graph),
+        _wl_step(graph),
+        stats,
+        lambda m, _: False,
+        rounds,
+        seed_metrics=stats,
     )
-    rows = [stats(color, 0)]
-    prev = None
-    with iteration_plan(spark):
-        for r in range(1, rounds + 1):
-            msgs = color.select(
-                F.col("vid").alias("src"), _hnum(F.col("color")).alias("h")
-            )
-            agg = (
-                graph.expand(msgs, est_rows=n)
-                .groupBy("dst")
-                .agg((F.sum("h") % F.lit(WL_P)).alias("s"))
-            )
-            new = (
-                color.alias("st")
-                .join(agg.alias("nb"), F.col("st.vid") == F.col("nb.dst"), "left")
-                .select(
-                    F.col("st.vid").alias("vid"),
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            F.col("st.color"),
-                            F.coalesce(
-                                F.col("nb.s").cast("decimal(38,0)"),
-                                F.lit(0).cast("decimal(38,0)"),
-                            ).cast("string"),
-                        )
-                    ).alias("color"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            new.count()
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev, color = color, new
-            rows.append(stats(color, r))
+    release(color)
     return spark.createDataFrame(
         rows,
         "round int, n_classes long, n_unique long, frac_unique double, max_class long",

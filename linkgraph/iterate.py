@@ -1,9 +1,11 @@
 """One loop for the kernels that iterate a DataFrame state to a fixpoint.
 
 PageRank, CC (min-label and two-phase), LPA, label spreading, Katz,
-eigenvector centrality and weighted SSSP all run the same loop; only the
-update (`step`), the per-iteration statistics (`probe`) and the stop test
-(`done`) differ.  `fixpoint` owns the rest:
+eigenvector centrality, weighted SSSP, MS-BFS's level loop, WL refinement
+(`wl_refine`, `wl_anonymity`), `fiedler_partition`, `coreness` and
+`hitting_time` all run the same loop; only the update (`step`), the
+per-iteration statistics (`probe`) and the stop test (`done`) differ.
+`fixpoint` owns the rest:
 
 * **One fused Spark job per iteration.**  `step` returns the next state as
   an unmaterialized plan over the current one; `fixpoint` truncates it with
@@ -22,8 +24,9 @@ update (`step`), the per-iteration statistics (`probe`) and the stop test
   `fixpoint` releases that RDD directly.
 * **Snapshot and resume** through `CheckpointManager`: every
   `snapshot_every` iterations the state's seed columns are written with the
-  manifest metrics ``{"iteration": k, **probe(state)}`` and reloaded through
-  an eager local checkpoint (the parquet scan is the new lineage root);
+  manifest metrics ``{"iteration": k, **metrics}`` (the probe's) and
+  reloaded through an eager local checkpoint (the parquet scan is the new
+  lineage root);
   ``resume=True`` restarts from the latest committed snapshot with its
   iteration count and metrics.
 """
@@ -42,7 +45,7 @@ from linkgraph.graph import iteration_plan
 def fixpoint(
     seed: DataFrame,
     step: Callable[[DataFrame, dict], DataFrame],
-    probe: Callable[[DataFrame], dict],
+    probe: Callable[[DataFrame, dict], dict],
     done: Callable[[dict, dict], bool],
     max_iter: int,
     seed_metrics: Callable[[DataFrame], dict] | None = None,
@@ -55,11 +58,13 @@ def fixpoint(
 
     step(state, metrics): the next state, not yet materialized; `metrics`
         are the previous iteration's probe (or the seed's / snapshot's).
-    probe(state): the one action per iteration, over the new state;
-        returns the iteration's metrics (JSON-serializable when snapshots
-        are on — they go into the manifest).
+    probe(state, metrics): the one action per iteration, over the new
+        state; returns the iteration's metrics (JSON-serializable when
+        snapshots are on — they go into the manifest).  `metrics` are the
+        previous iteration's, so a probe can fold running totals into them.
     seed_metrics(state): metrics of the checkpointed seed, for `step` and
-        `done` of the first iteration (not called on resume).
+        `done` of the first iteration (not called on resume); it runs under
+        ``iteration_plan`` like the probes.
     Snapshots hold the seed's columns, so `step` may add probe-only
     columns (e.g. the previous value) without them reaching the snapshot.
 
@@ -76,14 +81,14 @@ def fixpoint(
             metrics = dict(snap["metrics"])
             it0 = int(metrics.pop("iteration"))
     state = state.localCheckpoint(eager=True)
-    if metrics is None:
-        metrics = seed_metrics(state) if seed_metrics is not None else {}
 
     converged = False
     with iteration_plan(seed.sparkSession):
+        if metrics is None:
+            metrics = seed_metrics(state) if seed_metrics is not None else {}
         for it in range(it0, max_iter):
             new_state = step(state, metrics).localCheckpoint(eager=False)
-            new_metrics = probe(new_state)
+            new_metrics = probe(new_state, metrics)
             release(state)
             state = new_state
             if checkpoint_mgr is not None and (it + 1) % snapshot_every == 0:

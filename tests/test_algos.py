@@ -490,6 +490,42 @@ def test_coreness_monotone_rounds(er):
     assert all(c4[v] <= c2[v] for v in c4)  # monotone non-increasing
 
 
+@pytest.mark.parametrize(
+    "kernel",
+    [
+        "wl_refine",
+        "wl_anonymity",
+        "fiedler_partition",
+        "coreness",
+        "coreness_fixpoint",
+        "hitting_time",
+    ],
+)
+def test_ported_loops_release_state(spark, er, kernel):
+    """A warm second call leaves at most the one state it returns cached
+    (none for wl_anonymity, which returns driver-collected rows): every
+    superseded round's local checkpoint is released."""
+    from linkgraph.algos.hitting import hitting_time
+    from linkgraph.algos.kcore import coreness
+    from linkgraph.algos.spectral import fiedler_partition
+    from linkgraph.algos.wl import wl_anonymity, wl_refine
+
+    run, kept = {
+        "wl_refine": (lambda: wl_refine(er, rounds=3), 1),
+        "wl_anonymity": (lambda: wl_anonymity(er, rounds=3), 0),
+        "fiedler_partition": (lambda: fiedler_partition(er, rounds=3), 1),
+        "coreness": (lambda: coreness(er, rounds=3), 1),
+        "coreness_fixpoint": (lambda: coreness(er, rounds=None), 1),
+        "hitting_time": (lambda: hitting_time(er, [0, 1], rounds=3), 1),
+    }[kernel]
+    run()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keySet())
+    out = run()
+    assert len(set(persistent().keySet()) - before) <= kept
+    assert out.count() > 0
+
+
 def test_label_spreading_two_cliques(spark):
     """One seed per clique: every vertex adopts its own clique's label,
     and exact scores match a numpy dense iteration."""

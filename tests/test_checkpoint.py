@@ -41,6 +41,11 @@ def test_msbfs_resume_equals_uninterrupted(spark, grid, tmp_path):
     assert np.array_equal(resumed.s, full.s)
     assert np.array_equal(resumed.h, full.h)  # harmonic sums survive resume
     assert np.array_equal(resumed.ecc, full.ecc)  # eccentricities too
+    # the run report survives too: every level's count and K3 choice,
+    # including the levels before the snapshot
+    assert resumed.levels == full.levels
+    assert resumed.per_level_new == full.per_level_new
+    assert resumed.strategies == full.strategies
     da = full.distances.sort_values(["src", "vid"]).reset_index(drop=True)
     db = resumed.distances.sort_values(["src", "vid"]).reset_index(drop=True)
     assert da.astype("int64").equals(db.astype("int64"))

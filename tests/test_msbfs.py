@@ -106,9 +106,9 @@ def test_monotone_seen_invariant(grid):
 
 
 def test_bottom_up_strategies_bit_exact(spark, er):
-    """K3 completion: all four pull strategies (open-side edge semi-join,
-    closed-side edge anti-join, closed-bitmap message filter, post-expand
-    message anti-join) are bit-exact vs the gate off.
+    """K3 completion: all three pull strategies (open-side edge semi-join,
+    closed-side edge anti-join, closed-bitmap message filter) are bit-exact
+    vs the gate off.
 
     * threshold 0.01 forces the gate on from the first closed vertex;
       on the connected ER graph the state covers |V| quickly -> open-side
@@ -118,8 +118,6 @@ def test_bottom_up_strategies_bit_exact(spark, er):
       closed-side edge ANTI-join path.
     * autoBroadcastJoinThreshold=-1 blocks both edge-side paths -> the
       closed-BITMAP map-side message filter (the mid-range side-channel).
-    * bitmap additionally disabled -> the post-expand message anti-join
-      fallback.
     """
     srcs = [0, 1, 5, 17, 63]
     base = msbfs(er, srcs, emit_distances=True, bottom_up=False)
@@ -158,14 +156,6 @@ def test_bottom_up_strategies_bit_exact(spark, er):
                 bottom_up_threshold=0.01,
             ),
             expect_strategy="bitmap",
-        )
-        # fallback message anti-join (bitmap disabled explicitly)
-        check(
-            msbfs(
-                er, srcs, emit_distances=True, bottom_up=True,
-                bottom_up_threshold=0.01, bottom_up_bitmap=False,
-            ),
-            expect_strategy="msg_anti",
         )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
@@ -213,9 +203,10 @@ def test_closed_limb_table_bit_math(spark):
     assert kept == [0, 5, 100, 199]
 
 
-def test_bitmap_budget_falls_back_to_anti_join(spark, er):
+def test_bitmap_over_budget_runs_push(spark, er):
     """A max_vid beyond spark.linkgraph.msbfs.bitmapMaxBytes must refuse the
-    bitmap (executor memory guard) and take the msg_anti fallback."""
+    bitmap (executor memory guard); with no broadcastable side either, the
+    gated levels run as plain push, bit-exact."""
     srcs = [0, 1, 5, 17, 63]
     base = msbfs(er, srcs, bottom_up=False)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -223,7 +214,8 @@ def test_bitmap_budget_falls_back_to_anti_join(spark, er):
     spark.conf.set("spark.linkgraph.msbfs.bitmapMaxBytes", "1b")
     try:
         res = msbfs(er, srcs, bottom_up=True, bottom_up_threshold=0.01)
-        assert "msg_anti" in res.strategies and "bitmap" not in res.strategies
+        assert set(res.strategies) == {"push"}, res.strategies
+        assert res.levels == base.levels
         assert np.array_equal(res.r, base.r) and np.array_equal(res.s, base.s)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

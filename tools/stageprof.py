@@ -1,6 +1,10 @@
 """Parse a Spark event log into per-job-description time attribution.
 
-Usage: python tools/stageprof.py <eventlog-file> [--stages]
+Usage: python tools/stageprof.py <eventlog-file-or-dir> [--stages]
+
+Reads an uncompressed event log (bench_extra.py --eventlog writes one): a
+single file, or a rolling-log directory (eventlog_v2_<app>), whose
+events_<n>_<app> parts are read in order.  A compressed log is refused.
 
 Prints, per job description (set by bench_extra.py per query):
   total job wall, job count, and the slowest stages (duration, task count,
@@ -21,25 +25,24 @@ def main():
     stages = {}  # sid -> {name, t0, t1, ntasks}
     stage_metrics = defaultdict(lambda: defaultdict(float))
 
-    import io
+    import fileinput
     import os
 
+    files = [path]
     if os.path.isdir(path):
-        cands = sorted(
-            p
-            for p in (os.path.join(path, x) for x in os.listdir(path))
-            if "events" in os.path.basename(p)
+        files = sorted(
+            (os.path.join(path, x) for x in os.listdir(path) if x.startswith("events_")),
+            key=lambda p: int(os.path.basename(p).split("_")[1]),
         )
-        path = cands[0]
-    if path.endswith(".zstd"):
-        import zstandard
-
-        fh = io.TextIOWrapper(
-            zstandard.ZstdDecompressor().stream_reader(open(path, "rb"))
-        )
-    else:
-        fh = open(path)
-    with fh as f:
+        if not files:
+            sys.exit(f"{path}: no events_<n>_<app> files (pass an eventlog_v2_<app> dir)")
+    for p in files:
+        if os.path.splitext(p)[1] in (".zstd", ".lz4", ".lzf", ".snappy"):
+            sys.exit(
+                f"{p}: compressed event log; rerun with "
+                "spark.eventLog.compress=false (bench_extra.py --eventlog sets it)"
+            )
+    with fileinput.input(files) as f:
         for line in f:
             try:
                 ev = json.loads(line)
