@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.iterate import release
 
 _FM_PHI = 0.77351  # Flajolet–Martin bias correction
 
@@ -123,7 +124,6 @@ def anf_full(
     hist, _ = hist_of(state)
     curve.append((0, _nf_from_hist(hist, k)))
 
-    prev = None
     with iteration_plan(spark):
         for h in range(1, max_h + 1):
             msgs = state.select(F.col("vid").alias("src"), *[
@@ -148,14 +148,11 @@ def anf_full(
             new_state = joined.select(*sel).localCheckpoint(eager=False)
             hist, changed = hist_of(new_state, "_chg")  # the round's ONE action
             curve.append((h, _nf_from_hist(hist, k)))
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev, state = state, new_state.drop("_chg")
+            release(state)
+            state = new_state.drop("_chg")
             if changed == 0:
                 break
+    release(state)
 
     # converged early: the neighborhood function is flat from here on
     last = curve[-1][1]
@@ -279,10 +276,7 @@ def hyperball_harmonic(
                 .localCheckpoint(eager=False)
             )
             state.count()  # materialize the round; truncates lineage
-            try:
-                prev.unpersist()
-            except Exception:
-                pass
+            release(prev)
 
     out = state.select(
         F.col("vid").cast("long").alias("vid"),

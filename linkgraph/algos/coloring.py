@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.iterate import release
 
 MAX_COLORS = 64  # single-limb used-mask capacity
 
@@ -73,7 +74,6 @@ def greedy_coloring(
     )
     n_unc = state.count()
     parts: list[DataFrame] = []
-    prev = None
 
     budget = rounds if rounds is not None else max_rounds
     with iteration_plan(spark):
@@ -139,13 +139,9 @@ def greedy_coloring(
                 .localCheckpoint(eager=True)
             )
             n_unc = nxt.count()
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev = state
+            release(state)
             state = nxt
+    release(state)
     if n_unc > 0 and rounds is None:
         import warnings
 

@@ -22,18 +22,15 @@ in any engine, so no rounding convention is needed (python round() is
 banker's, DuckDB/Spark ROUND is half-away — a single division sidesteps
 the mismatch entirely).
 
-Per round, everything derives from ONE induced-degree aggregate:
+Each round is one `linkgraph.iterate.fixpoint` iteration over the
+surviving edge set:
   * deg_S = the surviving edge table grouped by src (the symmetric
     store means src-side grouping IS the degree — map-side combined);
-  * |S| and E_dir fold out of the same table (two scalar aggs fused
-    into one row via a single agg over the degree table);
-  * the peel is a filter on the degree table; edge survival is two
-    semi-joins against the surviving vertex set.
-The edge table is referenced three times per round (degree + two
-semi-joins), so the surviving edge set round-trips scc.py's parquet
-scratch store every SEVER_EVERY rounds (the louvain/k-truss
-statistics-severance rationale) — which also matches the operator's
-restartable round-boundary shape at 100 TB.
+  * the peel is a filter on the degree table against the (|S|, E_dir)
+    the previous probe measured; edge survival is two semi-joins
+    against the surviving vertex set;
+  * the probe folds (|S|, E_dir) of the new edge set into one aggregate
+    over its degree table, the round's only job.
 
 Returns the per-round peel curve: one row per executed round,
 (round, n_vertices, e_directed, density, peeled) describing the
@@ -47,8 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.algos.scc import SEVER_EVERY, _Store
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.iterate import fixpoint, release
 
 
 def densest_subgraph_curve(
@@ -61,53 +58,43 @@ def densest_subgraph_curve(
     if not graph.symmetric:
         raise ValueError("densest_subgraph_curve needs a symmetric graph")
     spark = graph.spark
-    edges = graph.edges.select("src", "dst").localCheckpoint(eager=True)
-    budget = rounds if rounds is not None else max_rounds
-    curve: list[tuple[int, int, int, int]] = []
-    prev = None
 
-    store = _Store(spark)
-    try:
-        with iteration_plan(spark):
-            for r in range(1, budget + 1):
-                deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-                stats = deg.agg(
-                    F.count("*").alias("n"), F.sum("deg").alias("e_dir")
-                ).first()
-                n, e_dir = int(stats["n"] or 0), int(stats["e_dir"] or 0)
-                if n == 0:
-                    break
-                # peel: 2*deg*|S| <= 3*E_dir  <=>  deg <= 1.5 * avg
-                keep = deg.where(
-                    2 * F.col("deg") * F.lit(n) > 3 * F.lit(e_dir)
-                ).select("src")
-                nxt = (
-                    edges.join(keep, "src", "left_semi")
-                    .join(
-                        keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
-                    )
-                    .select("src", "dst")
-                )
-                if r % SEVER_EVERY == 0:
-                    nxt = store.sever(nxt)
-                else:
-                    nxt = nxt.localCheckpoint(eager=False)
-                # the survivor-degree count materializes the lazy checkpoint
-                n_next = int(
-                    nxt.agg(F.countDistinct("src").alias("n")).first()["n"] or 0
-                )
-                curve.append((r, n, e_dir, n - n_next))
-                if prev is not None:
-                    try:
-                        prev.unpersist()
-                    except Exception:
-                        pass
-                prev = edges
-                edges = nxt
-                if n_next == 0:
-                    break
-    finally:
-        store.cleanup()
+    def step(edges: DataFrame, metrics: dict) -> DataFrame:
+        # peel: 2*deg*|S| <= 3*E_dir  <=>  deg <= 1.5 * avg
+        keep = (
+            edges.groupBy("src")
+            .agg(F.count("*").alias("deg"))
+            .where(2 * F.col("deg") * F.lit(metrics["n"]) > 3 * F.lit(metrics["e_dir"]))
+            .select("src")
+        )
+        return edges.join(keep, "src", "left_semi").join(
+            keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
+        )
+
+    def probe(edges: DataFrame, prev: dict | None = None) -> dict:
+        stats = (
+            edges.groupBy("src")
+            .agg(F.count("*").alias("deg"))
+            .agg(F.count("*").alias("n"), F.sum("deg").alias("e_dir"))
+            .first()
+        )
+        n, e_dir = int(stats["n"] or 0), int(stats["e_dir"] or 0)
+        curve = list(prev["curve"]) if prev else []
+        if prev and prev["n"]:
+            # the round's row describes the subgraph it started from
+            curve.append((len(curve) + 1, prev["n"], prev["e_dir"], prev["n"] - n))
+        return {"n": n, "e_dir": e_dir, "curve": curve}
+
+    state, m, _ = fixpoint(
+        graph.edges.select("src", "dst"),
+        step,
+        probe,
+        lambda m, _: m["n"] == 0,
+        rounds if rounds is not None else max_rounds,
+        seed_metrics=probe,
+    )
+    release(state)
+    curve = m["curve"]
     if rounds is None and curve and curve[-1][1] - curve[-1][3] > 0:
         import warnings
 

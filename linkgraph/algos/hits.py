@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.iterate import release
 
 
 def hits(
@@ -92,10 +93,7 @@ def hits(
             a, keep_a = half_step(graph, h)      # auth(v) = Σ hub over in-edges
             h, keep_h = half_step(gt, a)         # hub(u)  = Σ auth over out-edges
             for old in retained:
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass
+                release(old)
             retained = [keep_a, keep_h]
 
     hub_col = F.coalesce(F.col("h.x"), F.lit(0.0))
@@ -113,4 +111,6 @@ def hits(
         # materialize before releasing the transpose cache the plan reads
         out = out.localCheckpoint(eager=True)
         gt.unpersist()
+        for done_with in (verts, *retained):
+            release(done_with)
     return out

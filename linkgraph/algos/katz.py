@@ -13,9 +13,7 @@ so the kernel is even simpler: per iteration ONE frontier-expand
 (edges never shuffle; state side hashes to the edge partitioning) +
 ONE sum-by-dst aggregate (map-side combined) + the update join, all
 fused into a single Spark job by `linkgraph.iterate.fixpoint` with the
-delta aggregate as its probe (pagerank.py's shape; state is referenced
-twice per round, so the originStats growth that forces parquet severance
-in louvain/ktruss stays sub-exponential here, same as PR/CC/LPA).
+delta aggregate as its probe (pagerank.py's shape).
 
 Fixed-budget mode (tol=0, max_iter=K) is the oracle contract: the
 DuckDB mirror replays the same K rounds as a recursive CTE and both

@@ -2,19 +2,17 @@
 
 The k-core is the maximal induced subgraph where every vertex has degree
 ≥ k.  Peel round = one degree aggregate over the surviving edge set plus
-two semi-joins restricting edges to surviving endpoints — all relational,
-co-partitioned on src under `iteration_plan` (AQE off, shuffled-hash),
-lineage cut per round via lazy localCheckpoint materialized by the
-survivor-count action (the PR/CC/LPA one-job-per-iteration shape).
+two semi-joins restricting edges to surviving endpoints — one
+`linkgraph.iterate.fixpoint` iteration whose state is the surviving edge
+set, so a round reads only its predecessor.
 
 Scale posture: the surviving edge set only shrinks, so per-round cost is
 monotonically decreasing; the degree aggregate is a partial+final count
-on the existing src partitioning (no extra exchange for the src-side
-semi-join); the dst-side semi-join shuffles the (narrow) survivor list,
-never the text/payload columns.
+on the existing src partitioning; the survivor list is a byte-gated
+broadcast, so the semi-joins are map-side filters over the edge state.
 
 Two modes, mirroring the fixed-budget pattern the PR/LPA oracles use:
-  rounds=None — peel to fixpoint (survivor count stable);
+  rounds=None — peel to fixpoint (surviving edge count stable);
   rounds=R    — exactly R peel rounds, SQL-mirrorable round for round
                 (once the peel converges, further rounds are identity).
 """
@@ -23,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph, broadcast_threshold
 from linkgraph.iterate import count_changed, fixpoint
 
 
@@ -37,79 +35,43 @@ def k_core(graph: LinkGraph, k: int, rounds: int | None = None) -> DataFrame:
     """
     if k < 0:
         raise ValueError("k must be >= 0")
-    spark = graph.spark
-    edges = graph.edges.select("src", "dst")
-    from linkgraph.graph import broadcast_threshold
+    thresh = broadcast_threshold(graph.spark)
 
-    _thresh = broadcast_threshold(spark)
-
-    with iteration_plan(spark):
-        cur = edges
-        prev_n: int | None = None
-        r = 0
-        prev_keep = None
-        while True:
-            keep = (
-                cur.groupBy("src")
-                .agg(F.count(F.lit(1)).alias("core_deg"))
-                .where(F.col("core_deg") >= k)
-                .select(F.col("src").alias("vid"), "core_deg")
-                .localCheckpoint(eager=False)
-            )
-            n = keep.count()  # the action that materializes the round
-            r += 1
-            done = (rounds is None and n == prev_n) or (
-                rounds is not None and r >= rounds
-            )
-            if prev_keep is not None:
-                try:
-                    prev_keep.unpersist()
-                except Exception:
-                    pass
-            prev_keep = keep
-            if done or n == 0:
-                break
-            prev_n = n
-            # byte-gated broadcast of the survivor list (J1 rule, driven
-            # by the MEASURED survivor count just collected): both
-            # semi-joins become map-side filters over the edge cache, so
-            # the shrinking edge set never re-shuffles round over round;
-            # past the gate the plain shuffle semi-joins return unchanged
-            kv = keep.select("vid")
-            if 0 < _thresh and n * (16 + 12) < _thresh:
-                kv = F.broadcast(kv)
-            cur = (
-                cur.join(kv, cur.src == F.col("vid"), "left_semi")
-                .join(kv, cur.dst == F.col("vid"), "left_semi")
-            )
-
-        if n == 0:
-            return spark.createDataFrame([], "vid long, core_deg long")
-        if rounds is None:
-            # at the fixpoint the final keep IS the answer: survivor sets
-            # are monotone decreasing, so a count-stable round is
-            # set-stable, which makes `cur` exactly the induced subgraph
-            # of the final survivors and keep.core_deg its degrees — the
-            # recompute below (two semi-joins + an aggregate over the
-            # ORIGINAL edge set) re-derived what the loop already holds.
-            return keep.select(
-                F.col("vid").cast("long").alias("vid"),
-                F.col("core_deg").cast("long").alias("core_deg"),
-            )
-        # fixed-rounds mode: keep.core_deg was counted over cur BEFORE this
-        # round's drops, so the induced degrees must be recomputed.
-        # keep is already materialized (localCheckpoint + count) — no extra
-        # persist, so nothing leaks past the call (round-3 advice pattern).
-        survivors = keep.select("vid")
-        out = (
-            edges.join(survivors, edges.src == survivors.vid, "left_semi")
-            .join(survivors, edges.dst == survivors.vid, "left_semi")
-            .groupBy("src")
+    def step(cur: DataFrame, metrics: dict) -> DataFrame:
+        keep = (
+            cur.groupBy("src")
             .agg(F.count(F.lit(1)).alias("core_deg"))
-            .select(F.col("src").cast("long").alias("vid"),
-                    F.col("core_deg").cast("long").alias("core_deg"))
+            .where(F.col("core_deg") >= k)
+            .select(F.col("src").alias("vid"))
         )
-        return out
+        # byte-gated broadcast of the survivor list (J1 rule), bounded by
+        # the measured edge count: both semi-joins become map-side filters
+        # over the edge state; past the gate they shuffle
+        if 0 < thresh and metrics["edges"] * (16 + 12) < thresh:
+            keep = F.broadcast(keep)
+        return cur.join(keep, cur.src == F.col("vid"), "left_semi").join(
+            keep, cur.dst == F.col("vid"), "left_semi"
+        )
+
+    def edge_count(cur: DataFrame, _m: dict | None = None) -> dict:
+        return {"edges": cur.count()}
+
+    cur, _, _ = fixpoint(
+        graph.edges.select("src", "dst"),
+        step,
+        edge_count,
+        # monotone shrink: an unchanged edge count is an unchanged edge set
+        lambda m, prev: rounds is None and m["edges"] == prev["edges"],
+        # rounds=None: every round before the fixpoint drops an edge
+        rounds if rounds is not None else 2**63,
+        seed_metrics=edge_count,
+    )
+    # the survivors' degrees in the subgraph they induce: at the fixpoint
+    # every vertex left has degree >= k in the final edge state
+    return cur.groupBy("src").agg(F.count(F.lit(1)).alias("core_deg")).select(
+        F.col("src").cast("long").alias("vid"),
+        F.col("core_deg").cast("long").alias("core_deg"),
+    )
 
 
 def coreness(

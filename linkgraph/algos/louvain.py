@@ -42,19 +42,8 @@ Scale shape (SURVEY.md J1/A1/A6):
     <= |communities| rows and SHRINKS every round;
   * the per-vertex argmax is min(struct(-gain, label)) — one partial+
     final aggregate, never a window sort (labelprop.py's A6 lesson);
-  * per-round state is (vid, label): two longs per vertex, lazily
-    localCheckpoint'd with the moved-count as the materializing action;
-  * **statistics severance**: each round's plan joins the label state
-    FOUR times (k_vc expand tally, community-degree totals, the
-    own-community lookup, and the update join), so the checkpointed
-    leaf's inherited `originStats` sizeInBytes — a PRODUCT across inner
-    joins — grows ~3 digits-per-digit per round, the exact BigInt
-    pathology measured in ktruss.py:15-48 (digit counts 13→2874 by round
-    5; driver heap OOM inside SizeInBytesOnlyStatsPlanVisitor by round
-    ~10 here).  Reusing scc.py's fix: a parquet round-trip through a
-    per-call scratch store every SEVER_EVERY rounds resets the leaf to
-    the REAL file size, keeping planning cost flat at any round depth —
-    and it is the honest restartable round boundary at 100 TB anyway.
+  * per-round state is (vid, label, deg) on `linkgraph.iterate.fixpoint`:
+    one fused job a round, with the moved count as its probe.
 
 multilevel_louvain adds Louvain's phase 2: contract each community to a
 supervertex, re-run local moves on the (integer-)weighted quotient graph,
@@ -68,8 +57,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.algos.scc import SEVER_EVERY, _Store
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.iterate import checkpoint, fixpoint, release
 
 
 def _move_parity(round_no: int, vid_col):
@@ -86,11 +75,12 @@ def _local_move_rounds(
     m_edges: int,  # total directed edge weight, BIGINT
     n_vertices: int,
     budget: int,
-    fixpoint: bool,
-    store: _Store,
-) -> DataFrame:
+    until_stable: bool,
+) -> tuple[DataFrame, bool]:
     """Shared round loop for the base graph (LinkGraph.expand) and the
-    weighted quotient graphs (plain-join expand).  Returns (vid, label).
+    weighted quotient graphs (plain-join expand).  Returns the final state
+    (vid, label, deg, _moved) and whether it converged (always True for a
+    fixed round count).
 
     r6 plan surgery, both equivalence-preserving:
       * deg rides IN the state (vid, label, deg) — deg is static per
@@ -111,142 +101,132 @@ def _local_move_rounds(
         return df
 
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    labels = labels.join(wdeg, "vid").select(
-        "vid", "label", "deg"
-    ).localCheckpoint(eager=True)
     m_lit = F.lit(int(m_edges)).cast("long")
-    prev = None
-    with iteration_plan(spark):
-        for r in range(1, budget + 1):
-            msgs = labels.select(
-                F.col("vid").alias("src"), F.col("label").alias("l")
-            )
-            # k_vc: per-vertex edge weight into each neighbor community —
-            # the receiving side (dst) tallies sender labels.  w is 1 on
-            # the base graph, the contracted multiplicity on quotients.
-            # Self-loops (quotient internal weight) are excluded: their
-            # contribution to in_c is invariant under any move of v, but
-            # leaving them in k_v,own would shift every gain by -M*w_self
-            # and wrongly veto positive moves.
-            #
-            # ONE explicit exchange on dst instead of two planner ones:
-            # HashPartitioning(dst) satisfies both the (dst,l) clustering
-            # here and the (dst,a,deg) clustering of the per-vertex argmax
-            # below (hash-partitioning-on-a-subset rule), so neither
-            # aggregate re-shuffles.  Map-side partial aggregation is
-            # deliberately given up — (dst, l) pairs are near-unique while
-            # communities are still forming (the linkpred argument), so the
-            # partial agg compressed little and the round paid two full
-            # exchanges instead of this one.  Partition count derives from
-            # spark.sql.shuffle.partitions, never a core count; all-integer
-            # math keeps the result bit-identical under any grouping order
-            # (interleaved A/B at sf0.1: 11.0s -> 9.2s median, same checksum).
-            kv = (
-                expand(msgs, n_vertices)
-                .where(F.col("src") != F.col("dst"))
-                .select("dst", "l", "w")
-                .repartition(nparts, "dst")
-                .groupBy("dst", "l")
-                .agg(F.sum("w").alias("k"))
-            )
-            # dc: community degree totals (<= |C| rows, shrinking).
-            ct = labels.groupBy("label").agg(F.sum("deg").alias("dc"))
-            # One join chain, then ONE aggregate per vertex.  The gain of
-            # moving v: a -> b decomposes as score(b) - base with
-            #   score(c) = M*k_vc - d_v*dc_c          (candidate term)
-            #   base     = M*k_va - d_v*(dc_a - d_v)  (own-community term)
-            # so the argmax over candidates and the own-row base both fall
-            # out of a single groupBy — no candidate/own self-join.
-            rows = (
-                kv.join(
-                    bc(
-                        labels.select(
-                            F.col("vid").alias("dst"),
-                            F.col("label").alias("a"),
-                            "deg",
-                        ),
-                        n_vertices,
-                        3,
-                    ),
-                    "dst",
-                )
-                .join(
-                    bc(ct.select(F.col("label").alias("l"), "dc"), n_vertices, 2),
-                    "l",
-                )
-            )
-            is_own = F.col("l") == F.col("a")
-            score = m_lit * F.col("k") - F.col("deg") * F.col("dc")
-            per_v = rows.groupBy(
-                F.col("dst").alias("v"), "a", "deg"
-            ).agg(
-                F.min(
-                    F.when(~is_own, F.struct((-score).alias("ns"), F.col("l")))
-                ).alias("mb"),
-                F.sum(F.when(is_own, F.col("k")).otherwise(F.lit(0))).alias("ka"),
-            )
-            # dc_a for vertices with no internal edge: join ct on a (the
-            # community always exists in ct — v itself contributes deg).
-            per_v = per_v.join(
+
+    def step(labels: DataFrame, metrics: dict) -> DataFrame:
+        r = metrics.get("round", 0) + 1
+        msgs = labels.select(F.col("vid").alias("src"), F.col("label").alias("l"))
+        # k_vc: per-vertex edge weight into each neighbor community —
+        # the receiving side (dst) tallies sender labels.  w is 1 on
+        # the base graph, the contracted multiplicity on quotients.
+        # Self-loops (quotient internal weight) are excluded: their
+        # contribution to in_c is invariant under any move of v, but
+        # leaving them in k_v,own would shift every gain by -M*w_self
+        # and wrongly veto positive moves.
+        #
+        # ONE explicit exchange on dst instead of two planner ones:
+        # HashPartitioning(dst) satisfies both the (dst,l) clustering
+        # here and the (dst,a,deg) clustering of the per-vertex argmax
+        # below (hash-partitioning-on-a-subset rule), so neither
+        # aggregate re-shuffles.  Map-side partial aggregation is
+        # deliberately given up — (dst, l) pairs are near-unique while
+        # communities are still forming (the linkpred argument), so the
+        # partial agg compressed little and the round paid two full
+        # exchanges instead of this one.  Partition count derives from
+        # spark.sql.shuffle.partitions, never a core count; all-integer
+        # math keeps the result bit-identical under any grouping order
+        # (interleaved A/B at sf0.1: 11.0s -> 9.2s median, same checksum).
+        kv = (
+            expand(msgs, n_vertices)
+            .where(F.col("src") != F.col("dst"))
+            .select("dst", "l", "w")
+            .repartition(nparts, "dst")
+            .groupBy("dst", "l")
+            .agg(F.sum("w").alias("k"))
+        )
+        # dc: community degree totals (<= |C| rows, shrinking).
+        ct = labels.groupBy("label").agg(F.sum("deg").alias("dc"))
+        # One join chain, then ONE aggregate per vertex.  The gain of
+        # moving v: a -> b decomposes as score(b) - base with
+        #   score(c) = M*k_vc - d_v*dc_c          (candidate term)
+        #   base     = M*k_va - d_v*(dc_a - d_v)  (own-community term)
+        # so the argmax over candidates and the own-row base both fall
+        # out of a single groupBy — no candidate/own self-join.
+        rows = (
+            kv.join(
                 bc(
-                    ct.select(F.col("label").alias("a"), F.col("dc").alias("dca")),
+                    labels.select(
+                        F.col("vid").alias("dst"),
+                        F.col("label").alias("a"),
+                        "deg",
+                    ),
                     n_vertices,
-                    2,
+                    3,
                 ),
-                "a",
-            ).select(
-                "v",
-                "a",
-                F.col("mb.l").alias("nb"),
+                "dst",
+            )
+            .join(
+                bc(ct.select(F.col("label").alias("l"), "dc"), n_vertices, 2),
+                "l",
+            )
+        )
+        is_own = F.col("l") == F.col("a")
+        score = m_lit * F.col("k") - F.col("deg") * F.col("dc")
+        per_v = rows.groupBy(
+            F.col("dst").alias("v"), "a", "deg"
+        ).agg(
+            F.min(
+                F.when(~is_own, F.struct((-score).alias("ns"), F.col("l")))
+            ).alias("mb"),
+            F.sum(F.when(is_own, F.col("k")).otherwise(F.lit(0))).alias("ka"),
+        )
+        # dc_a for vertices with no internal edge: join ct on a (the
+        # community always exists in ct — v itself contributes deg).
+        per_v = per_v.join(
+            bc(
+                ct.select(F.col("label").alias("a"), F.col("dc").alias("dca")),
+                n_vertices,
+                2,
+            ),
+            "a",
+        ).select(
+            "v",
+            "a",
+            F.col("mb.l").alias("nb"),
+            (
+                (-F.col("mb.ns"))
+                - (m_lit * F.col("ka") - F.col("deg") * (F.col("dca") - F.col("deg")))
+            ).alias("gain"),
+        )
+        best = per_v.where(
+            F.col("nb").isNotNull() & (F.col("gain") > 0)
+        ).select("v", "nb")
+        return (
+            labels.alias("st")
+            .join(
+                bc(best.alias("bs"), n_vertices, 2),
+                F.col("st.vid") == F.col("bs.v"),
+                "left",
+            )
+            .select(
+                F.col("st.vid").alias("vid"),
+                F.when(
+                    F.col("bs.nb").isNotNull()
+                    & (_move_parity(r, F.col("st.vid")) == 0),
+                    F.col("bs.nb"),
+                )
+                .otherwise(F.col("st.label"))
+                .alias("label"),
+                F.col("st.deg").alias("deg"),
                 (
-                    (-F.col("mb.ns"))
-                    - (m_lit * F.col("ka") - F.col("deg") * (F.col("dca") - F.col("deg")))
-                ).alias("gain"),
+                    F.col("bs.nb").isNotNull()
+                    & (_move_parity(r, F.col("st.vid")) == 0)
+                    & (F.col("bs.nb") != F.col("st.label"))
+                ).cast("long").alias("_moved"),
             )
-            best = per_v.where(
-                F.col("nb").isNotNull() & (F.col("gain") > 0)
-            ).select("v", "nb")
-            upd = (
-                labels.alias("st")
-                .join(
-                    bc(best.alias("bs"), n_vertices, 2),
-                    F.col("st.vid") == F.col("bs.v"),
-                    "left",
-                )
-                .select(
-                    F.col("st.vid").alias("vid"),
-                    F.when(
-                        F.col("bs.nb").isNotNull()
-                        & (_move_parity(r, F.col("st.vid")) == 0),
-                        F.col("bs.nb"),
-                    )
-                    .otherwise(F.col("st.label"))
-                    .alias("label"),
-                    F.col("st.deg").alias("deg"),
-                    (
-                        F.col("bs.nb").isNotNull()
-                        & (_move_parity(r, F.col("st.vid")) == 0)
-                        & (F.col("bs.nb") != F.col("st.label"))
-                    ).cast("long").alias("_moved"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            moved = int(upd.agg(F.sum("_moved")).first()[0] or 0)
-            nxt = upd.select("vid", "label", "deg")
-            if r % SEVER_EVERY == 0:
-                # reset the leaf statistic to the real file size — see the
-                # module docstring's statistics-severance note
-                nxt = store.sever(nxt)
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev = labels
-            labels = nxt
-            if fixpoint and moved == 0:
-                return labels, True
-    return labels, (not fixpoint)
+        )
+
+    state, _, converged = fixpoint(
+        labels.join(wdeg, "vid").select("vid", "label", "deg"),
+        step,
+        lambda st, m: {
+            "round": m.get("round", 0) + 1,
+            "moved": int(st.agg(F.sum("_moved")).first()[0] or 0),
+        },
+        lambda m, _: until_stable and m["moved"] == 0,
+        budget,
+    )
+    return state, converged or not until_stable
 
 
 def louvain_local_move(
@@ -273,21 +253,11 @@ def louvain_local_move(
             "w", F.lit(1).cast("long")
         )
 
-    budget = rounds if rounds is not None else max_rounds
-    store = _Store(graph.spark)
-    try:
-        labels, converged = _local_move_rounds(
-            graph.spark, expand, labels0, wdeg, m_edges, n,
-            budget, fixpoint=rounds is None, store=store,
-        )
-        # the final state may be parquet-backed by the scratch store —
-        # pin it in memory before the store dir is deleted
-        labels = labels.select(
-            F.col("vid").cast("long").alias("vid"),
-            F.col("label").cast("long").alias("label"),
-        ).localCheckpoint(eager=True)
-    finally:
-        store.cleanup()
+    labels, converged = _local_move_rounds(
+        graph.spark, expand, labels0, wdeg, m_edges, n,
+        rounds if rounds is not None else max_rounds,
+        until_stable=rounds is None,
+    )
     if rounds is None and not converged:
         import warnings
 
@@ -297,7 +267,10 @@ def louvain_local_move(
             "still be improvable",
             stacklevel=2,
         )
-    return labels
+    return labels.select(
+        F.col("vid").cast("long").alias("vid"),
+        F.col("label").cast("long").alias("label"),
+    )
 
 
 def multilevel_louvain(
@@ -319,69 +292,65 @@ def multilevel_louvain(
 
     mapping = louvain_local_move(graph, rounds=None, max_rounds=max_rounds)
 
-    store = _Store(spark)
-    try:
-        # quotient edges: (label(src), label(dst), multiplicity).  Both
-        # mapping and qe round-trip through the scratch store at every
-        # level boundary — the level-loop composition joins would
-        # otherwise inherit and multiply the inner loop's originStats
-        # (same severance rationale as the round loop).
-        qe = store.sever(
-            graph.edges.join(
-                mapping.select(F.col("vid").alias("src"), F.col("label").alias("ls")),
-                "src",
-            )
-            .join(
-                mapping.select(F.col("vid").alias("dst"), F.col("label").alias("ld")),
-                "dst",
-            )
-            .groupBy(F.col("ls").alias("src"), F.col("ld").alias("dst"))
-            .agg(F.count("*").cast("long").alias("w"))
+    # quotient edges: (label(src), label(dst), multiplicity).  Both
+    # mapping and qe are re-rooted checkpoints at every level boundary, so
+    # the composition joins plan on their measured sizes.
+    qe = checkpoint(
+        graph.edges.join(
+            mapping.select(F.col("vid").alias("src"), F.col("label").alias("ls")),
+            "src",
         )
+        .join(
+            mapping.select(F.col("vid").alias("dst"), F.col("label").alias("ld")),
+            "dst",
+        )
+        .groupBy(F.col("ls").alias("src"), F.col("ld").alias("dst"))
+        .agg(F.count("*").cast("long").alias("w"))
+    )
 
-        for _lvl in range(1, levels):
-            nq = qe.select("src").distinct().count()
-            if nq <= 1:
-                break
-            wdeg = (
-                qe.groupBy("src").agg(F.sum("w").alias("deg"))
-                .withColumnRenamed("src", "vid")
-            )
-            labels0 = wdeg.select("vid", F.col("vid").alias("label"))
-            # self-loops (contracted internal weight) stay in the quotient
-            # edge table: the round loop's src != dst filter keeps them out
-            # of every k_vc tally (their in_c contribution is invariant
-            # under any move of v, so they cancel in the gain), while the
-            # weighted-degree aggregate above counts them — as it must.
-            qe_nl = qe
+    for _lvl in range(1, levels):
+        nq = qe.select("src").distinct().count()
+        if nq <= 1:
+            break
+        wdeg = (
+            qe.groupBy("src").agg(F.sum("w").alias("deg"))
+            .withColumnRenamed("src", "vid")
+        )
+        labels0 = wdeg.select("vid", F.col("vid").alias("label"))
+        # self-loops (contracted internal weight) stay in the quotient
+        # edge table: the round loop's src != dst filter keeps them out
+        # of every k_vc tally (their in_c contribution is invariant
+        # under any move of v, so they cancel in the gain), while the
+        # weighted-degree aggregate above counts them — as it must.
 
-            def expand(msgs, est_rows, _qe=qe_nl):
-                return _qe.join(msgs, "src")
+        def expand(msgs, est_rows, _qe=qe):
+            return _qe.join(msgs, "src")
 
-            lab, _ = _local_move_rounds(
-                spark, expand, labels0, wdeg, m_edges, nq,
-                budget=max_rounds, fixpoint=True, store=store,
-            )
-            moved = lab.where(F.col("vid") != F.col("label")).limit(1).count()
-            if moved == 0:
-                break
-            mapping = store.sever(
-                mapping.alias("mp")
-                .join(lab.alias("lv"), F.col("mp.label") == F.col("lv.vid"))
-                .select(F.col("mp.vid").alias("vid"), F.col("lv.label").alias("label"))
-            )
-            qe = store.sever(
-                qe.alias("q")
-                .join(lab.select(F.col("vid").alias("src"), F.col("label").alias("ls")), "src")
-                .join(lab.select(F.col("vid").alias("dst"), F.col("label").alias("ld")), "dst")
-                .groupBy(F.col("ls").alias("src"), F.col("ld").alias("dst"))
-                .agg(F.sum("w").cast("long").alias("w"))
-            )
-        # pin the final mapping in memory before the store dir is deleted
-        mapping = mapping.select(
-            F.col("vid").cast("long").alias("vid"),
-            F.col("label").cast("long").alias("label"),
-        ).localCheckpoint(eager=True)
-    finally:
-        store.cleanup()
-    return mapping
+        lab, _ = _local_move_rounds(
+            spark, expand, labels0, wdeg, m_edges, nq,
+            budget=max_rounds, until_stable=True,
+        )
+        moved = lab.where(F.col("vid") != F.col("label")).limit(1).count()
+        if moved == 0:
+            release(lab)
+            break
+        nxt_mapping = checkpoint(
+            mapping.alias("mp")
+            .join(lab.alias("lv"), F.col("mp.label") == F.col("lv.vid"))
+            .select(F.col("mp.vid").alias("vid"), F.col("lv.label").alias("label"))
+        )
+        nxt_qe = checkpoint(
+            qe.alias("q")
+            .join(lab.select(F.col("vid").alias("src"), F.col("label").alias("ls")), "src")
+            .join(lab.select(F.col("vid").alias("dst"), F.col("label").alias("ld")), "dst")
+            .groupBy(F.col("ls").alias("src"), F.col("ld").alias("dst"))
+            .agg(F.sum("w").cast("long").alias("w"))
+        )
+        for done_with in (mapping, qe, lab):
+            release(done_with)
+        mapping, qe = nxt_mapping, nxt_qe
+    release(qe)
+    return mapping.select(
+        F.col("vid").cast("long").alias("vid"),
+        F.col("label").cast("long").alias("label"),
+    )

@@ -17,16 +17,17 @@ primitive (multilevel graph partitioning, 2-approximate vertex cover
 = the matched vertex set).
 
 Scale shape:
-  * state is the ALIVE canonical edge set (u < v, one row per
-    undirected edge) + its static priority — it only ever shrinks;
+  * one `linkgraph.iterate.fixpoint` round per matching round; the state
+    is the canonical edge set (u < v, one row per undirected edge) with
+    its static priority and `mr`, the round that matched the edge (0 while
+    it is alive).  Alive edges only ever shrink, matched ones ride along;
   * per round: per-vertex argmin = union of the two endpoint views +
     ONE partial+final MIN(struct) aggregate (map-side combined, never
-    a window sort); the matched test is two hash joins against the
-    ≤|V|-row argmin table; removal is two left-anti joins;
-  * the alive table is referenced 4x per round, so — like louvain and
-    k-truss — the lazily-checkpointed leaf's originStats would grow
-    geometrically; the alive set round-trips scc.py's parquet scratch
-    store every SEVER_EVERY rounds to keep planning cost flat.
+    a window sort); a vertex is matched when its argmin edge is also the
+    argmin of the other endpoint (one self-join of the ≤|V|-row argmin
+    table); each alive edge then takes two hash joins against the matched
+    vertices: matched now, dropped, or still alive;
+  * the probe counts the alive edges (one job per round).
 
 rounds=R runs exactly R unrolled rounds (the DuckDB oracle mirrors the
 same R rounds bit-for-bit — a well-defined matching prefix, possibly
@@ -39,8 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.algos.scc import SEVER_EVERY, _Store
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.iterate import fixpoint
 
 
 def _edge_prio(u_col, v_col):
@@ -59,84 +60,76 @@ def maximal_matching(
     graph must be symmetric (undirected edges)."""
     if not graph.symmetric:
         raise ValueError("maximal_matching needs a symmetric graph")
-    spark = graph.spark
-    alive = (
-        graph.edges.where(F.col("src") < F.col("dst"))
-        .select(
-            F.col("src").alias("u"),
-            F.col("dst").alias("v"),
-            _edge_prio(F.col("src"), F.col("dst")).alias("p"),
-        )
-        .localCheckpoint(eager=True)
+    seed = graph.edges.where(F.col("src") < F.col("dst")).select(
+        F.col("src").alias("u"),
+        F.col("dst").alias("v"),
+        _edge_prio(F.col("src"), F.col("dst")).alias("p"),
+        F.lit(0).alias("mr"),
     )
-    n_alive = alive.count()
-    matched_parts: list[DataFrame] = []
-    prev = None
-    budget = rounds if rounds is not None else max_rounds
 
-    store = _Store(spark)
-    try:
-        with iteration_plan(spark):
-            for r in range(1, budget + 1):
-                if n_alive == 0:
-                    break
-                ekey = F.struct(F.col("p"), F.col("u"), F.col("v"))
-                both = alive.select(F.col("u").alias("vid"), ekey.alias("k")).unionByName(
-                    alive.select(F.col("v").alias("vid"), ekey.alias("k"))
-                )
-                mn = both.groupBy("vid").agg(F.min("k").alias("mn"))
-                m = (
-                    alive.withColumn("k", ekey)
-                    .join(
-                        mn.select(F.col("vid").alias("u"), F.col("mn").alias("mu")), "u"
-                    )
-                    .join(
-                        mn.select(F.col("vid").alias("v"), F.col("mn").alias("mv")), "v"
-                    )
-                    .where((F.col("k") == F.col("mu")) & (F.col("k") == F.col("mv")))
-                    .select("u", "v")
-                    .localCheckpoint(eager=True)
-                )
-                matched_parts.append(m.select("u", "v", F.lit(r).alias("matched_round")))
-                mv = m.select(F.col("u").alias("vid")).unionByName(
-                    m.select(F.col("v").alias("vid"))
-                )
-                nxt = (
-                    alive.join(mv.withColumnRenamed("vid", "u"), "u", "left_anti")
-                    .join(mv.withColumnRenamed("vid", "v"), "v", "left_anti")
-                    .select("u", "v", "p")
-                )
-                if r % SEVER_EVERY == 0:
-                    # reset the leaf statistic to the real file size — the
-                    # 4-refs-per-round originStats pathology (module doc)
-                    nxt = store.sever(nxt)
-                else:
-                    nxt = nxt.localCheckpoint(eager=False)
-                n_alive = nxt.count()
-                if prev is not None:
-                    try:
-                        prev.unpersist()
-                    except Exception:
-                        pass
-                prev = alive
-                alive = nxt
-    finally:
-        store.cleanup()
-    if n_alive > 0 and rounds is None:
+    def step(state: DataFrame, metrics: dict) -> DataFrame:
+        r = metrics["round"] + 1
+        alive = state.where(F.col("mr") == 0).withColumn(
+            "k", F.struct(F.col("p"), F.col("u"), F.col("v"))
+        )
+        mn = (
+            alive.select(F.col("u").alias("vid"), "k")
+            .unionByName(alive.select(F.col("v").alias("vid"), "k"))
+            .groupBy("vid")
+            .agg(F.min("k").alias("k"))
+        )
+        # x is matched when its argmin edge is the argmin of the other end
+        other = F.when(F.col("a.k.u") == F.col("a.vid"), F.col("a.k.v")).otherwise(
+            F.col("a.k.u")
+        )
+        matched = (
+            mn.alias("a")
+            .join(mn.alias("b"), other == F.col("b.vid"))
+            .where(F.col("a.k") == F.col("b.k"))
+            .select(F.col("a.vid").alias("vid"), F.col("a.k").alias("mk"))
+        )
+        # an edge matched in an earlier round has no alive endpoint, so it
+        # meets no matched vertex and keeps its round
+        mu = matched.select(F.col("vid").alias("u"), F.col("mk").alias("mu"))
+        mv = matched.select(F.col("vid").alias("v"), F.col("mk").alias("mv"))
+        return (
+            state.join(mu, "u", "left")
+            .join(mv, "v", "left")
+            .where(
+                (F.col("mr") > 0)
+                | (F.col("mu") == F.struct(F.col("p"), F.col("u"), F.col("v")))
+                | (F.col("mu").isNull() & F.col("mv").isNull())
+            )
+            .select(
+                "u",
+                "v",
+                "p",
+                F.when(F.col("mu").isNotNull(), F.lit(r)).otherwise(F.col("mr")).alias("mr"),
+            )
+        )
+
+    def alive_count(state: DataFrame, metrics: dict | None = None) -> dict:
+        n = state.agg(F.sum(F.when(F.col("mr") == 0, 1).otherwise(0))).first()[0]
+        return {"round": metrics["round"] + 1 if metrics else 0, "alive": int(n or 0)}
+
+    state, m, _ = fixpoint(
+        seed,
+        step,
+        alive_count,
+        lambda m, _: m["alive"] == 0,
+        rounds if rounds is not None else max_rounds,
+        seed_metrics=alive_count,
+    )
+    if m["alive"] > 0 and rounds is None:
         import warnings
 
         warnings.warn(
-            f"maximal_matching: round budget exhausted with {n_alive} live "
+            f"maximal_matching: round budget exhausted with {m['alive']} live "
             "edges — result is a matching but may not be maximal",
             stacklevel=2,
         )
-    if not matched_parts:
-        return spark.createDataFrame([], "u long, v long, matched_round int")
-    out = matched_parts[0]
-    for part in matched_parts[1:]:
-        out = out.unionByName(part)
-    return out.select(
+    return state.where(F.col("mr") > 0).select(
         F.col("u").cast("long").alias("u"),
         F.col("v").cast("long").alias("v"),
-        F.col("matched_round").cast("int").alias("matched_round"),
+        F.col("mr").cast("int").alias("matched_round"),
     )

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.iterate import release
 
 
 def _prio(round_no: int, vid_col):
@@ -63,7 +64,6 @@ def maximal_independent_set(
     und = graph.vertices().select("vid").localCheckpoint(eager=True)
     n_und = und.count()
     mis_parts: list[DataFrame] = []
-    prev = None
 
     budget = rounds if rounds is not None else max_rounds
     with iteration_plan(spark):
@@ -98,13 +98,9 @@ def maximal_independent_set(
                 .localCheckpoint(eager=True)
             )
             n_und = nxt.count()
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            prev = und
+            release(und)
             und = nxt
+    release(und)
     if n_und > 0 and rounds is None:
         import warnings
 

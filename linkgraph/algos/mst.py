@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.iterate import release
 
 
 def minimum_spanning_forest(
@@ -124,31 +125,31 @@ def minimum_spanning_forest(
                 .localCheckpoint(eager=False)
             )
             if prop.count() == 0:
+                release(prop)
                 converged = True
                 break
             forest_parts.append(prop.select("u", "v", "w").distinct())
             mapping = _contract_pseudoforest(prop, bc_small=bc_ok)
-            if bc_ok:
+            nxt = (
                 # ≤|comps|-row mapping under the J1 byte gate: the |V|-row
                 # comp state never re-shuffles for the relabel join
-                mapping = F.broadcast(mapping)
-            comp = (
-                comp.join(mapping, "comp", "left")
+                comp.join(F.broadcast(mapping) if bc_ok else mapping, "comp", "left")
                 .select("vid", F.coalesce(F.col("nc"), F.col("comp")).alias("comp"))
                 .localCheckpoint(eager=True)
             )
+            release(comp)
+            release(mapping)
+            comp = nxt
+    release(comp)
     if rounds is None and not converged:
         warnings.warn(
             f"minimum_spanning_forest: max_rounds={max_rounds} exhausted before "
             "the no-cross-edges fixpoint — returned forest may be partial",
             stacklevel=2,
         )
-    try:
-        # every per-round proposal is eagerly checkpointed, so the result
-        # no longer reads e
-        e.unpersist()
-    except Exception:
-        pass
+    # every per-round proposal is checkpointed, so the result no longer
+    # reads e
+    release(e)
     if not forest_parts:
         return spark.createDataFrame([], "u long, v long, w long")
     out = forest_parts[0]
@@ -203,10 +204,7 @@ def _contract_pseudoforest(
         )
         changed = np_.where(F.col("np") != F.col("p")).count()
         nxt = np_.select("c", F.col("np").alias("p"))
-        try:
-            p.unpersist()
-        except Exception:
-            pass
+        release(p)
         p = nxt
         if changed == 0:
             break

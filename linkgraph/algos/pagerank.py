@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph
-from linkgraph.iterate import fixpoint
+from linkgraph.iterate import fixpoint, release
 
 
 def pagerank(
@@ -261,7 +261,6 @@ def ppr_forward_push(
     from linkgraph.graph import iteration_plan
 
     exhausted = rounds is None
-    prev_state = None
     with iteration_plan(spark):
         for _ in range(budget):
             pushed = F.col("r") > F.lit(eps) * F.col("deg")
@@ -301,11 +300,7 @@ def ppr_forward_push(
                 )
                 .localCheckpoint(eager=True)
             )
-            if prev_state is not None:
-                try:
-                    prev_state.unpersist()
-                except Exception:
-                    pass
+            release(prev_state)
     if exhausted:
         import warnings
 

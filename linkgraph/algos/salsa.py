@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.iterate import release
 
 
 def salsa(
@@ -100,10 +101,7 @@ def salsa(
             a = flow(graph, h, "od", n)   # auth: forward, /outdeg
             h = flow(gt, a, "idg", n)     # hub: transpose, /indeg
             for old in retained:
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass
+                release(old)
             retained = [a, h]
 
     hub_col, auth_col = F.col("h.x"), F.col("a.x")
@@ -116,6 +114,8 @@ def salsa(
         .select(F.col("h.vid").alias("vid"), hub_col.alias("hub"), auth_col.alias("auth"))
         .localCheckpoint(eager=True)
     )
+    for done_with in (verts, *retained):
+        release(done_with)
     if own_transpose:
         gt.unpersist()
     return out

@@ -24,71 +24,28 @@ roots, which is small on any non-adversarial graph.
 
 Both propagations POINTER-DOUBLE (lbl(v) ← min(lbl(v), lbl(lbl(v))) is
 valid because lbl(v) reaches v transitively), so each converges in
-O(log longest-path) fused one-job iterations (lazy localCheckpoint
-materialized by the convergence aggregate, AQE-off shuffled-hash profile
-via iteration_plan).
-
-Stat severance: doubling references the state THREE times per iteration
-(message join, outer join, doubling mapping), and `localCheckpoint`
-copies the PRE-cache-substitution plan's statistics into each new leaf,
-so the sizeInBytes digit count grows ×3 per iteration (the general rule:
-×k for k state references — ktruss.py documents the k=4 case) until
-Catalyst spends its time multiplying huge BigInts.  The LP therefore
-round-trips its label table through the FS store every SEVER_EVERY
-iterations: ×3^6 ≈ 7×10^2 digit cap keeps every stats product trivial
-while amortizing the parquet write to ~1-2 per propagation at any scale.
+O(log longest-path) iterations of `linkgraph.iterate.fixpoint` (one fused
+job each, AQE-off shuffled-hash profile).  FW-BW-Trim's peel runs on the
+same driver, and every round-level table is an eager checkpoint re-rooted
+on its measured size (`linkgraph.iterate.checkpoint`), released once
+nothing reads it.
 """
 
 from __future__ import annotations
 
-import posixpath
-import uuid
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import edge_store_root, iteration_plan
-
-SEVER_EVERY = 6  # stat digits cap at ~3^6 x seed before each FS reset
-
-
-class _Store:
-    """Per-call scratch dir for stat-severing parquet round-trips; the
-    whole dir is deleted at the end (everything returned is eager-
-    localCheckpointed first, so nothing reads it afterwards)."""
-
-    def __init__(self, spark):
-        self.spark = spark
-        self.root = posixpath.join(
-            edge_store_root(spark), f"linkgraph_scc_{uuid.uuid4().hex}"
-        )
-        self.n = 0
-
-    def sever(self, df: DataFrame) -> DataFrame:
-        self.n += 1
-        p = posixpath.join(self.root, f"s{self.n}")
-        df.write.parquet(p)
-        return self.spark.read.parquet(p)
-
-    def cleanup(self):
-        try:
-            from linkgraph.checkpoint import _HadoopFS
-
-            fs = _HadoopFS(self.spark, self.root)
-            if fs.exists(self.root):
-                fs.delete(self.root)
-        except Exception:
-            pass
+from linkgraph.graph import iteration_plan
+from linkgraph.iterate import checkpoint, count_changed, fixpoint, release
 
 
-def _min_label_reach(
-    edges: DataFrame, init: DataFrame, max_iter: int, store: _Store
-) -> DataFrame:
-    """(vid, lbl): lbl = min vid with a directed path TO vid (incl. vid).
-    init: (vid, lbl) starting labels (vid, vid).  Pointer-doubled."""
-    lbl = init
-    prev = None
-    for it in range(max_iter):
+def _min_label_reach(edges: DataFrame, init: DataFrame, max_iter: int) -> DataFrame:
+    """(vid, lbl, pl): lbl = min vid with a directed path TO vid (incl.
+    vid); pl is the previous iteration's label.  init: (vid, lbl) starting
+    labels (vid, vid).  Pointer-doubled."""
+
+    def step(lbl: DataFrame, _m: dict) -> DataFrame:
         msgs = (
             lbl.join(edges, lbl["vid"] == edges["src"])
             .groupBy(F.col("dst").alias("vid"))
@@ -102,98 +59,91 @@ def _min_label_reach(
         # pointer doubling: lbl(v) <- min(lbl(v), lbl(lbl(v))) — valid
         # because lbl(v) reaches v, so anything reaching lbl(v) reaches v
         mapping = lbl.select(F.col("vid").alias("lbl"), F.col("lbl").alias("ll"))
-        new = (
-            stepped.join(mapping, "lbl", "left")
-            .select(
-                "vid",
-                F.least(F.col("lbl"), F.coalesce(F.col("ll"), F.col("lbl"))).alias("lbl"),
-                "pl",
-            )
-            .localCheckpoint(eager=False)
+        return stepped.join(mapping, "lbl", "left").select(
+            "vid",
+            F.least(F.col("lbl"), F.coalesce(F.col("ll"), F.col("lbl"))).alias("lbl"),
+            "pl",
         )
-        changed = int(
-            new.agg(
-                F.sum(F.when(F.col("lbl") != F.col("pl"), 1).otherwise(0)).alias("n")
-            ).first()["n"]
-            or 0
-        )
-        if prev is not None:
-            try:
-                prev.unpersist()
-            except Exception:
-                pass
-        prev, lbl = lbl, new.select("vid", "lbl")
-        if changed == 0:
-            break
-        if (it + 1) % SEVER_EVERY == 0:
-            lbl = store.sever(lbl)  # reset originStats digits (module doc)
-            prev = None
-    else:
-        # max_iter exhausted before the label fixpoint: stale labels can
-        # split one SCC across comp values WITHOUT leaving any vertex
-        # unassigned, so the outer incomplete-result warning never fires —
-        # surface the budget exhaustion here (mirrors the outer warn)
+
+    lbl, m, converged = fixpoint(
+        init,
+        step,
+        lambda st, _: {"changed": count_changed(st, "lbl", "pl")},
+        lambda m, _: m["changed"] == 0,
+        max_iter,
+    )
+    if not converged:
+        # stale labels can split one SCC across comp values WITHOUT leaving
+        # any vertex unassigned, so the outer incomplete-result warning
+        # never fires — surface the budget exhaustion here
         import warnings
 
         warnings.warn(
             f"_min_label_reach: max_iter={max_iter} exhausted with "
-            f"{changed} labels still changing — component labels may be "
-            "split; raise max_iter",
+            f"{m.get('changed')} labels still changing — component labels may "
+            "be split; raise max_iter",
             stacklevel=2,
         )
     return lbl
 
 
-def _trim(e, verts, nv, store, assigned_parts, max_trim=100):
+def _trim(e, verts, nv, assigned_parts, max_trim=100):
     """FW-BW-Trim: iteratively peel vertices with no in-edge or no
     out-edge in the remaining graph — each is a singleton SCC (nothing
     off a cycle survives trim).  Tendril-heavy graphs shed the bulk of
     their vertices here for semi-joins, orders of magnitude cheaper than
     label propagation rounds.
 
-    Per layer: ONE count action; plan trees are cut by LAZY
-    localCheckpoint each layer (each layer references its inputs 2-3
-    times, so an uncut tree grows ×4-5 per layer and the ANALYZER — not
-    stats this time — becomes the wedge; semi-join chains have no
-    join-stat product, so localCheckpoint is sufficient severance here
-    and no parquet round-trip is needed).  The phase's trimmed set is
-    assigned with ONE anti-join at the end instead of one checkpoint per
-    layer — the entry verts table is checkpoint- or store-backed, so it
-    remains valid after the loop's intermediates are dropped."""
-    verts0, nv0 = verts, nv
-    for _ in range(max_trim):
-        if nv == 0:
-            break
+    The peel's state is the edge set: a layer keeps the edges whose both
+    endpoints have an out-edge and an in-edge, so an unchanged edge count
+    is the fixpoint, and the survivors are the final edges' endpoints.
+    Every vertex of `verts` that is not one is assigned to itself with ONE
+    anti-join at the end.  Consumes `e` and `verts` (released when
+    replaced); returns the new (e, verts, nv)."""
+    if nv == 0:
+        return e, verts, nv
+
+    def step(t: DataFrame, _m: dict) -> DataFrame:
         good = (
-            verts.join(
-                e.select(F.col("src").alias("vid")).distinct(), "vid", "left_semi"
-            )
-            .join(e.select(F.col("dst").alias("vid")).distinct(), "vid", "left_semi")
-            .localCheckpoint(eager=False)
+            t.select(F.col("src").alias("vid")).distinct()
+            .join(t.select(F.col("dst").alias("vid")).distinct(), "vid", "left_semi")
         )
-        ng = good.count()
-        if ng == nv:
-            break
-        verts = good
-        nv = ng
-        e = (
-            e.join(good.withColumnRenamed("vid", "src"), "src", "left_semi")
+        return (
+            t.join(good.withColumnRenamed("vid", "src"), "src", "left_semi")
             .join(good.withColumnRenamed("vid", "dst"), "dst", "left_semi")
             .select("src", "dst")
-            .localCheckpoint(eager=False)
         )
-    if nv != nv0:
-        # re-anchor the survivors in the store: the anti-join and the
-        # caller both build on them, and file-backed leaves keep every
-        # downstream plan (and its stats) small
-        verts = store.sever(verts)
-        e = store.sever(e)
-        assigned_parts.append(
-            verts0.join(verts, "vid", "left_anti")
-            .select("vid", F.col("vid").alias("comp"))
-            .localCheckpoint(eager=True)
+
+    def edge_count(t: DataFrame, _m: dict | None = None) -> dict:
+        return {"edges": t.count()}
+
+    kept, _, _ = fixpoint(
+        e,
+        step,
+        edge_count,
+        lambda m, prev: m["edges"] == prev["edges"],
+        max_trim,
+        seed_metrics=edge_count,
+    )
+    release(e)
+    survivors = checkpoint(
+        kept.select(F.col("src").alias("vid"))
+        .union(kept.select(F.col("dst").alias("vid")))
+        .distinct()
+    )
+    ns = survivors.count()
+    if ns == nv:
+        release(survivors)
+        return kept, verts, nv
+    assigned_parts.append(
+        checkpoint(
+            verts.join(survivors, "vid", "left_anti").select(
+                "vid", F.col("vid").alias("comp")
+            )
         )
-    return e, verts, nv
+    )
+    release(verts)
+    return kept, survivors, ns
 
 
 def strongly_connected_components(
@@ -205,23 +155,20 @@ def strongly_connected_components(
     Phase order: trim → (color → peel → trim)*, the classic FW-BW-Trim
     interleave — peeling an SCC exposes fresh sources/sinks, so re-trim
     after every coloring round."""
-    e = (
+    e = checkpoint(
         edges.select(
             F.col("src").cast("long").alias("src"),
             F.col("dst").cast("long").alias("dst"),
         )
         .where(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    verts = (
+    verts = checkpoint(
         e.select(F.col("src").alias("vid"))
         .union(e.select(F.col("dst").alias("vid")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     spark = edges.sparkSession
-    store = _Store(spark)
     nv = verts.count()
 
     # iteration tables are |V|-row; at small |V| the session's shuffle
@@ -240,57 +187,55 @@ def strongly_connected_components(
         if loop_p is not None:
             spark.conf.set("spark.sql.shuffle.partitions", str(loop_p))
         with iteration_plan(spark):
-            e, verts, nv = _trim(e, verts, nv, store, assigned_parts)
+            e, verts, nv = _trim(e, verts, nv, assigned_parts)
             for _ in range(max_rounds):
                 if nv == 0:
                     break
                 init = verts.select("vid", F.col("vid").alias("lbl"))
-                # every round-level table goes through the FS store, not
-                # localCheckpoint: a propagation over an edge table with
-                # d-digit originStats re-amplifies those d digits ×3 per
-                # iteration regardless of label severing, so the EDGE
-                # side must carry file-backed (small, real) stats too
-                f = store.sever(_min_label_reach(e, init, max_iter, store))
+                f = _min_label_reach(e, init, max_iter)
 
                 # class-restricted reversed edges: both endpoints share f
-                fe = f.withColumnRenamed("vid", "src").withColumnRenamed("lbl", "fs")
-                fd = f.withColumnRenamed("vid", "dst").withColumnRenamed("lbl", "fd")
-                rev_class = store.sever(
+                fe = f.select(F.col("vid").alias("src"), F.col("lbl").alias("fs"))
+                fd = f.select(F.col("vid").alias("dst"), F.col("lbl").alias("fd"))
+                rev_class = checkpoint(
                     e.join(fe, "src")
                     .join(fd, "dst")
                     .where(F.col("fs") == F.col("fd"))
                     .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
                 )
-                br = _min_label_reach(rev_class, init, max_iter, store)
+                br = _min_label_reach(rev_class, init, max_iter)
 
-                joined = f.join(br.withColumnRenamed("lbl", "br"), "vid")
-                # `done` escapes this function (and outlives
-                # store.cleanup), so it is materialized into executor
-                # blocks, not store files
-                done = (
-                    joined.where(F.col("lbl") == F.col("br"))
-                    .select("vid", F.col("lbl").alias("comp"))
-                    .localCheckpoint(eager=True)
+                joined = f.select("vid", "lbl").join(
+                    br.select("vid", F.col("lbl").alias("br")), "vid"
                 )
-                assigned_parts.append(done)
-                verts = store.sever(
-                    joined.where(F.col("lbl") != F.col("br")).select("vid")
+                assigned_parts.append(
+                    checkpoint(
+                        joined.where(F.col("lbl") == F.col("br")).select(
+                            "vid", F.col("lbl").alias("comp")
+                        )
+                    )
                 )
+                rest = checkpoint(joined.where(F.col("lbl") != F.col("br")).select("vid"))
+                for done_with in (f, rev_class, br, verts):
+                    release(done_with)
+                verts = rest
                 nv = verts.count()
                 if nv == 0:
                     break
                 # restrict edges to unassigned vertices, then re-trim:
                 # peeling exposes fresh sources/sinks
-                e = store.sever(
+                restricted = checkpoint(
                     e.join(verts.withColumnRenamed("vid", "src"), "src", "left_semi")
                     .join(verts.withColumnRenamed("vid", "dst"), "dst", "left_semi")
                     .select("src", "dst")
                 )
-                e, verts, nv = _trim(e, verts, nv, store, assigned_parts)
+                release(e)
+                e, verts, nv = _trim(restricted, verts, nv, assigned_parts)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_sp)
 
-    store.cleanup()  # everything kept is eager-checkpointed; scratch only
+    release(e)
+    release(verts)
     if nv > 0:
         import warnings
 
@@ -305,7 +250,10 @@ def strongly_connected_components(
     out = assigned_parts[0]
     for p in assigned_parts[1:]:
         out = out.union(p)
-    return out.select(F.col("vid").cast("long"), F.col("comp").cast("long"))
+    out = checkpoint(out.select(F.col("vid").cast("long"), F.col("comp").cast("long")))
+    for p in assigned_parts:
+        release(p)
+    return out
 
 
 def bowtie_decomposition(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
@@ -431,7 +379,6 @@ def condensation_layers(
     )
     budget = rounds if rounds is not None else max_rounds
     prev_sum = 0
-    prev_depth = None
     with iteration_plan(spark):
         for it in range(budget):
             msgs = ce.join(
@@ -440,17 +387,10 @@ def condensation_layers(
                 F.col("dst").alias("c"), (F.col("depth") + 1).alias("depth")
             )
             prev_depth = depth
-            depth = (
-                depth.unionByName(msgs)
-                .groupBy("c")
-                .agg(F.max("depth").alias("depth"))
-                .localCheckpoint(eager=True)
+            depth = checkpoint(
+                depth.unionByName(msgs).groupBy("c").agg(F.max("depth").alias("depth"))
             )
-            if prev_depth is not None:
-                try:
-                    prev_depth.unpersist()
-                except Exception:
-                    pass
+            release(prev_depth)
             if rounds is None:
                 s = depth.agg(F.sum("depth")).first()[0] or 0
                 if s == prev_sum:
@@ -465,6 +405,8 @@ def condensation_layers(
                     "before the depth fixpoint; layers may be lower bounds",
                     stacklevel=2,
                 )
+    release(comp)
+    release(ce)
     return depth.select(
         F.col("c").cast("long").alias("comp"),
         F.col("depth").cast("long").alias("depth"),

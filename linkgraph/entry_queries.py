@@ -682,6 +682,18 @@ GROUP BY a.src"""
 SQL_K_CORE = _kcore_oracle_sql(KCORE_K, KCORE_ROUNDS)
 
 
+def q_k_core_fixpoint(spark, sf_dir):
+    """k_core's fixpoint path (rounds=None): peel until the surviving edge
+    set stops shrinking.  The oracle unrolls twice KCORE_ROUNDS rounds;
+    rounds after convergence are identity."""
+    from linkgraph.algos.kcore import k_core
+
+    return k_core(copurchase_graph(spark, sf_dir), KCORE_K)
+
+
+SQL_K_CORE_FIXPOINT = _kcore_oracle_sql(KCORE_K, 2 * KCORE_ROUNDS)
+
+
 def q_triangle_count(spark, sf_dir):
     from linkgraph.algos.triangles import triangle_count
 
@@ -9269,6 +9281,7 @@ QUERIES = {
     "landmark_distances": q_landmark_distances,
     "pagerank_incremental": q_pagerank_incremental,
     "k_core": q_k_core,
+    "k_core_fixpoint": q_k_core_fixpoint,
     "coreness": q_coreness,
     "triangle_count": q_triangle_count,
     "triangles_per_vertex": q_triangles_per_vertex,
@@ -9511,6 +9524,7 @@ ORACLES = {
     "landmark_distances": SQL_LANDMARK_DISTANCES,
     "pagerank_incremental": SQL_PAGERANK_INCREMENTAL,
     "k_core": SQL_K_CORE,
+    "k_core_fixpoint": SQL_K_CORE_FIXPOINT,
     "coreness": SQL_CORENESS,
     "triangle_count": SQL_TRIANGLE_COUNT,
     "triangles_per_vertex": SQL_TRIANGLES_PER_VERTEX,

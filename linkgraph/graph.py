@@ -163,7 +163,10 @@ def iteration_plan(spark):
     Also prefers shuffled-hash over sort-merge joins inside the loop: the
     frontier/state side is a bounded hash map (at most |V| rows), and SHJ
     streams the co-partitioned edge side without the per-iteration sort
-    SMJ would insert.
+    SMJ would insert.  The planner picks SHJ only for a build side it
+    estimates small, so the preference holds past the first iteration
+    only because `linkgraph.iterate.fixpoint` re-roots every state on its
+    measured size (inherited statistics compound and read as too large).
 
     Constraint propagation is OFF in the loop: Catalyst's
     ``getAllValidConstraints`` substitutes every Project alias into every

@@ -2,10 +2,11 @@
 
 PageRank, CC (min-label and two-phase), LPA, label spreading, Katz,
 eigenvector centrality, weighted SSSP, MS-BFS's level loop, WL refinement
-(`wl_refine`, `wl_anonymity`), `fiedler_partition`, `coreness` and
-`hitting_time` all run the same loop; only the update (`step`), the
-per-iteration statistics (`probe`) and the stop test (`done`) differ.
-`fixpoint` owns the rest:
+(`wl_refine`, `wl_anonymity`), `fiedler_partition`, `coreness`,
+`hitting_time`, SCC's label propagation and trim, Louvain's local moves,
+`maximal_matching`, `densest_subgraph_curve`, `k_truss` and `k_core` all
+run the same loop; only the update (`step`), the per-iteration statistics
+(`probe`) and the stop test (`done`) differ.  `fixpoint` owns the rest:
 
 * **One fused Spark job per iteration.**  `step` returns the next state as
   an unmaterialized plan over the current one; `fixpoint` truncates it with
@@ -17,6 +18,10 @@ per-iteration statistics (`probe`) and the stop test (`done`) differ.
   219 s by iteration 9) was AQE-specific; with AQE off the plan is cut at
   the checkpoint call, so lineage is cut every iteration and the plan stays
   bounded however long the loop runs (tests/test_algos.py asserts it).
+* **Measured statistics.**  Every state is re-rooted (`reroot`) on the
+  size Spark measured once it is materialized, so plan
+  statistics never compound across iterations and the join planner sees
+  real sizes in every iteration, not only the first.
 * **State release.**  Every state `fixpoint` checkpoints is released once
   its successor is materialized, except the one it returns.
   ``DataFrame.unpersist()`` is a no-op on a local checkpoint (its blocks
@@ -25,8 +30,7 @@ per-iteration statistics (`probe`) and the stop test (`done`) differ.
 * **Snapshot and resume** through `CheckpointManager`: every
   `snapshot_every` iterations the state's seed columns are written with the
   manifest metrics ``{"iteration": k, **metrics}`` (the probe's) and
-  reloaded through an eager local checkpoint (the parquet scan is the new
-  lineage root);
+  reloaded through an eager, re-rooted local checkpoint (`checkpoint`);
   ``resume=True`` restarts from the latest committed snapshot with its
   iteration count and metrics.
 """
@@ -64,7 +68,8 @@ def fixpoint(
         previous iteration's, so a probe can fold running totals into them.
     seed_metrics(state): metrics of the checkpointed seed, for `step` and
         `done` of the first iteration (not called on resume); it runs under
-        ``iteration_plan`` like the probes.
+        ``iteration_plan`` like the probes and, like them, is the action
+        that materializes the (lazy) checkpoint.
     Snapshots hold the seed's columns, so `step` may add probe-only
     columns (e.g. the previous value) without them reaching the snapshot.
 
@@ -80,23 +85,27 @@ def fixpoint(
             state = checkpoint_mgr.read_state(snap)
             metrics = dict(snap["metrics"])
             it0 = int(metrics.pop("iteration"))
-    state = state.localCheckpoint(eager=True)
+    # seed_metrics is the action that materializes a lazy seed checkpoint
+    state = state.localCheckpoint(eager=metrics is not None or seed_metrics is None)
 
     converged = False
     with iteration_plan(seed.sparkSession):
         if metrics is None:
             metrics = seed_metrics(state) if seed_metrics is not None else {}
+        state = reroot(state)
         for it in range(it0, max_iter):
             new_state = step(state, metrics).localCheckpoint(eager=False)
             new_metrics = probe(new_state, metrics)
             release(state)
-            state = new_state
+            state = reroot(new_state)
             if checkpoint_mgr is not None and (it + 1) % snapshot_every == 0:
-                reloaded = checkpoint_mgr.write_state(
-                    state.select(*seed.columns),
-                    it + 1,
-                    {"iteration": it + 1, **new_metrics},
-                ).localCheckpoint(eager=True)
+                reloaded = checkpoint(
+                    checkpoint_mgr.write_state(
+                        state.select(*seed.columns),
+                        it + 1,
+                        {"iteration": it + 1, **new_metrics},
+                    )
+                )
                 release(state)
                 state = reloaded
             converged = done(new_metrics, metrics)
@@ -104,6 +113,63 @@ def fixpoint(
             if converged:
                 break
     return state, metrics, converged
+
+
+def reroot(state: DataFrame) -> DataFrame:
+    """The local checkpoint `state` as a new leaf whose statistics are its
+    measured size.  ``localCheckpoint`` copies the analyzed plan's
+    statistics into the ``LogicalRDD`` it makes, and an inner join's
+    ``sizeInBytes`` is the product of its children's, so a loop whose step
+    reads its state k times multiplies the digit count by about k per
+    iteration: Catalyst then spends its time on huge BigInts, and from the
+    second iteration on the join planner sees every state as too large for
+    a shuffled-hash join.  The new ``LogicalRDD`` has the same RDD, output,
+    partitioning and ordering; its ``originStats`` carry the RDD's cached
+    bytes (memory + disk) as Spark's status store reports them, so no job
+    runs unless no action has materialized the checkpoint yet, in which
+    case one ``count`` does.  py4j turns a ``scala.math.BigInt`` into a
+    Python int, so the ``Statistics`` are borrowed from ``spark.range``'s
+    analyzed plan (8 bytes a row)."""
+    spark = state.sparkSession
+    jsc = spark.sparkContext._jsc.sc()
+    leaf = state._jdf.queryExecution().analyzed()
+    rdd = leaf.rdd()
+
+    def cached():
+        jsc.listenerBus().waitUntilEmpty()  # block updates reach the store
+        try:
+            info = jsc.statusStore().rdd(rdd.id())
+        except Py4JError:  # never materialized
+            return None
+        if info.numCachedPartitions() < rdd.getNumPartitions():
+            return None
+        return info.memoryUsed() + info.diskUsed()
+
+    size = cached()
+    if size is None:
+        state.count()
+        size = cached() or 0
+    jspark = spark._jsparkSession
+    stats = jspark.range(max(size, 8) // 8).queryExecution().analyzed().stats()
+    jvm = spark._jvm
+    plan = jvm.org.apache.spark.sql.execution.LogicalRDD(
+        leaf.output(),
+        rdd,
+        leaf.outputPartitioning(),
+        leaf.outputOrdering(),
+        leaf.isStreaming(),
+        leaf.stream(),
+        jspark,
+        jvm.scala.Some(stats),
+        jvm.scala.Option.empty(),
+    )
+    return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(jspark, plan), spark)
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eager local checkpoint of `df`, re-rooted on its measured size: the
+    lineage and the statistics of everything before it are cut."""
+    return reroot(df.localCheckpoint(eager=True))
 
 
 def count_changed(state: DataFrame, col: str, prev_col: str) -> int:
@@ -119,17 +185,21 @@ def count_changed(state: DataFrame, col: str, prev_col: str) -> int:
 
 def release(state: DataFrame) -> None:
     """Free the cached blocks of a loop state: ``unpersist()`` for a
-    ``persist()``ed DataFrame; for a local checkpoint, the RDD under its
-    ``LogicalRDD``, dropped with the call Spark's ContextCleaner makes for a
-    garbage-collected RDD (``DataFrame.unpersist()`` is a no-op there, and
-    ``RDD.unpersist`` would log a truncated-lineage warning per iteration).
+    ``persist()``ed DataFrame; for a local checkpoint (or a projection of
+    one), the RDD under its ``LogicalRDD``, dropped with the call Spark's
+    ContextCleaner makes for a garbage-collected RDD
+    (``DataFrame.unpersist()`` is a no-op there, and ``RDD.unpersist``
+    would log a truncated-lineage warning per iteration).
     Best effort for a local checkpoint: if py4j cannot reach the RDD, the
     ContextCleaner frees the blocks once the DataFrame is garbage-collected."""
     if state.is_cached:
         state.unpersist()
         return
+    leaves = state._jdf.queryExecution().analyzed().collectLeaves()
+    if leaves.size() != 1:
+        return
     try:
-        rdd_id = state._jdf.queryExecution().analyzed().rdd().id()
+        rdd_id = leaves.head().rdd().id()
         state.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, False)
     except Py4JError:
         pass

@@ -499,17 +499,47 @@ def test_coreness_monotone_rounds(er):
         "coreness",
         "coreness_fixpoint",
         "hitting_time",
+        "k_core",
+        "k_core_fixpoint",
+        "louvain_local_move",
+        "maximal_matching",
+        "densest_subgraph_curve",
+        "k_truss",
+        "strongly_connected_components",
+        "condensation_layers",
+        "hits",
+        "salsa",
+        "greedy_coloring",
+        "maximal_independent_set",
+        "anf_full",
+        "hyperball_harmonic",
+        "minimum_spanning_forest",
+        "ppr_forward_push",
     ],
 )
 def test_ported_loops_release_state(spark, er, kernel):
-    """A warm second call leaves at most the one state it returns cached
-    (none for wl_anonymity, which returns driver-collected rows): every
-    superseded round's local checkpoint is released."""
+    """A warm second call leaves at most the cached states its result
+    reads: the one state it returns (none for the kernels that return
+    driver-collected rows; one per round for those that return the union
+    of per-round parts).  Every superseded round's state is released."""
+    from linkgraph.algos.anf import anf_full, hyperball_harmonic
+    from linkgraph.algos.coloring import greedy_coloring
+    from linkgraph.algos.densest import densest_subgraph_curve
     from linkgraph.algos.hitting import hitting_time
-    from linkgraph.algos.kcore import coreness
+    from linkgraph.algos.hits import hits
+    from linkgraph.algos.kcore import coreness, k_core
+    from linkgraph.algos.ktruss import k_truss
+    from linkgraph.algos.louvain import louvain_local_move
+    from linkgraph.algos.matching import maximal_matching
+    from linkgraph.algos.mis import maximal_independent_set
+    from linkgraph.algos.mst import minimum_spanning_forest
+    from linkgraph.algos.pagerank import ppr_forward_push
+    from linkgraph.algos.salsa import salsa
+    from linkgraph.algos.scc import condensation_layers, strongly_connected_components
     from linkgraph.algos.spectral import fiedler_partition
     from linkgraph.algos.wl import wl_anonymity, wl_refine
 
+    weighted = er.edges.withColumn("w", (F.col("src") + F.col("dst")) % 7 + 1)
     run, kept = {
         "wl_refine": (lambda: wl_refine(er, rounds=3), 1),
         "wl_anonymity": (lambda: wl_anonymity(er, rounds=3), 0),
@@ -517,6 +547,25 @@ def test_ported_loops_release_state(spark, er, kernel):
         "coreness": (lambda: coreness(er, rounds=3), 1),
         "coreness_fixpoint": (lambda: coreness(er, rounds=None), 1),
         "hitting_time": (lambda: hitting_time(er, [0, 1], rounds=3), 1),
+        "k_core": (lambda: k_core(er, 3, rounds=3), 1),
+        "k_core_fixpoint": (lambda: k_core(er, 3), 1),
+        "louvain_local_move": (lambda: louvain_local_move(er, rounds=3), 1),
+        "maximal_matching": (lambda: maximal_matching(er, rounds=None), 1),
+        "densest_subgraph_curve": (lambda: densest_subgraph_curve(er), 0),
+        "k_truss": (lambda: k_truss(er, 3), 1),
+        "strongly_connected_components": (
+            lambda: strongly_connected_components(er.edges),
+            1,
+        ),
+        "condensation_layers": (lambda: condensation_layers(er.edges, rounds=3), 1),
+        "hits": (lambda: hits(er, rounds=3), 1),
+        "salsa": (lambda: salsa(er, rounds=3), 1),
+        "greedy_coloring": (lambda: greedy_coloring(er, rounds=3), 3),
+        "maximal_independent_set": (lambda: maximal_independent_set(er, rounds=3), 3),
+        "anf_full": (lambda: anf_full(er, k=4, max_h=3), 0),
+        "hyperball_harmonic": (lambda: hyperball_harmonic(er, k=4, max_h=3), 1),
+        "minimum_spanning_forest": (lambda: minimum_spanning_forest(weighted, rounds=3), 3),
+        "ppr_forward_push": (lambda: ppr_forward_push(er, [0, 1], rounds=3), 1),
     }[kernel]
     run()
     persistent = spark.sparkContext._jsc.getPersistentRDDs
@@ -524,6 +573,53 @@ def test_ported_loops_release_state(spark, er, kernel):
     out = run()
     assert len(set(persistent().keySet()) - before) <= kept
     assert out.count() > 0
+
+
+def test_fixpoint_states_carry_measured_statistics(spark):
+    """A step that reads its state three times would cube the inherited
+    plan statistics every iteration (about 10^5 digits of sizeInBytes by
+    iteration 10); fixpoint re-roots every state on its measured size."""
+    from linkgraph.iterate import fixpoint
+
+    seed = spark.range(200).select(F.col("id").alias("vid"), (F.col("id") % 7).alias("x"))
+
+    def step(st, _metrics):
+        b = st.select(F.col("vid").alias("v2"), F.col("x").alias("x2"))
+        c = st.select(F.col("vid").alias("v3"), F.col("x").alias("x3"))
+        return (
+            st.join(b, F.col("vid") == F.col("v2"))
+            .join(c, F.col("vid") == F.col("v3"))
+            .select("vid", ((F.col("x") + F.col("x2") + F.col("x3")) % 7).alias("x"))
+        )
+
+    state, metrics, _ = fixpoint(
+        seed, step, lambda st, _: {"rows": st.count()}, lambda m, _: False, 10
+    )
+    assert metrics["rows"] == 200
+    size = state._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert len(str(size)) < 20
+
+
+def test_pagerank_iterations_keep_shuffled_hash_join(er, monkeypatch):
+    """iteration_plan prefers shuffled-hash joins; with inherited
+    statistics the planner fell back to sort-merge from iteration 2 on."""
+    import linkgraph.algos.pagerank as pagerank_module
+    from linkgraph import iterate
+
+    plans = []
+
+    def recording(seed, step, *args, **kwargs):
+        def traced(state, metrics):
+            nxt = step(state, metrics)
+            plans.append(nxt._jdf.queryExecution().executedPlan().toString())
+            return nxt
+
+        return iterate.fixpoint(seed, traced, *args, **kwargs)
+
+    monkeypatch.setattr(pagerank_module, "fixpoint", recording)
+    pagerank_module.pagerank(er, tol=0.0, max_iter=3).count()
+    assert len(plans) == 3
+    assert "ShuffledHashJoin" in plans[2] and "SortMergeJoin" not in plans[2], plans[2]
 
 
 def test_label_spreading_two_cliques(spark):
@@ -654,3 +750,22 @@ def test_no_python_kernels_in_algos():
         "Python kernels in linkgraph/algos/ (~250 ms of worker CPU per task):\n"
         + "\n".join(hits)
     )
+
+
+def test_no_parquet_round_trips_in_algos():
+    """Loop states live in re-rooted local checkpoints
+    (linkgraph.iterate.reroot), not in files written to cut statistics."""
+    import pathlib
+
+    allowed = {
+        # emit_distances writes each level's distances: a result, not state
+        ("msbfs.py", '.write.mode("overwrite")'),
+    }
+    algos = pathlib.Path(__file__).resolve().parent.parent / "linkgraph" / "algos"
+    hits = [
+        f"{path.name}:{no}: {line.strip()}"
+        for path in sorted(algos.glob("*.py"))
+        for no, line in enumerate(path.read_text().splitlines(), 1)
+        if ".write" in line and (path.name, line.strip()) not in allowed
+    ]
+    assert not hits, "DataFrame writes in linkgraph/algos/:\n" + "\n".join(hits)
