@@ -69,9 +69,8 @@ def maximal_matching(
 
     def step(state: DataFrame, metrics: dict) -> DataFrame:
         r = metrics["round"] + 1
-        alive = state.where(F.col("mr") == 0).withColumn(
-            "k", F.struct(F.col("p"), F.col("u"), F.col("v"))
-        )
+        keyed = state.withColumn("k", F.struct(F.col("p"), F.col("u"), F.col("v")))
+        alive = keyed.where(F.col("mr") == 0)
         mn = (
             alive.select(F.col("u").alias("vid"), "k")
             .unionByName(alive.select(F.col("v").alias("vid"), "k"))
@@ -93,11 +92,11 @@ def maximal_matching(
         mu = matched.select(F.col("vid").alias("u"), F.col("mk").alias("mu"))
         mv = matched.select(F.col("vid").alias("v"), F.col("mk").alias("mv"))
         return (
-            state.join(mu, "u", "left")
+            keyed.join(mu, "u", "left")
             .join(mv, "v", "left")
             .where(
                 (F.col("mr") > 0)
-                | (F.col("mu") == F.struct(F.col("p"), F.col("u"), F.col("v")))
+                | (F.col("mu") == F.col("k"))
                 | (F.col("mu").isNull() & F.col("mv").isNull())
             )
             .select(
