@@ -1,18 +1,14 @@
 """k-core decomposition by iterative peel (SURVEY.md K6 family).
 
 The k-core is the maximal induced subgraph where every vertex has degree
-≥ k.  Peel round = one degree aggregate over the surviving edge set plus
-two semi-joins restricting edges to surviving endpoints — one
-`linkgraph.iterate.fixpoint` iteration whose state is the surviving edge
-set, so a round reads only its predecessor.
-
-Scale posture: the surviving edge set only shrinks, so per-round cost is
-monotonically decreasing; the degree aggregate is a partial+final count
-on the existing src partitioning; the survivor list is a byte-gated
-broadcast, so the semi-joins are map-side filters over the edge state.
+≥ k.  Peel round = two semi-joins restricting the cached edge table to the
+survivors plus one degree aggregate — one `linkgraph.iterate.fixpoint`
+iteration whose state is the survivor set.  Survivors only shrink, so the
+edges among the latest survivors are the edges every earlier round kept.
+The survivor list is a byte-gated broadcast (map-side semi-joins).
 
 Two modes, mirroring the fixed-budget pattern the PR/LPA oracles use:
-  rounds=None — peel to fixpoint (surviving edge count stable);
+  rounds=None — peel to fixpoint (survivor count stable);
   rounds=R    — exactly R peel rounds, SQL-mirrorable round for round
                 (once the peel converges, further rounds are identity).
 """
@@ -35,40 +31,45 @@ def k_core(graph: LinkGraph, k: int, rounds: int | None = None) -> DataFrame:
     """
     if k < 0:
         raise ValueError("k must be >= 0")
+    edges = graph.edges.select("src", "dst")
     thresh = broadcast_threshold(graph.spark)
 
-    def step(cur: DataFrame, metrics: dict) -> DataFrame:
-        keep = (
-            cur.groupBy("src")
+    def induced(keep: DataFrame, survivors: int) -> DataFrame:
+        # byte-gated broadcast of the survivor list (J1 rule, on the measured
+        # survivor count): both semi-joins become map-side filters over the
+        # edge cache; past the gate they shuffle
+        if 0 < thresh and survivors * (16 + 12) < thresh:
+            keep = F.broadcast(keep)
+        return (
+            edges.join(keep, edges.src == F.col("vid"), "left_semi")
+            .join(keep, edges.dst == F.col("vid"), "left_semi")
+            .groupBy("src")
             .agg(F.count(F.lit(1)).alias("core_deg"))
+        )
+
+    def step(keep: DataFrame, metrics: dict) -> DataFrame:
+        return (
+            induced(keep, metrics["survivors"])
             .where(F.col("core_deg") >= k)
             .select(F.col("src").alias("vid"))
         )
-        # byte-gated broadcast of the survivor list (J1 rule), bounded by
-        # the measured edge count: both semi-joins become map-side filters
-        # over the edge state; past the gate they shuffle
-        if 0 < thresh and metrics["edges"] * (16 + 12) < thresh:
-            keep = F.broadcast(keep)
-        return cur.join(keep, cur.src == F.col("vid"), "left_semi").join(
-            keep, cur.dst == F.col("vid"), "left_semi"
-        )
 
-    def edge_count(cur: DataFrame, _m: dict | None = None) -> dict:
-        return {"edges": cur.count()}
+    def survivor_count(keep: DataFrame, _m: dict | None = None) -> dict:
+        return {"survivors": keep.count()}
 
-    cur, _, _ = fixpoint(
-        graph.edges.select("src", "dst"),
+    keep, metrics, _ = fixpoint(
+        graph.vertices(),
         step,
-        edge_count,
-        # monotone shrink: an unchanged edge count is an unchanged edge set
-        lambda m, prev: rounds is None and m["edges"] == prev["edges"],
-        # rounds=None: every round before the fixpoint drops an edge
+        survivor_count,
+        # monotone shrink: an unchanged survivor count is an unchanged set
+        lambda m, prev: rounds is None and m["survivors"] == prev["survivors"],
+        # rounds=None: every round before the fixpoint drops a vertex
         rounds if rounds is not None else 2**63,
-        seed_metrics=edge_count,
+        seed_metrics=survivor_count,
     )
     # the survivors' degrees in the subgraph they induce: at the fixpoint
-    # every vertex left has degree >= k in the final edge state
-    return cur.groupBy("src").agg(F.count(F.lit(1)).alias("core_deg")).select(
+    # every survivor has degree >= k there
+    return induced(keep, metrics["survivors"]).select(
         F.col("src").cast("long").alias("vid"),
         F.col("core_deg").cast("long").alias("core_deg"),
     )

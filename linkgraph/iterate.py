@@ -18,10 +18,10 @@ run the same loop; only the update (`step`), the per-iteration statistics
   219 s by iteration 9) was AQE-specific; with AQE off the plan is cut at
   the checkpoint call, so lineage is cut every iteration and the plan stays
   bounded however long the loop runs (tests/test_algos.py asserts it).
-* **Measured statistics.**  Every state is re-rooted (`reroot`) on the
-  size Spark measured once it is materialized, so plan
-  statistics never compound across iterations and the join planner sees
-  real sizes in every iteration, not only the first.
+* **Measured statistics.**  Every state is re-rooted (`reroot`) on its
+  row count, counted as the probe materializes it, so plan statistics
+  never compound across iterations and the join planner sees real sizes
+  in every iteration, not only the first.
 * **State release.**  Every state `fixpoint` checkpoints is released once
   its successor is materialized, except the one it returns.
   ``DataFrame.unpersist()`` is a no-op on a local checkpoint (its blocks
@@ -37,6 +37,7 @@ run the same loop; only the update (`step`), the per-iteration statistics
 
 from __future__ import annotations
 
+import itertools
 from typing import Callable
 
 from py4j.protocol import Py4JError
@@ -86,18 +87,20 @@ def fixpoint(
             metrics = dict(snap["metrics"])
             it0 = int(metrics.pop("iteration"))
     # seed_metrics is the action that materializes a lazy seed checkpoint
-    state = state.localCheckpoint(eager=metrics is not None or seed_metrics is None)
+    state, rows = _local_checkpoint(
+        state, eager=metrics is not None or seed_metrics is None
+    )
 
     converged = False
     with iteration_plan(seed.sparkSession):
         if metrics is None:
             metrics = seed_metrics(state) if seed_metrics is not None else {}
-        state = reroot(state)
+        state = reroot(state, rows)
         for it in range(it0, max_iter):
-            new_state = step(state, metrics).localCheckpoint(eager=False)
+            new_state, rows = _local_checkpoint(step(state, metrics), eager=False)
             new_metrics = probe(new_state, metrics)
             release(state)
-            state = reroot(new_state)
+            state = reroot(new_state, rows)
             if checkpoint_mgr is not None and (it + 1) % snapshot_every == 0:
                 reloaded = checkpoint(
                     checkpoint_mgr.write_state(
@@ -115,7 +118,27 @@ def fixpoint(
     return state, metrics, converged
 
 
-def reroot(state: DataFrame) -> DataFrame:
+_observation_ids = itertools.count()
+
+
+def _local_checkpoint(
+    df: DataFrame, eager: bool
+) -> tuple[DataFrame, Callable[[], int | None]]:
+    """A local checkpoint of `df`, and a function that returns its row
+    count (None if the plan lost the observation) once an action has
+    materialized it.  An observed aggregate on the checkpointed plan counts
+    the rows in the materializing job's tasks: no job of its own."""
+    name = f"linkgraph_rows_{next(_observation_ids)}"
+    observed = df.observe(name, F.count(F.lit(1)).alias("rows"))
+
+    def rows() -> int | None:
+        found = observed._jdf.queryExecution().observedMetrics().get(name)
+        return found.get().getLong(0) if found.isDefined() else None
+
+    return observed.localCheckpoint(eager=eager), rows
+
+
+def reroot(state: DataFrame, rows: Callable[[], int | None]) -> DataFrame:
     """The local checkpoint `state` as a new leaf whose statistics are its
     measured size.  ``localCheckpoint`` copies the analyzed plan's
     statistics into the ``LogicalRDD`` it makes, and an inner join's
@@ -124,43 +147,34 @@ def reroot(state: DataFrame) -> DataFrame:
     iteration: Catalyst then spends its time on huge BigInts, and from the
     second iteration on the join planner sees every state as too large for
     a shuffled-hash join.  The new ``LogicalRDD`` has the same RDD, output,
-    partitioning and ordering; its ``originStats`` carry the RDD's cached
-    bytes (memory + disk) as Spark's status store reports them, so no job
-    runs unless no action has materialized the checkpoint yet, in which
-    case one ``count`` does.  py4j turns a ``scala.math.BigInt`` into a
-    Python int, so the ``Statistics`` are borrowed from ``spark.range``'s
-    analyzed plan (8 bytes a row)."""
+    partitioning and ordering; its ``originStats`` are the `rows` count
+    (one job counts a checkpoint no action has materialized yet) times the
+    schema's default row size, or none (``spark.sql.defaultSizeInBytes``,
+    never broadcast) without a count.  py4j turns a ``scala.math.BigInt``
+    into a Python int, so the size-only ``Statistics`` are borrowed from a
+    filtered ``spark.range`` of size // 8 rows (8 bytes a row)."""
     spark = state.sparkSession
-    jsc = spark.sparkContext._jsc.sc()
-    leaf = state._jdf.queryExecution().analyzed()
-    rdd = leaf.rdd()
-
-    def cached():
-        jsc.listenerBus().waitUntilEmpty()  # block updates reach the store
-        try:
-            info = jsc.statusStore().rdd(rdd.id())
-        except Py4JError:  # never materialized
-            return None
-        if info.numCachedPartitions() < rdd.getNumPartitions():
-            return None
-        return info.memoryUsed() + info.diskUsed()
-
-    size = cached()
-    if size is None:
-        state.count()
-        size = cached() or 0
     jspark = spark._jsparkSession
-    stats = jspark.range(max(size, 8) // 8).queryExecution().analyzed().stats()
     jvm = spark._jvm
+    leaf = state._jdf.queryExecution().analyzed()
+    if not leaf.rdd().isCheckpointed():
+        state.count()
+    n = rows()
+    stats = jvm.scala.Option.empty()
+    if n is not None:
+        size = n * (8 + leaf.schema().defaultSize())
+        stats = jvm.scala.Some(
+            jspark.range(size // 8).where("true").queryExecution().analyzed().stats()
+        )
     plan = jvm.org.apache.spark.sql.execution.LogicalRDD(
         leaf.output(),
-        rdd,
+        leaf.rdd(),
         leaf.outputPartitioning(),
         leaf.outputOrdering(),
         leaf.isStreaming(),
         leaf.stream(),
         jspark,
-        jvm.scala.Some(stats),
+        stats,
         jvm.scala.Option.empty(),
     )
     return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(jspark, plan), spark)
@@ -169,7 +183,7 @@ def reroot(state: DataFrame) -> DataFrame:
 def checkpoint(df: DataFrame) -> DataFrame:
     """Eager local checkpoint of `df`, re-rooted on its measured size: the
     lineage and the statistics of everything before it are cut."""
-    return reroot(df.localCheckpoint(eager=True))
+    return reroot(*_local_checkpoint(df, eager=True))
 
 
 def count_changed(state: DataFrame, col: str, prev_col: str) -> int:

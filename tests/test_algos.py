@@ -597,12 +597,17 @@ def test_fixpoint_states_carry_measured_statistics(spark):
     )
     assert metrics["rows"] == 200
     size = state._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    assert len(str(size)) < 20
+    # 200 rows of two longs: at least 8 bytes a row, and no compounding
+    assert 200 * 8 <= size < 10**19
 
 
 def test_pagerank_iterations_keep_shuffled_hash_join(er, monkeypatch):
     """iteration_plan prefers shuffled-hash joins; with inherited
-    statistics the planner fell back to sort-merge from iteration 2 on."""
+    statistics the planner fell back to sort-merge from iteration 2 on.
+    At the default threshold the planner broadcasts this 150-vertex state;
+    a 4 KiB threshold still broadcasts the messages (150 rows of 24 bytes)
+    but not the state (150 rows of 40 bytes), so its join shows the
+    shuffled-hash / sort-merge choice."""
     import linkgraph.algos.pagerank as pagerank_module
     from linkgraph import iterate
 
@@ -617,7 +622,13 @@ def test_pagerank_iterations_keep_shuffled_hash_join(er, monkeypatch):
         return iterate.fixpoint(seed, traced, *args, **kwargs)
 
     monkeypatch.setattr(pagerank_module, "fixpoint", recording)
-    pagerank_module.pagerank(er, tol=0.0, max_iter=3).count()
+    conf = er.spark.conf
+    old_threshold = conf.get("spark.sql.autoBroadcastJoinThreshold")
+    conf.set("spark.sql.autoBroadcastJoinThreshold", "4096")
+    try:
+        pagerank_module.pagerank(er, tol=0.0, max_iter=3).count()
+    finally:
+        conf.set("spark.sql.autoBroadcastJoinThreshold", old_threshold)
     assert len(plans) == 3
     assert "ShuffledHashJoin" in plans[2] and "SortMergeJoin" not in plans[2], plans[2]
 
