@@ -39,8 +39,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
-from linkgraph.iterate import release
+from linkgraph.graph import LinkGraph
+from linkgraph.iterate import fixpoint, release
 
 _FM_PHI = 0.77351  # Flajolet–Martin bias correction
 
@@ -88,6 +88,42 @@ def _nf_from_hist(hist: list[tuple[int, int]], k: int) -> float:
     return round(tot / _FM_PHI, 3)
 
 
+def _sketch_round(graph: LinkGraph, k: int):
+    """The `fixpoint` step both sketch kernels share: one propagation round
+    over a state (vid, m0..m{k-1}, ...): expand every sketch along the
+    edges, `bit_or` per destination, OR into the state.  Other state
+    columns pass through; `_chg` marks the rows whose sketch grew."""
+    n = graph.num_vertices()
+    mcols = [f"m{j}" for j in range(k)]
+
+    def step(state: DataFrame, _m: dict) -> DataFrame:
+        msgs = state.select(
+            F.col("vid").alias("src"), *[F.col(m).alias(f"v{j}") for j, m in enumerate(mcols)]
+        )
+        agg = (
+            graph.expand(msgs, est_rows=n)  # full-|V| frontier: never broadcast
+            .groupBy("dst")
+            .agg(*[F.bit_or(f"v{j}").alias(f"a{j}") for j in range(k)])
+        )
+        merged = [F.expr(f"m{j} | coalesce(a{j}, 0L)") for j in range(k)]
+        chg = merged[0] != F.col("m0")
+        for j in range(1, k):
+            chg = chg | (merged[j] != F.col(f"m{j}"))
+        rest = [c for c in state.columns if c not in mcols and c not in ("vid", "_chg")]
+        return state.join(agg, state["vid"] == agg["dst"], "left").select(
+            state["vid"], *[e.alias(m) for e, m in zip(merged, mcols)], *rest,
+            chg.alias("_chg"),
+        )
+
+    return step
+
+
+def _sketch_seed(graph: LinkGraph, k: int, hash_mode: str) -> DataFrame:
+    return graph.vertices().select(
+        "vid", *[_fm_init_limb(j, hash_mode).alias(f"m{j}") for j in range(k)]
+    )
+
+
 def anf_full(
     graph: LinkGraph,
     k: int = 8,
@@ -103,62 +139,31 @@ def anf_full(
     """
     if k < 1:
         raise ValueError("anf_full needs k >= 1 sketch lanes")
-    spark = graph.spark
-    n = graph.num_vertices()
-    mcols = [f"m{j}" for j in range(k)]
 
-    state = graph.vertices().select(
-        "vid", *[_fm_init_limb(j, hash_mode).alias(f"m{j}") for j in range(k)]
-    ).localCheckpoint(eager=True)
-
-    def hist_of(df: DataFrame, changed_col=None) -> tuple[list, int]:
+    def histogram(state: DataFrame, m: dict | None = None) -> dict:
+        """The round's one action: the S histogram (and the changed-row
+        count) of the new state, folded into the curve."""
         agg = [F.count("*").alias("c")]
-        if changed_col is not None:
-            agg.append(F.sum(F.col(changed_col).cast("long")).alias("ch"))
-        rows = df.groupBy(_s_expr(k).alias("S")).agg(*agg).collect()
-        hist = [(int(r["S"]), int(r["c"])) for r in rows]
-        changed = sum(int(r["ch"]) for r in rows) if changed_col is not None else 0
-        return hist, changed
+        if m is not None:
+            agg.append(F.sum(F.col("_chg").cast("long")).alias("ch"))
+        rows = state.groupBy(_s_expr(k).alias("S")).agg(*agg).collect()
+        nf = _nf_from_hist([(int(r["S"]), int(r["c"])) for r in rows], k)
+        curve = (m["curve"] if m is not None else []) + [nf]
+        changed = sum(int(r["ch"]) for r in rows) if m is not None else None
+        return {"curve": curve, "changed": changed}
 
-    curve: list[tuple[int, float]] = []
-    hist, _ = hist_of(state)
-    curve.append((0, _nf_from_hist(hist, k)))
-
-    with iteration_plan(spark):
-        for h in range(1, max_h + 1):
-            msgs = state.select(F.col("vid").alias("src"), *[
-                F.col(m).alias(f"v{j}") for j, m in enumerate(mcols)
-            ])
-            agg = (
-                graph.expand(msgs, est_rows=n)  # full-|V| frontier: never broadcast
-                .groupBy("dst")
-                .agg(*[F.bit_or(f"v{j}").alias(f"a{j}") for j in range(k)])
-            )
-            joined = state.join(agg, state["vid"] == agg["dst"], "left")
-            sel = [state["vid"]]
-            changed_terms = []
-            for j in range(k):
-                merged = F.expr(f"m{j} | coalesce(a{j}, 0L)")
-                sel.append(merged.alias(f"m{j}"))
-                changed_terms.append(F.expr(f"(m{j} | coalesce(a{j}, 0L)) != m{j}"))
-            chg = changed_terms[0]
-            for t in changed_terms[1:]:
-                chg = chg | t
-            sel.append(chg.alias("_chg"))
-            new_state = joined.select(*sel).localCheckpoint(eager=False)
-            hist, changed = hist_of(new_state, "_chg")  # the round's ONE action
-            curve.append((h, _nf_from_hist(hist, k)))
-            release(state)
-            state = new_state.drop("_chg")
-            if changed == 0:
-                break
+    state, m, _ = fixpoint(
+        _sketch_seed(graph, k, hash_mode),
+        _sketch_round(graph, k),
+        histogram,
+        lambda m, _: m["changed"] == 0,
+        max_h,
+        seed_metrics=histogram,
+    )
     release(state)
-
     # converged early: the neighborhood function is flat from here on
-    last = curve[-1][1]
-    for h in range(len(curve), max_h + 1):
-        curve.append((h, last))
-    return spark.createDataFrame(curve, "h int, nf double")
+    curve = m["curve"] + [m["curve"][-1]] * (max_h + 1 - len(m["curve"]))
+    return graph.spark.createDataFrame(list(enumerate(curve)), "h int, nf double")
 
 
 def effective_diameter_from_curve(curve: list[tuple[int, float]], q: float = 0.9) -> float:
@@ -245,44 +250,23 @@ def hyperball_harmonic(
     """
     if k < 1:
         raise ValueError("hyperball_harmonic needs k >= 1 sketch lanes")
-    spark = graph.spark
-    n = graph.num_vertices()
-    mcols = [f"m{j}" for j in range(k)]
+    sketch_round = _sketch_round(graph, k)
 
-    state = graph.vertices().select(
-        "vid", *[_fm_init_limb(j, hash_mode).alias(f"m{j}") for j in range(k)]
+    def step(state: DataFrame, m: dict) -> DataFrame:
+        return sketch_round(state, m).withColumn(f"s{m['h'] + 1}", _s_expr(k))
+
+    state, _, _ = fixpoint(
+        _sketch_seed(graph, k, hash_mode).withColumn("s0", _s_expr(k)),
+        step,
+        lambda st, m: {"h": m["h"] + 1, "rows": st.count()},
+        lambda m, _: False,
+        max_h,
+        seed_metrics=lambda _: {"h": 0},
     )
-    state = state.withColumn("s0", _s_expr(k)).localCheckpoint(eager=True)
-
-    with iteration_plan(spark):
-        for h in range(1, max_h + 1):
-            msgs = state.select(F.col("vid").alias("src"), *[
-                F.col(m).alias(f"v{j}") for j, m in enumerate(mcols)
-            ])
-            agg = (
-                graph.expand(msgs, est_rows=n)
-                .groupBy("dst")
-                .agg(*[F.bit_or(f"v{j}").alias(f"a{j}") for j in range(k)])
-            )
-            joined = state.join(agg, state["vid"] == agg["dst"], "left")
-            sel = [state["vid"]] + [
-                F.expr(f"m{j} | coalesce(a{j}, 0L)").alias(f"m{j}") for j in range(k)
-            ]
-            sel += [F.col(f"s{i}") for i in range(h)]
-            prev = state
-            state = (
-                joined.select(*sel)
-                .withColumn(f"s{h}", _s_expr(k))
-                .localCheckpoint(eager=False)
-            )
-            state.count()  # materialize the round; truncates lineage
-            release(prev)
-
-    out = state.select(
+    return state.select(
         F.col("vid").cast("long").alias("vid"),
         F.expr(harmonic_projection_sql(k, max_h, "spark")).alias("hc"),
     )
-    return out
 
 
 def diameter_double_sweep(

@@ -3,18 +3,26 @@
 Brandes' algorithm [Brandes 2001] re-expressed as level-synchronous
 DataFrame passes over the batch of sample sources ("roots"), the
 Brandes–Pich sampling estimator (bc ≈ n/|S| · Σ_{s∈S} δ_s) for the
-at-scale path:
+at-scale path.  `_brandes` runs both passes, each one
+`linkgraph.iterate.fixpoint` loop (one fused job per level, lineage cut
+and the superseded state released every level):
 
-* forward: per-level frontier-expand through `LinkGraph.expand` (the
-  same J1/J2 dispatch as MS-BFS/PageRank — broadcast when small, salted
-  shuffle on hubby graphs), shortest-path counts σ as a `sum` aggregate
-  keyed on (root, dst), newly-reached vertices via a compound-key
-  anti-join against the accumulated state;
-* backward: δ accumulation from the deepest level inward — one expand +
-  join + aggregate per level, δ(u) = Σ_{w∈succ(u)} σ_u/σ_w · (1+δ_w);
-* every per-level frame is lazily localCheckpoint'd and materialized by
-  its count action — the one-job-per-iteration shape shared with
-  PR/CC/LPA; lineage never deepens past a level.
+* forward: the state is (root, vid, dist, sigma) for every vertex
+  reached so far.  The deepest level's rows expand through
+  `LinkGraph.expand` (the same J1/J2 dispatch as MS-BFS/PageRank —
+  broadcast when small, salted shuffle on hubby graphs), σ is a `sum`
+  aggregate keyed on (root, dst), and a compound-key anti-join against
+  the state keeps the newly reached vertices.  The probe counts the new
+  level: its size is the next expand's est_rows, and 0 ends the pass;
+* backward: the same rows plus δ, filled from the deepest level inward:
+  level d expands, joins level d+1 on (root, dst) and sums
+  δ(u) = Σ_{w∈succ(u)} σ_u/σ_w · (1+δ_w) — one expand + join + aggregate
+  per level.  Level 0 is never filled: neither estimator reads a root's
+  own δ.
+
+`betweenness` sums δ per vertex over the final state; `edge_betweenness`
+joins the edges with it once on (root, dist+1) and sums the same terms
+per edge.
 
 σ stays exact in doubles (integer-valued below 2^53); δ is a float sum
 whose only cross-engine divergence vs the unrolled DuckDB oracle is
@@ -30,16 +38,108 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, broadcast_threshold, iteration_plan
+from linkgraph.graph import LinkGraph, broadcast_threshold
+from linkgraph.iterate import fixpoint, release
 
 
 def _bc(df: DataFrame, est_rows: int, ncols: int, thresh: int):
     """Byte-gated broadcast (LinkGraph.expand's J1 rule) driven by the
-    MEASURED per-level row counts the forward pass already tracks — a
-    dense middle level is Θ(|roots|·|V|) rows and must NOT broadcast."""
+    MEASURED per-level row count — a dense middle level is Θ(|roots|·|V|)
+    rows and must NOT broadcast.  The planner sees only the whole state's
+    size behind a level filter, so the gate decides for the level frames."""
     if 0 < thresh and est_rows * (16 + 12 * ncols) < thresh:
         return F.broadcast(df)
     return df
+
+
+def _brandes(
+    graph: LinkGraph, roots: list[int], max_levels: int
+) -> tuple[DataFrame, int]:
+    """(root, vid, dist, sigma, delta) for every vertex within `max_levels`
+    hops of a root — its BFS level, shortest-path count and dependency δ
+    (0 at the roots, whose δ neither estimator reads) — and its row
+    count."""
+    spark = graph.spark
+    thresh = broadcast_threshold(spark)
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def forward(state: DataFrame, m: dict) -> DataFrame:
+        lvl = m["level"] + 1
+        msgs = state.where(F.col("dist") == lvl - 1).select(
+            F.col("vid").alias("src"), "root", "sigma"
+        )
+        agg = (
+            graph.expand(msgs, est_rows=max(m["rows"][-1], 1))
+            .groupBy("root", "dst")
+            .agg(F.sum("sigma").alias("sigma"))
+        )
+        seen = state.select(F.col("root").alias("sroot"), "vid")
+        new = agg.join(
+            seen, (agg.root == seen.sroot) & (agg.dst == seen.vid), "left_anti"
+        ).select("root", F.col("dst").alias("vid"), F.lit(lvl).alias("dist"), "sigma")
+        # coalesce: the union would add a shuffle's worth of partitions a level
+        return state.unionByName(new).coalesce(parts)
+
+    def level_count(state: DataFrame, m: dict) -> dict:
+        lvl = m["level"] + 1
+        n = state.agg(F.sum(F.when(F.col("dist") == lvl, 1).otherwise(0))).first()[0]
+        return {"level": lvl, "rows": m["rows"] + [int(n or 0)]}
+
+    seed = spark.createDataFrame(
+        [(int(r), int(r), 0, 1.0) for r in roots],
+        "root long, vid long, dist int, sigma double",
+    )
+    reached, fm, _ = fixpoint(
+        seed,
+        forward,
+        level_count,
+        lambda m, _: m["rows"][-1] == 0,
+        max_levels,
+        seed_metrics=lambda _: {"level": 0, "rows": [len(roots)]},
+    )
+    level_rows = [n for n in fm["rows"] if n > 0]
+    deepest = len(level_rows) - 1
+
+    def backward(state: DataFrame, m: dict) -> DataFrame:
+        d = m["level"] - 1
+        u = state.where(F.col("dist") == d)
+        w = _bc(
+            state.where(F.col("dist") == d + 1).select("root", "vid", "sigma", "delta"),
+            level_rows[d + 1],
+            4,
+            thresh,
+        )
+        succ = graph.expand(
+            u.select(F.col("vid").alias("src"), F.col("root").alias("uroot"),
+                     F.col("sigma").alias("usigma")),
+            est_rows=level_rows[d],
+        )
+        contrib = _bc(
+            succ.join(w, (succ.uroot == w.root) & (succ.dst == w.vid))
+            .groupBy("uroot", "src")
+            .agg(
+                F.sum(F.col("usigma") / F.col("sigma") * (F.lit(1.0) + F.col("delta")))
+                .alias("d")
+            ),
+            level_rows[d],
+            3,
+            thresh,
+        )
+        filled = u.join(
+            contrib, (u.root == contrib.uroot) & (u.vid == contrib.src), "left"
+        ).select("root", "vid", "dist", "sigma", F.coalesce("d", F.lit(0.0)).alias("delta"))
+        return state.where(F.col("dist") != d).unionByName(filled).coalesce(parts)
+
+    out, _, _ = fixpoint(
+        reached.withColumn("delta", F.lit(0.0)),
+        backward,
+        lambda st, m: {"level": m["level"] - 1, "rows": st.count()},
+        lambda m, _: False,
+        deepest - 1,
+        seed_metrics=lambda _: {"level": deepest},
+    )
+    release(reached)
+    return out, sum(level_rows)
 
 
 def betweenness(
@@ -57,126 +157,17 @@ def betweenness(
     """
     if not roots:
         raise ValueError("betweenness needs a non-empty root sample")
-    spark = graph.spark
-    n = graph.num_vertices()
-    factor = (float(n) / len(roots)) if scale else 1.0
-
-    root_df = spark.createDataFrame([(int(r),) for r in roots], "root long")
-    state = root_df.select(
-        "root",
-        F.col("root").alias("vid"),
-        F.lit(0).alias("dist"),
-        F.lit(1.0).alias("sigma"),
-    ).localCheckpoint(eager=True)
-
-    levels = [state]  # per-level (root, vid, dist, sigma) frames
-    # Measured row count per level, carried into expand(est_rows=...) exactly
-    # like sssp.py's frontier_rows: a dense middle level is Θ(|roots|·|V|)
-    # rows, and a hardcoded estimate would force-broadcast it (OOM at scale).
-    level_rows = [len(roots)]
-    thresh = broadcast_threshold(spark)
-    state_rows = len(roots)
-    with iteration_plan(spark):
-        frontier = state
-        for lvl in range(1, max_levels + 1):
-            msgs = frontier.select(
-                F.col("vid").alias("src"), "root", "sigma"
-            )
-            agg = (
-                graph.expand(msgs, est_rows=level_rows[-1])
-                .groupBy("root", "dst")
-                .agg(F.sum("sigma").alias("sigma"))
-            )
-            # anti-join against the accumulated state: byte-gated
-            # broadcast on the MEASURED state size so the fresh per-level
-            # aggregate never re-shuffles when the state is small
-            seen = _bc(state.select("root", "vid"), state_rows, 2, thresh)
-            new = (
-                agg.join(
-                    seen,
-                    (agg.root == seen.root) & (agg.dst == seen.vid),
-                    "left_anti",
-                )
-                .select(
-                    "root",
-                    F.col("dst").alias("vid"),
-                    F.lit(lvl).alias("dist"),
-                    "sigma",
-                )
-                .localCheckpoint(eager=False)
-            )
-            new_rows = new.count()
-            if new_rows == 0:
-                break
-            levels.append(new)
-            level_rows.append(max(int(new_rows), 1))
-            state_rows += int(new_rows)
-            state = state.union(new).localCheckpoint(eager=False)
-            frontier = new
-
-        deepest = len(levels) - 1
-        # backward dependency accumulation; w-frame = (root, vid, sigma, delta)
-        wl = levels[deepest].select("root", "vid", "sigma", F.lit(0.0).alias("delta"))
-        wl_rows = level_rows[deepest]
-        parts = [wl.where(F.col("vid") != F.col("root"))]
-        for lvl in range(deepest - 1, -1, -1):
-            u = levels[lvl]
-            msgs = u.select(F.col("vid").alias("src"), "root", "sigma")
-            succ = graph.expand(msgs, est_rows=level_rows[lvl]).select(
-                F.col("src").alias("uvid"),
-                F.col("root").alias("uroot"),
-                F.col("sigma").alias("usigma"),
-                "dst",
-            )
-            # the successor-side join against the (level-sized) w-frame is
-            # the backward pass's heavy hitter: without the gate it
-            # re-shuffles the Θ(level·deg) expansion every level
-            wlj = _bc(wl, wl_rows, 4, thresh)
-            contrib = (
-                succ.join(
-                    wlj,
-                    (succ.uroot == wlj.root) & (succ.dst == wlj.vid),
-                )
-                .select(
-                    "uroot",
-                    "uvid",
-                    (
-                        F.col("usigma") / F.col("sigma") * (F.lit(1.0) + F.col("delta"))
-                    ).alias("term"),
-                )
-                .groupBy("uroot", "uvid")
-                .agg(F.sum("term").alias("delta"))
-            )
-            contrib = _bc(contrib, level_rows[lvl], 3, thresh)
-            wl = (
-                u.join(
-                    contrib,
-                    (u.root == contrib.uroot) & (u.vid == contrib.uvid),
-                    "left",
-                )
-                .select(
-                    "root",
-                    "vid",
-                    "sigma",
-                    F.coalesce(F.col("delta"), F.lit(0.0)).alias("delta"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            wl.count()
-            wl_rows = level_rows[lvl]
-            parts.append(wl.where(F.col("vid") != F.col("root")))
-
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.union(p)
-        return (
-            out.groupBy("vid")
-            .agg(F.sum("delta").alias("d"))
-            .select(
-                F.col("vid").cast("long").alias("vid"),
-                F.round(F.col("d") * F.lit(factor), 6).alias("bc"),
-            )
+    factor = (float(graph.num_vertices()) / len(roots)) if scale else 1.0
+    return (
+        _brandes(graph, roots, max_levels)[0]
+        .where(F.col("dist") > 0)
+        .groupBy("vid")
+        .agg(F.sum("delta").alias("d"))
+        .select(
+            F.col("vid").cast("long").alias("vid"),
+            F.round(F.col("d") * F.lit(factor), 6).alias("bc"),
         )
+    )
 
 
 def edge_betweenness(
@@ -192,136 +183,42 @@ def edge_betweenness(
     step and the standard "which links carry the traffic?" ranking.
 
     The per-edge dependency is exactly the term the vertex backward pass
-    aggregates one step later: for u at depth d with successor w,
-    contribution σ_u/σ_w · (1 + δ_w) flows along edge (u, w) — so this
-    runs the same forward pass as `betweenness` (same measured per-level
-    est_rows carried into every expand — the round-4 broadcast-gate
-    lesson) and, in the backward pass, aggregates the SAME terms by edge
-    (summed over roots per level) as well as by vertex (for δ).  Edges on
+    aggregates: for u at depth d with successor w, contribution
+    σ_u/σ_w · (1 + δ_w) flows along edge (u, w) — so this runs the same
+    passes as `betweenness` and sums those terms per edge over the final
+    state, in one join of the edges with it on (root, dist+1).  Edges on
     no sampled shortest path are omitted (estimate 0); `scale` applies
     the Brandes–Pich n/|roots| factor.  Determinism: rounded ebc with
     (u, v) tie-breaks orders the optional top-k.
     """
     if not roots:
         raise ValueError("edge_betweenness needs a non-empty root sample")
-    spark = graph.spark
-    n = graph.num_vertices()
-    factor = (float(n) / len(roots)) if scale else 1.0
-
-    # ---- forward pass: mirrors `betweenness` (kept verbatim so the
-    # proven vertex path stays untouched; see its comments)
-    root_df = spark.createDataFrame([(int(r),) for r in roots], "root long")
-    state = root_df.select(
-        "root",
-        F.col("root").alias("vid"),
-        F.lit(0).alias("dist"),
-        F.lit(1.0).alias("sigma"),
-    ).localCheckpoint(eager=True)
-    levels = [state]
-    level_rows = [len(roots)]
-    thresh = broadcast_threshold(spark)
-    state_rows = len(roots)
-    with iteration_plan(spark):
-        frontier = state
-        for lvl in range(1, max_levels + 1):
-            msgs = frontier.select(F.col("vid").alias("src"), "root", "sigma")
-            agg = (
-                graph.expand(msgs, est_rows=level_rows[-1])
-                .groupBy("root", "dst")
-                .agg(F.sum("sigma").alias("sigma"))
-            )
-            seen = _bc(state.select("root", "vid"), state_rows, 2, thresh)
-            new = (
-                agg.join(
-                    seen,
-                    (agg.root == seen.root) & (agg.dst == seen.vid),
-                    "left_anti",
-                )
-                .select(
-                    "root",
-                    F.col("dst").alias("vid"),
-                    F.lit(lvl).alias("dist"),
-                    "sigma",
-                )
-                .localCheckpoint(eager=False)
-            )
-            new_rows = new.count()
-            if new_rows == 0:
-                break
-            levels.append(new)
-            level_rows.append(max(int(new_rows), 1))
-            state_rows += int(new_rows)
-            state = state.union(new).localCheckpoint(eager=False)
-            frontier = new
-
-        # ---- backward pass: per-level edge terms + vertex delta
-        deepest = len(levels) - 1
-        wl = levels[deepest].select("root", "vid", "sigma", F.lit(0.0).alias("delta"))
-        wl_rows = level_rows[deepest]
-        edge_parts: list[DataFrame] = []
-        for lvl in range(deepest - 1, -1, -1):
-            u = levels[lvl]
-            msgs = u.select(F.col("vid").alias("src"), "root", "sigma")
-            succ = graph.expand(msgs, est_rows=level_rows[lvl]).select(
-                F.col("src").alias("uvid"),
-                F.col("root").alias("uroot"),
-                F.col("sigma").alias("usigma"),
-                "dst",
-            )
-            wlj = _bc(wl, wl_rows, 4, thresh)
-            terms = succ.join(
-                wlj, (succ.uroot == wlj.root) & (succ.dst == wlj.vid)
-            ).select(
-                "uroot",
-                "uvid",
-                "dst",
-                (
-                    F.col("usigma") / F.col("sigma") * (F.lit(1.0) + F.col("delta"))
-                ).alias("term"),
-            )
-            edge_parts.append(
-                terms.groupBy(
-                    F.col("uvid").alias("u"), F.col("dst").alias("v")
-                ).agg(F.sum("term").alias("t"))
-            )
-            wl = (
-                u.join(
-                    _bc(
-                        terms.groupBy("uroot", "uvid").agg(
-                            F.sum("term").alias("delta")
-                        ),
-                        level_rows[lvl],
-                        3,
-                        thresh,
-                    ),
-                    (u.root == F.col("uroot")) & (u.vid == F.col("uvid")),
-                    "left",
-                )
-                .select(
-                    "root",
-                    "vid",
-                    "sigma",
-                    F.coalesce(F.col("delta"), F.lit(0.0)).alias("delta"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            wl.count()
-            wl_rows = level_rows[lvl]
-
-        if not edge_parts:
-            return spark.createDataFrame([], "u long, v long, ebc double")
-        out = edge_parts[0]
-        for p in edge_parts[1:]:
-            out = out.unionByName(p)
-        out = (
-            out.groupBy("u", "v")
-            .agg(F.round(F.sum("t") * F.lit(factor), round_to).alias("ebc"))
-            .select(
-                F.col("u").cast("long"), F.col("v").cast("long"), "ebc"
-            )
+    factor = (float(graph.num_vertices()) / len(roots)) if scale else 1.0
+    state, rows = _brandes(graph, roots, max_levels)
+    succ = graph.expand(
+        state.select(F.col("vid").alias("src"), F.col("root").alias("uroot"),
+                     F.col("dist").alias("udist"), F.col("sigma").alias("usigma")),
+        est_rows=rows,
+    )
+    out = (
+        succ.join(
+            state,
+            (succ.uroot == state.root)
+            & (succ.dst == state.vid)
+            & (succ.udist + 1 == state.dist),
         )
-        if topk is not None:
-            out = out.orderBy(
-                F.col("ebc").desc(), F.col("u").asc(), F.col("v").asc()
-            ).limit(topk)
-        return out
+        .groupBy(F.col("src").alias("u"), F.col("dst").alias("v"))
+        .agg(
+            F.round(
+                F.sum(F.col("usigma") / F.col("sigma") * (F.lit(1.0) + F.col("delta")))
+                * F.lit(factor),
+                round_to,
+            ).alias("ebc")
+        )
+        .select(F.col("u").cast("long"), F.col("v").cast("long"), "ebc")
+    )
+    if topk is not None:
+        out = out.orderBy(
+            F.col("ebc").desc(), F.col("u").asc(), F.col("v").asc()
+        ).limit(topk)
+    return out

@@ -8,7 +8,8 @@ one-sided but O(2·b^{d/2}) when grown from both ends — on a 100 TB graph
 with d≈6 that is the difference between touching the whole graph and
 touching a few million vertices.
 
-Plan shape per round (one fused job, the MS-BFS discipline):
+Plan shape per round (one fused `linkgraph.iterate.fixpoint` job over
+the state (vid, dist, fwd, meet) of both sides' seen sets):
 
 * pick the SIDE with the smaller measured frontier (the round-4
   broadcast-gate lesson: decisions ride measured counts, never guesses —
@@ -39,7 +40,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.iterate import fixpoint, release
 
 
 def st_distance(
@@ -65,48 +67,65 @@ def st_distance(
     if s == t:
         return spark.createDataFrame([(s, t, 0)], schema)
 
-    f_seen = spark.createDataFrame([(s, 0)], "vid long, dist long")
-    b_seen = spark.createDataFrame([(t, 0)], "vid long, dist long")
-    f_front, b_front = f_seen, b_seen
-    f_rows = b_rows = 1
-    f_d = b_d = 0
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    with iteration_plan(spark):
-        for _ in range(max_rounds):
-            if f_rows == 0 or b_rows == 0:
-                return spark.createDataFrame([], schema)  # side exhausted
-            forward = f_rows <= b_rows
-            g = graph if forward else graph_rev
-            front, seen, rows = (
-                (f_front, f_seen, f_rows) if forward else (b_front, b_seen, b_rows)
-            )
-            other = b_seen if forward else f_seen
-            d = (f_d if forward else b_d) + 1
+    def side(m: dict) -> tuple[bool, int]:
+        """The round's side (forward when its frontier is no larger) and
+        the level it grows to."""
+        forward = m["rows"][True] <= m["rows"][False]
+        return forward, m["depth"][forward] + 1
 
-            nxt = (
-                g.expand(front.select(F.col("vid").alias("src")), est_rows=rows)
-                .select(F.col("dst").alias("vid"))
-                .distinct()
+    def step(state: DataFrame, m: dict) -> DataFrame:
+        forward, d = side(m)
+        mine = state.where(F.col("fwd") == forward)
+        other = state.where(F.col("fwd") != forward).select("vid", F.col("dist").alias("dist_o"))
+        new = (
+            (graph if forward else graph_rev)
+            .expand(
+                mine.where(F.col("dist") == d - 1).select(F.col("vid").alias("src")),
+                est_rows=m["rows"][forward],
             )
-            new = (
-                nxt.join(seen, "vid", "left_anti")
-                .withColumn("dist", F.lit(d).cast("long"))
-                # meet probe rides the materializing job: dist_o is the
-                # other side's exact level for vertices both sides reached
-                .join(
-                    other.withColumnRenamed("dist", "dist_o"), "vid", "left"
-                )
-                .localCheckpoint(eager=True)
+            .select(F.col("dst").alias("vid"))
+            .distinct()
+            .join(mine, "vid", "left_anti")
+            # meet probe rides the materializing job: dist_o is the other
+            # side's exact level for vertices both sides reached
+            .join(other, "vid", "left")
+            .select(
+                "vid",
+                F.lit(d).cast("long").alias("dist"),
+                F.lit(forward).alias("fwd"),
+                (F.lit(d) + F.col("dist_o")).alias("meet"),
             )
-            n_new, meet = new.agg(
-                F.count(F.lit(1)), F.min(F.col("dist") + F.col("dist_o"))
-            ).first()
-            if meet is not None:
-                return spark.createDataFrame([(s, t, int(meet))], schema)
-            grown = seen.unionByName(new.drop("dist_o"))
-            if forward:
-                f_seen, f_front, f_rows, f_d = grown, new.drop("dist_o"), n_new, d
-            else:
-                b_seen, b_front, b_rows, b_d = grown, new.drop("dist_o"), n_new, d
+        )
+        # coalesce: the union would add a shuffle's worth of partitions a round
+        return state.unionByName(new).coalesce(parts)
 
-    return spark.createDataFrame([], schema)
+    def probe(state: DataFrame, m: dict) -> dict:
+        forward, d = side(m)
+        n_new, meet = (
+            state.where((F.col("fwd") == forward) & (F.col("dist") == d))
+            .agg(F.count(F.lit(1)), F.min("meet"))
+            .first()
+        )
+        return {
+            "rows": {**m["rows"], forward: n_new},
+            "depth": {**m["depth"], forward: d},
+            "meet": meet,
+        }
+
+    state, m, _ = fixpoint(
+        spark.createDataFrame(
+            [(s, 0, True, None), (t, 0, False, None)],
+            "vid long, dist long, fwd boolean, meet long",
+        ),
+        step,
+        probe,
+        # a meet is the distance; an exhausted side means none within reach
+        lambda m, _: m["meet"] is not None or 0 in m["rows"].values(),
+        max_rounds,
+        seed_metrics=lambda _: {"rows": {True: 1, False: 1}, "depth": {True: 0, False: 0}},
+    )
+    release(state)
+    rows = [(s, t, int(m["meet"]))] if m.get("meet") is not None else []
+    return spark.createDataFrame(rows, schema)

@@ -15,8 +15,10 @@ distributed form:
      with equal endpoint parity — one join against the parity table,
      counted per component.
 
-Driver actions are one bounded scalar per level (the same budget shape
-as sssp.py's frontier_rows).  At 100 TB the per-level cost is the same
+The level loop is `linkgraph.iterate.fixpoint` over the visited set
+(vid, dist): one fused job a level, whose one bounded scalar (the new
+level's size, the same budget shape as sssp.py's frontier_rows) feeds the
+next expand and ends the loop at 0.  At 100 TB the per-level cost is the same
 frontier-expand join every BFS here pays; no new shuffle shape.
 """
 
@@ -26,33 +28,42 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.algos.components import connected_components
-from linkgraph.graph import LinkGraph, iteration_plan
+from linkgraph.graph import LinkGraph
+from linkgraph.iterate import fixpoint
 
 
 def bipartite_check(graph: LinkGraph, max_levels: int = 64) -> DataFrame:
     """(comp, n_vertices, n_odd_edges, is_bipartite) per component —
     n_odd_edges counts conflict edges (src < dst orientation) whose BFS
     parities from the component's min-vid root coincide."""
-    comps = connected_components(graph).localCheckpoint(eager=True)
-    roots = comps.groupBy("comp").agg(F.min("vid").alias("vid"))
-    visited = roots.select("vid", F.lit(0).alias("dist")).localCheckpoint(eager=True)
-    frontier = visited
-    with iteration_plan(graph.spark):
-        for level in range(1, max_levels + 1):
-            n_f = frontier.count()
-            if n_f == 0:
-                break
-            msgs = frontier.select(F.col("vid").alias("src"))
-            nxt = (
-                graph.expand(msgs, est_rows=n_f)
-                .select(F.col("dst").alias("vid"))
-                .distinct()
-                .join(visited, "vid", "left_anti")
-                .withColumn("dist", F.lit(level))
-                .localCheckpoint(eager=True)
-            )
-            visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-            frontier = nxt
+    comps = connected_components(graph)
+    parts = int(graph.spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def step(visited: DataFrame, m: dict) -> DataFrame:
+        msgs = visited.where(F.col("dist") == m["level"]).select(F.col("vid").alias("src"))
+        nxt = (
+            graph.expand(msgs, est_rows=m["frontier"])
+            .select(F.col("dst").alias("vid"))
+            .distinct()
+            .join(visited, "vid", "left_anti")
+            .withColumn("dist", F.lit(m["level"] + 1))
+        )
+        # coalesce: the union would add a shuffle's worth of partitions a level
+        return visited.unionByName(nxt).coalesce(parts)
+
+    def frontier(visited: DataFrame, m: dict | None = None) -> dict:
+        level = m["level"] + 1 if m is not None else 0
+        n = visited.agg(F.sum(F.when(F.col("dist") == level, 1).otherwise(0))).first()[0]
+        return {"level": level, "frontier": int(n or 0)}
+
+    visited, _, _ = fixpoint(
+        comps.groupBy("comp").agg(F.min("vid").alias("vid")).select("vid", F.lit(0).alias("dist")),
+        step,
+        frontier,
+        lambda m, _: m["frontier"] == 0,
+        max_levels,
+        seed_metrics=frontier,
+    )
     par = visited.select("vid", (F.col("dist") % 2).alias("par"))
     e = graph.edges.select("src", "dst").where(F.col("src") < F.col("dst"))
     odd = (

@@ -16,14 +16,12 @@ Plan shape (the PR one-job-per-step discipline):
   round), the constructor builds a transpose LinkGraph once — the CSC to
   the forward table's CSR, the same pairing every matrix engine keeps for
   A·x vs Aᵀ·x — and both half-steps become co-partitioned expands;
-* each half-step is ONE Spark job: expand + aggregate + lazy
-  localCheckpoint, materialized by the Σx² norm aggregate whose scalar
-  then rides into the next half-step as a literal (the normalization
-  division never needs its own pass).  Vertices receiving no mass stay
+* each round is ONE `linkgraph.iterate.fixpoint` iteration over the
+  state (vid, auth, hub): the authority half-step is checkpointed and
+  normalized by its Σx² action, and the hub half-step's norm is the
+  probe, whose scalar rides into the next round as a literal.  Vertices receiving no mass stay
   absent from the loop state (zero rows change neither the norm nor the
-  next expansion); the vertex set is attached once at the end;
-* runs under iteration_plan (AQE off, shuffled-hash) like every other
-  iterative kernel here.
+  next expansion); the vertex set is attached once at the end.
 
 Determinism: float summation order differs across engines, so outputs
 are rounded (`round_to`) for oracle comparison; raw doubles agree to
@@ -37,8 +35,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
-from linkgraph.iterate import release
+from linkgraph.graph import LinkGraph
+from linkgraph.iterate import checkpoint, fixpoint, release
 
 
 def hits(
@@ -54,63 +52,71 @@ def hits(
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    spark = graph.spark
     own_transpose = transpose is None
     gt = transpose or LinkGraph(
         graph.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
         materialize=False,
     )
-    verts = graph.vertices().select("vid").localCheckpoint(eager=True)
-    n = verts.count()
+    n = graph.num_vertices()
+
+    def half_step(g: LinkGraph, msgs: DataFrame) -> DataFrame:
+        """(vid, x): msgs' scores flowed along g's edges, summed per
+        destination.  Vertices receiving no mass are simply ABSENT — a zero
+        score contributes nothing to the next expansion nor to the L2 norm;
+        the full vertex set is attached once at the end."""
+        return g.expand(msgs, est_rows=n).groupBy(F.col("dst").alias("vid")).agg(
+            F.sum("x").alias("x")
+        )
+
+    auths: list[DataFrame] = []
+
+    def step(state: DataFrame, m: dict) -> DataFrame:
+        """auth(v) = Σ hub over in-edges, checkpointed and normalized by its
+        Σx² action (left in the plan, the sf0.1 query ran 1.3x slower on a
+        4 vCPU box); then hub(u) = Σ auth over out-edges, left raw for the
+        probe to measure its norm."""
+        raw = checkpoint(
+            half_step(
+                graph,
+                state.where(F.col("hub").isNotNull()).select(
+                    F.col("vid").alias("src"), (F.col("hub") / F.lit(m["norm"])).alias("x")
+                ),
+            )
+        )
+        norm = math.sqrt(raw.agg(F.sum(F.col("x") * F.col("x"))).first()[0])
+        for done_with in auths:  # the state that read them is materialized
+            release(done_with)
+        auths[:] = [raw]
+        auth = raw.select("vid", (F.col("x") / F.lit(norm)).alias("auth"))
+        hub = half_step(gt, auth.select(F.col("vid").alias("src"), F.col("auth").alias("x")))
+        return auth.join(hub.withColumnRenamed("x", "hub"), "vid", "full_outer")
+
+    def hub_norm(state: DataFrame, _m: dict) -> dict:
+        return {"norm": math.sqrt(state.agg(F.sum(F.col("hub") * F.col("hub"))).first()[0])}
 
     # hub starts uniform at 1/sqrt(n) (unit L2 norm) — any positive start
     # converges; unit-norm keeps intermediate magnitudes O(1).
-    h = verts.select("vid", F.lit(1.0 / math.sqrt(n)).alias("x"))
+    verts = graph.vertices().select("vid")
+    state, m, _ = fixpoint(
+        verts.select("vid", F.lit(None).cast("double").alias("auth"),
+                     F.lit(1.0 / math.sqrt(n)).alias("hub")),
+        step,
+        hub_norm,
+        lambda m, _: False,
+        rounds,
+        seed_metrics=lambda _: {"norm": 1.0},
+    )
 
-    def half_step(g: LinkGraph, scores: DataFrame) -> DataFrame:
-        """One normalized half-step: flow `scores` along g's edges, sum
-        per destination.  Vertices receiving no mass are simply ABSENT
-        from the result — a zero score contributes nothing to the next
-        expansion nor to the L2 norm, so carrying explicit zero rows
-        through the loop (the old per-half-step |V|-row verts left-join)
-        was pure overhead; the full vertex set is re-attached once at the
-        end."""
-        msgs = scores.select(F.col("vid").alias("src"), "x")
-        raw = (
-            g.expand(msgs, est_rows=n)
-            .groupBy("dst")
-            .agg(F.sum("x").alias("x"))
-            .withColumnRenamed("dst", "vid")
-            .localCheckpoint(eager=False)
-        )
-        norm = math.sqrt(raw.agg(F.sum(F.col("x") * F.col("x")).alias("s")).first()["s"])
-        return raw.select("vid", (F.col("x") / F.lit(norm)).alias("x")), raw
-
-    retained: list[DataFrame] = []
-    with iteration_plan(spark):
-        a = None
-        for _ in range(rounds):
-            a, keep_a = half_step(graph, h)      # auth(v) = Σ hub over in-edges
-            h, keep_h = half_step(gt, a)         # hub(u)  = Σ auth over out-edges
-            for old in retained:
-                release(old)
-            retained = [keep_a, keep_h]
-
-    hub_col = F.coalesce(F.col("h.x"), F.lit(0.0))
-    auth_col = F.coalesce(F.col("a.x"), F.lit(0.0))
+    hub_col = F.coalesce(F.col("hub") / F.lit(m["norm"]), F.lit(0.0))
+    auth_col = F.coalesce(F.col("auth"), F.lit(0.0))
     if round_to is not None:
         hub_col = F.round(hub_col, round_to)
         auth_col = F.round(auth_col, round_to)
-    out = (
-        verts.alias("v")
-        .join(h.alias("h"), F.col("v.vid") == F.col("h.vid"), "left")
-        .join(a.alias("a"), F.col("v.vid") == F.col("a.vid"), "left")
-        .select(F.col("v.vid").alias("vid"), hub_col.alias("hub"), auth_col.alias("auth"))
+    out = verts.join(state, "vid", "left").select(
+        "vid", hub_col.alias("hub"), auth_col.alias("auth")
     )
+    for done_with in auths:
+        release(done_with)
     if own_transpose:
-        # materialize before releasing the transpose cache the plan reads
-        out = out.localCheckpoint(eager=True)
         gt.unpersist()
-        for done_with in (verts, *retained):
-            release(done_with)
     return out

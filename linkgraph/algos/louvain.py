@@ -230,7 +230,7 @@ def _local_move_rounds(
 
 
 def louvain_local_move(
-    graph: LinkGraph, rounds: int | None = None, max_rounds: int = 32
+    graph: LinkGraph, rounds: int | None = None, max_rounds: int = 64
 ) -> DataFrame:
     """One Louvain level (local moves only) on an unweighted symmetric
     graph.  Returns (vid, label) — feed to gstats.community_modularity
@@ -238,7 +238,10 @@ def louvain_local_move(
 
     rounds=R: exactly R unrolled rounds (oracle-mirrorable, possibly not
     yet a fixpoint).  rounds=None: iterate until no eligible vertex has a
-    positive-gain move, warning if max_rounds is exhausted first."""
+    positive-gain move, warning if max_rounds is exhausted first.  The
+    schedule's tail is long: once only one or two vertices still gain,
+    each waits for its parity coin, so the 150-vertex er_edges(150, 0.03)
+    graph moves its last vertex in round 33."""
     if not graph.symmetric:
         raise ValueError("louvain_local_move needs a symmetric graph")
     m_edges = graph.num_edges()
@@ -274,7 +277,7 @@ def louvain_local_move(
 
 
 def multilevel_louvain(
-    graph: LinkGraph, levels: int = 3, max_rounds: int = 32
+    graph: LinkGraph, levels: int = 3, max_rounds: int = 64
 ) -> DataFrame:
     """Full Louvain: local-move fixpoint, contract communities to an
     integer-weighted quotient graph, repeat.  Returns (vid, label) on the

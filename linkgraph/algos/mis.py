@@ -27,9 +27,11 @@ Scale shape (the MS-BFS/SSSP frontier machinery, SURVEY.md J1/A5):
     shuffles; the |U|-row prio table broadcasts under the byte gate or
     shuffles on src) followed by a partial+final MIN aggregate — the ANP
     shape, map-side combined;
-  * U is a single (vid) column — per-round state is O(|U|) longs;
+  * each round is one `linkgraph.iterate.fixpoint` iteration over the
+    state (vid, joined_round): U (joined_round NULL) and the members so
+    far — O(|V|) longs;
   * est_rows for every expand is the MEASURED |U| from the previous
-    round's count (the betweenness round-4 lesson: never estimate what
+    round's probe (the betweenness round-4 lesson: never estimate what
     the loop already measured).
 """
 
@@ -38,8 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
-from linkgraph.iterate import release
+from linkgraph.graph import LinkGraph
+from linkgraph.iterate import fixpoint
 
 
 def _prio(round_no: int, vid_col):
@@ -60,61 +62,57 @@ def maximal_independent_set(
     """
     if not graph.symmetric:
         raise ValueError("maximal_independent_set needs a symmetric graph")
-    spark = graph.spark
-    und = graph.vertices().select("vid").localCheckpoint(eager=True)
-    n_und = und.count()
-    mis_parts: list[DataFrame] = []
 
-    budget = rounds if rounds is not None else max_rounds
-    with iteration_plan(spark):
-        for r in range(1, budget + 1):
-            if n_und == 0:
-                break
-            p = und.select("vid", _prio(r, F.col("vid")).alias("p"))
-            # min undecided-neighbor prio, per vertex: expand from every
-            # undecided vertex (msgs keyed by src), MIN-aggregate on dst.
-            msgs = p.select(F.col("vid").alias("src"), "p")
-            nbrmin = (
-                graph.expand(msgs, est_rows=n_und)
-                .groupBy("dst")
-                .agg(F.min("p").alias("mn"))
-            )
-            w = (
-                p.join(nbrmin, p["vid"] == nbrmin["dst"], "left")
-                .where(F.col("mn").isNull() | (F.col("p") < F.col("mn")))
-                .select(p["vid"])
-                .localCheckpoint(eager=True)
-            )
-            mis_parts.append(w.select("vid", F.lit(r).alias("joined_round")))
-            # drop winners and their whole neighborhood from U
-            excl = (
-                graph.expand(w.select(F.col("vid").alias("src")), est_rows=n_und)
-                .select(F.col("dst").alias("vid"))
-                .distinct()
-            )
-            nxt = (
-                und.join(w, "vid", "left_anti")
-                .join(excl, "vid", "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            n_und = nxt.count()
-            release(und)
-            und = nxt
-    release(und)
-    if n_und > 0 and rounds is None:
+    def step(state: DataFrame, m: dict) -> DataFrame:
+        r = m["round"] + 1
+        und = state.where(F.col("joined_round").isNull())
+        p = und.select("vid", _prio(r, F.col("vid")).alias("p"))
+        # min undecided-neighbor prio, per vertex: expand from every
+        # undecided vertex (msgs keyed by src), MIN-aggregate on dst.
+        nbrmin = (
+            graph.expand(p.select(F.col("vid").alias("src"), "p"), est_rows=m["undecided"])
+            .groupBy("dst")
+            .agg(F.min("p").alias("mn"))
+        )
+        w = (
+            p.join(nbrmin, p["vid"] == nbrmin["dst"], "left")
+            .where(F.col("mn").isNull() | (F.col("p") < F.col("mn")))
+            .select(p["vid"], F.lit(r).alias("won"))
+        )
+        # drop the winners' whole neighborhood from U.  It holds no member:
+        # winners are in U, whose vertices no earlier member neighbors
+        excl = (
+            graph.expand(w.select(F.col("vid").alias("src")), est_rows=m["undecided"])
+            .select(F.col("dst").alias("vid"))
+            .distinct()
+        )
+        return (
+            state.join(excl, "vid", "left_anti")
+            .join(w, "vid", "left")
+            .select("vid", F.coalesce("joined_round", "won").alias("joined_round"))
+        )
+
+    def undecided(state: DataFrame, m: dict | None = None) -> dict:
+        n = state.agg(F.sum(F.when(F.col("joined_round").isNull(), 1).otherwise(0))).first()[0]
+        return {"round": m["round"] + 1 if m else 0, "undecided": int(n or 0)}
+
+    state, m, _ = fixpoint(
+        graph.vertices().select("vid", F.lit(None).cast("int").alias("joined_round")),
+        step,
+        undecided,
+        lambda m, _: m["undecided"] == 0,
+        rounds if rounds is not None else max_rounds,
+        seed_metrics=undecided,
+    )
+    if m["undecided"] > 0 and rounds is None:
         import warnings
 
         warnings.warn(
-            f"maximal_independent_set: round budget exhausted with {n_und} "
+            f"maximal_independent_set: round budget exhausted with {m['undecided']} "
             "undecided vertices — result is independent but may not be maximal",
             stacklevel=2,
         )
-    if not mis_parts:
-        return spark.createDataFrame([], "vid long, joined_round int")
-    out = mis_parts[0]
-    for part in mis_parts[1:]:
-        out = out.unionByName(part)
-    return out.select(
+    return state.where(F.col("joined_round").isNotNull()).select(
         F.col("vid").cast("long").alias("vid"),
         F.col("joined_round").cast("int").alias("joined_round"),
     )

@@ -27,6 +27,9 @@ DataFrame passes:
   hash-comparable with no float arithmetic anywhere (weights are copied,
   never summed).
 
+Each round is one `linkgraph.iterate.fixpoint` iteration over the label
+state (vid, comp), whose probe checkpoints and counts the next round's
+proposals; the pointer jumps are a nested `fixpoint` over (c, p).
 O(log |V|) rounds to the fixpoint (component count halves per round).
 `rounds=N` runs exactly N rounds — the bounded-budget mode the unrolled
 DuckDB oracle mirrors; `rounds=None` runs to the no-cross-edges fixpoint
@@ -40,8 +43,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
-from linkgraph.iterate import release
+from linkgraph.iterate import count_changed, fixpoint, release
 
 
 def minimum_spanning_forest(
@@ -69,11 +71,8 @@ def minimum_spanning_forest(
         .repartition(p, "src")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    comp = (
-        e.select(F.col("src").alias("vid"))
-        .distinct()
-        .select("vid", F.col("vid").alias("comp"))
-        .localCheckpoint(eager=True)
+    comp = e.select(F.col("src").alias("vid")).distinct().select(
+        "vid", F.col("vid").alias("comp")
     )
     n_vertices = comp.count()
     from linkgraph.graph import broadcast_threshold
@@ -89,58 +88,58 @@ def minimum_spanning_forest(
         n_vertices * (16 + 12 * 2) < broadcast_threshold(spark)
     )
     forest_parts: list[DataFrame] = []
-    n_rounds = rounds if rounds is not None else max_rounds
-    converged = False
-    with iteration_plan(spark):
-        for _ in range(n_rounds):
-            cs = comp.select(F.col("vid").alias("src"), F.col("comp").alias("csrc"))
-            cd = comp.select(F.col("vid").alias("dst"), F.col("comp").alias("cdst"))
-            if bc_ok:
-                cs, cd = F.broadcast(cs), F.broadcast(cd)
-            cross = (
-                e.join(cs, "src")
-                .join(cd, "dst")
-                .where(F.col("csrc") != F.col("cdst"))
-                .select(
-                    "csrc",
-                    "cdst",
-                    "w",
-                    F.least("src", "dst").alias("u"),
-                    F.greatest("src", "dst").alias("v"),
-                )
+    mappings: list[DataFrame] = []
+
+    def proposals(comp: DataFrame, _m: dict | None = None) -> dict:
+        """Each component's argmin cross edge, checkpointed; its count is
+        the round's one action (it materializes `comp` too), and 0 is the
+        no-cross-edges fixpoint."""
+        cs = comp.select(F.col("vid").alias("src"), F.col("comp").alias("csrc"))
+        cd = comp.select(F.col("vid").alias("dst"), F.col("comp").alias("cdst"))
+        if bc_ok:
+            cs, cd = F.broadcast(cs), F.broadcast(cd)
+        prop = (
+            e.join(cs, "src")
+            .join(cd, "dst")
+            .where(F.col("csrc") != F.col("cdst"))
+            .groupBy("csrc")
+            .agg(
+                F.min(
+                    F.struct(
+                        "w", F.least("src", "dst").alias("u"),
+                        F.greatest("src", "dst").alias("v"), "cdst",
+                    )
+                ).alias("m")
             )
-            prop = (
-                cross.groupBy("csrc")
-                .agg(F.min(F.struct("w", "u", "v", "cdst")).alias("m"))
-                .select(
-                    "csrc",
-                    F.col("m.w").alias("w"),
-                    F.col("m.u").alias("u"),
-                    F.col("m.v").alias("v"),
-                    F.col("m.cdst").alias("cdst"),
-                )
-                # lazy: the count below materializes the checkpoint AND
-                # answers the convergence probe — one fused job where
-                # eager-checkpoint + isEmpty paid two
-                .localCheckpoint(eager=False)
-            )
-            if prop.count() == 0:
-                release(prop)
-                converged = True
-                break
-            forest_parts.append(prop.select("u", "v", "w").distinct())
-            mapping = _contract_pseudoforest(prop, bc_small=bc_ok)
-            nxt = (
-                # ≤|comps|-row mapping under the J1 byte gate: the |V|-row
-                # comp state never re-shuffles for the relabel join
-                comp.join(F.broadcast(mapping) if bc_ok else mapping, "comp", "left")
-                .select("vid", F.coalesce(F.col("nc"), F.col("comp")).alias("comp"))
-                .localCheckpoint(eager=True)
-            )
-            release(comp)
+            .select("csrc", "m.w", "m.u", "m.v", "m.cdst")
+            .localCheckpoint(eager=False)
+        )
+        n = prop.count()
+        for mapping in mappings:
             release(mapping)
-            comp = nxt
+        mappings.clear()
+        return {"prop": prop, "proposals": n}
+
+    def step(comp: DataFrame, m: dict) -> DataFrame:
+        forest_parts.append(m["prop"])
+        mapping = _contract_pseudoforest(m["prop"], bc_small=bc_ok)
+        mappings.append(mapping)
+        # ≤|comps|-row mapping under the J1 byte gate: the |V|-row comp
+        # state never re-shuffles for the relabel join
+        return comp.join(F.broadcast(mapping) if bc_ok else mapping, "comp", "left").select(
+            "vid", F.coalesce(F.col("nc"), F.col("comp")).alias("comp")
+        )
+
+    comp, m, converged = fixpoint(
+        comp,
+        step,
+        proposals,
+        lambda m, _: m["proposals"] == 0,
+        rounds if rounds is not None else max_rounds,
+        seed_metrics=proposals,
+    )
     release(comp)
+    release(m["prop"])  # the proposals of the round after the last
     if rounds is None and not converged:
         warnings.warn(
             f"minimum_spanning_forest: max_rounds={max_rounds} exhausted before "
@@ -155,7 +154,7 @@ def minimum_spanning_forest(
     out = forest_parts[0]
     for p in forest_parts[1:]:
         out = out.unionByName(p)
-    return out.distinct().select(
+    return out.select("u", "v", "w").distinct().select(
         F.col("u").cast("long"), F.col("v").cast("long"), F.col("w").cast("long")
     )
 
@@ -178,36 +177,28 @@ def _contract_pseudoforest(
     back = f.select(F.col("csrc").alias("b"), F.col("cdst").alias("bt"))
     if bc_small:
         back = F.broadcast(back)
-    p = (
-        f.join(
-            back, (f.cdst == back.b) & (F.col("bt") == f.csrc), "left"
-        )
-        .select(
-            F.col("csrc").alias("c"),
-            F.when(
-                F.col("b").isNotNull() & (F.col("csrc") < F.col("cdst")),
-                F.col("csrc"),
-            )
-            .otherwise(F.col("cdst"))
-            .alias("p"),
-        )
-        .localCheckpoint(eager=True)
+    seed = f.join(back, (f.cdst == back.b) & (F.col("bt") == f.csrc), "left").select(
+        F.col("csrc").alias("c"),
+        F.when(F.col("b").isNotNull() & (F.col("csrc") < F.col("cdst")), F.col("csrc"))
+        .otherwise(F.col("cdst"))
+        .alias("p"),
     )
-    for _ in range(max_jumps):
+
+    def jump(p: DataFrame, _m: dict) -> DataFrame:
         hop = p.select(F.col("c").alias("q"), F.col("p").alias("gp"))
         if bc_small:
             hop = F.broadcast(hop)
-        np_ = (
-            p.join(hop, p.p == hop.q, "left")
-            .select("c", F.coalesce(F.col("gp"), F.col("p")).alias("np"), "p")
-            .localCheckpoint(eager=False)
+        return p.join(hop, p.p == hop.q, "left").select(
+            "c", F.coalesce(F.col("gp"), F.col("p")).alias("p"), F.col("p").alias("pp")
         )
-        changed = np_.where(F.col("np") != F.col("p")).count()
-        nxt = np_.select("c", F.col("np").alias("p"))
-        release(p)
-        p = nxt
-        if changed == 0:
-            break
+
+    p, _, _ = fixpoint(
+        seed,
+        jump,
+        lambda st, _: {"changed": count_changed(st, "p", "pp")},
+        lambda m, _: m["changed"] == 0,
+        max_jumps,
+    )
     return p.select(F.col("c").alias("comp"), F.col("p").alias("nc"))
 
 

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph
-from linkgraph.iterate import fixpoint, release
+from linkgraph.iterate import fixpoint
 
 
 def pagerank(
@@ -243,10 +243,40 @@ def ppr_forward_push(
     """
     if not seeds:
         raise ValueError("ppr_forward_push needs a non-empty seed list")
-    spark = graph.spark
     deg = graph.degrees().select("vid", F.col("deg").cast("double").alias("deg"))
     seed_lit = F.col("vid").isin([int(s) for s in seeds])
-    state = (
+    pushed = F.col("r") > F.lit(eps) * F.col("deg")
+
+    def step(state: DataFrame, m: dict) -> DataFrame:
+        msgs = state.where(pushed & (F.col("deg") > 0)).select(
+            F.col("vid").alias("src"),
+            ((1.0 - alpha) * F.col("r") / F.col("deg")).alias("w"),
+        )
+        inc = (
+            graph.expand(msgs, est_rows=max(m["pushers"], 1))
+            .groupBy("dst")
+            .agg(F.sum("w").alias("c"))
+        )
+        return (
+            state.alias("st")
+            .join(inc.alias("ic"), F.col("st.vid") == F.col("ic.dst"), "left")
+            .select(
+                F.col("st.vid").alias("vid"),
+                F.col("st.deg").alias("deg"),
+                (F.col("st.p") + F.when(pushed, alpha * F.col("st.r")).otherwise(0.0)).alias("p"),
+                (
+                    F.when(pushed, 0.0).otherwise(F.col("st.r"))
+                    + F.coalesce(F.col("ic.c"), F.lit(0.0))
+                ).alias("r"),
+            )
+        )
+
+    def pushers(state: DataFrame, _m: dict | None = None) -> dict:
+        """The next sweep's frontier: its size is expand's est_rows, and
+        none left is the eps-fixpoint."""
+        return {"pushers": state.where(pushed & (F.col("deg") > 0)).count()}
+
+    state, m, _ = fixpoint(
         graph.vertices()
         .join(deg, "vid", "left")
         .select(
@@ -254,54 +284,14 @@ def ppr_forward_push(
             F.coalesce("deg", F.lit(0.0)).alias("deg"),
             F.lit(0.0).alias("p"),
             F.when(seed_lit, F.lit(1.0 / len(seeds))).otherwise(0.0).alias("r"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        step,
+        pushers,
+        lambda m, _: rounds is None and m["pushers"] == 0,
+        rounds if rounds is not None else max_rounds,
+        seed_metrics=pushers,
     )
-    budget = rounds if rounds is not None else max_rounds
-    from linkgraph.graph import iteration_plan
-
-    exhausted = rounds is None
-    with iteration_plan(spark):
-        for _ in range(budget):
-            pushed = F.col("r") > F.lit(eps) * F.col("deg")
-            msgs = state.where(pushed & (F.col("deg") > 0)).select(
-                F.col("vid").alias("src"),
-                ((1.0 - alpha) * F.col("r") / F.col("deg")).alias("w"),
-            )
-            if rounds is None:
-                n_push = msgs.count()
-                if n_push == 0:
-                    exhausted = False
-                    break
-                contrib = graph.expand(msgs, est_rows=n_push)
-            else:
-                # fixed-rounds mode has no count action to measure the
-                # frontier, but it is bounded by |V| — feed that bound to
-                # the J1 byte gate so small-state pushes broadcast instead
-                # of falling through to the shuffle join (the gate still
-                # degrades to shuffle past the threshold at scale)
-                contrib = graph.expand(msgs, est_rows=graph.num_vertices())
-            inc = contrib.groupBy("dst").agg(F.sum("w").alias("c"))
-            prev_state = state
-            state = (
-                state.alias("st")
-                .join(inc.alias("ic"), F.col("st.vid") == F.col("ic.dst"), "left")
-                .select(
-                    F.col("st.vid").alias("vid"),
-                    F.col("st.deg").alias("deg"),
-                    (
-                        F.col("st.p")
-                        + F.when(pushed, alpha * F.col("st.r")).otherwise(0.0)
-                    ).alias("p"),
-                    (
-                        F.when(pushed, 0.0).otherwise(F.col("st.r"))
-                        + F.coalesce(F.col("ic.c"), F.lit(0.0))
-                    ).alias("r"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            release(prev_state)
-    if exhausted:
+    if rounds is None and m["pushers"] > 0:
         import warnings
 
         warnings.warn(

@@ -19,10 +19,10 @@ any walk (outdeg = 0) report 0.
 Plan shape: the forward half-step flows hub/outdeg through the
 src-partitioned edge table via LinkGraph.expand; the backward half-step
 uses a transpose LinkGraph built once (the CSR/CSC pairing hits.py
-documents).  Degree divisions ride the score table as a projection —
-degree tables are joined once up front, never per round.  Runs under
-iteration_plan (AQE off, shuffled-hash) like every iterative kernel
-here.  Rounded to `round_to` for cross-engine comparison.
+documents).  Degrees ride the score state (vid, od, idg, hub, auth) —
+degree tables are joined once up front, never per round — and both
+half-steps of a round are one `linkgraph.iterate.fixpoint` iteration (one
+fused job).  Rounded to `round_to` for cross-engine comparison.
 """
 
 from __future__ import annotations
@@ -30,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, iteration_plan
-from linkgraph.iterate import release
+from linkgraph.graph import LinkGraph
+from linkgraph.iterate import fixpoint
 
 
 def salsa(
@@ -59,63 +59,51 @@ def salsa(
         .join(indeg.withColumnRenamed("dst", "vid"), "vid", "left")
         .select("vid", F.coalesce("od", F.lit(0)).alias("od"),
                 F.coalesce("idg", F.lit(0)).alias("idg"))
-        .localCheckpoint(eager=True)
     )
+    n = graph.num_vertices()
+
+    def flow(g: LinkGraph, scores: DataFrame, x: str, deg_col: str) -> DataFrame:
+        """(dst, acc): scores[x]/deg flowed along g's edges, summed per
+        destination."""
+        msgs = scores.where(F.col(deg_col) > 0).select(
+            F.col("vid").alias("src"), (F.col(x) / F.col(deg_col)).alias("x")
+        )
+        return g.expand(msgs, est_rows=n).groupBy("dst").agg(F.sum("x").alias("acc"))
+
+    def step(state: DataFrame, _m: dict) -> DataFrame:
+        """One round: auth forward (/outdeg), then hub over the transpose
+        (/indeg).  Explicit zero rows keep the off-walk side reportable."""
+        a_raw = flow(graph, state, "hub", "od")
+        a = (
+            state.join(a_raw, state["vid"] == a_raw["dst"], "left")
+            .select("vid", "od", "idg", F.coalesce("acc", F.lit(0.0)).alias("auth"))
+        )
+        h_raw = flow(gt, a, "auth", "idg")
+        return a.join(h_raw, a["vid"] == h_raw["dst"], "left").select(
+            "vid", "od", "idg", F.coalesce("acc", F.lit(0.0)).alias("hub"), "auth"
+        )
+
     n_hub = verts.where(F.col("od") > 0).count()
     if n_hub == 0:
         return spark.createDataFrame([], "vid long, hub double, auth double")
-
-    # hub mass 1/n_hub on every vertex with an out-edge
-    h = verts.select(
-        "vid",
-        F.when(F.col("od") > 0, F.lit(1.0 / n_hub)).otherwise(F.lit(0.0)).alias("x"),
+    state, _, _ = fixpoint(
+        # hub mass 1/n_hub on every vertex with an out-edge
+        verts.select(
+            "vid", "od", "idg",
+            F.when(F.col("od") > 0, F.lit(1.0 / n_hub)).otherwise(F.lit(0.0)).alias("hub"),
+            F.lit(0.0).alias("auth"),
+        ),
+        step,
+        lambda st, _: {"rows": st.count()},
+        lambda m, _: False,
+        rounds,
     )
 
-    def flow(g: LinkGraph, scores: DataFrame, deg_col: str, est: int) -> DataFrame:
-        """Flow scores/deg along g's edges, sum per destination; keep
-        explicit zero rows so the off-walk side stays reportable."""
-        msgs = (
-            scores.join(verts.select("vid", deg_col), "vid")
-            .where(F.col(deg_col) > 0)
-            .select(
-                F.col("vid").alias("src"),
-                (F.col("x") / F.col(deg_col)).alias("x"),
-            )
-        )
-        raw = g.expand(msgs, est_rows=est).groupBy("dst").agg(F.sum("x").alias("acc"))
-        return (
-            verts.alias("v")
-            .join(raw.alias("r"), F.col("v.vid") == F.col("r.dst"), "left")
-            .select(
-                F.col("v.vid").alias("vid"),
-                F.coalesce(F.col("r.acc"), F.lit(0.0)).alias("x"),
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    n = verts.count()
-    retained: list[DataFrame] = []
-    with iteration_plan(spark):
-        a = None
-        for _ in range(rounds):
-            a = flow(graph, h, "od", n)   # auth: forward, /outdeg
-            h = flow(gt, a, "idg", n)     # hub: transpose, /indeg
-            for old in retained:
-                release(old)
-            retained = [a, h]
-
-    hub_col, auth_col = F.col("h.x"), F.col("a.x")
+    hub_col, auth_col = F.col("hub"), F.col("auth")
     if round_to is not None:
         hub_col = F.round(hub_col, round_to) + F.lit(0.0)
         auth_col = F.round(auth_col, round_to) + F.lit(0.0)
-    out = (
-        h.alias("h")
-        .join(a.alias("a"), F.col("h.vid") == F.col("a.vid"))
-        .select(F.col("h.vid").alias("vid"), hub_col.alias("hub"), auth_col.alias("auth"))
-        .localCheckpoint(eager=True)
-    )
-    for done_with in (verts, *retained):
-        release(done_with)
+    out = state.select("vid", hub_col.alias("hub"), auth_col.alias("auth"))
     if own_transpose:
         gt.unpersist()
     return out

@@ -36,7 +36,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import iteration_plan
 from linkgraph.iterate import checkpoint, count_changed, fixpoint, release
 
 
@@ -186,51 +185,50 @@ def strongly_connected_components(
     try:
         if loop_p is not None:
             spark.conf.set("spark.sql.shuffle.partitions", str(loop_p))
-        with iteration_plan(spark):
-            e, verts, nv = _trim(e, verts, nv, assigned_parts)
-            for _ in range(max_rounds):
-                if nv == 0:
-                    break
-                init = verts.select("vid", F.col("vid").alias("lbl"))
-                f = _min_label_reach(e, init, max_iter)
+        e, verts, nv = _trim(e, verts, nv, assigned_parts)
+        for _ in range(max_rounds):
+            if nv == 0:
+                break
+            init = verts.select("vid", F.col("vid").alias("lbl"))
+            f = _min_label_reach(e, init, max_iter)
 
-                # class-restricted reversed edges: both endpoints share f
-                fe = f.select(F.col("vid").alias("src"), F.col("lbl").alias("fs"))
-                fd = f.select(F.col("vid").alias("dst"), F.col("lbl").alias("fd"))
-                rev_class = checkpoint(
-                    e.join(fe, "src")
-                    .join(fd, "dst")
-                    .where(F.col("fs") == F.col("fd"))
-                    .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-                )
-                br = _min_label_reach(rev_class, init, max_iter)
+            # class-restricted reversed edges: both endpoints share f
+            fe = f.select(F.col("vid").alias("src"), F.col("lbl").alias("fs"))
+            fd = f.select(F.col("vid").alias("dst"), F.col("lbl").alias("fd"))
+            rev_class = checkpoint(
+                e.join(fe, "src")
+                .join(fd, "dst")
+                .where(F.col("fs") == F.col("fd"))
+                .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            )
+            br = _min_label_reach(rev_class, init, max_iter)
 
-                joined = f.select("vid", "lbl").join(
-                    br.select("vid", F.col("lbl").alias("br")), "vid"
-                )
-                assigned_parts.append(
-                    checkpoint(
-                        joined.where(F.col("lbl") == F.col("br")).select(
-                            "vid", F.col("lbl").alias("comp")
-                        )
+            joined = f.select("vid", "lbl").join(
+                br.select("vid", F.col("lbl").alias("br")), "vid"
+            )
+            assigned_parts.append(
+                checkpoint(
+                    joined.where(F.col("lbl") == F.col("br")).select(
+                        "vid", F.col("lbl").alias("comp")
                     )
                 )
-                rest = checkpoint(joined.where(F.col("lbl") != F.col("br")).select("vid"))
-                for done_with in (f, rev_class, br, verts):
-                    release(done_with)
-                verts = rest
-                nv = verts.count()
-                if nv == 0:
-                    break
-                # restrict edges to unassigned vertices, then re-trim:
-                # peeling exposes fresh sources/sinks
-                restricted = checkpoint(
-                    e.join(verts.withColumnRenamed("vid", "src"), "src", "left_semi")
-                    .join(verts.withColumnRenamed("vid", "dst"), "dst", "left_semi")
-                    .select("src", "dst")
-                )
-                release(e)
-                e, verts, nv = _trim(restricted, verts, nv, assigned_parts)
+            )
+            rest = checkpoint(joined.where(F.col("lbl") != F.col("br")).select("vid"))
+            for done_with in (f, rev_class, br, verts):
+                release(done_with)
+            verts = rest
+            nv = verts.count()
+            if nv == 0:
+                break
+            # restrict edges to unassigned vertices, then re-trim:
+            # peeling exposes fresh sources/sinks
+            restricted = checkpoint(
+                e.join(verts.withColumnRenamed("vid", "src"), "src", "left_semi")
+                .join(verts.withColumnRenamed("vid", "dst"), "dst", "left_semi")
+                .select("src", "dst")
+            )
+            release(e)
+            e, verts, nv = _trim(restricted, verts, nv, assigned_parts)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_sp)
 
@@ -267,9 +265,10 @@ def bowtie_decomposition(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
     Pipeline: `strongly_connected_components` → largest component
     (max size, min-comp-id tie-break — one bounded scalar action) →
     forward reachability by iterative frontier expansion over the edge
-    table and backward over its transpose (each round ONE semi-join
-    expand + an anti-join against the visited set, frontier rows
-    measured; O(diameter) rounds).  All-integer output.
+    table and backward over its transpose (each round ONE
+    `linkgraph.iterate.fixpoint` iteration: an expand join + an anti-join
+    against the visited set, the new level counted by the probe;
+    O(diameter) rounds).  All-integer output.
     """
     spark = edges.sparkSession
     e = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
@@ -282,37 +281,47 @@ def bowtie_decomposition(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
         .orderBy(F.col("n").desc(), F.col("comp").asc())
         .first()
     )
-    scc = comp.where(F.col("comp") == int(top["comp"])).select("vid")
-    scc = scc.localCheckpoint(eager=True)
+    scc = comp.where(F.col("comp") == int(top["comp"])).select("vid", F.lit(0).alias("lvl"))
     scc_size = int(top["n"])
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    def reach(ed: DataFrame) -> DataFrame:
-        """All vertices reachable from the SCC set along `ed` (SCC
-        members excluded from the result)."""
-        visited = scc
-        frontier = scc
-        for _ in range(max_rounds):
+    def reach(ed: DataFrame) -> int:
+        """How many vertices outside the SCC are reachable from it along
+        `ed`: a level loop over the visited set (vid, lvl)."""
+
+        def step(visited: DataFrame, m: dict) -> DataFrame:
+            frontier = visited.where(F.col("lvl") == m["level"]).select(F.col("vid").alias("src"))
             nxt = (
-                ed.join(frontier.withColumnRenamed("vid", "src"), "src")
+                ed.join(frontier, "src")
                 .select(F.col("dst").alias("vid"))
                 .distinct()
                 .join(visited, "vid", "left_anti")
-                .localCheckpoint(eager=True)
+                .withColumn("lvl", F.lit(m["level"] + 1))
             )
-            if nxt.isEmpty():
-                break
-            visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-            frontier = nxt
-        return visited.join(scc, "vid", "left_anti")
+            # coalesce: the union would add a shuffle's worth of partitions a level
+            return visited.unionByName(nxt).coalesce(parts)
 
-    out_set = reach(e)
-    in_set = reach(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        def new_level(visited: DataFrame, m: dict) -> dict:
+            n = visited.where(F.col("lvl") == m["level"] + 1).count()
+            return {"level": m["level"] + 1, "reached": m["reached"] + n, "new": n}
+
+        visited, m, _ = fixpoint(
+            scc,
+            step,
+            new_level,
+            lambda m, _: m["new"] == 0,
+            max_rounds,
+            seed_metrics=lambda _: {"level": 0, "reached": 0},
+        )
+        release(visited)
+        return m["reached"]
+
+    out_size = reach(e)
+    in_size = reach(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     verts = e.select(F.col("src").alias("vid")).unionByName(
         e.select(F.col("dst").alias("vid"))
     ).distinct()
     n_total = verts.count()
-    out_size = out_set.count()
-    in_size = in_set.count()
     e.unpersist()
     comp.unpersist()
     return spark.createDataFrame(
@@ -351,7 +360,6 @@ def condensation_layers(
     identical even if not yet converged); rounds=None runs to fixpoint and
     WARNS if max_rounds is exhausted first (scc.py's budget discipline).
     """
-    spark = edges.sparkSession
     comp = strongly_connected_components(edges)
     e = (
         edges.select(
@@ -363,48 +371,36 @@ def condensation_layers(
     )
     cs = comp.select(F.col("vid").alias("src"), F.col("comp").alias("c_src"))
     cd = comp.select(F.col("vid").alias("dst"), F.col("comp").alias("c_dst"))
-    ce = (
+    ce = checkpoint(
         e.join(cs, "src")
         .join(cd, "dst")
         .where(F.col("c_src") != F.col("c_dst"))
         .select(F.col("c_src").alias("src"), F.col("c_dst").alias("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    depth = (
-        comp.select(F.col("comp").alias("c"))
-        .distinct()
-        .withColumn("depth", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    budget = rounds if rounds is not None else max_rounds
-    prev_sum = 0
-    with iteration_plan(spark):
-        for it in range(budget):
-            msgs = ce.join(
-                depth.withColumnRenamed("c", "src"), "src"
-            ).select(
-                F.col("dst").alias("c"), (F.col("depth") + 1).alias("depth")
-            )
-            prev_depth = depth
-            depth = checkpoint(
-                depth.unionByName(msgs).groupBy("c").agg(F.max("depth").alias("depth"))
-            )
-            release(prev_depth)
-            if rounds is None:
-                s = depth.agg(F.sum("depth")).first()[0] or 0
-                if s == prev_sum:
-                    break
-                prev_sum = s
-        else:
-            if rounds is None:
-                import warnings
 
-                warnings.warn(
-                    f"condensation_layers: max_rounds={max_rounds} exhausted "
-                    "before the depth fixpoint; layers may be lower bounds",
-                    stacklevel=2,
-                )
+    def step(depth: DataFrame, _m: dict) -> DataFrame:
+        msgs = ce.join(depth.withColumnRenamed("c", "src"), "src").select(
+            F.col("dst").alias("c"), (F.col("depth") + 1).alias("depth")
+        )
+        return depth.unionByName(msgs).groupBy("c").agg(F.max("depth").alias("depth"))
+
+    depth, _, converged = fixpoint(
+        comp.select(F.col("comp").alias("c")).distinct().withColumn("depth", F.lit(0).cast("long")),
+        step,
+        lambda d, _: {"sum": d.agg(F.sum("depth")).first()[0] or 0},
+        lambda m, prev: rounds is None and m["sum"] == prev["sum"],
+        rounds if rounds is not None else max_rounds,
+        seed_metrics=lambda _: {"sum": 0},
+    )
+    if not converged and rounds is None:
+        import warnings
+
+        warnings.warn(
+            f"condensation_layers: max_rounds={max_rounds} exhausted "
+            "before the depth fixpoint; layers may be lower bounds",
+            stacklevel=2,
+        )
     release(comp)
     release(ce)
     return depth.select(

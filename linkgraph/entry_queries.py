@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph
@@ -477,15 +477,13 @@ def q_closeness_topk(spark, sf_dir):
     out, _ = batched_closeness(
         g, srcs, batch_width=CLOSENESS_TOPK_BATCH, max_levels=BFS_MAX_LEVELS + 4
     )
-    ranked = out.select(
-        "src", "r", "s", F.round("c", 6).alias("c")
-    ).withColumn(
-        "rn",
-        F.row_number().over(
-            Window.orderBy(F.col("c").desc(), F.col("src").asc())
-        ),
+    # (c, src) is a total order, so a top-k sort (no single-partition
+    # window) gives the same ten rows
+    return (
+        out.select("src", "r", "s", F.round("c", 6).alias("c"))
+        .orderBy(F.col("c").desc(), F.col("src").asc())
+        .limit(10)
     )
-    return ranked.where(F.col("rn") <= 10).select("src", "r", "s", "c")
 
 
 SQL_CLOSENESS_TOPK = f"""

@@ -142,60 +142,6 @@ def relabel_pairs(
     )
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def iteration_plan(spark):
-    """Planning profile for driver-controlled iteration loops (PR/CC/LPA/
-    MS-BFS): AQE OFF for the loop body, restored on exit.
-
-    The per-iteration plan is static and repetitive; AQE's value is runtime
-    re-planning of unknown shapes, and its cost is an extra driver round of
-    stage materialization per query — measured ~1-2s per iteration, which
-    dominates wall-time once the compute per iteration drops below a few
-    seconds per core (and at sandbox bench scale becomes THE floor that
-    caps scaling efficiency).  Skew inside the loop is handled explicitly
-    (byte-gated broadcast in LinkGraph.expand, salted hub buckets via
-    enable_salting), so the AQE skew-join backstop is not load-bearing
-    here.  Derivation / ad-hoc queries keep AQE on (session default).
-
-    Also prefers shuffled-hash over sort-merge joins inside the loop: the
-    frontier/state side is a bounded hash map (at most |V| rows), and SHJ
-    streams the co-partitioned edge side without the per-iteration sort
-    SMJ would insert.  The planner picks SHJ only for a build side it
-    estimates small, so the preference holds past the first iteration
-    only because `linkgraph.iterate.fixpoint` re-roots every state on its
-    measured size (inherited statistics compound and read as too large).
-
-    Constraint propagation is OFF in the loop: Catalyst's
-    ``getAllValidConstraints`` substitutes every Project alias into every
-    inherited constraint, and for wide multi-lane state Projects (k sketch
-    limbs each aliased from an expression over the SAME join output, plus
-    a sum column referencing all k of them — the anf/hyperball shape) the
-    alias-combination set grows combinatorially in k.  Measured on a
-    120-vertex fixture: planning ONE hyperball round at k=16 took 8.7s,
-    k=24 OOMed an 8 GiB driver heap inside ExpressionSet.map; with the
-    flag off, the full k=64 × 10-round job runs in 28s end to end.  The
-    constraints only add redundant inferred IsNotNull/filter predicates on
-    hand-shaped plans, so nothing is lost inside the loop; ad-hoc queries
-    keep the session default.
-    """
-    conf = spark.conf
-    old_aqe = conf.get("spark.sql.adaptive.enabled")
-    old_smj = conf.get("spark.sql.join.preferSortMergeJoin", "true")
-    old_cp = conf.get("spark.sql.constraintPropagation.enabled", "true")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    conf.set("spark.sql.constraintPropagation.enabled", "false")
-    try:
-        yield
-    finally:
-        conf.set("spark.sql.adaptive.enabled", old_aqe)
-        conf.set("spark.sql.join.preferSortMergeJoin", old_smj)
-        conf.set("spark.sql.constraintPropagation.enabled", old_cp)
-
-
 class LinkGraph:
     def __init__(
         self,

@@ -3,10 +3,17 @@
 PageRank, CC (min-label and two-phase), LPA, label spreading, Katz,
 eigenvector centrality, weighted SSSP, MS-BFS's level loop, WL refinement
 (`wl_refine`, `wl_anonymity`), `fiedler_partition`, `coreness`,
-`hitting_time`, SCC's label propagation and trim, Louvain's local moves,
-`maximal_matching`, `densest_subgraph_curve`, `k_truss` and `k_core` all
-run the same loop; only the update (`step`), the per-iteration statistics
-(`probe`) and the stop test (`done`) differ.  `fixpoint` owns the rest:
+`hitting_time`, SCC's label propagation and trim, `condensation_layers`,
+the bow-tie reachability levels, Louvain's local moves,
+`maximal_matching`, `densest_subgraph_curve`, `k_truss`, `k_core`,
+Brandes' forward and backward passes (`betweenness`,
+`edge_betweenness`), the ANF / HyperBall sketch round, `bipartite_check`,
+`st_distance`, `earliest_arrival`, `maximal_independent_set`,
+`greedy_coloring`, `ppr_forward_push`, `salsa`, `hits` and
+`minimum_spanning_forest` (its Borůvka rounds and pointer jumps) all run
+the same loop; only the update (`step`), the per-iteration statistics
+(`probe`) and the stop test (`done`) differ.  `fixpoint` is the one
+caller of `iteration_plan`, and owns the rest:
 
 * **One fused Spark job per iteration.**  `step` returns the next state as
   an unmaterialized plan over the current one; `fixpoint` truncates it with
@@ -38,13 +45,63 @@ run the same loop; only the update (`step`), the per-iteration statistics
 from __future__ import annotations
 
 import itertools
+from contextlib import contextmanager
 from typing import Callable
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import iteration_plan
+
+@contextmanager
+def iteration_plan(spark):
+    """Planning profile for `fixpoint`'s loops: AQE OFF for the loop body,
+    restored on exit.
+
+    The per-iteration plan is static and repetitive; AQE's value is runtime
+    re-planning of unknown shapes, and its cost is an extra driver round of
+    stage materialization per query — measured ~1-2s per iteration, which
+    dominates wall-time once the compute per iteration drops below a few
+    seconds per core (and at sandbox bench scale becomes THE floor that
+    caps scaling efficiency).  Skew inside the loop is handled explicitly
+    (byte-gated broadcast in LinkGraph.expand, salted hub buckets via
+    enable_salting), so the AQE skew-join backstop is not load-bearing
+    here.  Derivation / ad-hoc queries keep AQE on (session default).
+
+    Also prefers shuffled-hash over sort-merge joins inside the loop: the
+    frontier/state side is a bounded hash map (at most |V| rows), and SHJ
+    streams the co-partitioned edge side without the per-iteration sort
+    SMJ would insert.  The planner picks SHJ only for a build side it
+    estimates small, so the preference holds past the first iteration
+    only because `fixpoint` re-roots every state on its measured size
+    (inherited statistics compound and read as too large).
+
+    Constraint propagation is OFF in the loop: Catalyst's
+    ``getAllValidConstraints`` substitutes every Project alias into every
+    inherited constraint, and for wide multi-lane state Projects (k sketch
+    limbs each aliased from an expression over the SAME join output, plus
+    a sum column referencing all k of them — the anf/hyperball shape) the
+    alias-combination set grows combinatorially in k.  Measured on a
+    120-vertex fixture: planning ONE hyperball round at k=16 took 8.7s,
+    k=24 OOMed an 8 GiB driver heap inside ExpressionSet.map; with the
+    flag off, the full k=64 × 10-round job runs in 28s end to end.  The
+    constraints only add redundant inferred IsNotNull/filter predicates on
+    hand-shaped plans, so nothing is lost inside the loop; ad-hoc queries
+    keep the session default.
+    """
+    conf = spark.conf
+    old_aqe = conf.get("spark.sql.adaptive.enabled")
+    old_smj = conf.get("spark.sql.join.preferSortMergeJoin", "true")
+    old_cp = conf.get("spark.sql.constraintPropagation.enabled", "true")
+    conf.set("spark.sql.adaptive.enabled", "false")
+    conf.set("spark.sql.join.preferSortMergeJoin", "false")
+    conf.set("spark.sql.constraintPropagation.enabled", "false")
+    try:
+        yield
+    finally:
+        conf.set("spark.sql.adaptive.enabled", old_aqe)
+        conf.set("spark.sql.join.preferSortMergeJoin", old_smj)
+        conf.set("spark.sql.constraintPropagation.enabled", old_cp)
 
 
 def fixpoint(

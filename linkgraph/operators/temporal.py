@@ -32,8 +32,9 @@ per round, only vertices whose arrival IMPROVED last round re-send
 (arrivals are monotone non-increasing and a smaller arrival only ever
 ADMITS more edges, so contributions from unchanged vertices are already
 final); one join frontier⋈edges on src + one MIN-per-dst aggregate per
-round; state is (vid, arr) — O(|V|) longs, localCheckpointed per round
-to keep the iterative plan flat.
+round; state is (vid, arr, improved) — O(|V|) longs, one
+`linkgraph.iterate.fixpoint` iteration a round (one fused job, lineage cut
+every round).
 """
 
 from __future__ import annotations
@@ -41,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import iteration_plan
+from linkgraph.iterate import fixpoint
 
 
 def temporal_contact_edges(
@@ -105,55 +106,45 @@ def earliest_arrival(
     Runs exactly `rounds` relaxation rounds (or stops early at the
     fixpoint, after which further rounds are identity — the same
     fixed-budget contract the LPA/MIS oracles use)."""
-    spark = tedges.sparkSession
     e = tedges.select(
         F.col("src").cast("long").alias("src"),
         F.col("dst").cast("long").alias("dst"),
         F.col("t").cast("long").alias("t"),
     ).repartition("src")
     e = e.persist()
-    arr = (
+
+    def step(state: DataFrame, _m: dict) -> DataFrame:
+        cand = (
+            e.join(state.where(F.col("improved")).select(F.col("vid").alias("src"), "arr"), "src")
+            .where(F.col("t") >= F.col("arr"))
+            .groupBy("dst")
+            .agg(F.min("t").alias("cand"))
+        )
+        return (
+            state.alias("s")
+            .join(cand.alias("c"), F.col("s.vid") == F.col("c.dst"), "full_outer")
+            .select(
+                F.coalesce(F.col("s.vid"), F.col("c.dst")).alias("vid"),
+                F.least(F.col("s.arr"), F.col("c.cand")).alias("arr"),
+                (F.col("s.arr").isNull() | (F.col("c.cand") < F.col("s.arr"))).alias(
+                    "improved"
+                ),
+            )
+        )
+
+    def frontier(state: DataFrame, _m: dict | None = None) -> dict:
+        return {"improved": state.where(F.col("improved")).count()}
+
+    arr, _, _ = fixpoint(
         sources.select(F.col("vid").cast("long").alias("vid"))
         .distinct()
-        .withColumn("arr", F.lit(-1).cast("long"))
-        .localCheckpoint(eager=True)
+        .select("vid", F.lit(-1).cast("long").alias("arr"), F.lit(True).alias("improved")),
+        step,
+        frontier,
+        lambda m, _: m["improved"] == 0,
+        rounds,
+        seed_metrics=frontier,
     )
-    frontier = arr
-    n_front = frontier.count()
-    with iteration_plan(spark):
-        for _ in range(rounds):
-            if n_front == 0:
-                break
-            cand = (
-                e.join(frontier.withColumnRenamed("vid", "src"), "src")
-                .where(F.col("t") >= F.col("arr"))
-                .groupBy("dst")
-                .agg(F.min("t").alias("cand"))
-            )
-            improved = (
-                cand.join(arr, cand["dst"] == arr["vid"], "left")
-                .where(F.col("vid").isNull() | (F.col("cand") < F.col("arr")))
-                .select(F.col("dst").alias("vid"), F.col("cand").alias("arr"))
-                .localCheckpoint(eager=True)
-            )
-            n_front = improved.count()
-            if n_front == 0:
-                break
-            arr = (
-                arr.join(improved.withColumnRenamed("arr", "na"), "vid", "outer")
-                .select(
-                    "vid",
-                    F.when(
-                        F.col("na").isNotNull()
-                        & (F.col("arr").isNull() | (F.col("na") < F.col("arr"))),
-                        F.col("na"),
-                    )
-                    .otherwise(F.col("arr"))
-                    .alias("arr"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            frontier = improved
     e.unpersist()
     return arr.select(
         F.col("vid").cast("long").alias("vid"),

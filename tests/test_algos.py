@@ -232,6 +232,7 @@ def test_one_job_per_iteration(spark, er):
     probe): two more iterations cost exactly two more jobs.  The byte gate
     is switched off so expand shuffles instead of broadcasting the
     messages — a broadcast build is a collect job of its own."""
+    from linkgraph.algos.bipartite import bipartite_check
     from linkgraph.algos.katz import katz
 
     key = "spark.sql.autoBroadcastJoinThreshold"
@@ -241,6 +242,7 @@ def test_one_job_per_iteration(spark, er):
         for name, kernel in (
             ("pagerank", lambda k: pagerank(er, tol=0.0, max_iter=k)),
             ("katz", lambda k: katz(er, tol=0.0, max_iter=k)),
+            ("bipartite_check", lambda k: bipartite_check(er, max_levels=k)),
         ):
             kernel(1)  # warm: cached degree table and vertex count
             short = _jobs_in_group(spark, f"{name}-3", lambda: kernel(3))
@@ -515,6 +517,11 @@ def test_coreness_monotone_rounds(er):
         "hyperball_harmonic",
         "minimum_spanning_forest",
         "ppr_forward_push",
+        "betweenness",
+        "edge_betweenness",
+        "bipartite_check",
+        "st_distance",
+        "earliest_arrival",
     ],
 )
 def test_ported_loops_release_state(spark, er, kernel):
@@ -523,6 +530,9 @@ def test_ported_loops_release_state(spark, er, kernel):
     driver-collected rows; one per round for those that return the union
     of per-round parts).  Every superseded round's state is released."""
     from linkgraph.algos.anf import anf_full, hyperball_harmonic
+    from linkgraph.algos.betweenness import betweenness, edge_betweenness
+    from linkgraph.algos.bidir import st_distance
+    from linkgraph.algos.bipartite import bipartite_check
     from linkgraph.algos.coloring import greedy_coloring
     from linkgraph.algos.densest import densest_subgraph_curve
     from linkgraph.algos.hitting import hitting_time
@@ -538,8 +548,16 @@ def test_ported_loops_release_state(spark, er, kernel):
     from linkgraph.algos.scc import condensation_layers, strongly_connected_components
     from linkgraph.algos.spectral import fiedler_partition
     from linkgraph.algos.wl import wl_anonymity, wl_refine
+    from linkgraph.operators.temporal import earliest_arrival
 
     weighted = er.edges.withColumn("w", (F.col("src") + F.col("dst")) % 7 + 1)
+    timed = er.edges.withColumn("t", (F.col("src") * F.col("dst")) % 11)
+    adj, dist, queue = _adj(), {0: 0}, [0]
+    for v in queue:
+        for w in sorted(adj[v] - dist.keys()):
+            dist[w] = dist[v] + 1
+            queue.append(w)
+    far = max(dist, key=lambda v: (dist[v], v))
     run, kept = {
         "wl_refine": (lambda: wl_refine(er, rounds=3), 1),
         "wl_anonymity": (lambda: wl_anonymity(er, rounds=3), 0),
@@ -566,6 +584,14 @@ def test_ported_loops_release_state(spark, er, kernel):
         "hyperball_harmonic": (lambda: hyperball_harmonic(er, k=4, max_h=3), 1),
         "minimum_spanning_forest": (lambda: minimum_spanning_forest(weighted, rounds=3), 3),
         "ppr_forward_push": (lambda: ppr_forward_push(er, [0, 1], rounds=3), 1),
+        "betweenness": (lambda: betweenness(er, [0, 1, 2], max_levels=4), 1),
+        "edge_betweenness": (lambda: edge_betweenness(er, [0, 1, 2], max_levels=4), 1),
+        "bipartite_check": (lambda: bipartite_check(er), 2),
+        "st_distance": (lambda: st_distance(er, 0, far), 0),
+        "earliest_arrival": (
+            lambda: earliest_arrival(timed, er.vertices().where("vid < 3"), rounds=4),
+            1,
+        ),
     }[kernel]
     run()
     persistent = spark.sparkContext._jsc.getPersistentRDDs
@@ -602,7 +628,7 @@ def test_fixpoint_states_carry_measured_statistics(spark):
 
 
 def test_pagerank_iterations_keep_shuffled_hash_join(er, monkeypatch):
-    """iteration_plan prefers shuffled-hash joins; with inherited
+    """iterate.iteration_plan prefers shuffled-hash joins; with inherited
     statistics the planner fell back to sort-merge from iteration 2 on.
     At the default threshold the planner broadcasts this 150-vertex state;
     a 4 KiB threshold still broadcasts the messages (150 rows of 24 bytes)
@@ -761,6 +787,24 @@ def test_no_python_kernels_in_algos():
         "Python kernels in linkgraph/algos/ (~250 ms of worker CPU per task):\n"
         + "\n".join(hits)
     )
+
+
+def test_loops_run_on_fixpoint():
+    """Every iteration loop runs on linkgraph.iterate.fixpoint, the one
+    place that enters iteration_plan (the loop's plan profile) and owns
+    truncation, measured statistics and state release.  A loop that must
+    stay hand-written goes on an allowlist here, with its measured reason."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "linkgraph"
+    hits = [
+        f"{path.relative_to(root)}:{no}: {line.strip()}"
+        for path in sorted(root.rglob("*.py"))
+        if path.name != "iterate.py"
+        for no, line in enumerate(path.read_text().splitlines(), 1)
+        if "iteration_plan(" in line
+    ]
+    assert not hits, "hand-written iteration loops:\n" + "\n".join(hits)
 
 
 def test_no_parquet_round_trips_in_algos():

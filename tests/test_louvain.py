@@ -156,3 +156,18 @@ def test_louvain_requires_symmetric(spark):
     df = edges_df(spark, [(0, 1)])
     with pytest.raises(ValueError):
         louvain_local_move(LinkGraph(df, symmetric=False))
+
+
+def test_louvain_fixpoint_converges_without_warning(spark):
+    """On er_edges(150, 0.03) the parity schedule moves its last vertex in
+    round 33 (one or two movers a round from round 19 on, each waiting for
+    its coin), so the fixpoint mode needs 34 rounds: the budget must cover
+    that without a non-convergence warning."""
+    import warnings
+
+    g = LinkGraph.from_undirected(edges_df(spark, er_edges(150, 0.03)), num_partitions=8)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        labels = louvain_local_move(g, rounds=None)
+    assert not [w for w in caught if "louvain" in str(w.message)]
+    assert labels.count() == g.num_vertices()
