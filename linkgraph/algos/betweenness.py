@@ -38,18 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, broadcast_threshold
+from linkgraph.graph import LinkGraph, fits_broadcast
 from linkgraph.iterate import fixpoint, release
-
-
-def _bc(df: DataFrame, est_rows: int, ncols: int, thresh: int):
-    """Byte-gated broadcast (LinkGraph.expand's J1 rule) driven by the
-    MEASURED per-level row count — a dense middle level is Θ(|roots|·|V|)
-    rows and must NOT broadcast.  The planner sees only the whole state's
-    size behind a level filter, so the gate decides for the level frames."""
-    if 0 < thresh and est_rows * (16 + 12 * ncols) < thresh:
-        return F.broadcast(df)
-    return df
 
 
 def _brandes(
@@ -60,7 +50,6 @@ def _brandes(
     (0 at the roots, whose δ neither estimator reads) — and its row
     count."""
     spark = graph.spark
-    thresh = broadcast_threshold(spark)
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     def forward(state: DataFrame, m: dict) -> DataFrame:
@@ -103,28 +92,27 @@ def _brandes(
     def backward(state: DataFrame, m: dict) -> DataFrame:
         d = m["level"] - 1
         u = state.where(F.col("dist") == d)
-        w = _bc(
-            state.where(F.col("dist") == d + 1).select("root", "vid", "sigma", "delta"),
-            level_rows[d + 1],
-            4,
-            thresh,
-        )
+        # the planner sees only the whole state's size behind a level
+        # filter, so the level frames are gated on the MEASURED level rows:
+        # a dense middle level is Θ(|roots|·|V|) rows and must not broadcast
+        w = state.where(F.col("dist") == d + 1).select("root", "vid", "sigma", "delta")
+        if fits_broadcast(w, level_rows[d + 1]):
+            w = F.broadcast(w)
         succ = graph.expand(
             u.select(F.col("vid").alias("src"), F.col("root").alias("uroot"),
                      F.col("sigma").alias("usigma")),
             est_rows=level_rows[d],
         )
-        contrib = _bc(
+        contrib = (
             succ.join(w, (succ.uroot == w.root) & (succ.dst == w.vid))
             .groupBy("uroot", "src")
             .agg(
                 F.sum(F.col("usigma") / F.col("sigma") * (F.lit(1.0) + F.col("delta")))
                 .alias("d")
-            ),
-            level_rows[d],
-            3,
-            thresh,
+            )
         )
+        if fits_broadcast(contrib, level_rows[d]):
+            contrib = F.broadcast(contrib)
         filled = u.join(
             contrib, (u.root == contrib.uroot) & (u.vid == contrib.src), "left"
         ).select("root", "vid", "dist", "sigma", F.coalesce("d", F.lit(0.0)).alias("delta"))

@@ -22,7 +22,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph
+from linkgraph.graph import LinkGraph, fits_broadcast
 from linkgraph.iterate import count_changed, fixpoint
 
 
@@ -40,21 +40,15 @@ def connected_components(
 
     Exact at convergence; warns if max_iter exhausts first."""
     n = graph.num_vertices()
-    from linkgraph.graph import broadcast_threshold
 
     # the neighbor-min aggregate and the shortcut mapping are both ≤|V|
-    # rows of two longs: byte-gate broadcasts (J1 rule) so the
-    # checkpointed label state never re-shuffles per round; past the gate
-    # (10^9 vertices) the plain shuffle joins return unchanged
-    _thresh = broadcast_threshold(graph.spark)
-    _bc_ok = 0 < _thresh and n * (16 + 12 * 2) < _thresh
-
+    # rows: broadcast, the checkpointed label state never re-shuffles
     def step(comp: DataFrame, _metrics: dict) -> DataFrame:
         labels = comp.select(F.col("vid").alias("src"), F.col("comp").alias("c"))
         nbr_min = graph.expand(labels, est_rows=n).groupBy("dst").agg(
             F.min("c").alias("nc")
         )
-        if _bc_ok:
+        if fits_broadcast(nbr_min, n):
             nbr_min = F.broadcast(nbr_min)
         new_comp = (
             comp.alias("st")
@@ -73,7 +67,7 @@ def connected_components(
             # parent mapping; one extra equi-join per round buys O(log d)
             # total rounds instead of O(d).
             mapping = comp.select(F.col("vid").alias("comp"), F.col("comp").alias("cc"))
-            if _bc_ok:
+            if fits_broadcast(mapping, n):
                 mapping = F.broadcast(mapping)
             new_comp = (
                 new_comp.alias("nc2")
@@ -138,7 +132,6 @@ def connected_components_two_phase(graph: LinkGraph, max_rounds: int = 64) -> Da
     Returns (vid, comp) with comp = min vid of the component — the same
     contract as `connected_components`, hence the shared oracle.
     """
-    spark = graph.spark
     # parent-pointer edge set, child > parent, seeded from the symmetric
     # closure (LinkGraph keeps both directions; orient once, dedup)
     seed = (
@@ -159,16 +152,9 @@ def connected_components_two_phase(graph: LinkGraph, max_rounds: int = 64) -> Da
         ).first()
         return {"sig": (int(row["n"] or 0), int(row["h"] or 0))}
 
-    # per-round min tables are ≤|V| rows of two longs — byte-gate their
-    # broadcasts (J1 rule) so the edge set never re-shuffles for the
-    # re-point joins; past the gate the shuffle joins return unchanged
-    from linkgraph.graph import broadcast_threshold
-
-    _thresh = broadcast_threshold(spark)
-    _bc_ok = 0 < _thresh and graph.num_vertices() * (16 + 12 * 2) < _thresh
-
-    def _bc(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if _bc_ok else df
+    # per-round min tables are ≤|V| rows: broadcast, the edge set never
+    # re-shuffles for the re-point joins
+    n = graph.num_vertices()
 
     def step(e: DataFrame, _metrics: dict) -> DataFrame:
         # ---- large-star over the symmetric view: neighbors larger
@@ -189,7 +175,7 @@ def connected_components_two_phase(graph: LinkGraph, max_rounds: int = 64) -> Da
         # round (A/B: 7.5s → 6.5s on the sf0.1 bench entry).
         e = (
             e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            .join(_bc(mins), "u")
+            .join(F.broadcast(mins) if fits_broadcast(mins, n) else mins, "u")
             .where(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
@@ -197,7 +183,7 @@ def connected_components_two_phase(graph: LinkGraph, max_rounds: int = 64) -> Da
         # the center's min neighbor (edges are already child>parent)
         smins = e.groupBy("u").agg(F.min("v").alias("m"))
         return (
-            e.join(_bc(smins), "u")
+            e.join(F.broadcast(smins) if fits_broadcast(smins, n) else smins, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))  # sibling -> min
             .where(F.col("u") != F.col("v"))
             .unionByName(smins.select(F.col("u"), F.col("m").alias("v")))  # center -> min

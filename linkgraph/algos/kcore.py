@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from linkgraph.graph import LinkGraph, broadcast_threshold
+from linkgraph.graph import LinkGraph, fits_broadcast
 from linkgraph.iterate import count_changed, fixpoint
 
 
@@ -32,13 +32,11 @@ def k_core(graph: LinkGraph, k: int, rounds: int | None = None) -> DataFrame:
     if k < 0:
         raise ValueError("k must be >= 0")
     edges = graph.edges.select("src", "dst")
-    thresh = broadcast_threshold(graph.spark)
 
     def induced(keep: DataFrame, survivors: int) -> DataFrame:
-        # byte-gated broadcast of the survivor list (J1 rule, on the measured
-        # survivor count): both semi-joins become map-side filters over the
-        # edge cache; past the gate they shuffle
-        if 0 < thresh and survivors * (16 + 12) < thresh:
+        # a broadcast survivor list makes both semi-joins map-side filters
+        # over the edge cache
+        if fits_broadcast(keep, survivors):
             keep = F.broadcast(keep)
         return (
             edges.join(keep, edges.src == F.col("vid"), "left_semi")

@@ -87,18 +87,9 @@ def _local_move_rounds(
         vertex, so the two per-round |V|-row wdeg joins (community
         totals, per-vertex gain rows) collapse into the state itself;
       * the small per-round tables (state-as-dim, ct, best) are
-        byte-gated broadcasts (LinkGraph.expand's J1 rule): below the
-        session broadcast threshold the kv-sized table never re-shuffles
-        for its dimension joins; past the gate (10^9 vertices) the plain
-        shuffle joins return unchanged."""
-    from linkgraph.graph import broadcast_threshold
-
-    thresh = broadcast_threshold(spark)
-
-    def bc(df, est_rows, ncols):
-        if 0 < thresh and est_rows * (16 + 12 * ncols) < thresh:
-            return F.broadcast(df)
-        return df
+        broadcast when `fits_broadcast` passes them at |V| rows, so the
+        kv-sized table never re-shuffles for its dimension joins."""
+    from linkgraph.graph import fits_broadcast
 
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     m_lit = F.lit(int(m_edges)).cast("long")
@@ -142,24 +133,14 @@ def _local_move_rounds(
         #   base     = M*k_va - d_v*(dc_a - d_v)  (own-community term)
         # so the argmax over candidates and the own-row base both fall
         # out of a single groupBy — no candidate/own self-join.
-        rows = (
-            kv.join(
-                bc(
-                    labels.select(
-                        F.col("vid").alias("dst"),
-                        F.col("label").alias("a"),
-                        "deg",
-                    ),
-                    n_vertices,
-                    3,
-                ),
-                "dst",
-            )
-            .join(
-                bc(ct.select(F.col("label").alias("l"), "dc"), n_vertices, 2),
-                "l",
-            )
-        )
+        dim = labels.select(F.col("vid").alias("dst"), F.col("label").alias("a"), "deg")
+        ct_l = ct.select(F.col("label").alias("l"), "dc")
+        ct_a = ct.select(F.col("label").alias("a"), F.col("dc").alias("dca"))
+        if fits_broadcast(dim, n_vertices):
+            dim = F.broadcast(dim)
+        if fits_broadcast(ct_l, n_vertices):
+            ct_l, ct_a = F.broadcast(ct_l), F.broadcast(ct_a)
+        rows = kv.join(dim, "dst").join(ct_l, "l")
         is_own = F.col("l") == F.col("a")
         score = m_lit * F.col("k") - F.col("deg") * F.col("dc")
         per_v = rows.groupBy(
@@ -172,14 +153,7 @@ def _local_move_rounds(
         )
         # dc_a for vertices with no internal edge: join ct on a (the
         # community always exists in ct — v itself contributes deg).
-        per_v = per_v.join(
-            bc(
-                ct.select(F.col("label").alias("a"), F.col("dc").alias("dca")),
-                n_vertices,
-                2,
-            ),
-            "a",
-        ).select(
+        per_v = per_v.join(ct_a, "a").select(
             "v",
             "a",
             F.col("mb.l").alias("nb"),
@@ -191,13 +165,11 @@ def _local_move_rounds(
         best = per_v.where(
             F.col("nb").isNotNull() & (F.col("gain") > 0)
         ).select("v", "nb")
+        if fits_broadcast(best, n_vertices):
+            best = F.broadcast(best)
         return (
             labels.alias("st")
-            .join(
-                bc(best.alias("bs"), n_vertices, 2),
-                F.col("st.vid") == F.col("bs.v"),
-                "left",
-            )
+            .join(best.alias("bs"), F.col("st.vid") == F.col("bs.v"), "left")
             .select(
                 F.col("st.vid").alias("vid"),
                 F.when(

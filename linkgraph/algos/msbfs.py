@@ -19,7 +19,11 @@ Spark-native re-expression of [MSBFS15] Alg. 2/3 (SURVEY.md §2.9 K1/K2):
   job per level, and the driver owns state release, snapshot and resume.
 * direction/strategy switch (K3 analog): the frontier side is broadcast
   when small (first/last levels), shuffled-hash otherwise; the edge table
-  never re-shuffles (partitioned by src at build).
+  never re-shuffles (partitioned by src at build).  Late dense levels
+  filter the edges or messages against the open set, the closed set or a
+  closed-set bitmap.  Every one of these broadcasts passes
+  `graph.fits_broadcast`, so the session broadcast threshold is the one
+  budget: at -1 no level broadcasts and every level runs as push.
 
 The OR-aggregate is relational (groupBy(dst).agg(bit_or(limb)...)).  A
 numpy grouped-pandas variant (bitwise_or.reduceat per dst bucket) lost
@@ -37,7 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, broadcast_threshold, parse_bytes
+from linkgraph.graph import LinkGraph, fits_broadcast
 from linkgraph.iterate import fixpoint, release
 from linkgraph.operators.bitset import limb_names, pack_sources
 from linkgraph.schemas import NLIMBS, bfs_state_schema
@@ -161,13 +165,12 @@ def _closed_limb_table(state: DataFrame, closed_pred: str) -> DataFrame:
     into a (idx, limb) table — limb i holds the closed-bits of vertices
     [64i, 64i+64).
 
-    The broadcast-set strategies cap out at autoBroadcastJoinThreshold rows
-    of (dst) keys; the limb table is 64 vertices per row (1 bit vs ~24
-    bytes per closed vertex), so the mid-range regime — open AND closed
-    sets both beyond the row-broadcast threshold — still broadcasts.  The
-    table has (max_vid >> 6) + 1 limbs of 8 bytes at most, gated on
-    spark.linkgraph.msbfs.bitmapMaxBytes: the default 128 MiB is 2^24 limbs,
-    which covers vids below 2^30 ≈ 1.07×10^9.  Built distributedly as one
+    The broadcast-set strategies need the open or closed (dst) key set to
+    pass `fits_broadcast`; the limb table packs 64 vertices a row, so the
+    mid-range regime — open AND closed sets both too large — still
+    broadcasts.  The table has at most (max_vid >> 6) + 1 rows and passes
+    the same gate at that count: at the 32 MiB session default (40 bytes a
+    row) that covers max_vid below about 53.7M.  Built distributedly as one
     bit_or aggregate of 1 << (vid & 63) on vid >> 6: the partial aggregate
     merges each task's vertices before the shuffle, so at most (max_vid/64)
     narrow rows per task move, and only NONZERO limbs ever exist.  The
@@ -234,12 +237,9 @@ def msbfs(
     closed_pred = _closed_pred(nsrc)
     deg = None
     if track_teps:
-        # bench-only instrumentation; byte-gated so instrumented runs at
-        # 10^9 vertices degrade to a shuffled join instead of an
-        # unconditional |V|-row broadcast
+        # bench-only instrumentation
         deg = graph.degrees()
-        thresh = broadcast_threshold(spark)
-        if 0 < thresh and n_vertices * 16 < thresh:
+        if fits_broadcast(deg, n_vertices):
             deg = F.broadcast(deg)
     strategy = "push"  # the K3 choice of the level `step` last planned
 
@@ -296,12 +296,11 @@ def msbfs(
         #   2. closed_anti — the same map-side shrink when instead the
         #      CLOSED set is broadcastable (anti keeps never-seen vertices'
         #      edges, so state coverage doesn't matter).
-        #   3. bitmap — neither set clears the row-broadcast threshold: the
-        #      closed set packs into a (idx, limb) bitmap table
-        #      (_closed_limb_table) broadcast-joined onto the messages on
-        #      dst>>6, whose bit test drops closed-dst messages before the
-        #      dst shuffle.  Past spark.linkgraph.msbfs.bitmapMaxBytes the
-        #      level runs as push.
+        #   3. bitmap — neither set is broadcastable: the closed set packs
+        #      into a (idx, limb) bitmap table (_closed_limb_table)
+        #      broadcast-joined onto the messages on dst>>6, whose bit test
+        #      drops closed-dst messages before the dst shuffle.  When the
+        #      bitmap is not broadcastable either, the level runs as push.
         nonlocal strategy
         strategy, edges_open, msg_bitmap = "push", None, None
         closed_rows, state_rows = m["closed_rows"], m["state_rows"]
@@ -311,25 +310,25 @@ def msbfs(
             and closed_rows
             and closed_rows / float(n_vertices) >= bottom_up_threshold
         ):
-            thresh = broadcast_threshold(spark)
-            open_rows = max(state_rows - closed_rows, 0)
-            if state_rows == n_vertices and 0 < thresh and open_rows * 24 < thresh:
-                open_dst = state.where(f"not ({closed_pred})").select(
-                    F.col("vid").alias("dst")
-                )
+            open_dst = state.where(f"not ({closed_pred})").select(
+                F.col("vid").alias("dst")
+            )
+            closed_dst = state.where(closed_pred).select(F.col("vid").alias("dst"))
+            if state_rows == n_vertices and fits_broadcast(
+                open_dst, max(state_rows - closed_rows, 0)
+            ):
                 edges_open = graph.edges.join(F.broadcast(open_dst), "dst", "left_semi")
                 strategy = "open_semi"
-            elif 0 < thresh and closed_rows * 24 < thresh:
-                closed_dst = state.where(closed_pred).select(F.col("vid").alias("dst"))
+            elif fits_broadcast(closed_dst, closed_rows):
                 edges_open = graph.edges.join(
                     F.broadcast(closed_dst), "dst", "left_anti"
                 )
                 strategy = "closed_anti"
-            elif ((graph.max_vid() >> 6) + 1) * 8 <= parse_bytes(
-                spark.conf.get("spark.linkgraph.msbfs.bitmapMaxBytes", "128m")
+            elif fits_broadcast(
+                bitmap := _closed_limb_table(state, closed_pred),
+                (graph.max_vid() >> 6) + 1,
             ):
-                msg_bitmap = _closed_limb_table(state, closed_pred)
-                strategy = "bitmap"
+                msg_bitmap, strategy = bitmap, "bitmap"
 
         # -- expand: frontier ⋈ edges, OR-aggregate by dst (ANP).
         # Strategy dispatch (broadcast / salted / shuffle) via graph.expand.

@@ -43,6 +43,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linkgraph.graph import fits_broadcast
 from linkgraph.iterate import count_changed, fixpoint, release
 
 
@@ -75,18 +76,6 @@ def minimum_spanning_forest(
         "vid", F.col("vid").alias("comp")
     )
     n_vertices = comp.count()
-    from linkgraph.graph import broadcast_threshold
-
-    # byte-gated label broadcast (LinkGraph.expand's J1 rule): the comp
-    # table is ≤|V| rows of two longs and SHRINKS every round; when its
-    # estimated bytes clear autoBroadcastJoinThreshold, broadcasting both
-    # label joins keeps the cached edge table UNSHUFFLED all round
-    # (measured: the dst-side label join otherwise re-exchanges all |E|
-    # rows by dst every round).  Past the gate (10^9-vertex graphs) it
-    # falls back to the plain shuffle join exactly like expand.
-    bc_ok = 0 < broadcast_threshold(spark) and (
-        n_vertices * (16 + 12 * 2) < broadcast_threshold(spark)
-    )
     forest_parts: list[DataFrame] = []
     mappings: list[DataFrame] = []
 
@@ -96,7 +85,10 @@ def minimum_spanning_forest(
         no-cross-edges fixpoint."""
         cs = comp.select(F.col("vid").alias("src"), F.col("comp").alias("csrc"))
         cd = comp.select(F.col("vid").alias("dst"), F.col("comp").alias("cdst"))
-        if bc_ok:
+        # broadcast labels keep the cached edge table unshuffled all round
+        # (measured: the dst-side label join otherwise re-exchanges all |E|
+        # rows by dst every round)
+        if fits_broadcast(cs, n_vertices):
             cs, cd = F.broadcast(cs), F.broadcast(cd)
         prop = (
             e.join(cs, "src")
@@ -122,11 +114,11 @@ def minimum_spanning_forest(
 
     def step(comp: DataFrame, m: dict) -> DataFrame:
         forest_parts.append(m["prop"])
-        mapping = _contract_pseudoforest(m["prop"], bc_small=bc_ok)
+        mapping = _contract_pseudoforest(m["prop"], m["proposals"])
         mappings.append(mapping)
-        # ≤|comps|-row mapping under the J1 byte gate: the |V|-row comp
-        # state never re-shuffles for the relabel join
-        return comp.join(F.broadcast(mapping) if bc_ok else mapping, "comp", "left").select(
+        if fits_broadcast(mapping, m["proposals"]):
+            mapping = F.broadcast(mapping)
+        return comp.join(mapping, "comp", "left").select(
             "vid", F.coalesce(F.col("nc"), F.col("comp")).alias("comp")
         )
 
@@ -160,7 +152,7 @@ def minimum_spanning_forest(
 
 
 def _contract_pseudoforest(
-    prop: DataFrame, max_jumps: int = 40, bc_small: bool = False
+    prop: DataFrame, proposals: int, max_jumps: int = 40
 ) -> DataFrame:
     """(comp, nc) mapping for the proposal functional graph: each
     component's parent is the target of its chosen edge; the one mutual
@@ -168,14 +160,14 @@ def _contract_pseudoforest(
     jumping then converges every node to its cluster root.  Each jump is
     ONE ≤|comps|-row self-join — no edge table, no aggregates.
 
-    bc_small: the caller's J1 byte gate — when the component table fits
-    the broadcast threshold, the mutual-pair probe and every jump's hop
-    side broadcast, so these tiny per-round jobs carry zero exchanges
-    (they were pure scheduling overhead in the r6 stage profile); past
-    the gate the shuffle self-joins return unchanged."""
+    proposals: `prop`'s row count.  When `fits_broadcast` passes that many
+    rows, the mutual-pair probe and every jump's hop side broadcast, so
+    these tiny per-round jobs carry zero exchanges (they were pure
+    scheduling overhead in the r6 stage profile)."""
     f = prop.select("csrc", "cdst")
     back = f.select(F.col("csrc").alias("b"), F.col("cdst").alias("bt"))
-    if bc_small:
+    small = fits_broadcast(back, proposals)
+    if small:
         back = F.broadcast(back)
     seed = f.join(back, (f.cdst == back.b) & (F.col("bt") == f.csrc), "left").select(
         F.col("csrc").alias("c"),
@@ -186,7 +178,7 @@ def _contract_pseudoforest(
 
     def jump(p: DataFrame, _m: dict) -> DataFrame:
         hop = p.select(F.col("c").alias("q"), F.col("p").alias("gp"))
-        if bc_small:
+        if small:
             hop = F.broadcast(hop)
         return p.join(hop, p.p == hop.q, "left").select(
             "c", F.coalesce(F.col("gp"), F.col("p")).alias("p"), F.col("p").alias("pp")

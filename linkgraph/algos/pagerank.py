@@ -5,8 +5,8 @@ Scale-shaped iteration (one heavy Spark job per iteration):
 * state (vid, deg, pr) carries the out-degree so no per-iteration join
   against the degree table is needed;
 * messages (src, pr/deg) flow through LinkGraph.expand — broadcast only
-  when the estimated byte size clears autoBroadcastJoinThreshold, salted
-  or plain shuffle join otherwise (never an unconditional |V|-row
+  when `graph.fits_broadcast` passes them, salted or plain shuffle join
+  otherwise (never an unconditional |V|-row
   broadcast: at 10^9 vertices that OOMs every executor);
 * the loop runs under `iteration_plan` (AQE off, shuffled-hash preferred):
   the per-iteration plan is static and co-partitioned, so AQE's per-stage

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linkgraph.iterate import fixpoint
+
 
 def simrank_topk(
     edges: DataFrame,
@@ -60,9 +62,9 @@ def simrank_topk(
     diag = top.select(
         F.col("vid").alias("u"), F.col("vid").alias("v"), F.lit(1.0).alias("s")
     )
-    s = diag
     e1, e2, da, db = se.alias("e1"), se.alias("e2"), d.alias("da"), d.alias("db")
-    for _ in range(iters):
+
+    def step(s: DataFrame, _m: dict) -> DataFrame:
         off = (
             s.join(e1, F.col("e1.src") == s["u"])
             .join(e2, F.col("e2.src") == s["v"])
@@ -81,7 +83,11 @@ def simrank_topk(
                 ),
             )
         )
-        s = off.unionAll(diag).localCheckpoint(eager=True)
+        return off.unionAll(diag)
+
+    s, _, _ = fixpoint(
+        diag, step, lambda st, _: {"rows": st.count()}, lambda m, _: False, iters
+    )
     return (
         s.where(F.col("u") < F.col("v"))
         .select(

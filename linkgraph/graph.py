@@ -37,9 +37,14 @@ def parse_bytes(size: str | int) -> int:
     return int(s)
 
 
-def broadcast_threshold(spark) -> int:
-    """Session autoBroadcastJoinThreshold in bytes (-1 = disabled)."""
-    return parse_bytes(spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10m"))
+def fits_broadcast(df: DataFrame, rows: int) -> bool:
+    """The one broadcast gate (J1): True iff `rows` rows of `df`, at
+    16 bytes a row plus 12 a column, are under the session's
+    spark.sql.autoBroadcastJoinThreshold (-1 or 0: never)."""
+    thresh = parse_bytes(
+        df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10m")
+    )
+    return 0 < thresh and rows * (16 + 12 * len(df.columns)) < thresh
 
 
 def edge_store_root(spark) -> str:
@@ -124,17 +129,12 @@ def relabel_pairs(
     """Dictionary-relabel join (S2): map (src_col, dst_col) string keys to
     dense vids via the `vertices` (name, vid) dict.
 
-    Byte-gated like `LinkGraph.expand`: the dict is broadcast only when its
-    estimated size clears autoBroadcastJoinThreshold; otherwise a plain
-    shuffled equi-join (the pairs table is shuffling anyway, and at 10^9
-    vertices a |V|-row dictionary broadcast OOMs every executor)."""
-    spark = pairs.sparkSession
+    The dict is broadcast only when `fits_broadcast` passes it; otherwise a
+    plain shuffled equi-join (the pairs table is shuffling anyway, and at
+    10^9 vertices a |V|-row dictionary broadcast OOMs every executor)."""
     v = vertices.select("name", "vid")
-    if n_vertices is not None:
-        thresh = broadcast_threshold(spark)
-        # name strings dominate; ~48 bytes/row is a deliberately fat estimate
-        if 0 < thresh and n_vertices * 48 < thresh:
-            v = F.broadcast(v)
+    if n_vertices is not None and fits_broadcast(v, n_vertices):
+        v = F.broadcast(v)
     return (
         pairs.join(v.withColumnRenamed("name", src_col).withColumnRenamed("vid", "src"), src_col)
         .join(v.withColumnRenamed("name", dst_col).withColumnRenamed("vid", "dst"), dst_col)
@@ -478,12 +478,14 @@ class LinkGraph:
         """The frontier-expand join (J1): edges ⋈ msgs on src, with the
         physical strategy picked by estimated message-table size:
 
-        * small (est bytes < autoBroadcastJoinThreshold): broadcast msgs —
+        * small (`fits_broadcast(msgs, est_rows)`): broadcast msgs —
           map-side join, the edge table never shuffles;
         * large + salting enabled (manually or via maybe_auto_salt's skew
           sketch): salted shuffle join (J2) so hub sources spread over S
           reducers;
-        * large otherwise: plain shuffle join, AQE skew-join as backstop.
+        * large otherwise: plain shuffle join.  Inside `fixpoint` AQE is
+          off, so hub skew there is the salted join's job; outside a loop
+          AQE's skew join splits hot partitions.
 
         msgs must carry a `src` column; every other column passes through.
 
@@ -492,14 +494,9 @@ class LinkGraph:
         semi-join).  The salted path is bypassed for overrides (the filter
         only fires on late dense levels where the frontier is small).
         """
-        spark = self.spark
         e = edges if edges is not None else self.edges
-        if est_rows is not None:
-            thresh = broadcast_threshold(spark)
-            ncols = len(msgs.columns)
-            est_bytes = est_rows * (16 + 12 * ncols)
-            if 0 < thresh and est_bytes < thresh:
-                return e.join(F.broadcast(msgs), "src")
+        if est_rows is not None and fits_broadcast(msgs, est_rows):
+            return e.join(F.broadcast(msgs), "src")
         if edges is None:
             if self._salted is None:
                 self.maybe_auto_salt()

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from linkgraph.iterate import checkpoint, fixpoint, release
+
 
 def sessionize(
     events: DataFrame,
@@ -260,7 +262,8 @@ def value_outliers(events: DataFrame, z_cut: float = 3.0, round_to: int = 6) -> 
     every event pipeline runs.
 
     Two aggregates over one (user-keyed) shuffle: moments first, then an
-    outlier count against the broadcast-joined per-user moments.  The
+    outlier count against the joined per-user moments (one row a user, no
+    size bound, so AQE picks that join from runtime sizes).  The
     z-score is ROUNDED before the threshold comparison, so the kept set
     is engine-portable (the same convention as containment_pairs);
     single-event users have no stddev → n_outliers 0, std_v NULL.
@@ -274,7 +277,7 @@ def value_outliers(events: DataFrame, z_cut: float = 3.0, round_to: int = 6) -> 
         F.abs(F.col("value") - F.col("mean_raw")) / F.col("std_raw"), round_to
     )
     flags = (
-        events.join(F.broadcast(mom), "user_id")
+        events.join(mom, "user_id")
         .where(F.col("std_raw") > 0)
         .groupBy("user_id")
         .agg(F.sum(F.when(z > z_cut, 1).otherwise(0)).alias("n_outliers"))
@@ -627,20 +630,30 @@ def event_stationary(
         "src", "dst", (F.col("cnt") / F.col("tot")).alias("frac")
     )
     sinks = states.join(p.select("src").distinct(), "src", "left_anti")
-    p = p.unionByName(
-        sinks.select("src", F.col("src").alias("dst"), F.lit(1.0).alias("frac"))
-    ).localCheckpoint(eager=True)
-    n_states = states.count()
-    pi = states.select(
-        F.col("src").alias("event_type"), F.lit(1.0 / n_states).alias("pi")
+    p = checkpoint(
+        p.unionByName(
+            sinks.select("src", F.col("src").alias("dst"), F.lit(1.0).alias("frac"))
+        )
     )
-    for _ in range(iters):
-        pi = (
+    n_states = states.count()
+
+    def step(pi: DataFrame, _m: dict) -> DataFrame:
+        return (
             pi.join(p, pi["event_type"] == p["src"])
             .groupBy(F.col("dst").alias("event_type"))
             .agg(F.sum(F.col("pi") * F.col("frac")).alias("pi"))
-            .localCheckpoint(eager=True)
         )
+
+    pi, _, _ = fixpoint(
+        states.select(
+            F.col("src").alias("event_type"), F.lit(1.0 / n_states).alias("pi")
+        ),
+        step,
+        lambda st, _: {"rows": st.count()},
+        lambda m, _: False,
+        iters,
+    )
+    release(p)
     return pi.select("event_type", F.round("pi", round_to).alias("pi"))
 
 

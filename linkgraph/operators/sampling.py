@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph, broadcast_threshold
+from linkgraph.graph import LinkGraph, fits_broadcast
 from linkgraph.textops.dedup import portable_hash60
 
 
@@ -36,17 +36,14 @@ def sample_neighbors(
 
     frontier: DataFrame with a `vid` column.  Returns (src, dst).
 
-    est_rows: byte-gated broadcast of the frontier (same discipline as
-    LinkGraph.expand): when the estimated frontier size clears the
-    threshold the semi-join broadcasts and the edge table keeps its own
-    src partitioning — the rank window then sorts in place with no
-    exchange.  khop_sample passes the exact bound |seeds|·Π fanouts.
+    est_rows: the frontier's row bound.  When `fits_broadcast` passes it
+    the semi-join broadcasts and the edge table keeps its own src
+    partitioning — the rank window then sorts in place with no exchange.
+    khop_sample passes the exact bound |seeds|·Π fanouts.
     """
     f = frontier.select(F.col("vid").alias("src"))
-    if est_rows is not None:
-        thresh = broadcast_threshold(graph.spark)
-        if 0 < thresh and est_rows * 16 < thresh:
-            f = F.broadcast(f)
+    if est_rows is not None and fits_broadcast(f, est_rows):
+        f = F.broadcast(f)
     e = graph.edges.select("src", "dst").join(f, "src", "left_semi")
     h = portable_hash60(
         F.concat_ws(":", F.col("src"), F.col("dst"), F.lit(salt))

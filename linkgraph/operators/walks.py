@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph
+from linkgraph.graph import LinkGraph, fits_broadcast
 from linkgraph.textops.dedup import portable_hash60
 
 
@@ -159,8 +159,6 @@ def node2vec_walks(
         hs = [h_copy(step, c) for c in range(copies)]
         return hs[0] if len(hs) == 1 else F.least(*hs)
 
-    from linkgraph.graph import broadcast_threshold
-
     def tri_edges_for(cur_state):
         """Edges restricted to the CURRENT prev-set's adjacency.
 
@@ -168,10 +166,11 @@ def node2vec_walks(
         table is partitioned on src only, so joining it directly would
         Exchange the FULL |E| rows every step.  A semi-join on src keeps
         the edge side on its cached partitioning (zero edge Exchange —
-        the prev-set is byte-gated broadcast like expand's frontier) and
-        only the Σ deg(prev) surviving rows reach the two-column join."""
+        the prev-set, at most one row a walk, is broadcast like expand's
+        frontier) and only the Σ deg(prev) surviving rows reach the
+        two-column join."""
         prev_set = cur_state.select(F.col("prev").alias("src")).distinct()
-        if n_walks * 16 < broadcast_threshold(spark):
+        if fits_broadcast(prev_set, n_walks):
             prev_set = F.broadcast(prev_set)
         return graph.edges.join(prev_set, "src", "left_semi").select(
             F.col("src").alias("_t_prev"),

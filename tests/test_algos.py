@@ -522,6 +522,8 @@ def test_coreness_monotone_rounds(er):
         "bipartite_check",
         "st_distance",
         "earliest_arrival",
+        "simrank_topk",
+        "event_stationary",
     ],
 )
 def test_ported_loops_release_state(spark, er, kernel):
@@ -546,8 +548,10 @@ def test_ported_loops_release_state(spark, er, kernel):
     from linkgraph.algos.pagerank import ppr_forward_push
     from linkgraph.algos.salsa import salsa
     from linkgraph.algos.scc import condensation_layers, strongly_connected_components
+    from linkgraph.algos.simrank import simrank_topk
     from linkgraph.algos.spectral import fiedler_partition
     from linkgraph.algos.wl import wl_anonymity, wl_refine
+    from linkgraph.operators.events import event_stationary
     from linkgraph.operators.temporal import earliest_arrival
 
     weighted = er.edges.withColumn("w", (F.col("src") + F.col("dst")) % 7 + 1)
@@ -558,6 +562,10 @@ def test_ported_loops_release_state(spark, er, kernel):
             dist[w] = dist[v] + 1
             queue.append(w)
     far = max(dist, key=lambda v: (dist[v], v))
+    events = spark.createDataFrame(
+        [(i, i % 5, (i * 7) % 4, "abcd"[(i * i) % 4]) for i in range(40)],
+        "event_id long, user_id long, ts long, event_type string",
+    ).withColumn("ts", F.timestamp_seconds("ts"))
     run, kept = {
         "wl_refine": (lambda: wl_refine(er, rounds=3), 1),
         "wl_anonymity": (lambda: wl_anonymity(er, rounds=3), 0),
@@ -592,6 +600,8 @@ def test_ported_loops_release_state(spark, er, kernel):
             lambda: earliest_arrival(timed, er.vertices().where("vid < 3"), rounds=4),
             1,
         ),
+        "simrank_topk": (lambda: simrank_topk(er.edges, iters=3), 1),
+        "event_stationary": (lambda: event_stationary(events, iters=5), 1),
     }[kernel]
     run()
     persistent = spark.sparkContext._jsc.getPersistentRDDs
@@ -805,6 +815,38 @@ def test_loops_run_on_fixpoint():
         if "iteration_plan(" in line
     ]
     assert not hits, "hand-written iteration loops:\n" + "\n".join(hits)
+
+
+def test_one_broadcast_gate():
+    """graph.fits_broadcast is the one broadcast gate: the only reader of
+    the session broadcast threshold (besides the session default), with
+    no hand-rolled byte estimate and no second, kernel-private budget."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "linkgraph"
+    allowed = {
+        ("graph.py", no)
+        for node in ast.parse((root / "graph.py").read_text()).body
+        if isinstance(node, ast.FunctionDef) and node.name == "fits_broadcast"
+        for no in range(node.lineno, node.end_lineno + 1)
+    } | {
+        ("session.py", no)
+        for no, line in enumerate((root / "session.py").read_text().splitlines(), 1)
+        if '"spark.sql.autoBroadcastJoinThreshold":' in line
+    }
+    bad = [
+        f"{path.relative_to(root)}:{no}: {line.strip()}"
+        for path in sorted(root.rglob("*.py"))
+        for no, line in enumerate(path.read_text().splitlines(), 1)
+        if "broadcast_threshold" in line
+        or "spark.linkgraph.msbfs" in line
+        or (
+            "autoBroadcastJoinThreshold" in line
+            and (str(path.relative_to(root)), no) not in allowed
+        )
+    ]
+    assert not bad, "broadcast gates outside graph.fits_broadcast:\n" + "\n".join(bad)
 
 
 def test_no_parquet_round_trips_in_algos():

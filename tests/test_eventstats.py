@@ -118,6 +118,23 @@ def test_value_outliers_exact(spark):
     assert got[9][0] == 1 and got[9][3] == 0 and got[9][2] is None
 
 
+def test_value_outliers_unhinted_join(spark, events):
+    """The per-user moments table has no size bound, so value_outliers
+    leaves its join to the planner: with broadcasts off in the session no
+    BroadcastHashJoin runs."""
+    from linkgraph.operators.events import value_outliers
+
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = value_outliers(events)
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "BroadcastHashJoin" not in plan, plan
+
+
 def test_square_count_exact(spark):
     from linkgraph.algos.triangles import square_count
     from linkgraph.fixtures import edges_df

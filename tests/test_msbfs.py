@@ -116,8 +116,9 @@ def test_bottom_up_strategies_bit_exact(spark, er):
       enumerated).
     * a disconnected extra clique keeps state_rows < |V| forever -> the
       closed-side edge ANTI-join path.
-    * autoBroadcastJoinThreshold=-1 blocks both edge-side paths -> the
-      closed-BITMAP map-side message filter (the mid-range side-channel).
+    * a broadcast threshold just over the bitmap table's estimate, below
+      the open and closed sets' -> the closed-BITMAP map-side message
+      filter (the mid-range side-channel).
     """
     srcs = [0, 1, 5, 17, 63]
     base = msbfs(er, srcs, emit_distances=True, bottom_up=False)
@@ -146,9 +147,13 @@ def test_bottom_up_strategies_bit_exact(spark, er):
     assert d2.equals(base2.distances.sort_values(["src", "vid"]).reset_index(drop=True))
     assert np.array_equal(res2.r, base2.r) and np.array_equal(res2.s, base2.s)
 
-    # mid-range: no broadcastable side -> bitmap side-channel engages
+    # mid-range: no broadcastable side -> bitmap side-channel engages.
+    # The bitmap has (max_vid >> 6) + 1 rows of 40 bytes; an open or closed
+    # set of 3+ rows (28 bytes each) is over the threshold
+    bitmap_bytes = ((er.max_vid() >> 6) + 1) * 40
+    assert bitmap_bytes + 1 <= 3 * 28
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", f"{bitmap_bytes + 1}b")
     try:
         check(
             msbfs(
@@ -204,14 +209,13 @@ def test_closed_limb_table_bit_math(spark):
 
 
 def test_bitmap_over_budget_runs_push(spark, er):
-    """A max_vid beyond spark.linkgraph.msbfs.bitmapMaxBytes must refuse the
-    bitmap (executor memory guard); with no broadcastable side either, the
-    gated levels run as plain push, bit-exact."""
+    """The bitmap passes the session broadcast gate like every other
+    broadcast (executor memory guard): with broadcasts off, no side is
+    broadcastable and the gated levels run as plain push, bit-exact."""
     srcs = [0, 1, 5, 17, 63]
     base = msbfs(er, srcs, bottom_up=False)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.linkgraph.msbfs.bitmapMaxBytes", "1b")
     try:
         res = msbfs(er, srcs, bottom_up=True, bottom_up_threshold=0.01)
         assert set(res.strategies) == {"push"}, res.strategies
@@ -219,7 +223,6 @@ def test_bitmap_over_budget_runs_push(spark, er):
         assert np.array_equal(res.r, base.r) and np.array_equal(res.s, base.s)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.conf.unset("spark.linkgraph.msbfs.bitmapMaxBytes")
 
 
 def test_harmonic_vs_oracle(er):

@@ -43,6 +43,27 @@ def test_expand_shuffles_when_broadcast_disabled(spark, small_graph):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+def test_fits_broadcast_boundary(spark):
+    """The one broadcast gate: rows · (16 + 12 · columns) bytes strictly
+    under the session threshold; -1 and 0 turn broadcasts off, and a
+    size-suffixed threshold reads as its byte count."""
+    from linkgraph.graph import fits_broadcast
+
+    df = spark.range(1).select(*[F.col("id").alias(c) for c in "abcd"])  # 64 B a row
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        for spelled in ("32m", "33554432b"):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", spelled)
+            assert fits_broadcast(df, (32 << 20) // 64 - 1)
+            assert not fits_broadcast(df, (32 << 20) // 64)
+        for off in ("-1", "0"):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", off)
+            assert not fits_broadcast(df, 0)
+            assert not fits_broadcast(df, 1)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
 def test_text_column_pruned_from_graph_path(spark, tmp_path):
     """The heavy `text` column must never reach the scan of a derivation
     that only needs keys (Catalyst column pruning — preserves per-turn
@@ -107,7 +128,7 @@ def test_relabel_join_byte_gated(spark):
     )
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        # tiny threshold: 201 * 48B estimate exceeds 1KB -> no broadcast hint,
+        # tiny threshold: 201 * 40B estimate exceeds 1KB -> no broadcast hint,
         # and the physical dict (~KBs of strings) exceeds it for Catalyst too
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
         plan = _plan(relabel_pairs(pairs, names, "a", "b", n_vertices=201))
