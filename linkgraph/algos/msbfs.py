@@ -17,6 +17,13 @@ Spark-native re-expression of [MSBFS15] Alg. 2/3 (SURVEY.md §2.9 K1/K2):
 * the level loop is `linkgraph.iterate.fixpoint`, with that accounting as
   its probe: expand + OR-aggregate + update + accounting run as one Spark
   job per level, and the driver owns state release, snapshot and resume.
+  The level's expressions (frontier predicate, OR-aggregates, mask and
+  update) are built once per call, as SQL strings or Columns every level
+  reuses: built per level they were about 40 Column constructions through
+  py4j a level.
+* TEPS (`track_teps`) is one aggregate over the final state, not a term of
+  every level's accounting: each lane bit enters the frontier exactly once,
+  so Σ_levels deg(v)·popcount(visit) = Σ deg(v)·popcount(seen) at the end.
 * direction/strategy switch (K3 analog): the frontier side is broadcast
   when small (first/last levels), shuffled-hash otherwise; the edge table
   never re-shuffles (partitioned by src at build).  Late dense levels
@@ -91,33 +98,27 @@ def _closed_pred(nsrc: int) -> str:
 
 
 def _lane_accounting(
-    df: DataFrame, nsrc: int, closed_pred: str | None = None, with_deg: bool = False
-) -> tuple[np.ndarray, int, int, int, int]:
-    """Per-lane counts of the set visit bits of (vid, v0..[, s0..][, deg]),
-    plus the row sentinels, as ONE aggregate that collects at most 9 rows.
+    df: DataFrame, nsrc: int, closed_pred: str | None = None
+) -> tuple[np.ndarray, int, int, int]:
+    """Per-lane counts of the set visit bits of (vid, v0..[, s0..]), plus
+    the row sentinels, as ONE aggregate that collects at most 9 rows.
 
-    Each row inlines into (i, limb[, t]) rows: one per NONZERO visit limb
+    Each row inlines into (i, limb) rows: one per NONZERO visit limb
     (i = 0..), and a sentinel (i = -1) whose limb packs the row's flags —
     bit 0: any visit bit set (a frontier row); bit 1: seen full across all
     lanes (a CLOSED row, when `closed_pred` is given; it drives the K3 pull
-    filter, measured for free in the same state scan) — and whose t is
-    deg(v)·popcount(v), the exact (edge, lane) expansion count of the NEXT
-    level (TEPS accounting, when `with_deg`).  Grouped by i, the sum of bit
-    b is lane 64i+b's count; for the sentinel, bits 0/1 count the frontier
-    and closed rows and count(*) the state rows, which tells the bottom-up
-    gate when the state covers all |V| vertices.
+    filter, measured for free in the same state scan).  Grouped by i, the
+    sum of bit b is lane 64i+b's count; for the sentinel, bits 0/1 count
+    the frontier and closed rows and count(*) the state rows, which tells
+    the bottom-up gate when the state covers all |V| vertices.
 
-    Returns (lane counts, frontier rows, closed rows, state rows, Σ t)."""
+    Returns (lane counts, frontier rows, closed rows, state rows)."""
     used = (nsrc + 63) // 64
     flags = "if(" + " or ".join(f"v{i} != 0" for i in range(used)) + ", 1L, 0L)"
     if closed_pred is not None:
         flags += f" | if({closed_pred}, 2L, 0L)"
-    t_head, t_limb = "", ""
-    if with_deg:
-        popcount = " + ".join(f"bit_count(v{i})" for i in range(used))
-        t_head, t_limb = f", 't', deg * ({popcount})", ", 't', 0L"
-    structs = [f"named_struct('i', -1, 'limb', {flags}{t_head})"] + [
-        f"named_struct('i', {i}, 'limb', v{i}{t_limb})" for i in range(used)
+    structs = [f"named_struct('i', -1, 'limb', {flags})"] + [
+        f"named_struct('i', {i}, 'limb', v{i})" for i in range(used)
     ]
     # the 64 sums as ONE array expression: 64 separate Columns cost ~0.1 s
     # of py4j calls per level to build
@@ -126,22 +127,17 @@ def _lane_accounting(
         df.selectExpr(f"inline(array({', '.join(structs)}))")
         .where("i = -1 or limb != 0")
         .groupBy("i")
-        .agg(
-            F.expr(f"array({sums})").alias("c"),
-            F.count(F.lit(1)).alias("rows"),
-            *([F.sum("t").alias("t")] if with_deg else []),
-        )
+        .agg(F.expr(f"array({sums})").alias("c"), F.count(F.lit(1)).alias("rows"))
         .collect()
     )
     lanes = np.zeros(64 * used, dtype=np.int64)
-    frontier = closed = state_rows = traversals = 0
+    frontier = closed = state_rows = 0
     for row in rows:
         if row["i"] < 0:
             frontier, closed, state_rows = row["c"][0], row["c"][1], row["rows"]
-            traversals = row["t"] if with_deg else 0
         else:
             lanes[64 * row["i"] : 64 * row["i"] + 64] = row["c"]
-    return lanes[:nsrc], frontier, closed, state_rows, traversals
+    return lanes[:nsrc], frontier, closed, state_rows
 
 
 def _visit_lanes(state: DataFrame, nsrc: int) -> DataFrame:
@@ -235,26 +231,25 @@ def msbfs(
 
     n_vertices = graph.num_vertices()
     closed_pred = _closed_pred(nsrc)
-    deg = None
-    if track_teps:
-        # bench-only instrumentation
-        deg = graph.degrees()
-        if fits_broadcast(deg, n_vertices):
-            deg = F.broadcast(deg)
     strategy = "push"  # the K3 choice of the level `step` last planned
+    # the level's expressions, built once per call: built in `step`, they
+    # were about 40 Column constructions through py4j a level
+    frontier_pred = " or ".join(f"v{i} != 0" for i in range(NLIMBS))
+    or_aggs = [F.expr(f"bit_or(v{i}) as a{i}") for i in range(NLIMBS)]
+    on_vid = F.expr("vid = dst")
+    update = (
+        ["coalesce(vid, dst) as vid"]
+        + [f"coalesce(s{i}, 0L) | coalesce(a{i}, 0L) as s{i}" for i in range(NLIMBS)]
+        + [f"coalesce(a{i}, 0L) & ~coalesce(s{i}, 0L) as v{i}" for i in range(NLIMBS)]
+    )
 
     def probe(state: DataFrame, m: dict) -> dict:
         """Lane accounting of level m["level"] + 1 folded into m's totals;
         with emit_distances, the level's (vid, lane, dist) parquet delta —
         distributed, never through the driver."""
         level = m["level"] + 1
-        acct = state
-        if deg is not None:
-            acct = state.join(deg, "vid", "left").withColumn(
-                "deg", F.coalesce(F.col("deg"), F.lit(0))
-            )
-        lanes, frontier_rows, closed_rows, state_rows, level_edges = _lane_accounting(
-            acct, nsrc, closed_pred if bottom_up else None, with_deg=track_teps
+        lanes, frontier_rows, closed_rows, state_rows = _lane_accounting(
+            state, nsrc, closed_pred if bottom_up else None
         )
         h, ecc = np.asarray(m["h"], dtype=np.float64), np.asarray(m["ecc"])
         if level:
@@ -274,7 +269,6 @@ def msbfs(
             "s": (np.asarray(m["s"]) + lanes * level).tolist(),
             "h": h.tolist(),
             "ecc": ecc.tolist(),
-            "traversed": m["traversed"] + level_edges,
             "per_level_new": m["per_level_new"] + [new_total],
             "strategies": m["strategies"] + ([strategy] if level else []),
             "frontier_rows": frontier_rows,
@@ -310,10 +304,8 @@ def msbfs(
             and closed_rows
             and closed_rows / float(n_vertices) >= bottom_up_threshold
         ):
-            open_dst = state.where(f"not ({closed_pred})").select(
-                F.col("vid").alias("dst")
-            )
-            closed_dst = state.where(closed_pred).select(F.col("vid").alias("dst"))
+            open_dst = state.where(f"not ({closed_pred})").selectExpr("vid as dst")
+            closed_dst = state.where(closed_pred).selectExpr("vid as dst")
             if state_rows == n_vertices and fits_broadcast(
                 open_dst, max(state_rows - closed_rows, 0)
             ):
@@ -332,9 +324,7 @@ def msbfs(
 
         # -- expand: frontier ⋈ edges, OR-aggregate by dst (ANP).
         # Strategy dispatch (broadcast / salted / shuffle) via graph.expand.
-        frontier = state.where(
-            " or ".join(f"v{i} != 0" for i in range(NLIMBS))
-        ).select(F.col("vid").alias("src"), *_V)
+        frontier = state.where(frontier_pred).selectExpr("vid as src", *_V)
         msgs = graph.expand(
             frontier, est_rows=m["frontier_rows"], edges=edges_open
         ).select("dst", *_V)
@@ -343,37 +333,17 @@ def msbfs(
             # == all open)
             msgs = (
                 msgs.join(
-                    F.broadcast(msg_bitmap),
-                    F.expr("shiftright(dst, 6)") == F.col("_bm_idx"),
-                    "left",
+                    F.broadcast(msg_bitmap), F.expr("shiftright(dst, 6) = _bm_idx"), "left"
                 )
-                .where(
-                    F.expr(
-                        "_bm_limb is null or "
-                        "((_bm_limb >> cast((dst & 63) as int)) & 1) = 0"
-                    )
-                )
+                .where("_bm_limb is null or ((_bm_limb >> cast((dst & 63) as int)) & 1) = 0")
                 .drop("_bm_idx", "_bm_limb")
             )
-        agg = msgs.groupBy("dst").agg(
-            *[F.bit_or(f"v{i}").alias(f"a{i}") for i in range(NLIMBS)]
-        )
+        agg = msgs.groupBy("dst").agg(*or_aggs)
 
         # -- mask & update (codegen'd int64 math; no UDF)
         # `vid`/`dst` are unique names across the two sides — resolve by name
         # (agg descends from state, so df["col"] refs would be self-join-ambiguous)
-        joined = state.join(agg, F.col("vid") == F.col("dst"), "full_outer")
-        return joined.select(
-            F.coalesce(F.col("vid"), F.col("dst")).alias("vid"),
-            *[
-                F.expr(f"coalesce(s{i}, 0L) | coalesce(a{i}, 0L)").alias(f"s{i}")
-                for i in range(NLIMBS)
-            ],
-            *[
-                F.expr(f"coalesce(a{i}, 0L) & ~coalesce(s{i}, 0L)").alias(f"v{i}")
-                for i in range(NLIMBS)
-            ],
-        )
+        return state.join(agg, on_vid, "full_outer").selectExpr(*update)
 
     start = {
         "level": -1,
@@ -381,7 +351,6 @@ def msbfs(
         "s": [0] * nsrc,
         "h": [0.0] * nsrc,
         "ecc": [0] * nsrc,
-        "traversed": 0,
         "per_level_new": [],
         "strategies": [],
         "distances_path": distances_path,
@@ -400,6 +369,22 @@ def msbfs(
         snapshot_every=snapshot_every,
         resume=resume,
     )
+    traversed = 0
+    if track_teps:
+        # bench-only instrumentation: the (edge, lane) expansions of every
+        # level, deg(v)·popcount(visit) summed over the levels, in one
+        # aggregate — each lane bit of the final seen set entered the
+        # frontier exactly once (the seed's too, and a truncated run's last
+        # unexpanded frontier, as the per-level sum counted them).  On one
+        # partition the sum needs no exchange, which AQE runs as a job of
+        # its own: the degree table's broadcast and the sum are 2 jobs.
+        popcount = " + ".join(f"bit_count(s{i})" for i in range(NLIMBS))
+        traversed = int(
+            state.coalesce(1)
+            .join(graph.degrees(), "vid")
+            .selectExpr(f"coalesce(sum(deg * ({popcount})), 0L) as t")
+            .first()["t"]
+        )
     release(state)
     wall = time.time() - t0
     distances_df = None
@@ -422,7 +407,7 @@ def msbfs(
         h=np.asarray(metrics["h"], dtype=np.float64),
         ecc=np.asarray(metrics["ecc"], dtype=np.int64),
         wall_sec=wall,
-        traversed_bit_edges=metrics["traversed"],
+        traversed_bit_edges=traversed,
         distances_df=distances_df,
         per_level_new=metrics["per_level_new"],
         strategies=metrics["strategies"],

@@ -16,10 +16,10 @@ served [pairwise queries], and (b) for full-graph needs, Monte-Carlo
 reverse-walk meeting probabilities (the `operators/walks.py` hash-argmin
 machinery extends to that; documented, not built).  The induced kernel
 below is fully relational — two broadcast semi-joins restrict the edge
-table, then each iteration is ONE (s ⋈ e1 ⋈ e2) join + one hash
-aggregate over at most K^2 pair rows — and the sparse-pair encoding
-(missing pair = 0) keeps early iterations tiny: s_t is nonzero only for
-pairs within distance 2t of the diagonal.
+table, checkpointed once before the loop, then each iteration is ONE
+(s ⋈ e1 ⋈ e2) join + one hash aggregate over at most K^2 pair rows — and
+the sparse-pair encoding (missing pair = 0) keeps early iterations tiny:
+s_t is nonzero only for pairs within distance 2t of the diagonal.
 
 Determinism: the working set is the top-K by (degree desc, vid asc) —
 a total order — and scores are emitted rounded with a full (score desc,
@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.iterate import fixpoint
+from linkgraph.iterate import checkpoint, fixpoint, release
 
 
 def simrank_topk(
@@ -52,16 +52,18 @@ def simrank_topk(
         .limit(k_vertices)
         .select(F.col("src").alias("vid"))
     )
-    se = (
+    # the restricted edges, materialized once: left lazy, every round's
+    # plan would re-derive the top-K from the raw edges
+    se = checkpoint(
         edges.join(F.broadcast(top), edges["src"] == top["vid"], "left_semi")
         .alias("e")
         .join(F.broadcast(top), F.col("e.dst") == top["vid"], "left_semi")
         .select("src", "dst")
     )
     d = se.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("deg"))
-    diag = top.select(
-        F.col("vid").alias("u"), F.col("vid").alias("v"), F.lit(1.0).alias("s")
-    )
+    # a top-K vertex without an edge inside the working set only ever has
+    # its diagonal entry, which the a < b output never shows
+    diag = d.select(F.col("src").alias("u"), F.col("src").alias("v"), F.lit(1.0).alias("s"))
     e1, e2, da, db = se.alias("e1"), se.alias("e2"), d.alias("da"), d.alias("db")
 
     def step(s: DataFrame, _m: dict) -> DataFrame:
@@ -88,6 +90,7 @@ def simrank_topk(
     s, _, _ = fixpoint(
         diag, step, lambda st, _: {"rows": st.count()}, lambda m, _: False, iters
     )
+    release(se)
     return (
         s.where(F.col("u") < F.col("v"))
         .select(

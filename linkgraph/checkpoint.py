@@ -28,6 +28,7 @@ import json
 import posixpath
 import time
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,7 +48,7 @@ class _HadoopFS:
             # corruption detection is the manifest row-count audit, not
             # client-side CRCs (object stores have none either)
             self._fs.setVerifyChecksum(False)
-        except Exception:
+        except Py4JError:
             pass
 
     def mkdirs(self, path: str) -> None:
@@ -97,8 +98,10 @@ class CheckpointManager:
         self.use_iceberg = use_iceberg  # kept for cluster deployments
 
     # ------------------------------------------------------------------ write
-    def write_state(self, state: DataFrame, iteration: int, metrics: dict) -> DataFrame:
-        """Snapshot `state`; returns the reloaded (lineage-free) DataFrame."""
+    def write_state(self, state: DataFrame, iteration: int, metrics: dict) -> None:
+        """Snapshot `state` and commit its manifest.  Two jobs: the write,
+        and the per-file row counts read back with `state`'s schema (no
+        footer-inference job).  The caller keeps its in-memory state."""
         path = posixpath.join(self.root, f"iter={iteration}")
         state.write.mode("overwrite").parquet(path)
         sizes = {
@@ -110,7 +113,8 @@ class CheckpointManager:
         rows_by_file = {
             posixpath.basename(r["f"]): r["n"]
             for r in (
-                self.spark.read.parquet(path)
+                self.spark.read.schema(state.schema)
+                .parquet(path)
                 .groupBy(F.input_file_name().alias("f"))
                 .agg(F.count("*").alias("n"))
                 .collect()
@@ -140,7 +144,6 @@ class CheckpointManager:
             "committed": True,
         }
         self.fs.write_text(posixpath.join(path, "_MANIFEST.json"), json.dumps(manifest))
-        return self.spark.read.parquet(path)
 
     # ------------------------------------------------------------------- read
     def snapshots(self) -> list[dict]:
@@ -179,5 +182,5 @@ def _iceberg_available(spark: SparkSession) -> bool:
         jvm = spark.sparkContext._jvm
         jvm.Class.forName("org.apache.iceberg.spark.SparkCatalog")
         return True
-    except Exception:
+    except Py4JError:
         return False

@@ -36,10 +36,11 @@ caller of `iteration_plan`, and owns the rest:
   `fixpoint` releases that RDD directly.
 * **Snapshot and resume** through `CheckpointManager`: every
   `snapshot_every` iterations the state's seed columns are written with the
-  manifest metrics ``{"iteration": k, **metrics}`` (the probe's) and
-  reloaded through an eager, re-rooted local checkpoint (`checkpoint`);
-  ``resume=True`` restarts from the latest committed snapshot with its
-  iteration count and metrics.
+  manifest metrics ``{"iteration": k, **metrics}`` (the probe's); the loop
+  goes on from the in-memory state, whose lineage the local checkpoint has
+  already cut, so a snapshot costs the write and its per-file count, not a
+  reload.  ``resume=True`` restarts from the latest committed snapshot with
+  its iteration count and metrics.
 """
 
 from __future__ import annotations
@@ -159,15 +160,9 @@ def fixpoint(
             release(state)
             state = reroot(new_state, rows)
             if checkpoint_mgr is not None and (it + 1) % snapshot_every == 0:
-                reloaded = checkpoint(
-                    checkpoint_mgr.write_state(
-                        state.select(*seed.columns),
-                        it + 1,
-                        {"iteration": it + 1, **new_metrics},
-                    )
+                checkpoint_mgr.write_state(
+                    state.select(*seed.columns), it + 1, {"iteration": it + 1, **new_metrics}
                 )
-                release(state)
-                state = reloaded
             converged = done(new_metrics, metrics)
             metrics = new_metrics
             if converged:

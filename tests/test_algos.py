@@ -252,6 +252,42 @@ def test_one_job_per_iteration(spark, er):
         spark.conf.set(key, old)
 
 
+def test_msbfs_teps_is_one_final_aggregate(spark, er):
+    """TEPS is counted once, from the final seen bits: with the default
+    broadcast threshold a track_teps run costs at most 2 jobs more (the
+    degree table's broadcast and the sum) than one without, where a
+    broadcast of the degree table a level cost one job a level."""
+    from linkgraph.algos.msbfs import msbfs
+
+    srcs = list(range(0, 150, 3))
+    jobs = {}
+    for teps in (False, True):
+        msbfs(er, srcs, track_teps=teps)  # warm: cached degree table
+        jobs[teps] = _jobs_in_group(
+            spark, f"msbfs-teps-{teps}", lambda: msbfs(er, srcs, track_teps=teps)
+        )
+    assert jobs[True] - jobs[False] <= 2, jobs
+
+
+def test_snapshot_costs_two_jobs(spark, er, tmp_path):
+    """A snapshot is two jobs: the parquet write and its per-file row
+    counts, read back with the state's schema (no footer-inference job).
+    The loop goes on from its in-memory state rather than reloading the
+    files, so two snapshots cost 4 jobs."""
+    from linkgraph.checkpoint import CheckpointManager
+
+    mgr = CheckpointManager(spark, str(tmp_path / "snapshots"))
+    pagerank(er, tol=0.0, max_iter=4)  # warm: cached degree table
+    plain = _jobs_in_group(spark, "pr-plain", lambda: pagerank(er, tol=0.0, max_iter=4))
+    snapped = _jobs_in_group(
+        spark,
+        "pr-snapshots",
+        lambda: pagerank(er, tol=0.0, max_iter=4, checkpoint_mgr=mgr, snapshot_every=2),
+    )
+    assert snapped - plain == 4, (plain, snapped)
+    assert [s["iteration"] for s in mgr.snapshots()] == [2, 4]
+
+
 def test_personalized_pagerank_vs_numpy(spark):
     """PPR on a directed graph with a sink: teleport AND dangling mass
     return to the seed set; ranks sum to 1; matches numpy power iteration

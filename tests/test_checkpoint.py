@@ -22,7 +22,7 @@ def grid(spark):
 
 def test_msbfs_resume_equals_uninterrupted(spark, grid, tmp_path):
     srcs = [0, 63]
-    full = msbfs(grid, srcs, emit_distances=True)
+    full = msbfs(grid, srcs, emit_distances=True, track_teps=True)
 
     root = str(tmp_path / "chk")
     mgr = CheckpointManager(spark, root)
@@ -35,7 +35,8 @@ def test_msbfs_resume_equals_uninterrupted(spark, grid, tmp_path):
     assert snap["lineage"] and all("rows" in p for p in snap["lineage"])
 
     resumed = msbfs(
-        grid, srcs, emit_distances=True, checkpoint_mgr=mgr, snapshot_every=100, resume=True
+        grid, srcs, emit_distances=True, checkpoint_mgr=mgr, snapshot_every=100,
+        resume=True, track_teps=True,
     )
     assert np.array_equal(resumed.r, full.r)
     assert np.array_equal(resumed.s, full.s)
@@ -46,6 +47,11 @@ def test_msbfs_resume_equals_uninterrupted(spark, grid, tmp_path):
     assert resumed.levels == full.levels
     assert resumed.per_level_new == full.per_level_new
     assert resumed.strategies == full.strategies
+    # TEPS counts from the final seen bits, which the snapshot carries: on
+    # the connected grid every lane expands every vertex's edges once
+    directed_edges = 2 * len({tuple(sorted(p)) for p in grid_edges() if p[0] != p[1]})
+    assert full.traversed_bit_edges == len(srcs) * directed_edges
+    assert resumed.traversed_bit_edges == full.traversed_bit_edges
     da = full.distances.sort_values(["src", "vid"]).reset_index(drop=True)
     db = resumed.distances.sort_values(["src", "vid"]).reset_index(drop=True)
     assert da.astype("int64").equals(db.astype("int64"))

@@ -208,6 +208,45 @@ def test_closed_limb_table_bit_math(spark):
     assert kept == [0, 5, 100, 199]
 
 
+def _teps_oracle(pairs, srcs, max_levels=None):
+    """Σ over levels of Σ deg(v)·popcount(frontier(v)): each lane's BFS
+    frontier at every level up to the last one the run probed, expanded
+    along deg(v) edges."""
+    deg = {}
+    for a, b in {tuple(sorted(p)) for p in pairs if p[0] != p[1]}:
+        deg[a] = deg.get(a, 0) + 1
+        deg[b] = deg.get(b, 0) + 1
+    total = 0
+    for src in srcs:
+        dist = _bfs_oracle(pairs, src)
+        last = max(dist.values()) if max_levels is None else max_levels
+        for level in range(last + 1):
+            total += sum(deg.get(v, 0) for v, d in dist.items() if d == level)
+    return total
+
+
+def test_teps_from_final_seen_bits(er):
+    """traversed_bit_edges, one aggregate of deg(v)·popcount(seen) over the
+    final state, equals the per-level sum of deg(v)·popcount(frontier): on
+    a full run, on a run cut at max_levels=2 (its last probed frontier
+    counts, unexpanded) and on a run whose late levels take the K3 pull
+    filter (which the count ignores, as the per-level sum did)."""
+    pairs = er_edges(120, 0.04)
+    srcs = [0, 1, 5, 17, 63]
+    full = msbfs(er, srcs, track_teps=True)
+    assert full.traversed_bit_edges == _teps_oracle(pairs, srcs) > 0
+
+    cut = msbfs(er, srcs, track_teps=True, max_levels=2)
+    assert cut.levels == 2
+    assert cut.traversed_bit_edges == _teps_oracle(pairs, srcs, max_levels=2)
+    assert 0 < cut.traversed_bit_edges < full.traversed_bit_edges
+
+    k3 = msbfs(er, srcs, track_teps=True, bottom_up_threshold=0.01)
+    assert "open_semi" in k3.strategies, k3.strategies
+    assert k3.traversed_bit_edges == full.traversed_bit_edges
+    assert msbfs(er, srcs).traversed_bit_edges == 0
+
+
 def test_bitmap_over_budget_runs_push(spark, er):
     """The bitmap passes the session broadcast gate like every other
     broadcast (executor memory guard): with broadcasts off, no side is
@@ -279,8 +318,8 @@ def test_eccentricity_grid(grid):
 @pytest.mark.parametrize("nsrc", [1, 70, 512])
 def test_lane_accounting_matches_numpy(spark, nsrc):
     """The accounting aggregate and the distance explode against the numpy
-    bit matrix: random limbs (sign bit set on some), all-zero visit rows,
-    fully closed rows and a deg column."""
+    bit matrix: random limbs (sign bit set on some), all-zero visit rows
+    and fully closed rows."""
     import pandas as pd
 
     from linkgraph.algos.msbfs import (
@@ -303,8 +342,7 @@ def test_lane_accounting_matches_numpy(spark, nsrc):
     seen = rng.integers(0, 2**64 - 1, size=(n, 8), dtype=np.uint64, endpoint=True)
     seen[20:40] = np.uint64(2**64 - 1)
     seen = (seen | v) & lane_mask
-    deg = rng.integers(0, 50, size=n)
-    pdf = pd.DataFrame({"vid": np.arange(n, dtype=np.int64), "deg": deg})
+    pdf = pd.DataFrame({"vid": np.arange(n, dtype=np.int64)})
     for i in range(8):
         pdf[f"v{i}"] = v[:, i].view(np.int64)
         pdf[f"s{i}"] = seen[:, i].view(np.int64)
@@ -314,18 +352,15 @@ def test_lane_accounting_matches_numpy(spark, nsrc):
     frontier_ref = int(vbits.any(axis=1).sum())
     closed_ref = int(limbs_to_bits(seen)[:, :nsrc].all(axis=1).sum())
     assert 20 <= closed_ref < n
-    lanes, frontier, closed, rows, traversals = _lane_accounting(
-        df, nsrc, _closed_pred(nsrc), with_deg=True
-    )
+    lanes, frontier, closed, rows = _lane_accounting(df, nsrc, _closed_pred(nsrc))
     assert np.array_equal(lanes, vbits.sum(axis=0))
     assert frontier == frontier_ref <= n - 20
     assert closed == closed_ref
     assert rows == n
-    assert traversals == int((deg * vbits.sum(axis=1)).sum())
 
-    lanes, frontier, closed, rows, traversals = _lane_accounting(df, nsrc)
+    lanes, frontier, closed, rows = _lane_accounting(df, nsrc)
     assert np.array_equal(lanes, vbits.sum(axis=0))
-    assert (frontier, closed, rows, traversals) == (frontier_ref, 0, n, 0)
+    assert (frontier, closed, rows) == (frontier_ref, 0, n)
 
     r, lane = np.nonzero(vbits)
     got = {(x["vid"], x["lane"]) for x in _visit_lanes(df, nsrc).collect()}

@@ -83,6 +83,32 @@ def test_simrank_scores_sorted_and_deduped(spark, sq_edges):
     assert all(a < b for a, b in pairs)
 
 
+def test_simrank_round_reads_materialized_working_set(spark, monkeypatch):
+    """The restricted edges are checkpointed once before the loop: a
+    round's executed plan scans them, and never re-derives the top-K
+    working set (an ordered limit over the degree table) from the raw
+    edges."""
+    import linkgraph.algos.simrank as simrank
+
+    pairs = [(a, b) for a in range(12) for b in range(a + 1, 12) if (a * b) % 3 != 1]
+    edges = spark.createDataFrame(pairs + [(b, a) for a, b in pairs], "src long, dst long")
+    plans = []
+    fixpoint = simrank.fixpoint
+
+    def traced(seed, step, *args, **kwargs):
+        def planned_step(state, metrics):
+            out = step(state, metrics)
+            plans.append(out._jdf.queryExecution().executedPlan().toString())
+            return out
+
+        return fixpoint(seed, planned_step, *args, **kwargs)
+
+    monkeypatch.setattr(simrank, "fixpoint", traced)
+    assert simrank.simrank_topk(edges, k_vertices=8, iters=2).count() > 0
+    assert len(plans) == 2
+    assert not any("TakeOrderedAndProject" in plan for plan in plans), plans[0]
+
+
 # ---------------------------------------------------------- greedy doc cover
 def test_greedy_doc_cover_marginal_gains(spark):
     from linkgraph.textops.coverage import greedy_doc_cover
