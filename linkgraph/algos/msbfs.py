@@ -18,9 +18,7 @@ Spark-native re-expression of [MSBFS15] Alg. 2/3 (SURVEY.md §2.9 K1/K2):
   its probe: expand + OR-aggregate + update + accounting run as one Spark
   job per level, and the driver owns state release, snapshot and resume.
   The level's expressions (frontier predicate, OR-aggregates, mask and
-  update) are built once per call, as SQL strings or Columns every level
-  reuses: built per level they were about 40 Column constructions through
-  py4j a level.
+  update) are built once per call; every level reuses them.
 * TEPS (`track_teps`) is one aggregate over the final state, not a term of
   every level's accounting: each lane bit enters the frontier exactly once,
   so Σ_levels deg(v)·popcount(visit) = Σ deg(v)·popcount(seen) at the end.
@@ -232,8 +230,7 @@ def msbfs(
     n_vertices = graph.num_vertices()
     closed_pred = _closed_pred(nsrc)
     strategy = "push"  # the K3 choice of the level `step` last planned
-    # the level's expressions, built once per call: built in `step`, they
-    # were about 40 Column constructions through py4j a level
+    # the level's expressions, built once per call; every level reuses them
     frontier_pred = " or ".join(f"v{i} != 0" for i in range(NLIMBS))
     or_aggs = [F.expr(f"bit_or(v{i}) as a{i}") for i in range(NLIMBS)]
     on_vid = F.expr("vid = dst")
@@ -371,17 +368,14 @@ def msbfs(
     )
     traversed = 0
     if track_teps:
-        # bench-only instrumentation: the (edge, lane) expansions of every
-        # level, deg(v)·popcount(visit) summed over the levels, in one
-        # aggregate — each lane bit of the final seen set entered the
-        # frontier exactly once (the seed's too, and a truncated run's last
-        # unexpanded frontier, as the per-level sum counted them).  On one
-        # partition the sum needs no exchange, which AQE runs as a job of
-        # its own: the degree table's broadcast and the sum are 2 jobs.
+        # the (edge, lane) expansions of every level, deg(v)·popcount(visit)
+        # summed over the levels, in one aggregate — each lane bit of the
+        # final seen set entered the frontier exactly once (the seed's too,
+        # and a truncated run's last unexpanded frontier, as the per-level
+        # sum counted them)
         popcount = " + ".join(f"bit_count(s{i})" for i in range(NLIMBS))
         traversed = int(
-            state.coalesce(1)
-            .join(graph.degrees(), "vid")
+            state.join(graph.degrees(), "vid")
             .selectExpr(f"coalesce(sum(deg * ({popcount})), 0L) as t")
             .first()["t"]
         )

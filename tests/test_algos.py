@@ -254,9 +254,10 @@ def test_one_job_per_iteration(spark, er):
 
 def test_msbfs_teps_is_one_final_aggregate(spark, er):
     """TEPS is counted once, from the final seen bits: with the default
-    broadcast threshold a track_teps run costs at most 2 jobs more (the
-    degree table's broadcast and the sum) than one without, where a
-    broadcast of the degree table a level cost one job a level."""
+    broadcast threshold a track_teps run costs at most 3 jobs more (the
+    degree table's broadcast, the sum's map stage and its final stage)
+    than one without, where a broadcast of the degree table a level cost
+    one job a level."""
     from linkgraph.algos.msbfs import msbfs
 
     srcs = list(range(0, 150, 3))
@@ -266,7 +267,7 @@ def test_msbfs_teps_is_one_final_aggregate(spark, er):
         jobs[teps] = _jobs_in_group(
             spark, f"msbfs-teps-{teps}", lambda: msbfs(er, srcs, track_teps=teps)
         )
-    assert jobs[True] - jobs[False] <= 2, jobs
+    assert jobs[True] - jobs[False] <= 3, jobs
 
 
 def test_snapshot_costs_two_jobs(spark, er, tmp_path):
