@@ -11,7 +11,7 @@ edges are never enumerated at all.
 Variants over identical input, interleaved in one JVM after a warmup:
 
 * top-down        — bottom_up=False (every level push-expands all frontier edges)
-* bottom-up gated — bottom_up=True (default threshold 0.3; open-side
+* bottom-up gated — bottom_up=True (default threshold 0.5; open-side
                     semi-join once the measured closed fraction crosses it)
 
 Deterministic synth graph (xxhash64), no driver-side edge generation.

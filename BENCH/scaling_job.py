@@ -36,12 +36,12 @@ def main():
 
     # ---- warmup (untimed, identical at every parallelism level): runs the
     # same kernel shapes bounded, which (a) JIT-compiles the 8-limb codegen
-    # classes (measured ~30s of C2 time on first use), (b) spins up the
-    # Python worker pool for the Arrow accounting kernel, (c) faults in the
-    # pre-touched heap.  These are one-time JVM lifecycle costs; a cluster
-    # amortizes them over hours of executor lifetime, while at this bench's
-    # 10-60s job scale they would otherwise dominate the measurement.  The
-    # criterion targets steady-state throughput scaling.
+    # classes (measured ~30s of C2 time on first use), (b) faults in the
+    # pre-touched heap; MS-BFS starts no Python workers.  These are one-time
+    # JVM lifecycle costs; a cluster amortizes them over hours of executor
+    # lifetime, while at this bench's 10-60s job scale they would otherwise
+    # dominate the measurement.  The criterion targets steady-state
+    # throughput scaling.
     msbfs(g, srcs, track_teps=True, max_levels=2)
     pagerank(g, tol=0.0, max_iter=1).count()
 

@@ -88,14 +88,11 @@ class _HadoopFS:
 
 
 class CheckpointManager:
-    def __init__(self, spark: SparkSession, root: str, use_iceberg: bool | None = None):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         self.fs = _HadoopFS(spark, root)
         self.fs.mkdirs(root)
-        if use_iceberg is None:
-            use_iceberg = _iceberg_available(spark)
-        self.use_iceberg = use_iceberg  # kept for cluster deployments
 
     # ------------------------------------------------------------------ write
     def write_state(self, state: DataFrame, iteration: int, metrics: dict) -> None:

@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 import posixpath
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -213,7 +214,7 @@ class LinkGraph:
                 # should pass materialize= explicitly.
                 try:
                     plan = edges._jdf.queryExecution().analyzed().toString()
-                except Exception:
+                except Py4JError:
                     plan = "Join"  # be conservative: round-trip
                 materialize = any(
                     k in plan

@@ -6,7 +6,7 @@ Reads an uncompressed event log (bench_extra.py --eventlog writes one): a
 single file, or a rolling-log directory (eventlog_v2_<app>), whose
 events_<n>_<app> parts are read in order.  A compressed log is refused.
 
-Prints, per job description (set by bench_extra.py per query):
+Prints, per job description (bench.run_suite sets it to each leaf's name):
   total job wall, job count, and the slowest stages (duration, task count,
   shuffle read/write bytes, name).
 """
