@@ -29,6 +29,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# `*_copurchase` leaves that derive their own weighted edges from lineitem
+# and never read the co-purchase graph
+OWN_EDGES = {"sssp_weighted_copurchase", "mst_copurchase"}
+
 
 def run_suite(
     spark, sf_dir: str, sf: str, only: set[str] | None = None
@@ -36,9 +40,9 @@ def run_suite(
     """One pass over the headline queries; returns (timings, extras).
 
     `only` names the leaves to run; None runs all of them.  A graph is built
-    (and timed) only when a named leaf needs it: the co-purchase graph for a
-    `*_copurchase` name, the Zipf graph for a `*_zipf` name or
-    `build_zipf_graph`.  Each leaf's Spark jobs carry the leaf name as their
+    (and timed) only when a named leaf reads it: the co-purchase graph for a
+    `*_copurchase` name outside `OWN_EDGES`, the Zipf graph for a `*_zipf`
+    name or `build_zipf_graph`.  Each leaf's Spark jobs carry the leaf name as their
     job description, so an event log attributes stages to leaves
     (tools/stageprof.py)."""
     from pyspark.sql import functions as F
@@ -75,7 +79,9 @@ def run_suite(
         return _T()
 
     # ---- graph 1: co-purchase from sf lineitem
-    g1_needed = only is None or any(q.endswith("_copurchase") for q in only)
+    g1_needed = only is None or any(
+        q.endswith("_copurchase") and q not in OWN_EDGES for q in only
+    )
     if g1_needed:
         with timed("build_copurchase"):
             g1 = copurchase_graph(spark, sf_dir)

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph, fits_broadcast
-from linkgraph.iterate import fixpoint, release
+from linkgraph.iterate import fixpoint, loop_partitions, release
 
 
 def _brandes(
@@ -50,7 +50,6 @@ def _brandes(
     (0 at the roots, whose δ neither estimator reads) — and its row
     count."""
     spark = graph.spark
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     def forward(state: DataFrame, m: dict) -> DataFrame:
         lvl = m["level"] + 1
@@ -67,7 +66,7 @@ def _brandes(
             seen, (agg.root == seen.sroot) & (agg.dst == seen.vid), "left_anti"
         ).select("root", F.col("dst").alias("vid"), F.lit(lvl).alias("dist"), "sigma")
         # coalesce: the union would add a shuffle's worth of partitions a level
-        return state.unionByName(new).coalesce(parts)
+        return state.unionByName(new).coalesce(loop_partitions(state))
 
     def level_count(state: DataFrame, m: dict) -> dict:
         lvl = m["level"] + 1
@@ -116,7 +115,7 @@ def _brandes(
         filled = u.join(
             contrib, (u.root == contrib.uroot) & (u.vid == contrib.src), "left"
         ).select("root", "vid", "dist", "sigma", F.coalesce("d", F.lit(0.0)).alias("delta"))
-        return state.where(F.col("dist") != d).unionByName(filled).coalesce(parts)
+        return state.where(F.col("dist") != d).unionByName(filled).coalesce(loop_partitions(state))
 
     out, _, _ = fixpoint(
         reached.withColumn("delta", F.lit(0.0)),

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import LinkGraph
-from linkgraph.iterate import fixpoint, release
+from linkgraph.iterate import fixpoint, loop_partitions, release
 
 
 def st_distance(
@@ -66,8 +66,6 @@ def st_distance(
     s, t = int(s), int(t)
     if s == t:
         return spark.createDataFrame([(s, t, 0)], schema)
-
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     def side(m: dict) -> tuple[bool, int]:
         """The round's side (forward when its frontier is no larger) and
@@ -99,7 +97,7 @@ def st_distance(
             )
         )
         # coalesce: the union would add a shuffle's worth of partitions a round
-        return state.unionByName(new).coalesce(parts)
+        return state.unionByName(new).coalesce(loop_partitions(state))
 
     def probe(state: DataFrame, m: dict) -> dict:
         forward, d = side(m)

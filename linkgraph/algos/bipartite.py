@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from linkgraph.algos.components import connected_components
 from linkgraph.graph import LinkGraph
-from linkgraph.iterate import fixpoint
+from linkgraph.iterate import fixpoint, loop_partitions
 
 
 def bipartite_check(graph: LinkGraph, max_levels: int = 64) -> DataFrame:
@@ -37,7 +37,6 @@ def bipartite_check(graph: LinkGraph, max_levels: int = 64) -> DataFrame:
     n_odd_edges counts conflict edges (src < dst orientation) whose BFS
     parities from the component's min-vid root coincide."""
     comps = connected_components(graph)
-    parts = int(graph.spark.conf.get("spark.sql.shuffle.partitions"))
 
     def step(visited: DataFrame, m: dict) -> DataFrame:
         msgs = visited.where(F.col("dist") == m["level"]).select(F.col("vid").alias("src"))
@@ -49,7 +48,7 @@ def bipartite_check(graph: LinkGraph, max_levels: int = 64) -> DataFrame:
             .withColumn("dist", F.lit(m["level"] + 1))
         )
         # coalesce: the union would add a shuffle's worth of partitions a level
-        return visited.unionByName(nxt).coalesce(parts)
+        return visited.unionByName(nxt).coalesce(loop_partitions(visited))
 
     def frontier(visited: DataFrame, m: dict | None = None) -> dict:
         level = m["level"] + 1 if m is not None else 0

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph
-from linkgraph.iterate import checkpoint, fixpoint, release
+from linkgraph.iterate import checkpoint, fixpoint, loop_partitions, release
 
 MAX_COLORS = 64  # single-limb used-mask capacity
 
@@ -66,7 +66,6 @@ def greedy_coloring(
     """
     if not graph.symmetric:
         raise ValueError("greedy_coloring needs a symmetric graph")
-    parts = int(graph.spark.conf.get("spark.sql.shuffle.partitions"))
     winners: list[DataFrame] = []
 
     def step(state: DataFrame, m: dict) -> DataFrame:
@@ -122,7 +121,11 @@ def greedy_coloring(
             )
         )
         # coalesce: the union would add a shuffle's worth of partitions a round
-        return state.where(F.col("color").isNotNull()).unionByName(updated).coalesce(parts)
+        return (
+            state.where(F.col("color").isNotNull())
+            .unionByName(updated)
+            .coalesce(loop_partitions(state))
+        )
 
     def uncolored(state: DataFrame, m: dict | None = None) -> dict:
         """Uncolored count, plus the palette-overflow probe of the round's

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph
-from linkgraph.iterate import count_changed, fixpoint
+from linkgraph.iterate import count_changed, fixpoint, loop_partitions
 
 
 def label_propagation(
@@ -38,7 +38,6 @@ def label_propagation(
     normal operation for LPA, so running out of it is not warned about
     (CC, whose docstring promises exactness, warns)."""
     n = graph.num_vertices()
-    nparts = int(graph.spark.conf.get("spark.sql.shuffle.partitions"))
 
     def step(labels: DataFrame, _metrics: dict) -> DataFrame:
         msgs = labels.select(F.col("vid").alias("src"), F.col("label").alias("l"))
@@ -52,7 +51,7 @@ def label_propagation(
         votes = (
             graph.expand(msgs, est_rows=n)
             .select("dst", "l")
-            .repartition(nparts, "dst")
+            .repartition(loop_partitions(labels), "dst")
             .groupBy("dst", "l")
             .agg(F.count("*").alias("n"))
         )

@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph
-from linkgraph.iterate import checkpoint, fixpoint, release
+from linkgraph.iterate import checkpoint, fixpoint, loop_partitions, release
 
 
 def _move_parity(round_no: int, vid_col):
@@ -91,7 +91,6 @@ def _local_move_rounds(
         kv-sized table never re-shuffles for its dimension joins."""
     from linkgraph.graph import fits_broadcast
 
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     m_lit = F.lit(int(m_edges)).cast("long")
 
     def step(labels: DataFrame, metrics: dict) -> DataFrame:
@@ -121,7 +120,7 @@ def _local_move_rounds(
             expand(msgs, n_vertices)
             .where(F.col("src") != F.col("dst"))
             .select("dst", "l", "w")
-            .repartition(nparts, "dst")
+            .repartition(loop_partitions(labels), "dst")
             .groupBy("dst", "l")
             .agg(F.sum("w").alias("k"))
         )

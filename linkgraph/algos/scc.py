@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.iterate import checkpoint, count_changed, fixpoint, release
+from linkgraph.iterate import checkpoint, count_changed, fixpoint, loop_partitions, release
 
 
 def _min_label_reach(edges: DataFrame, init: DataFrame, max_iter: int) -> DataFrame:
@@ -170,67 +170,51 @@ def strongly_connected_components(
     spark = edges.sparkSession
     nv = verts.count()
 
-    # iteration tables are |V|-row; at small |V| the session's shuffle
-    # width is pure task overhead (AQE would coalesce, but the iteration
-    # profile runs AQE-off), so size the loop's shuffles to the graph
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        # the conf can be non-numeric on AQE-auto deployments ("auto");
-        # skip the loop-width override there rather than crash
-        loop_p = max(4, min(int(old_sp), nv // 50_000 + 4))
-    except (TypeError, ValueError):
-        loop_p = None
-
     assigned_parts: list[DataFrame] = []
-    try:
-        if loop_p is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(loop_p))
-        e, verts, nv = _trim(e, verts, nv, assigned_parts)
-        for _ in range(max_rounds):
-            if nv == 0:
-                break
-            init = verts.select("vid", F.col("vid").alias("lbl"))
-            f = _min_label_reach(e, init, max_iter)
+    e, verts, nv = _trim(e, verts, nv, assigned_parts)
+    for _ in range(max_rounds):
+        if nv == 0:
+            break
+        init = verts.select("vid", F.col("vid").alias("lbl"))
+        f = _min_label_reach(e, init, max_iter)
 
-            # class-restricted reversed edges: both endpoints share f
-            fe = f.select(F.col("vid").alias("src"), F.col("lbl").alias("fs"))
-            fd = f.select(F.col("vid").alias("dst"), F.col("lbl").alias("fd"))
-            rev_class = checkpoint(
-                e.join(fe, "src")
-                .join(fd, "dst")
-                .where(F.col("fs") == F.col("fd"))
-                .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            br = _min_label_reach(rev_class, init, max_iter)
+        # class-restricted reversed edges: both endpoints share f
+        fe = f.select(F.col("vid").alias("src"), F.col("lbl").alias("fs"))
+        fd = f.select(F.col("vid").alias("dst"), F.col("lbl").alias("fd"))
+        rev_class = checkpoint(
+            e.join(fe, "src")
+            .join(fd, "dst")
+            .where(F.col("fs") == F.col("fd"))
+            .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        br = _min_label_reach(rev_class, init, max_iter)
 
-            joined = f.select("vid", "lbl").join(
-                br.select("vid", F.col("lbl").alias("br")), "vid"
-            )
-            assigned_parts.append(
-                checkpoint(
-                    joined.where(F.col("lbl") == F.col("br")).select(
-                        "vid", F.col("lbl").alias("comp")
-                    )
+        joined = f.select("vid", "lbl").join(
+            br.select("vid", F.col("lbl").alias("br")), "vid"
+        )
+        assigned_parts.append(
+            checkpoint(
+                joined.where(F.col("lbl") == F.col("br")).select(
+                    "vid", F.col("lbl").alias("comp")
                 )
             )
-            rest = checkpoint(joined.where(F.col("lbl") != F.col("br")).select("vid"))
-            for done_with in (f, rev_class, br, verts):
-                release(done_with)
-            verts = rest
-            nv = verts.count()
-            if nv == 0:
-                break
-            # restrict edges to unassigned vertices, then re-trim:
-            # peeling exposes fresh sources/sinks
-            restricted = checkpoint(
-                e.join(verts.withColumnRenamed("vid", "src"), "src", "left_semi")
-                .join(verts.withColumnRenamed("vid", "dst"), "dst", "left_semi")
-                .select("src", "dst")
-            )
-            release(e)
-            e, verts, nv = _trim(restricted, verts, nv, assigned_parts)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+        )
+        rest = checkpoint(joined.where(F.col("lbl") != F.col("br")).select("vid"))
+        for done_with in (f, rev_class, br, verts):
+            release(done_with)
+        verts = rest
+        nv = verts.count()
+        if nv == 0:
+            break
+        # restrict edges to unassigned vertices, then re-trim:
+        # peeling exposes fresh sources/sinks
+        restricted = checkpoint(
+            e.join(verts.withColumnRenamed("vid", "src"), "src", "left_semi")
+            .join(verts.withColumnRenamed("vid", "dst"), "dst", "left_semi")
+            .select("src", "dst")
+        )
+        release(e)
+        e, verts, nv = _trim(restricted, verts, nv, assigned_parts)
 
     release(e)
     release(verts)
@@ -283,7 +267,6 @@ def bowtie_decomposition(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
     )
     scc = comp.where(F.col("comp") == int(top["comp"])).select("vid", F.lit(0).alias("lvl"))
     scc_size = int(top["n"])
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     def reach(ed: DataFrame) -> int:
         """How many vertices outside the SCC are reachable from it along
@@ -299,7 +282,7 @@ def bowtie_decomposition(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
                 .withColumn("lvl", F.lit(m["level"] + 1))
             )
             # coalesce: the union would add a shuffle's worth of partitions a level
-            return visited.unionByName(nxt).coalesce(parts)
+            return visited.unionByName(nxt).coalesce(loop_partitions(visited))
 
         def new_level(visited: DataFrame, m: dict) -> dict:
             n = visited.where(F.col("lvl") == m["level"] + 1).count()

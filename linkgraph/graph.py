@@ -191,6 +191,7 @@ class LinkGraph:
         self._salt_checked = False
         self._store = None
         self._vertex_dict = None
+        self._edge_partitions = None
         if not shape:
             # shape=False: the caller vouches the input already carries the
             # src co-location (a BUCKETED table scan reports
@@ -206,6 +207,7 @@ class LinkGraph:
             self._max_vid = None
             return
         p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+        self._edge_partitions = p
         if persist:
             if materialize is None:
                 # round-trip only when the input is a real derivation; a bare
@@ -395,6 +397,14 @@ class LinkGraph:
     def spark(self):
         return self.edges.sparkSession
 
+    def edge_partitions(self) -> int:
+        """The edge cache's partition count, fixed at build: the unit of an
+        edge share, whatever ``spark.sql.shuffle.partitions`` reads when
+        asked (inside a `fixpoint` loop it is the loop's own count)."""
+        if self._edge_partitions is None:
+            self._edge_partitions = self.edges._jdf.rdd().getNumPartitions()
+        return self._edge_partitions
+
     def vertices(self) -> DataFrame:
         """All vertex ids.  On a symmetric table every vertex has out-edges,
         so the cached degree table doubles as the vertex set (no extra
@@ -431,8 +441,9 @@ class LinkGraph:
     def maybe_auto_salt(self, factor: int = 4, min_edges: int = 1_000_000):
         """J2 self-detection: enable salting when the degree sketch shows a
         hub whose single edge list exceeds `factor` × the average partition
-        share |E|/P — the regime where one reducer's input is dominated by
-        one key and coarse AQE skew splits stop helping.  Runs at most once
+        share |E|/P (P: the edge cache's partition count) — the regime
+        where one reducer's input is dominated by one key and coarse AQE
+        skew splits stop helping.  Runs at most once
         per graph (two cheap aggregates over the cached degree/edge tables);
         a no-op on small graphs (< min_edges) where skew cannot hurt.
         Opt out with LINKGRAPH_AUTO_SALT=0.
@@ -449,7 +460,7 @@ class LinkGraph:
         e = self.num_edges()
         if e < min_edges:
             return None
-        p = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        p = self.edge_partitions()
         share = max(e // p, 1)
         max_deg = self.degrees().agg(F.max("deg").alias("m")).first()["m"] or 0
         if max_deg > factor * share:

@@ -29,6 +29,13 @@ caller of `iteration_plan`, and owns the rest:
   row count, counted as the probe materializes it, so plan statistics
   never compound across iterations and the join planner sees real sizes
   in every iteration, not only the first.
+* **Shuffles sized to the state.**  With AQE off nothing coalesces the
+  loop's shuffles, so each iteration sets the loop's
+  ``spark.sql.shuffle.partitions`` to the count AQE's coalescing rule
+  would pick for the state just measured (`loop_width`), never above the
+  caller's count, and narrows a wider state to it before `step` reads
+  it.  A 900-row state runs its exchanges in one task instead of the
+  session's 32; a state of many megabytes keeps the caller's width.
 * **State release.**  Every state `fixpoint` checkpoints is released once
   its successor is materialized, except the one it returns.
   ``DataFrame.unpersist()`` is a no-op on a local checkpoint (its blocks
@@ -53,11 +60,15 @@ from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linkgraph.graph import fits_broadcast, parse_bytes
+
 
 @contextmanager
 def iteration_plan(spark):
     """Planning profile for `fixpoint`'s loops: AQE OFF for the loop body,
-    restored on exit.
+    restored on exit.  Yields the caller's ``spark.sql.shuffle.partitions``,
+    which is restored on exit too: `fixpoint` sets the loop's own count
+    every iteration (`loop_width`), the fourth loop conf.
 
     The per-iteration plan is static and repetitive; AQE's value is runtime
     re-planning of unknown shapes, and its cost is an extra driver round of
@@ -94,15 +105,64 @@ def iteration_plan(spark):
     old_aqe = conf.get("spark.sql.adaptive.enabled")
     old_smj = conf.get("spark.sql.join.preferSortMergeJoin", "true")
     old_cp = conf.get("spark.sql.constraintPropagation.enabled", "true")
+    old_parts = conf.get("spark.sql.shuffle.partitions")
     conf.set("spark.sql.adaptive.enabled", "false")
     conf.set("spark.sql.join.preferSortMergeJoin", "false")
     conf.set("spark.sql.constraintPropagation.enabled", "false")
     try:
-        yield
+        yield int(old_parts)
     finally:
         conf.set("spark.sql.adaptive.enabled", old_aqe)
         conf.set("spark.sql.join.preferSortMergeJoin", old_smj)
         conf.set("spark.sql.constraintPropagation.enabled", old_cp)
+        conf.set("spark.sql.shuffle.partitions", old_parts)
+
+
+def loop_width(spark, cap: int) -> Callable[[DataFrame, int | None], int]:
+    """The loop's shuffle partition count for a measured state, by AQE's
+    own coalescing rule (`CoalesceShufflePartitions`), so it is the count
+    AQE would pick if it were on inside the loop.  For a state of `bytes`
+    (its rows times the schema's default row size, as `reroot` sizes it):
+
+        target = max(minPartitionSize, min(advisoryPartitionSizeInBytes,
+                                           ceil(bytes / defaultParallelism)))
+        k = ceil(bytes / target), clamped to [1, cap]
+
+    `cap` is the caller's ``spark.sql.shuffle.partitions``.  Then k rises
+    until one partition's share of the state passes
+    `graph.fits_broadcast`: the planner builds a shuffled-hash join only
+    for a side under the broadcast threshold times the partition count,
+    and the AQE count alone would turn the loop's hash joins back into
+    sort-merge joins.  No k helps when not even one row passes the gate
+    (a threshold of -1), so the AQE count stands.  An unmeasured state
+    (no row count) keeps `cap`."""
+    conf = spark.conf
+    min_size = parse_bytes(
+        conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1MB")
+    )
+    advisory = parse_bytes(
+        conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
+    )
+    parallelism = spark.sparkContext.defaultParallelism
+
+    def width(state: DataFrame, rows: int | None) -> int:
+        if rows is None:
+            return cap
+        size = rows * (8 + state._jdf.schema().defaultSize())
+        target = max(min_size, min(advisory, -(-size // parallelism)))
+        k = min(cap, max(1, -(-size // target)))
+        if not fits_broadcast(state, 1) or fits_broadcast(state, -(-rows // k)):
+            return k
+        lo, hi = k + 1, cap  # the least k in (k, cap] whose share fits, else cap
+        while lo < hi:
+            mid = (lo + hi) // 2
+            if fits_broadcast(state, -(-rows // mid)):
+                hi = mid
+            else:
+                lo = mid + 1
+        return hi
+
+    return width
 
 
 def fixpoint(
@@ -131,6 +191,11 @@ def fixpoint(
         that materializes the (lazy) checkpoint.
     Snapshots hold the seed's columns, so `step` may add probe-only
     columns (e.g. the previous value) without them reaching the snapshot.
+    Each iteration's `step`, `probe` and snapshot run at the loop's
+    ``spark.sql.shuffle.partitions`` (`loop_width` of the state `step`
+    reads), so a step that sizes a repartition or coalesce reads the conf
+    inside `step`, not when the kernel is called; the caller's count is
+    restored on exit.
 
     Returns (state, metrics, converged); converged is False when the
     budget ran out before `done` held.
@@ -150,15 +215,21 @@ def fixpoint(
     )
 
     converged = False
-    with iteration_plan(seed.sparkSession):
+    spark = seed.sparkSession
+    with iteration_plan(spark) as cap:
+        width = loop_width(spark, cap)
         if metrics is None:
             metrics = seed_metrics(state) if seed_metrics is not None else {}
-        state = reroot(state, rows)
+        n = _measured_rows(state, rows)
+        state = reroot(state, n)
         for it in range(it0, max_iter):
-            new_state, rows = _local_checkpoint(step(state, metrics), eager=False)
+            k = width(state, n)
+            spark.conf.set("spark.sql.shuffle.partitions", str(k))
+            new_state, rows = _local_checkpoint(step(_narrow(state, k), metrics), eager=False)
             new_metrics = probe(new_state, metrics)
             release(state)
-            state = reroot(new_state, rows)
+            n = _measured_rows(new_state, rows)
+            state = reroot(new_state, n)
             if checkpoint_mgr is not None and (it + 1) % snapshot_every == 0:
                 checkpoint_mgr.write_state(
                     state.select(*seed.columns), it + 1, {"iteration": it + 1, **new_metrics}
@@ -190,7 +261,30 @@ def _local_checkpoint(
     return observed.localCheckpoint(eager=eager), rows
 
 
-def reroot(state: DataFrame, rows: Callable[[], int | None]) -> DataFrame:
+def loop_partitions(df: DataFrame) -> int:
+    """The shuffle partition count `fixpoint` set for the iteration being
+    planned: what a `step` that repartitions or coalesces must read."""
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+
+def _measured_rows(state: DataFrame, rows: Callable[[], int | None]) -> int | None:
+    """The `rows` count of the local checkpoint `state` (one job counts a
+    checkpoint no action has materialized yet)."""
+    if not state._jdf.queryExecution().analyzed().rdd().isCheckpointed():
+        state.count()
+    return rows()
+
+
+def _narrow(state: DataFrame, k: int) -> DataFrame:
+    """`state` on at most `k` partitions.  `reroot` keeps the checkpoint's
+    partitioning, and the planner keeps a non-shuffled child's
+    partitioning, so a wider state would hold the whole step at its old
+    width; ``coalesce`` is narrow: no exchange, no job."""
+    parts = state._jdf.queryExecution().analyzed().rdd().getNumPartitions()
+    return state.coalesce(k) if parts > k else state
+
+
+def reroot(state: DataFrame, rows: int | None) -> DataFrame:
     """The local checkpoint `state` as a new leaf whose statistics are its
     measured size.  ``localCheckpoint`` copies the analyzed plan's
     statistics into the ``LogicalRDD`` it makes, and an inner join's
@@ -199,22 +293,19 @@ def reroot(state: DataFrame, rows: Callable[[], int | None]) -> DataFrame:
     iteration: Catalyst then spends its time on huge BigInts, and from the
     second iteration on the join planner sees every state as too large for
     a shuffled-hash join.  The new ``LogicalRDD`` has the same RDD, output,
-    partitioning and ordering; its ``originStats`` are the `rows` count
-    (one job counts a checkpoint no action has materialized yet) times the
-    schema's default row size, or none (``spark.sql.defaultSizeInBytes``,
-    never broadcast) without a count.  py4j turns a ``scala.math.BigInt``
-    into a Python int, so the size-only ``Statistics`` are borrowed from a
-    filtered ``spark.range`` of size // 8 rows (8 bytes a row)."""
+    partitioning and ordering; its ``originStats`` are the measured `rows`
+    count times the schema's default row size, or none
+    (``spark.sql.defaultSizeInBytes``, never broadcast) without a count.
+    py4j turns a ``scala.math.BigInt`` into a Python int, so the size-only
+    ``Statistics`` are borrowed from a filtered ``spark.range`` of
+    size // 8 rows (8 bytes a row)."""
     spark = state.sparkSession
     jspark = spark._jsparkSession
     jvm = spark._jvm
     leaf = state._jdf.queryExecution().analyzed()
-    if not leaf.rdd().isCheckpointed():
-        state.count()
-    n = rows()
     stats = jvm.scala.Option.empty()
-    if n is not None:
-        size = n * (8 + leaf.schema().defaultSize())
+    if rows is not None:
+        size = rows * (8 + leaf.schema().defaultSize())
         stats = jvm.scala.Some(
             jspark.range(size // 8).where("true").queryExecution().analyzed().stats()
         )
@@ -235,7 +326,8 @@ def reroot(state: DataFrame, rows: Callable[[], int | None]) -> DataFrame:
 def checkpoint(df: DataFrame) -> DataFrame:
     """Eager local checkpoint of `df`, re-rooted on its measured size: the
     lineage and the statistics of everything before it are cut."""
-    return reroot(*_local_checkpoint(df, eager=True))
+    state, rows = _local_checkpoint(df, eager=True)
+    return reroot(state, rows())
 
 
 def count_changed(state: DataFrame, col: str, prev_col: str) -> int:

@@ -51,7 +51,7 @@ class SaltedEdges:
         # cache made the salted path ~2x SLOWER than plain; the whole point
         # of the build-once cache is that only the frontier moves per
         # iteration).  One build-time shuffle, paid once.
-        p = int(graph.spark.conf.get("spark.sql.shuffle.partitions"))
+        p = graph.edge_partitions()
         self.edges = (
             salted.repartition(p, "src", "salt")
             .sortWithinPartitions("src", "salt", "dst")

@@ -11,7 +11,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Shuffle partitioning: a multiple of cores; AQE coalesces down at runtime.
+# Shuffle partitioning: a multiple of cores.  AQE coalesces down at runtime
+# outside `iterate.fixpoint` loops; inside them AQE is off, and
+# `iterate.loop_width` applies AQE's coalescing rule to each measured state.
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("LINKGRAPH_SHUFFLE_PARTITIONS", "32"))
 
 

@@ -281,6 +281,7 @@ def near_duplicate_clusters(
     nothing recomputes through the dropped blocks."""
     from linkgraph.algos.components import connected_components
     from linkgraph.graph import LinkGraph
+    from linkgraph.iterate import release
 
     pairs = minhash_near_duplicates(docs, threshold, num_hashes, bands, hash_family)
     g = LinkGraph.from_undirected(pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")), distinct=False)
@@ -297,10 +298,7 @@ def near_duplicate_clusters(
     out.count()
     pairs.unpersist()
     g.unpersist()
-    try:
-        comp.unpersist()  # release the CC result's localCheckpoint blocks
-    except Exception:
-        pass
+    release(comp)  # the CC result's local checkpoint blocks
     return out
 
 

@@ -154,10 +154,7 @@ class LshIndex:
     seed: int
 
     def unpersist(self):
-        try:
-            self.buckets.unpersist()
-        except Exception:
-            pass
+        self.buckets.unpersist()
 
 
 def build_lsh_index(
@@ -262,10 +259,7 @@ class IvfIndex:
     seed: int
 
     def unpersist(self):
-        try:
-            self.assignments.unpersist()
-        except Exception:
-            pass
+        self.assignments.unpersist()
 
 
 def _ivf_assign(embeddings, centroids, dim, id_col, vec_col):

@@ -903,3 +903,215 @@ def test_no_parquet_round_trips_in_algos():
         if ".write" in line and (path.name, line.strip()) not in allowed
     ]
     assert not hits, "DataFrame writes in linkgraph/algos/:\n" + "\n".join(hits)
+
+
+def _trace_loops(monkeypatch, modules, on_step, on_final=lambda state: None):
+    """Route each module's `fixpoint` through a wrapper that calls
+    on_step(state, next_state) for every step and on_final(state) for the
+    state the loop returns."""
+    from linkgraph import iterate
+
+    def tracing(seed, step, *args, **kwargs):
+        def traced(state, metrics):
+            nxt = step(state, metrics)
+            on_step(state, nxt)
+            return nxt
+
+        state, metrics, converged = iterate.fixpoint(seed, traced, *args, **kwargs)
+        on_final(state)
+        return state, metrics, converged
+
+    for module in modules:
+        monkeypatch.setattr(module, "fixpoint", tracing)
+
+
+def _loop_count(spark) -> int:
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+@pytest.fixture
+def small_partitions(spark):
+    """AQE's coalescing sizes lowered for one call: a 150-row state then
+    wants more partitions than the caller's 8."""
+    conf = spark.conf
+    keys = (
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+    )
+    old = [conf.get(k) for k in keys]
+    conf.set(keys[0], "256b")
+    conf.set(keys[1], "1b")
+    yield
+    for k, v in zip(keys, old):
+        conf.set(k, v)
+
+
+def test_loop_width_follows_aqe_rule(spark):
+    """iterate.loop_width: AQE's target size and count, clamped to
+    [1, cap]; raised until one partition's share passes fits_broadcast;
+    the AQE count stands when the gate is off; cap without a count."""
+    from linkgraph.graph import fits_broadcast
+    from linkgraph.iterate import loop_width
+
+    state = spark.range(1).selectExpr("id as vid", "id as label")  # 24 B a row
+    conf = spark.conf
+    old = {
+        k: conf.get(k)
+        for k in (
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+            "spark.sql.autoBroadcastJoinThreshold",
+        )
+    }
+    try:
+        width = loop_width(spark, 8)
+        assert width(state, 900) == 1  # 21.6 KB < minPartitionSize (1 MB)
+        assert width(state, None) == 8
+        # 240 MB: AQE's count is 4 (60 MB targets), but a 2.5M-row share is
+        # over the gate and no count up to the cap passes it: the cap
+        assert width(state, 10_000_000) == 8
+        conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1000b")
+        conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "500b")
+        width = loop_width(spark, 8)
+        # 150 rows x 24 B = 3600 B over 4 cores: target 900 B -> 4
+        assert width(state, 150) == 4
+        assert width(state, 10) == 1  # 240 B: target 500 B, the minimum
+        conf.set("spark.sql.autoBroadcastJoinThreshold", "1000")
+        width = loop_width(spark, 8)
+        # 40 B a row at the gate: 150 rows need a share of < 25 rows -> 7
+        k = width(state, 150)
+        assert k == 7 and fits_broadcast(state, -(-150 // k))
+        assert not fits_broadcast(state, -(-150 // (k - 1)))
+        assert width(state, 1000) == 8  # no k <= cap fits: cap
+        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        assert loop_width(spark, 8)(state, 150) == 4
+    finally:
+        for k, v in old.items():
+            conf.set(k, v)
+
+
+def test_loops_narrow_to_one_partition(er, monkeypatch):
+    """(a) A 150-vertex state is far under AQE's minimum partition size, so
+    every step of pagerank, connected_components and msbfs reads a
+    1-partition state at a loop count of 1, each returns a 1-partition
+    state, and the caller's count reads 8 afterwards."""
+    import linkgraph.algos.components as components_module
+    import linkgraph.algos.msbfs as msbfs_module
+    import linkgraph.algos.pagerank as pagerank_module
+
+    spark = er.spark
+    steps, finals = set(), []
+    _trace_loops(
+        monkeypatch,
+        [pagerank_module, components_module, msbfs_module],
+        lambda state, _: steps.add((_loop_count(spark), state.rdd.getNumPartitions())),
+        lambda state: finals.append(state.rdd.getNumPartitions()),
+    )
+    pagerank_module.pagerank(er, tol=0.0, max_iter=3).count()
+    components_module.connected_components(er).count()
+    msbfs_module.msbfs(er, list(range(10)))
+    assert finals == [1, 1, 1], finals
+    assert steps == {(1, 1)}, steps
+    assert _loop_count(spark) == 8
+
+
+def test_loop_count_restored_after_failing_step(er):
+    """(a) A step that raises still leaves the caller's count in place."""
+    from linkgraph.iterate import fixpoint
+
+    def step(state, metrics):
+        if metrics["i"] == 1:
+            raise RuntimeError("boom")
+        return state.select("vid")
+
+    with pytest.raises(RuntimeError, match="boom"):
+        fixpoint(
+            er.vertices(),
+            step,
+            lambda st, m: {"i": m["i"] + 1, "n": st.count()},
+            lambda m, _: False,
+            5,
+            seed_metrics=lambda st: {"i": 0, "n": st.count()},
+        )
+    assert _loop_count(er.spark) == 8
+
+
+def test_loop_count_rises_to_the_callers_cap(er, monkeypatch, small_partitions):
+    """(b) With AQE's sizes lowered the loop count rises above 1 and stops
+    at the caller's 8; the caller's count reads 8 afterwards."""
+    import linkgraph.algos.pagerank as pagerank_module
+
+    spark = er.spark
+    counts = []
+    _trace_loops(monkeypatch, [pagerank_module], lambda *_: counts.append(_loop_count(spark)))
+    pagerank_module.pagerank(er, tol=0.0, max_iter=3).count()
+    # 150 rows x 32 B = 4800 B over a 256 B target: 19 partitions, capped
+    assert counts == [8, 8, 8]
+    assert _loop_count(spark) == 8
+
+
+def _loop_answers(er):
+    from linkgraph.algos.betweenness import betweenness
+    from linkgraph.algos.msbfs import msbfs
+
+    res = msbfs(er, list(range(20)))
+    return {
+        "pagerank": {r["vid"]: r["pr"] for r in pagerank(er, tol=0.0, max_iter=8).collect()},
+        "cc": sorted(map(tuple, connected_components(er).collect())),
+        "lpa": sorted(map(tuple, label_propagation(er, max_iter=6).collect())),
+        "msbfs": (res.r.tolist(), res.s.tolist(), res.per_level_new),
+        "bc": {r["vid"]: r["bc"] for r in betweenness(er, [0, 3, 7, 11]).collect()},
+    }
+
+
+@pytest.fixture(scope="module")
+def answers_at_one(er):
+    return _loop_answers(er)
+
+
+def test_loop_count_does_not_change_answers(er, answers_at_one, small_partitions):
+    """(c) The same answers whether the loop count is forced up to the
+    caller's 8 or left at 1: integers exactly, floats to 1e-9."""
+    wide = _loop_answers(er)
+    narrow = answers_at_one
+    for key in ("cc", "lpa", "msbfs"):
+        assert wide[key] == narrow[key], key
+    for key in ("pagerank", "bc"):
+        assert wide[key].keys() == narrow[key].keys(), key
+        for v, x in narrow[key].items():
+            assert wide[key][v] == pytest.approx(x, abs=1e-9), (key, v)
+
+
+def test_narrow_loop_keeps_edge_partitioning(er, monkeypatch):
+    """(d) Under a -1 threshold the expand is a shuffled join: at a loop
+    count of 1, below the edge cache's 8, it still reuses the cache's
+    HashPartitioning(src) — no Exchange over its InMemoryTableScan."""
+    import linkgraph.algos.pagerank as pagerank_module
+
+    spark = er.spark
+    plans = []
+    _trace_loops(
+        monkeypatch,
+        [pagerank_module],
+        lambda _, nxt: plans.append(
+            (_loop_count(spark), nxt._jdf.queryExecution().executedPlan().toString())
+        ),
+    )
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        pagerank_module.pagerank(er, tol=0.0, max_iter=2).count()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert [k for k, _ in plans] == [1, 1]
+    for _, plan in plans:
+        lines = plan.splitlines()
+        scans = [i for i, line in enumerate(lines) if "InMemoryTableScan" in line]
+        assert scans, plan
+        for i in scans:
+            depth = len(lines[i]) - len(lines[i].lstrip(" :+-"))
+            parent = next(
+                line for line in reversed(lines[:i])
+                if len(line) - len(line.lstrip(" :+-")) < depth
+            )
+            assert "Exchange" not in parent, plan

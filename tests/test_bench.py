@@ -72,3 +72,17 @@ def test_bench_extra_rejects_unknown_only(sf0001):
     assert proc.returncode != 0
     assert "no_such_leaf" in proc.stderr and "msbfs512_zip" in proc.stderr
     assert '"queries"' not in proc.stdout
+
+
+def test_run_suite_own_edge_leaves_build_no_graph(spark, sf0001, monkeypatch):
+    """mst_copurchase derives its own weighted edges from lineitem, so a
+    subset of it alone times no build_copurchase (10.9 s at sf0.001)."""
+    import linkgraph.entry_queries
+
+    def no_build(*a, **k):
+        raise AssertionError("run_suite built the co-purchase graph")
+
+    monkeypatch.setattr(linkgraph.entry_queries, "copurchase_graph", no_build)
+    timings, extras = bench.run_suite(spark, sf0001, "0.001", only={"mst_copurchase"})
+    assert list(timings) == ["mst_copurchase"]
+    assert extras["mst_edges"] > 0

@@ -143,6 +143,38 @@ def test_near_duplicate_clusters(spark):
     }
 
 
+def test_near_duplicate_clusters_releases_cc_checkpoint(spark, monkeypatch):
+    """The CC result near_duplicate_clusters reads is a local checkpoint,
+    which DataFrame.unpersist() does not free: its RDD must be gone from
+    the persistent RDDs once the clusters are returned."""
+    import linkgraph.algos.components as components_module
+    from linkgraph.textops.dedup import near_duplicate_clusters
+
+    cc_rdds = []
+
+    def recording(graph, *args, **kwargs):
+        comp = connected_components(graph, *args, **kwargs)
+        leaf = comp._jdf.queryExecution().analyzed().collectLeaves().head()
+        cc_rdds.append(leaf.rdd().id())
+        return comp
+
+    connected_components = components_module.connected_components
+    monkeypatch.setattr(components_module, "connected_components", recording)
+    docs = [
+        (1, "alpha beta gamma delta epsilon zeta"),
+        (2, "alpha beta gamma delta epsilon eta"),
+        (3, "one two three four five six"),
+        (4, "one two three four five seven"),
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    out = near_duplicate_clusters(df, threshold=0.5, num_hashes=32, bands=16)
+    assert out.count() == 4
+    out.unpersist()
+    persistent = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    assert len(cc_rdds) == 1
+    assert cc_rdds[0] not in persistent
+
+
 def test_asof_join_null_payload_no_splice(spark):
     # the LATEST right row has a NULL payload field: the output must carry
     # that row's fields atomically, not splice the older row's value in

@@ -120,3 +120,46 @@ def test_auto_salt_noop_on_uniform_graph(spark):
     assert g.maybe_auto_salt(factor=8, min_edges=100) is None
     assert g._salted is None
     g.unpersist()
+
+
+def test_auto_salt_verdict_same_inside_a_loop(spark, monkeypatch):
+    """maybe_auto_salt measures a hub against the edge cache's partition
+    share, not the session count: its first call, made by an expand inside
+    a fixpoint loop whose count has dropped to 1, salts a Zipf graph
+    exactly as a call outside any loop does (at a count of 1 the share
+    was the whole edge set, and no hub ever passed)."""
+    from linkgraph.algos.pagerank import pagerank
+    from linkgraph.fixtures import edges_df
+
+    # Zipf degrees, exponent 2: rank i links to 600 / (i+1)^2 leaves
+    pairs = [
+        (i, 10_000 + 1000 * i + j) for i in range(60) for j in range(600 // (i + 1) ** 2)
+    ]
+    verdicts = []
+    for inside in (False, True):
+        g = LinkGraph.from_undirected(edges_df(spark, pairs), num_partitions=8)
+        assert g.num_edges() >= 1000
+        if inside:
+            check = LinkGraph.maybe_auto_salt
+            monkeypatch.setattr(
+                LinkGraph, "maybe_auto_salt",
+                lambda self: check(self, factor=2, min_edges=1000),
+            )
+            old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+            try:
+                pagerank(g, tol=0.0, max_iter=1).count()
+            finally:
+                spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+                monkeypatch.undo()
+        else:
+            g.maybe_auto_salt(factor=2, min_edges=1000)
+        salted = g._salted
+        assert salted is not None, f"not salted (inside a loop: {inside})"
+        verdicts.append(
+            (salted.s, sorted(r["src"] for r in salted.hubs.collect()),
+             salted.edges.rdd.getNumPartitions())
+        )
+        g.unpersist()
+    assert verdicts[0] == verdicts[1]
+    assert verdicts[0][2] == 8
