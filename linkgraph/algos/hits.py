@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph
-from linkgraph.iterate import checkpoint, fixpoint, release
+from linkgraph.iterate import checkpoint, fixpoint, on_session, release
 
 
 def hits(
@@ -75,14 +75,11 @@ def hits(
         Σx² action (left in the plan, the sf0.1 query ran 1.3x slower on a
         4 vCPU box); then hub(u) = Σ auth over out-edges, left raw for the
         probe to measure its norm."""
-        raw = checkpoint(
-            half_step(
-                graph,
-                state.where(F.col("hub").isNotNull()).select(
-                    F.col("vid").alias("src"), (F.col("hub") / F.lit(m["norm"])).alias("x")
-                ),
-            )
+        msgs = state.where(F.col("hub").isNotNull()).select(
+            F.col("vid").alias("src"), (F.col("hub") / F.lit(m["norm"])).alias("x")
         )
+        # the expand is rooted on the edges: plan it on the loop session
+        raw = checkpoint(on_session(half_step(graph, msgs), state.sparkSession))
         norm = math.sqrt(raw.agg(F.sum(F.col("x") * F.col("x"))).first()[0])
         for done_with in auths:  # the state that read them is materialized
             release(done_with)

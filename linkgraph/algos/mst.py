@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import fits_broadcast
-from linkgraph.iterate import count_changed, fixpoint, release
+from linkgraph.iterate import count_changed, fixpoint, on_session, release
 
 
 def minimum_spanning_forest(
@@ -90,7 +90,8 @@ def minimum_spanning_forest(
         # rows by dst every round)
         if fits_broadcast(cs, n_vertices):
             cs, cd = F.broadcast(cs), F.broadcast(cd)
-        prop = (
+        # rooted on the edges: planned on comp's (the loop's) session
+        prop = on_session(
             e.join(cs, "src")
             .join(cd, "dst")
             .where(F.col("csrc") != F.col("cdst"))
@@ -103,9 +104,9 @@ def minimum_spanning_forest(
                     )
                 ).alias("m")
             )
-            .select("csrc", "m.w", "m.u", "m.v", "m.cdst")
-            .localCheckpoint(eager=False)
-        )
+            .select("csrc", "m.w", "m.u", "m.v", "m.cdst"),
+            comp.sparkSession,
+        ).localCheckpoint(eager=False)
         n = prop.count()
         for mapping in mappings:
             release(mapping)
@@ -146,7 +147,8 @@ def minimum_spanning_forest(
     out = forest_parts[0]
     for p in forest_parts[1:]:
         out = out.unionByName(p)
-    return out.select("u", "v", "w").distinct().select(
+    # the proposals belong to the loop's session; the result to the caller's
+    return on_session(out, spark).select("u", "v", "w").distinct().select(
         F.col("u").cast("long"), F.col("v").cast("long"), F.col("w").cast("long")
     )
 

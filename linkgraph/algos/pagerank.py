@@ -8,9 +8,10 @@ Scale-shaped iteration (one heavy Spark job per iteration):
   when `graph.fits_broadcast` passes them, salted or plain shuffle join
   otherwise (never an unconditional |V|-row
   broadcast: at 10^9 vertices that OOMs every executor);
-* the loop runs under `iteration_plan` (AQE off, shuffled-hash preferred):
-  the per-iteration plan is static and co-partitioned, so AQE's per-stage
-  driver rounds are pure overhead and SHJ avoids SMJ's per-iteration sort;
+* the loop runs on `fixpoint`'s loop session (AQE off, shuffled-hash
+  preferred): the per-iteration plan is static and co-partitioned, so
+  AQE's per-stage driver rounds are pure overhead and SHJ avoids SMJ's
+  per-iteration sort;
 * Δrank and the dangling mass for the NEXT iteration are folded into one
   aggregate over the freshly checkpointed state — no separate join or
   anti-join action per iteration.  The dangling vertex set is static

@@ -98,7 +98,9 @@ class CheckpointManager:
     def write_state(self, state: DataFrame, iteration: int, metrics: dict) -> None:
         """Snapshot `state` and commit its manifest.  Two jobs: the write,
         and the per-file row counts read back with `state`'s schema (no
-        footer-inference job).  The caller keeps its in-memory state."""
+        footer-inference job), both planned in `state`'s session (inside a
+        `fixpoint`, the loop's: AQE off, so the counts are one job).  The
+        caller keeps its in-memory state."""
         path = posixpath.join(self.root, f"iter={iteration}")
         state.write.mode("overwrite").parquet(path)
         sizes = {
@@ -110,7 +112,7 @@ class CheckpointManager:
         rows_by_file = {
             posixpath.basename(r["f"]): r["n"]
             for r in (
-                self.spark.read.schema(state.schema)
+                state.sparkSession.read.schema(state.schema)
                 .parquet(path)
                 .groupBy(F.input_file_name().alias("f"))
                 .agg(F.count("*").alias("n"))

@@ -188,7 +188,7 @@ class LinkGraph:
         spark = edges.sparkSession
         self.symmetric = symmetric
         self._salted = None
-        self._salt_checked = False
+        self._max_degree = None
         self._store = None
         self._vertex_dict = None
         self._edge_partitions = None
@@ -400,7 +400,7 @@ class LinkGraph:
     def edge_partitions(self) -> int:
         """The edge cache's partition count, fixed at build: the unit of an
         edge share, whatever ``spark.sql.shuffle.partitions`` reads when
-        asked (inside a `fixpoint` loop it is the loop's own count)."""
+        asked (a `fixpoint` loop session reads the loop's own count)."""
         if self._edge_partitions is None:
             self._edge_partitions = self.edges._jdf.rdd().getNumPartitions()
         return self._edge_partitions
@@ -443,18 +443,18 @@ class LinkGraph:
         hub whose single edge list exceeds `factor` × the average partition
         share |E|/P (P: the edge cache's partition count) — the regime
         where one reducer's input is dominated by one key and coarse AQE
-        skew splits stop helping.  Runs at most once
-        per graph (two cheap aggregates over the cached degree/edge tables);
-        a no-op on small graphs (< min_edges) where skew cannot hurt.
+        skew splits stop helping.  |E| and the max degree are measured
+        once per graph (two cheap aggregates over the cached degree/edge
+        tables); each call decides on its own `factor` and `min_edges`.
+        A no-op on small graphs (< min_edges) where skew cannot hurt.
         Opt out with LINKGRAPH_AUTO_SALT=0.
 
         factor=4 sits inside the measured win regime (BENCH/skew_bench.py,
         (src,salt)-co-partitioned cache): at hub = 0.5x share salting costs
         ~8% (nothing to fix), at hub = 6x share it wins 2.0x over both plain
         and AQE-skew joins — the crossover is ~1-2x share."""
-        if self._salt_checked or self._salted is not None:
+        if self._salted is not None:
             return self._salted
-        self._salt_checked = True
         if os.environ.get("LINKGRAPH_AUTO_SALT", "1") == "0":
             return None
         e = self.num_edges()
@@ -462,7 +462,9 @@ class LinkGraph:
             return None
         p = self.edge_partitions()
         share = max(e // p, 1)
-        max_deg = self.degrees().agg(F.max("deg").alias("m")).first()["m"] or 0
+        if self._max_degree is None:
+            self._max_degree = self.degrees().agg(F.max("deg").alias("m")).first()["m"] or 0
+        max_deg = self._max_degree
         if max_deg > factor * share:
             # salt every source above one partition-share of edges; spread
             # the worst hub over enough buckets to fit a share each

@@ -12,25 +12,32 @@ Brandes' forward and backward passes (`betweenness`,
 `greedy_coloring`, `ppr_forward_push`, `salsa`, `hits` and
 `minimum_spanning_forest` (its Borůvka rounds and pointer jumps) all run
 the same loop; only the update (`step`), the per-iteration statistics
-(`probe`) and the stop test (`done`) differ.  `fixpoint` is the one
-caller of `iteration_plan`, and owns the rest:
+(`probe`) and the stop test (`done`) differ.  `fixpoint` owns the rest:
 
+* **A session of the loop's own.**  Each call plans its iterations on a
+  clone of the caller's session (`_loop_session`): the caller's confs,
+  cache and views, with AQE off, shuffled-hash joins preferred and
+  constraint propagation off.  The seed's checkpoint and every plan
+  `step` returns are moved onto the clone (`on_session`), and the returned
+  state back onto the caller's session, which is never written: a query
+  running there meanwhile, or a second loop, plans under the caller's own
+  conf.
 * **One fused Spark job per iteration.**  `step` returns the next state as
   an unmaterialized plan over the current one; `fixpoint` truncates it with
   a LAZY ``localCheckpoint`` and `probe` — the iteration's single aggregate
   action — is what materializes it, so expand + update + statistics run as
   one job instead of a checkpoint job followed by a stats job.
-* **Deterministic truncation.**  The loop runs under ``iteration_plan``
-  (AQE off).  The round-1 lazy-checkpoint pathology (plan build 2 s ->
-  219 s by iteration 9) was AQE-specific; with AQE off the plan is cut at
-  the checkpoint call, so lineage is cut every iteration and the plan stays
-  bounded however long the loop runs (tests/test_algos.py asserts it).
+* **Deterministic truncation.**  The loop session has AQE off.  The
+  round-1 lazy-checkpoint pathology (plan build 2 s -> 219 s by iteration
+  9) was AQE-specific; with AQE off the plan is cut at the checkpoint
+  call, so lineage is cut every iteration and the plan stays bounded
+  however long the loop runs (tests/test_algos.py asserts it).
 * **Measured statistics.**  Every state is re-rooted (`reroot`) on its
   row count, counted as the probe materializes it, so plan statistics
   never compound across iterations and the join planner sees real sizes
   in every iteration, not only the first.
 * **Shuffles sized to the state.**  With AQE off nothing coalesces the
-  loop's shuffles, so each iteration sets the loop's
+  loop's shuffles, so each iteration sets the loop session's
   ``spark.sql.shuffle.partitions`` to the count AQE's coalescing rule
   would pick for the state just measured (`loop_width`), never above the
   caller's count, and narrows a wider state to it before `step` reads
@@ -53,69 +60,62 @@ caller of `iteration_plan`, and owns the rest:
 from __future__ import annotations
 
 import itertools
-from contextlib import contextmanager
 from typing import Callable
 
 from py4j.protocol import Py4JError
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from linkgraph.graph import fits_broadcast, parse_bytes
 
 
-@contextmanager
-def iteration_plan(spark):
-    """Planning profile for `fixpoint`'s loops: AQE OFF for the loop body,
-    restored on exit.  Yields the caller's ``spark.sql.shuffle.partitions``,
-    which is restored on exit too: `fixpoint` sets the loop's own count
-    every iteration (`loop_width`), the fourth loop conf.
+def _loop_session(spark: SparkSession) -> SparkSession:
+    """A clone of `spark` with `fixpoint`'s planning profile: the caller's
+    runtime confs (broadcast threshold, AQE's sizes, the shuffle count that
+    caps the loop's own), its cache and its temporary views, with three
+    confs of the loop's own.  The caller's session is never written, so a
+    query that runs in it meanwhile plans under its own conf.  A clone
+    costs about 2 ms (20 took 41 ms on a 4 vCPU box).
 
-    The per-iteration plan is static and repetitive; AQE's value is runtime
-    re-planning of unknown shapes, and its cost is an extra driver round of
-    stage materialization per query — measured ~1-2s per iteration, which
-    dominates wall-time once the compute per iteration drops below a few
-    seconds per core (and at sandbox bench scale becomes THE floor that
-    caps scaling efficiency).  Skew inside the loop is handled explicitly
-    (byte-gated broadcast in LinkGraph.expand, salted hub buckets via
-    enable_salting), so the AQE skew-join backstop is not load-bearing
-    here.  Derivation / ad-hoc queries keep AQE on (session default).
+    * AQE off.  The per-iteration plan is static and repetitive; AQE's
+      value is runtime re-planning of unknown shapes, and its cost is an
+      extra driver round of stage materialization per query — measured
+      ~1-2s per iteration, which dominates wall-time once the compute per
+      iteration drops below a few seconds per core.  Skew inside the loop
+      is handled explicitly (byte-gated broadcast in LinkGraph.expand,
+      salted hub buckets via enable_salting), so the AQE skew-join
+      backstop is not load-bearing here.
+    * Shuffled-hash joins preferred over sort-merge: the frontier/state
+      side is a bounded hash map (at most |V| rows), and SHJ streams the
+      co-partitioned edge side without the per-iteration sort SMJ would
+      insert.  The planner picks SHJ only for a build side it estimates
+      small, so the preference holds past the first iteration only
+      because `fixpoint` re-roots every state on its measured size
+      (inherited statistics compound and read as too large).
+    * Constraint propagation off: Catalyst's ``getAllValidConstraints``
+      substitutes every Project alias into every inherited constraint,
+      and for wide multi-lane state Projects (k sketch limbs each aliased
+      from an expression over the SAME join output, plus a sum column
+      referencing all k of them — the anf/hyperball shape) the
+      alias-combination set grows combinatorially in k.  Measured on a
+      120-vertex fixture: planning ONE hyperball round at k=16 took 8.7s,
+      k=24 OOMed an 8 GiB driver heap inside ExpressionSet.map; with the
+      flag off, the full k=64 × 10-round job runs in 28s end to end.  The
+      constraints only add redundant inferred IsNotNull/filter predicates
+      on hand-shaped plans, so nothing is lost inside the loop.
 
-    Also prefers shuffled-hash over sort-merge joins inside the loop: the
-    frontier/state side is a bounded hash map (at most |V| rows), and SHJ
-    streams the co-partitioned edge side without the per-iteration sort
-    SMJ would insert.  The planner picks SHJ only for a build side it
-    estimates small, so the preference holds past the first iteration
-    only because `fixpoint` re-roots every state on its measured size
-    (inherited statistics compound and read as too large).
-
-    Constraint propagation is OFF in the loop: Catalyst's
-    ``getAllValidConstraints`` substitutes every Project alias into every
-    inherited constraint, and for wide multi-lane state Projects (k sketch
-    limbs each aliased from an expression over the SAME join output, plus
-    a sum column referencing all k of them — the anf/hyperball shape) the
-    alias-combination set grows combinatorially in k.  Measured on a
-    120-vertex fixture: planning ONE hyperball round at k=16 took 8.7s,
-    k=24 OOMed an 8 GiB driver heap inside ExpressionSet.map; with the
-    flag off, the full k=64 × 10-round job runs in 28s end to end.  The
-    constraints only add redundant inferred IsNotNull/filter predicates on
-    hand-shaped plans, so nothing is lost inside the loop; ad-hoc queries
-    keep the session default.
-    """
-    conf = spark.conf
-    old_aqe = conf.get("spark.sql.adaptive.enabled")
-    old_smj = conf.get("spark.sql.join.preferSortMergeJoin", "true")
-    old_cp = conf.get("spark.sql.constraintPropagation.enabled", "true")
-    old_parts = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    conf.set("spark.sql.constraintPropagation.enabled", "false")
-    try:
-        yield int(old_parts)
-    finally:
-        conf.set("spark.sql.adaptive.enabled", old_aqe)
-        conf.set("spark.sql.join.preferSortMergeJoin", old_smj)
-        conf.set("spark.sql.constraintPropagation.enabled", old_cp)
-        conf.set("spark.sql.shuffle.partitions", old_parts)
+    The Python session is given the fields a DataFrame reads and the
+    caller's profiler, not built by the ``SparkSession`` constructor, which
+    would also rebind ``RDD.toDF`` to the clone for the rest of the
+    process."""
+    loop = SparkSession.__new__(SparkSession)
+    loop._sc, loop._jsc, loop._jvm = spark._sc, spark._jsc, spark._jvm
+    loop._profiler_collector = spark._profiler_collector
+    loop._jsparkSession = spark._jsparkSession.cloneSession()
+    loop.conf.set("spark.sql.adaptive.enabled", "false")
+    loop.conf.set("spark.sql.join.preferSortMergeJoin", "false")
+    loop.conf.set("spark.sql.constraintPropagation.enabled", "false")
+    return loop
 
 
 def loop_width(spark, cap: int) -> Callable[[DataFrame, int | None], int]:
@@ -186,20 +186,28 @@ def fixpoint(
         snapshots are on — they go into the manifest).  `metrics` are the
         previous iteration's, so a probe can fold running totals into them.
     seed_metrics(state): metrics of the checkpointed seed, for `step` and
-        `done` of the first iteration (not called on resume); it runs under
-        ``iteration_plan`` like the probes and, like them, is the action
+        `done` of the first iteration (not called on resume); it runs on
+        the loop session like the probes and, like them, is the action
         that materializes the (lazy) checkpoint.
     Snapshots hold the seed's columns, so `step` may add probe-only
     columns (e.g. the previous value) without them reaching the snapshot.
-    Each iteration's `step`, `probe` and snapshot run at the loop's
+    The seed is checkpointed as the caller's query; from then on the
+    states belong to the loop session (`_loop_session`), and so does
+    anything a step or probe builds on them.  A DataFrame a step or probe
+    builds on something else (the edges) is planned under the caller's
+    conf; one it acts on itself goes through `on_session` first.  Each
+    iteration's `step`, `probe` and snapshot run at the loop session's
     ``spark.sql.shuffle.partitions`` (`loop_width` of the state `step`
-    reads), so a step that sizes a repartition or coalesce reads the conf
-    inside `step`, not when the kernel is called; the caller's count is
-    restored on exit.
+    reads), so a step that sizes a repartition or coalesce reads
+    `loop_partitions` of its state inside `step`.  A `fixpoint` nested in
+    a step or probe clones the loop session, so its cap is the outer
+    loop's count.
 
     Returns (state, metrics, converged); converged is False when the
     budget ran out before `done` held.
     """
+    caller = seed.sparkSession
+    spark = _loop_session(caller)
     it0 = 0
     metrics = None
     state = seed
@@ -209,36 +217,52 @@ def fixpoint(
             state = checkpoint_mgr.read_state(snap)
             metrics = dict(snap["metrics"])
             it0 = int(metrics.pop("iteration"))
-    # seed_metrics is the action that materializes a lazy seed checkpoint
+    # the seed is planned as the caller's query; seed_metrics, on the loop
+    # session, is the action that materializes a lazy seed checkpoint
     state, rows = _local_checkpoint(
         state, eager=metrics is not None or seed_metrics is None
     )
-
+    state = on_session(state, spark)
+    if metrics is None:
+        metrics = seed_metrics(state) if seed_metrics is not None else {}
+    n = _measured_rows(state, rows)
+    state = reroot(state, n)
+    width = loop_width(spark, loop_partitions(seed))
     converged = False
-    spark = seed.sparkSession
-    with iteration_plan(spark) as cap:
-        width = loop_width(spark, cap)
-        if metrics is None:
-            metrics = seed_metrics(state) if seed_metrics is not None else {}
-        n = _measured_rows(state, rows)
-        state = reroot(state, n)
-        for it in range(it0, max_iter):
-            k = width(state, n)
-            spark.conf.set("spark.sql.shuffle.partitions", str(k))
-            new_state, rows = _local_checkpoint(step(_narrow(state, k), metrics), eager=False)
-            new_metrics = probe(new_state, metrics)
-            release(state)
-            n = _measured_rows(new_state, rows)
-            state = reroot(new_state, n)
-            if checkpoint_mgr is not None and (it + 1) % snapshot_every == 0:
-                checkpoint_mgr.write_state(
-                    state.select(*seed.columns), it + 1, {"iteration": it + 1, **new_metrics}
-                )
-            converged = done(new_metrics, metrics)
-            metrics = new_metrics
-            if converged:
-                break
-    return state, metrics, converged
+    for it in range(it0, max_iter):
+        k = width(state, n)
+        spark.conf.set("spark.sql.shuffle.partitions", str(k))
+        nxt = on_session(step(_narrow(state, k), metrics), spark)
+        new_state, rows = _local_checkpoint(nxt, eager=False)
+        new_metrics = probe(new_state, metrics)
+        release(state)
+        n = _measured_rows(new_state, rows)
+        state = reroot(new_state, n)
+        if checkpoint_mgr is not None and (it + 1) % snapshot_every == 0:
+            checkpoint_mgr.write_state(
+                state.select(*seed.columns), it + 1, {"iteration": it + 1, **new_metrics}
+            )
+        converged = done(new_metrics, metrics)
+        metrics = new_metrics
+        if converged:
+            break
+    return on_session(state, caller), metrics, converged
+
+
+def on_session(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """`df`'s plan as a DataFrame of `spark`, so it is optimized, planned
+    and run under `spark`'s conf.  A DataFrame belongs to the session of
+    the one it was built from (``edges.join(msgs)`` to the edges'), so a
+    step or probe that builds on something other than its state hands its
+    own actions' plans to the loop session through this."""
+    if df.sparkSession is spark:
+        return df
+    return _dataset(spark, df._jdf.queryExecution().analyzed())
+
+
+def _dataset(spark: SparkSession, plan) -> DataFrame:
+    jds = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, plan)
+    return DataFrame(jds, spark)
 
 
 _observation_ids = itertools.count()
@@ -262,8 +286,9 @@ def _local_checkpoint(
 
 
 def loop_partitions(df: DataFrame) -> int:
-    """The shuffle partition count `fixpoint` set for the iteration being
-    planned: what a `step` that repartitions or coalesces must read."""
+    """The shuffle partition count of `df`'s session: for a loop state, the
+    count `fixpoint` set for the iteration being planned, which a `step`
+    that repartitions or coalesces must read."""
     return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
 
@@ -320,7 +345,7 @@ def reroot(state: DataFrame, rows: int | None) -> DataFrame:
         stats,
         jvm.scala.Option.empty(),
     )
-    return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(jspark, plan), spark)
+    return _dataset(spark, plan)
 
 
 def checkpoint(df: DataFrame) -> DataFrame:

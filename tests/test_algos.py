@@ -1,6 +1,7 @@
 """PageRank / CC / LPA / triangles vs exact numpy oracles."""
 
 import collections
+import threading
 
 import numpy as np
 import pytest
@@ -12,6 +13,7 @@ from linkgraph.algos.pagerank import pagerank
 from linkgraph.algos.triangles import triangle_count, triangles_per_vertex
 from linkgraph.fixtures import edges_df, er_edges, two_cliques_edges
 from linkgraph.graph import LinkGraph
+from linkgraph.iterate import loop_partitions
 
 PAIRS = er_edges(150, 0.03)
 
@@ -675,8 +677,9 @@ def test_fixpoint_states_carry_measured_statistics(spark):
 
 
 def test_pagerank_iterations_keep_shuffled_hash_join(er, monkeypatch):
-    """iterate.iteration_plan prefers shuffled-hash joins; with inherited
-    statistics the planner fell back to sort-merge from iteration 2 on.
+    """fixpoint's loop session (iterate._loop_session) prefers
+    shuffled-hash joins; with inherited statistics the planner fell back
+    to sort-merge from iteration 2 on.
     At the default threshold the planner broadcasts this 150-vertex state;
     a 4 KiB threshold still broadcasts the messages (150 rows of 24 bytes)
     but not the state (150 rows of 40 bytes), so its join shows the
@@ -838,9 +841,10 @@ def test_no_python_kernels_in_algos():
 
 def test_loops_run_on_fixpoint():
     """Every iteration loop runs on linkgraph.iterate.fixpoint, the one
-    place that enters iteration_plan (the loop's plan profile) and owns
-    truncation, measured statistics and state release.  A loop that must
-    stay hand-written goes on an allowlist here, with its measured reason."""
+    place that sets a plan profile — on its own loop session, never the
+    caller's — and owns truncation, measured statistics and state
+    release.  No conf is written anywhere else in the package.  A write
+    that must stay goes on an allowlist here, with its measured reason."""
     import pathlib
 
     root = pathlib.Path(__file__).resolve().parent.parent / "linkgraph"
@@ -849,9 +853,9 @@ def test_loops_run_on_fixpoint():
         for path in sorted(root.rglob("*.py"))
         if path.name != "iterate.py"
         for no, line in enumerate(path.read_text().splitlines(), 1)
-        if "iteration_plan(" in line
+        if "conf.set(" in line
     ]
-    assert not hits, "hand-written iteration loops:\n" + "\n".join(hits)
+    assert not hits, "conf writes outside iterate.fixpoint:\n" + "\n".join(hits)
 
 
 def test_one_broadcast_gate():
@@ -1004,7 +1008,7 @@ def test_loops_narrow_to_one_partition(er, monkeypatch):
     _trace_loops(
         monkeypatch,
         [pagerank_module, components_module, msbfs_module],
-        lambda state, _: steps.add((_loop_count(spark), state.rdd.getNumPartitions())),
+        lambda state, _: steps.add((loop_partitions(state), state.rdd.getNumPartitions())),
         lambda state: finals.append(state.rdd.getNumPartitions()),
     )
     pagerank_module.pagerank(er, tol=0.0, max_iter=3).count()
@@ -1043,7 +1047,9 @@ def test_loop_count_rises_to_the_callers_cap(er, monkeypatch, small_partitions):
 
     spark = er.spark
     counts = []
-    _trace_loops(monkeypatch, [pagerank_module], lambda *_: counts.append(_loop_count(spark)))
+    _trace_loops(
+        monkeypatch, [pagerank_module], lambda state, _: counts.append(loop_partitions(state))
+    )
     pagerank_module.pagerank(er, tol=0.0, max_iter=3).count()
     # 150 rows x 32 B = 4800 B over a 256 B target: 19 partitions, capped
     assert counts == [8, 8, 8]
@@ -1093,8 +1099,8 @@ def test_narrow_loop_keeps_edge_partitioning(er, monkeypatch):
     _trace_loops(
         monkeypatch,
         [pagerank_module],
-        lambda _, nxt: plans.append(
-            (_loop_count(spark), nxt._jdf.queryExecution().executedPlan().toString())
+        lambda state, nxt: plans.append(
+            (loop_partitions(state), nxt._jdf.queryExecution().executedPlan().toString())
         ),
     )
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -1115,3 +1121,222 @@ def test_narrow_loop_keeps_edge_partitioning(er, monkeypatch):
                 if len(line) - len(line.lstrip(" :+-")) < depth
             )
             assert "Exchange" not in parent, plan
+
+
+# An upper bound on a blocked wait, not a pause: the threads below move on
+# Events only.
+WAIT_S = 300
+
+
+def _in_thread(fn):
+    """Run fn in a new thread (one that inherits the caller's Spark local
+    properties and releases its JVM thread on exit); the returned function
+    joins it and returns fn's result or raises its exception."""
+    from pyspark import InheritableThread
+
+    out = {}
+
+    def run():
+        try:
+            out["value"] = fn()
+        except BaseException as exc:  # re-raised in the joining thread
+            out["error"] = exc
+
+    thread = InheritableThread(target=run)
+    thread.start()
+
+    def join():
+        thread.join()
+        if "error" in out:
+            raise out["error"]
+        return out["value"]
+
+    return join
+
+
+def test_concurrent_query_plans_under_callers_conf(er):
+    """While a fixpoint step runs in one thread, a groupBy that another
+    thread plans on the same session is adaptive, and the caller's conf
+    reads AQE on and 8 partitions: the loop's profile lives on a session
+    of its own."""
+    from linkgraph.iterate import fixpoint
+
+    spark = er.spark
+    in_step, planned = threading.Event(), threading.Event()
+
+    def step(state, _metrics):
+        in_step.set()
+        assert planned.wait(WAIT_S)
+        return state.select("vid")
+
+    def query():
+        assert in_step.wait(WAIT_S)
+        try:
+            q = spark.range(100).groupBy((F.col("id") % 3).alias("k")).count()
+            return (
+                q._jdf.queryExecution().executedPlan().nodeName(),
+                spark.conf.get("spark.sql.adaptive.enabled"),
+                spark.conf.get("spark.sql.shuffle.partitions"),
+            )
+        finally:
+            planned.set()
+
+    seen = _in_thread(query)
+    try:
+        fixpoint(er.vertices(), step, lambda st, _m: {"n": st.count()}, lambda m, _: True, 1)
+    finally:
+        in_step.set()
+    assert seen() == ("AdaptiveSparkPlan", "true", "8")
+
+
+def test_overlapping_loops_keep_callers_conf_and_answers(er, monkeypatch):
+    """Two kernels' loops overlap on two threads of one session in the
+    order pagerank enters, connected_components enters, pagerank exits,
+    connected_components exits.  Each returns the answer it gives alone,
+    and the caller's conf reads AQE on and 8 partitions afterwards."""
+    import linkgraph.algos.components as components_module
+    import linkgraph.algos.pagerank as pagerank_module
+    from linkgraph import iterate
+
+    spark = er.spark
+
+    def ranks():
+        return {r["vid"]: r["pr"] for r in pagerank(er, tol=0.0, max_iter=5).collect()}
+
+    def labels():
+        return sorted(map(tuple, connected_components(er).collect()))
+
+    alone = (ranks(), labels())
+    a_in, b_in, a_out = threading.Event(), threading.Event(), threading.Event()
+
+    def gate(module, entered, wait_for, exited=None):
+        """module's loops signal `entered` from each step and hold it until
+        `wait_for` is set; `exited` is set when the loop returns."""
+
+        def loop(seed, step, *args, **kwargs):
+            def held(state, metrics):
+                entered.set()
+                assert wait_for.wait(WAIT_S)
+                return step(state, metrics)
+
+            try:
+                return iterate.fixpoint(seed, held, *args, **kwargs)
+            finally:
+                if exited is not None:
+                    exited.set()
+
+        monkeypatch.setattr(module, "fixpoint", loop)
+
+    gate(pagerank_module, a_in, b_in, a_out)
+    gate(components_module, b_in, a_out)
+    got_ranks = _in_thread(ranks)
+    assert a_in.wait(WAIT_S)
+    got_labels = _in_thread(labels)
+    together = (got_ranks(), got_labels())
+    assert together[1] == alone[1]
+    assert together[0].keys() == alone[0].keys()
+    for v, x in alone[0].items():
+        assert together[0][v] == pytest.approx(x, abs=1e-9), v
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert _loop_count(spark) == 8
+
+
+def test_no_adaptive_plan_inside_loops(er, monkeypatch):
+    """Under a caller session with AQE on, no plan checkpointed inside a
+    fixpoint has an AdaptiveSparkPlan at the top: neither the states nor
+    what a step or probe checkpoints itself (hits' authorities, coloring's
+    winners, mst's proposals and its nested pointer-jump loop).  The
+    seed's checkpoint, the first of each call, is planned as the caller's
+    query and is not checked.  The top node is compared, not the plan
+    text: the edge cache's InMemoryRelation prints its own adaptive plan
+    inside every loop plan."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    import linkgraph.algos.betweenness as betweenness_module
+    import linkgraph.algos.coloring as coloring_module
+    import linkgraph.algos.components as components_module
+    import linkgraph.algos.hits as hits_module
+    import linkgraph.algos.labelprop as labelprop_module
+    import linkgraph.algos.msbfs as msbfs_module
+    import linkgraph.algos.mst as mst_module
+    import linkgraph.algos.pagerank as pagerank_module
+    from linkgraph import iterate
+
+    assert er.spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    seed_pending = []  # one flag per open fixpoint call
+    tops = []
+
+    def loop(*args, **kwargs):
+        seed_pending.append(True)
+        try:
+            return iterate.fixpoint(*args, **kwargs)
+        finally:
+            seed_pending.pop()
+
+    real = ClassicDataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        if seed_pending:
+            if seed_pending[-1]:
+                seed_pending[-1] = False
+            else:
+                tops.append(self._jdf.queryExecution().executedPlan().nodeName())
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", recording)
+    modules = [
+        pagerank_module, components_module, msbfs_module, labelprop_module,
+        betweenness_module, hits_module, coloring_module, mst_module,
+    ]
+    for module in modules:
+        monkeypatch.setattr(module, "fixpoint", loop)
+    weighted = er.edges.withColumn("w", (F.col("src") + F.col("dst")) % 7 + 1)
+    runs = {
+        "pagerank": lambda: pagerank_module.pagerank(er, tol=0.0, max_iter=3).count(),
+        "cc": lambda: components_module.connected_components(er).count(),
+        "msbfs": lambda: msbfs_module.msbfs(er, list(range(64)), track_teps=True),
+        "lpa": lambda: labelprop_module.label_propagation(er, max_iter=3).count(),
+        "betweenness": lambda: betweenness_module.betweenness(er, [0, 1, 2], 4).count(),
+        "hits": lambda: hits_module.hits(er, rounds=3).count(),
+        "greedy_coloring": lambda: coloring_module.greedy_coloring(er, rounds=3).count(),
+        "mst": lambda: mst_module.minimum_spanning_forest(weighted).count(),
+    }
+    found = {}
+    for name, run in runs.items():
+        tops.clear()
+        run()
+        found[name] = list(tops)
+    for name, names in found.items():
+        assert names and "AdaptiveSparkPlan" not in names, (name, names)
+    # the in-step checkpoints were among them: one per round beside the state
+    assert len(found["hits"]) == len(found["greedy_coloring"]) == 2 * 3
+    # the proposals' checkpoint is the one without a row-count observation
+    assert set(found["mst"]) - {"CollectMetrics"}, found["mst"]
+
+
+def test_nested_loop_cap_is_the_outer_count(er):
+    """A fixpoint nested in a step clones the loop session, so its cap is
+    the outer iteration's count (1 for a 150-row state), not the caller's
+    8: a 22,500-row inner state of 1.6 MB, to which AQE's rule gives 2
+    partitions, runs at 1."""
+    from linkgraph.iterate import fixpoint
+
+    inner_counts = []
+
+    def inner_step(st, _m):
+        inner_counts.append(loop_partitions(st))
+        return st
+
+    def outer_step(state, _m):
+        wide = state.crossJoin(state.select(F.col("vid").alias("w"))).select(
+            "vid", "w", *[(F.col("vid") + i).alias(f"c{i}") for i in range(6)]
+        )
+        inner, _, _ = fixpoint(
+            wide, inner_step, lambda st, _m: {"n": st.count()}, lambda m, _: True, 1
+        )
+        return inner.select("vid").distinct()
+
+    fixpoint(
+        er.vertices(), outer_step, lambda st, _m: {"n": st.count()}, lambda m, _: True, 1
+    )
+    assert inner_counts == [1]

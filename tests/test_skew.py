@@ -112,6 +112,21 @@ def test_auto_salt_engages_on_hub_graph(spark):
     g.unpersist()
 
 
+def test_auto_salt_decides_per_call(spark):
+    """maybe_auto_salt measures the graph once and decides for each call's
+    own factor and min_edges: on the 400-leaf star the default call is
+    under min_edges, and a later call with lower bars still salts."""
+    from linkgraph.fixtures import edges_df
+
+    pairs = [(0, i) for i in range(1, 401)] + [(i, i + 1) for i in range(1, 400, 7)]
+    g = LinkGraph.from_undirected(edges_df(spark, pairs), num_partitions=8)
+    try:
+        assert g.maybe_auto_salt() is None
+        assert g.maybe_auto_salt(factor=2, min_edges=100) is not None
+    finally:
+        g.unpersist()
+
+
 def test_auto_salt_noop_on_uniform_graph(spark):
     """No hub -> no salting (and no salted-table build cost)."""
     from linkgraph.fixtures import edges_df, er_edges
